@@ -79,8 +79,11 @@ def attach_publisher(
     ``struct(-year, quartile, issn)`` — struct ordering gives newest
     year first, then lexicographic quartile ('Q1' < 'Q2'). Journals
     with no in-window entry get quartile NULL (the reference leaves
-    ``Quartile`` absent — callers sentinel-filter either way)."""
-    y = F.col(year_col).cast("int")
+    ``Quartile`` absent — callers sentinel-filter either way). So does
+    a year that is not an integer (the scraper's ``"Year not found"``
+    sentinel): ``try_cast`` makes it NULL instead of failing the job
+    under ANSI mode, and the row then fails the publisher filter."""
+    y = F.col(year_col).try_cast("int")
     eligible = F.filter(
         F.col("_q_entries"),
         lambda e: (e["year"] <= y) & (e["year"] >= y - max_lookback),

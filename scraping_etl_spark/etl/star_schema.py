@@ -14,7 +14,7 @@ Quirk policy (SURVEY §2.9) — defaults FIX, ``parity=True`` reproduces:
 - Q2 (authors ``distinct()`` after unique-ID assignment = no-op): fixed
   by deduplicating on the full identity (FullName, Country, University)
   BEFORE keying; ``parity=True`` keeps every exploded row.
-- Q3 (bridge joins on FullName only → fan-out): fixed by joining the
+- Q3 (bridge joins on FullName only → fan-out): fixed by keying the
   bridge on the full identity; ``parity=True`` joins on FullName.
 - Q4 (keywords never deduplicated): fixed with ``distinct()`` before
   keying; ``parity=True`` keeps duplicates.
@@ -23,12 +23,18 @@ Quirk policy (SURVEY §2.9) — defaults FIX, ``parity=True`` reproduces:
   DataFrame so the caller chooses; :func:`build_star` wires the cleaned
   frame by default and the raw frame under ``parity=True``.
 
-Scale notes (100 TB): dims are distinct-projections (one partial-agg
-shuffle each, output tiny); the fact build broadcasts all three dims
-(J1); bridges shuffle on the explode key only when the dim is too big to
-broadcast — at reference scale every dim broadcasts. ``xxhash64`` keys
-need no global coordination (vs ``row_number``, which would serialize
-through one task).
+Scale notes (100 TB): :func:`build_star` materializes the cleaned
+relation once (eager ``localCheckpoint``), so every output table reads
+one snapshot instead of re-running the JSON scan, the enrichment
+broadcast and the cleaning chain per table. Dims are distinct-projections
+of that snapshot (one partial-agg shuffle each, output tiny). In fixed
+mode the fact and bridges join nothing: every surrogate key is
+``xxhash64`` of a natural key the fact row already carries, so the key
+is computed in place (J1-J3 become projections with no exchange).
+Parity mode keeps the reference's broadcast dim joins, because those
+joins are what reproduce its fan-outs. ``xxhash64`` keys need no global
+coordination (vs ``row_number``, which would serialize through one
+task).
 """
 
 from __future__ import annotations
@@ -180,22 +186,45 @@ def build_authors(clean: DataFrame, dedup: bool = True) -> DataFrame:
 # Fact + bridges
 # ---------------------------------------------------------------------------
 
+def _key_unless_null(guard: str, *cols: str) -> Column:
+    """The surrogate key a dim row built from ``cols`` carries, or NULL
+    when ``guard`` is NULL — what a left join to that dim returns for an
+    unmatched row (``xxhash64`` itself skips NULL inputs)."""
+    return F.when(F.col(guard).isNotNull(), surrogate_key(*cols))
+
+
 def build_articles(
-    clean: DataFrame,
-    topics: DataFrame,
-    dates: DataFrame,
-    publishers: DataFrame,
+    clean: DataFrame, dims: tuple[DataFrame, DataFrame, DataFrame] | None = None
 ) -> DataFrame:
-    """Articles fact (ETL cell 41, raw 1247-1266): three chained left
-    equi-joins to the dims (SURVEY J1). All dims are broadcast — at any
-    realistic scale the dims are many orders smaller than the fact, so
-    none of the three joins shuffles the fact."""
-    base = clean.select(
+    """Articles fact (ETL cell 41, raw 1247-1266, SURVEY J1).
+
+    Fixed mode (``dims=None``): ``TopicID`` and ``DateID`` are the
+    ``xxhash64`` keys of the row's own topic and (Date, Day, Month,
+    Year), exactly the keys :func:`build_topics`/:func:`build_dates`
+    give those values, so no dim join runs. Keying the date on all four
+    parts fixes the reference's join on the date string alone, which
+    fans an article out once per (Day, Month, Year) variant of its
+    ``Date``.
+
+    Parity mode (``dims=(topics, dates, publishers)``): the reference's
+    three chained broadcast left joins, fan-outs included."""
+    cols = [
         F.col("doi").alias("DOI"),
         F.col("title").alias("Title"),
         F.col("abstract").alias("Abstract"),
         F.col("citations").alias("Citations"),
         F.col("publisher.ISSN").alias("ISSN"),
+    ]
+    if dims is None:
+        return clean.select(
+            *cols,
+            _key_unless_null("Date", "Date", "Day", "Month", "Year").alias("DateID"),
+            F.col("website").alias("Website"),
+            _key_unless_null("topic", "topic").alias("TopicID"),
+        )
+    topics, dates, publishers = dims
+    base = clean.select(
+        *cols,
         F.col("Date").alias("PublicationDate"),
         F.col("website").alias("Website"),
         F.col("topic").alias("Topic"),
@@ -216,13 +245,19 @@ def build_articles(
 
 
 def build_author_article_map(
-    clean: DataFrame, authors: DataFrame, on_identity: bool = True
+    clean: DataFrame, authors: DataFrame | None = None
 ) -> DataFrame:
-    """Author bridge (ETL cell 43, raw 1287-1299): explode + inner join
-    back to the dim (SURVEY J2). ``on_identity=True`` fixes Q3 by
-    joining on the full (FullName, Country, University) identity; parity
-    joins on FullName only (the reference ships 42,595 bridge rows for
-    3,502 DOIs because of the fan-out). Dim side broadcast."""
+    """Author bridge (ETL cell 43, raw 1287-1299, SURVEY J2): explode,
+    then key each (DOI, author) edge.
+
+    Fixed mode (``authors=None``, Q3 repaired): ``AuthorID`` is the
+    ``xxhash64`` of the full (FullName, Country, University) identity,
+    the deduped dim's key for it. An identity with a NULL field gets no
+    row, as an inner equi-join to the dim would drop it.
+
+    Parity mode: inner broadcast join to the per-occurrence ``authors``
+    dim on FullName only (the reference ships 42,595 bridge rows for
+    3,502 DOIs because of the fan-out)."""
     exploded = clean.select(
         F.col("doi").alias("DOI"),
         F.explode("authors_with_affiliations").alias("aff"),
@@ -232,45 +267,58 @@ def build_author_article_map(
         F.col("aff.country").alias("Country"),
         F.col("aff.university").alias("University"),
     )
-    keys = list(AUTHOR_IDENTITY) if on_identity else ["FullName"]
-    return exploded.join(F.broadcast(authors), keys, "inner").select(
+    if authors is None:
+        return exploded.filter(
+            F.col("FullName").isNotNull()
+            & F.col("Country").isNotNull()
+            & F.col("University").isNotNull()
+        ).select("DOI", surrogate_key(*AUTHOR_IDENTITY).alias("AuthorID"))
+    return exploded.join(F.broadcast(authors), "FullName", "inner").select(
         "DOI", "AuthorID"
     )
 
 
-def build_keyword_article_map(clean: DataFrame, keywords: DataFrame) -> DataFrame:
-    """Keyword bridge (ETL cell 45, raw 1317-1324): explode + inner join
-    on the keyword string (SURVEY J3). Dim side broadcast."""
+def build_keyword_article_map(
+    clean: DataFrame, keywords: DataFrame | None = None
+) -> DataFrame:
+    """Keyword bridge (ETL cell 45, raw 1317-1324, SURVEY J3): explode,
+    then key each (DOI, keyword) edge. Fixed mode (``keywords=None``):
+    ``KeywordID`` is the ``xxhash64`` of the keyword, the deduped dim's
+    key; a NULL keyword gets no row. Parity mode: inner broadcast join
+    on the keyword string to the per-occurrence dim (Q4 fan-out)."""
     exploded = clean.select(
         F.col("doi").alias("DOI"), F.explode("keywords").alias("Keyword")
     )
+    if keywords is None:
+        return exploded.filter(F.col("Keyword").isNotNull()).select(
+            "DOI", surrogate_key("Keyword").alias("KeywordID")
+        )
     return exploded.join(F.broadcast(keywords), "Keyword", "inner").select(
         "DOI", "KeywordID"
     )
 
 
-def build_star(
-    raw: DataFrame, parity: bool = False, checkpoint_clean: bool = False
-) -> dict[str, DataFrame]:
+def build_star(raw: DataFrame, parity: bool = False) -> dict[str, DataFrame]:
     """Full pipeline: clean + all eight output tables.
 
-    ``parity=False`` (default): fixed semantics (Q2/Q3/Q4/Q5/Q7 repaired,
-    deterministic keys). ``parity=True``: the reference's row-for-row
-    cardinality behavior on the same input — dims keyed per occurrence,
-    bridges joined on FullName, topics/dates from the uncleaned frame,
-    date filter via subtract, dead email filter.
+    ``parity=False`` (default): fixed semantics (Q2/Q3/Q4/Q5/Q7
+    repaired, deterministic keys); the fact and bridges compute their
+    surrogate keys in place, with no dim join. ``parity=True``: the
+    reference's row-for-row cardinality behavior on the same input —
+    dims keyed per occurrence, fact and bridges joined to them (bridges
+    on FullName), topics/dates from the uncleaned frame, date filter via
+    subtract, dead email filter.
 
-    ``checkpoint_clean=True`` materializes the shared cleaning lineage
-    once (``localCheckpoint``) before the dim/fact fan-out, so a caller
-    that consumes several outputs in one job pays one corpus scan
-    instead of re-running the cleaning chain per branch. Default off:
-    the production path (``materialize_star``) persists each table to
-    parquet anyway, and single-output callers would pay an eager
-    materialization for nothing. Values are identical either way.
+    The cleaned relation is materialized here, eagerly and once
+    (``localCheckpoint``): this call runs the input scan, the upstream
+    enrichment and the cleaning chain, and every returned table reads
+    that snapshot. Writing all eight tables therefore costs one read of
+    the inputs, and all eight agree even if the input files change
+    between writes (a bridge never references a DOI the fact lacks). A
+    later call re-reads the inputs. Under ``parity=True`` topics and
+    dates still read ``raw`` itself (Q7).
     """
-    clean = clean_documents(raw, parity=parity)
-    if checkpoint_clean:
-        clean = clean.localCheckpoint()
+    clean = clean_documents(raw, parity=parity).localCheckpoint()
     dim_source = raw if parity else clean
     publishers = build_publishers(clean, dedup_issn=not parity)
     topics = build_topics(dim_source)
@@ -284,11 +332,15 @@ def build_star(
         "dates": dates,
         "keywords": keywords,
         "authors": authors,
-        "articles": build_articles(clean, topics, dates, publishers),
-        "author_article_map": build_author_article_map(
-            clean, authors, on_identity=not parity
+        "articles": build_articles(
+            clean, (topics, dates, publishers) if parity else None
         ),
-        "keyword_article_map": build_keyword_article_map(clean, keywords),
+        "author_article_map": build_author_article_map(
+            clean, authors if parity else None
+        ),
+        "keyword_article_map": build_keyword_article_map(
+            clean, keywords if parity else None
+        ),
     }
 
 

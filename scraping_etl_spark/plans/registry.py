@@ -338,8 +338,9 @@ Round-10 rotation (consolidation round — NO new gates; burns the
 driver-verification queue down to zero): seats 1-40 are the entire
 r9 queue (every entry that had never had a driver CORRECTNESS row);
 seat 41 re-seats ``star_pipeline`` (operator changed:
-``build_star(checkpoint_clean=True)`` collapses the per-rollup
-re-execution of the shared cleaning lineage to one corpus scan —
+``build_star`` materializes the shared cleaning lineage once — then
+behind a ``checkpoint_clean=True`` flag, now on every call — so the
+per-rollup re-execution collapses to one corpus scan;
 values identical, plan shape changed, re-seat policy applies); seats
 42-50 take the nine most senior r8-green entries
 (``hourly_event_rollup`` … ``event_moving_avg``). The tail leads

@@ -15,9 +15,8 @@ hash-checks the whole composition.
 
 Surrogate keys are ``xxhash64`` (partition-stable but not
 DuckDB-reproducible), so rollup checksums run over NATURAL keys; the
-surrogate-keyed joins are still exercised because every bridge/fact
-row count depends on them resolving exactly once (the dedup'd dims
-make any fan-out or drop a count mismatch). Checksums are
+bridge/fact row counts still pin one row per article and per edge
+(any fan-out or drop is a count mismatch). Checksums are
 ``sum(md5-bigint % 1e9+7)`` over a canonical ``concat_ws`` string —
 the ``md5_bucket`` conv trick (corpus_prep.py:668), mod-bounded so the
 sum can't overflow BIGINT on either engine.
@@ -183,14 +182,14 @@ def _rollup(df: DataFrame, name: str, nat: F.Column, key: F.Column) -> DataFrame
 def q_star_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole fixed-mode star build as ONE driver row per output
     table. Natural-key checksums; bridge/fact cardinalities pin the
-    surrogate-keyed joins (any fan-out, drop, or dedup regression
-    moves a count).
+    surrogate keys (any fan-out, drop, or dedup regression moves a
+    count).
 
-    ``checkpoint_clean=True``: this gate consumes all nine outputs in
-    one job, so the shared cleaning lineage materializes ONCE instead
-    of re-running per rollup branch (~30 exchanges → one corpus scan +
-    rollups; values identical — r9 verdict item 5)."""
-    star = SS.build_star(synth_articles(spark, sf_dir), checkpoint_clean=True)
+    ``build_star`` materializes the cleaned relation once, so this
+    gate's nine rollup branches share one corpus scan instead of
+    re-running the cleaning chain per branch, and the fixed-mode fact and bridges hash their keys in place
+    instead of joining back to the dims."""
+    star = SS.build_star(synth_articles(spark, sf_dir))
     cw = lambda *cols: F.concat_ws("|", *cols)  # noqa: E731
     parts = [
         _rollup(

@@ -28,15 +28,30 @@ def pytest_configure(config):
     )
 
 
+SLOW_SKIP_REASON = "slow long-tail test; opt in with RUN_SLOW_TESTS=1"
+
+
 def pytest_collection_modifyitems(config, items):
     if RUN_SLOW:
         return
-    skip = pytest.mark.skip(
-        reason="slow long-tail test; opt in with RUN_SLOW_TESTS=1"
-    )
+    skip = pytest.mark.skip(reason=SLOW_SKIP_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """One line saying how many tests the ``slow`` gate skipped, so a
+    green default run never hides how much of the suite it left out."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and SLOW_SKIP_REASON in rep.longrepr[2]
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} tests skipped as slow (run them with RUN_SLOW_TESTS=1)"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -117,3 +117,28 @@ def test_no_fact_shuffle(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
     # the fact side must not hash-repartition on join keys
     assert "hashpartitioning(_jn" not in plan
+
+
+def test_year_sentinel_gets_no_publisher(spark):
+    """A raw ``"Year not found"`` year (string column, as scraped) must
+    not fail the job under ANSI casts: the row gets no quartile and the
+    publisher-sentinel filter drops it, while its neighbours enrich."""
+    from scraping_etl_spark.operators.cleaning import filter_publisher_sentinels
+
+    schema = T.StructType(
+        [
+            T.StructField("doi", T.StringType()),
+            T.StructField("journal_name", T.StringType()),
+            T.StructField("Year", T.StringType()),
+        ]
+    )
+    arts = spark.createDataFrame(
+        [("d1", "J. Spark", "2024"), ("d2", "J. Spark", "Year not found")], schema
+    )
+    qs = spark.createDataFrame([("J. Spark", 2024, "Q1", "1111")], Q_SCHEMA)
+    enriched = E.enrich(arts, qs)
+    out = {r["doi"]: r["publisher"] for r in enriched.collect()}
+    assert (out["d1"]["Quartile"], out["d1"]["ISSN"]) == ("Q1", "1111")
+    assert (out["d2"]["Quartile"], out["d2"]["ISSN"]) == (None, None)
+    kept = [r["doi"] for r in filter_publisher_sentinels(enriched).collect()]
+    assert kept == ["d1"]

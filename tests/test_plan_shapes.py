@@ -4,10 +4,15 @@ refactor can't silently reintroduce a cross join or lose a broadcast."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from scraping_etl_spark import schemas
+from scraping_etl_spark.etl.star_schema import build_star
 from scraping_etl_spark.plans import ml_ops as M
+from scraping_etl_spark.sources.readers import read_json_array
 from tests.conftest import SF_SMOKE
 
 
@@ -243,3 +248,18 @@ def test_ivf_decontaminate_stored_cell_equivalence(spark):
         ).collect())
     )
     assert got == want
+
+
+def test_star_fact_and_bridges_read_snapshot_without_joins(spark):
+    """Fixed-mode fact and bridges hash their surrogate keys in place:
+    no dim join, and no re-scan of the article JSON (they read the
+    snapshot ``build_star`` checkpointed). Parity mode still joins."""
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "articles.json")
+    raw = read_json_array(spark, fixture, schemas.RAW_ARTICLES)
+    star = build_star(raw)
+    for name in ("articles", "author_article_map", "keyword_article_map"):
+        plan = _plan(star[name])
+        assert "BroadcastHashJoin" not in plan, (name, plan)
+        assert "FileScan json" not in plan, (name, plan)
+    parity = _plan(build_star(raw, parity=True)["articles"])
+    assert "BroadcastHashJoin" in parity and "FileScan json" in parity

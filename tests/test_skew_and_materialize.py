@@ -42,11 +42,8 @@ def test_materialize_star_partitioning(spark, tmp_path):
     from scraping_etl_spark.etl.star_schema import build_star, materialize_star
     from scraping_etl_spark.sources.readers import read_json_array
 
-    raw = read_json_array(
-        spark,
-        "/root/reference/ScienceDirect/DevOps_upd.json",
-        schemas.RAW_ARTICLES,
-    )
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "articles.json")
+    raw = read_json_array(spark, fixture, schemas.RAW_ARTICLES)
     star = build_star(raw)
     paths = materialize_star(star, str(tmp_path / "star"))
     assert set(paths) == {
@@ -59,6 +56,11 @@ def test_materialize_star_partitioning(spark, tmp_path):
     # every table reads back with its rows intact
     for name, path in paths.items():
         assert spark.read.parquet(path).count() == star[name].count()
+    # all tables come from one snapshot: no bridge edge without its fact row
+    fact = {r.DOI for r in spark.read.parquet(paths["articles"]).collect()}
+    for bridge in ("author_article_map", "keyword_article_map"):
+        dois = {r.DOI for r in spark.read.parquet(paths[bridge]).collect()}
+        assert dois and dois <= fact, bridge
 
 
 def test_bucketed_join_no_shuffle(spark, tmp_path):

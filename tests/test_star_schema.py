@@ -12,6 +12,7 @@ F8-F10, and quirks Q2/Q3/Q4/Q5/Q7 in both fixed and parity modes.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -188,3 +189,57 @@ def test_scrub_preserves_accents_and_quotes(spark):
     df = spark.createDataFrame([("Björn's café #1 — ok (really)",)], "s string")
     out = C.scrub_string_columns(df).collect()[0].s
     assert out == "Björn's café 1  ok really"
+
+
+def _write_docs(path, docs):
+    with open(path, "w", encoding="utf-8") as fh:
+        json.dump(docs, fh)
+    return str(path)
+
+
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_build_reads_one_snapshot(spark, tmp_path):
+    # build_star materializes the cleaned relation eagerly: overwriting
+    # the input afterwards changes none of the eight written tables,
+    # while the next build over the same path sees the new file.
+    with open(FIXTURE, encoding="utf-8") as fh:
+        docs = json.load(fh)
+    path = _write_docs(tmp_path / "in.json", docs)
+    pristine = S.build_star(
+        read_json_array(spark, _write_docs(tmp_path / "copy.json", docs),
+                        schemas.RAW_ARTICLES)
+    )
+    star = S.build_star(read_json_array(spark, path, schemas.RAW_ARTICLES))
+
+    _write_docs(path, [d for d in docs if d["doi"] == "10.1/d2"])
+    out = S.materialize_star(star, str(tmp_path / "star"))
+    assert len(out) == 8
+    for name, table in out.items():
+        cols = pristine[name].columns
+        assert _rows(spark.read.parquet(table), cols) == _rows(pristine[name], cols), name
+
+    again = S.build_star(read_json_array(spark, path, schemas.RAW_ARTICLES))
+    assert {r.DOI for r in again["articles"].collect()} == {"101d2"}
+    assert again["author_article_map"].count() == 2
+
+
+def test_date_key_uses_all_date_parts(spark, tmp_path):
+    # Two articles share the Date string but disagree on Day. The dates
+    # dim holds both variants; each fact row keys its own variant, so
+    # the fact keeps one row per article (a join on the Date string
+    # alone would give 2 x 2 = 4 rows).
+    with open(FIXTURE, encoding="utf-8") as fh:
+        docs = [d for d in json.load(fh) if d["doi"] in ("10.1/d1", "10.1/d2")]
+    for d, day in zip(docs, ("19", "20")):
+        d.update(Date="19 July 2024", Day=day, Month="July", Year="2024")
+    raw = read_json_array(
+        spark, _write_docs(tmp_path / "in.json", docs), schemas.RAW_ARTICLES
+    )
+    star = S.build_star(raw)
+    assert star["dates"].count() == 2
+    facts = star["articles"].join(star["dates"], "DateID").collect()
+    assert star["articles"].count() == 2
+    assert {(r.DOI, r.Day) for r in facts} == {("101d1", "19"), ("101d2", "20")}

@@ -160,10 +160,10 @@ def main() -> None:
          "min-position cap, id-keyed verify — no BNLJ/cartesian at "
          "any threshold"),
         ("star_pipeline", ST.q_star_pipeline,
-         "one-job star build: the shared cleaning lineage is "
-         "localCheckpointed once, so every rollup branch scans the "
-         "checkpoint instead of re-running the cleaning chain "
-         "(~30 exchanges -> one corpus scan + rollups)"),
+         "one-job star build: build_star localCheckpoints the cleaned "
+         "relation once, so every rollup branch scans the checkpoint "
+         "instead of re-running the cleaning chain; the fact and bridges "
+         "hash their surrogate keys in place (no BroadcastHashJoin)"),
         ("doc_lang_id_ngram", P.q_doc_lang_id_ngram,
          "Cavnar-Trenkle n-gram language ID: one explode feeding a "
          "checkpointed (doc, gram) count relation, array-side doc "
