@@ -1144,6 +1144,23 @@ def pq_train(
         return list(pool.map(_fit, range(m)))
 
 
+def _codebook_shape(
+    codebooks: list[list[list[float]]], who: str
+) -> tuple[int, int, int]:
+    """``(m, k, sub)`` of PQ codebooks, checked before anything indexes
+    them: at least one non-empty codebook, every codebook ``k``
+    centroids, every centroid ``sub >= 1`` components."""
+    if not codebooks or not codebooks[0]:
+        raise ValueError(f"{who}: codebooks must be non-empty")
+    k = len(codebooks[0])
+    if any(len(b) != k for b in codebooks):
+        raise ValueError(f"{who}: codebooks must share one size")
+    sub = len(codebooks[0][0])
+    if sub < 1 or any(len(c) != sub for b in codebooks for c in b):
+        raise ValueError(f"{who}: centroids must share one sub-dimension")
+    return len(codebooks), k, sub
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1157,12 +1174,12 @@ def pq_encode(
     expression reach (m*k in the thousands) the ``cluster_assign_arrow``
     convention applies per subspace — this expression tier is the
     oracle-mirrorable gate path. Returns ``(id, pq_code array<int>)``.
+
+    Raises ``ValueError`` unless ``codebooks`` is non-empty, every
+    codebook holds the same number ``k >= 1`` of centroids and every
+    centroid has the same sub-dimension ``>= 1``.
     """
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    k = len(codebooks[0])
-    if any(len(b) != k for b in codebooks):
-        raise ValueError("pq_encode: codebooks must share one size")
+    m, k, sub = _codebook_shape(codebooks, "pq_encode")
     # ONE rank-3 literal (m x k x sub) + a transform over the subspace
     # index: the per-subspace tree construction (m separate literal +
     # lambda trees, hundreds of py4j round-trips) still dominated plan
@@ -1344,12 +1361,11 @@ def ivfpq_encode(
     its ``n_probe`` inverted lists (partition pruning does the list
     selection); the in-memory form here filters on the cluster column
     instead — same plan semantics, file skipping aside. Returns
-    ``(id, cluster, pq_code array<int>)``."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    k = len(codebooks[0])
-    if any(len(b) != k for b in codebooks):
-        raise ValueError("ivfpq_encode: codebooks must share one size")
+    ``(id, cluster, pq_code array<int>)``.
+
+    Raises ``ValueError`` on the same ``codebooks`` shapes as
+    :func:`pq_encode`: empty, unequal ``k``, or ragged centroids."""
+    m, k, sub = _codebook_shape(codebooks, "ivfpq_encode")
     res = with_residual(corpus, centroids, id_col, vec_col)
     # same m-subspace fusion as pq_encode (one rank-3 literal, O(1)
     # plan in m); the per-subspace argmin mirrors nearest_centroids'

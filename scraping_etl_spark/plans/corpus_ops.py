@@ -21,7 +21,6 @@ hash-comparable.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1009,16 +1008,6 @@ WHERE {_LM_INC_FILTER.replace('doc_id', 'd.doc_id')}
 #: fully-merged words, so subword counts genuinely vary per doc.
 _BPE_MERGES = 16
 
-#: Default training scale for the ZERO-ARG lazy oracle (the driver runs
-#: correctness at sf0.01) — same convention as ``_IVF_ORACLE_SF_DIR``.
-_BPE_ORACLE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
-
-#: sf_dirs the BPE query ran at in this process — the oracle-pairing
-#: guard (see ``oracle_emb_ivf_topk`` for the hazard this closes).
-_bpe_query_dirs: set[str] = set()
-
 
 @functools.lru_cache(maxsize=4)
 def _bpe_trained(sf_dir: str) -> tuple:
@@ -1072,7 +1061,6 @@ def q_doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_bpe_fertility`` pins the same subword-count arithmetic per
     language over the same trained artifacts. Kept as the library
     query (pytest + local DuckDB suite)."""
-    _bpe_query_dirs.add(sf_dir)
     merges, table = _bpe_artifacts(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     seg = BPE.word_segment_table(d, list(merges))
@@ -1083,28 +1071,13 @@ def q_doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_doc_bpe_tokens(sf_dir: str | None = None) -> str:
+def oracle_doc_bpe_tokens(sf_dir: str) -> str:
     """Lazy DuckDB twin of :func:`q_doc_bpe_tokens`: the learned
     word→subword-count table is embedded as VALUES plan constants
     (training is deterministic — lexicographic tie-breaks — so both
     engines share one model); tokenization is then an exact relational
     mirror: explode lowercased tokens, left join the table, char-count
-    fallback, per-doc sum. Zero-arg resolves the training dir the same
-    way the IVF oracle does (env override → the dir the query ran at →
-    the driver default) and fails fast on a pairing mismatch."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_bpe_query_dirs) == 1:
-            sf_dir = next(iter(_bpe_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _bpe_query_dirs and sf_dir not in _bpe_query_dirs:
-            raise RuntimeError(
-                f"doc_bpe_tokens oracle: would train at {sf_dir!r} but the "
-                f"query ran at {sorted(_bpe_query_dirs)!r} — pass sf_dir or "
-                f"set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
+    fallback, per-doc sum."""
     _, table = _bpe_artifacts(sf_dir)
     values = ",\n    ".join(
         "('{}', {})".format(w.replace("'", "''"), n) for w, n in table
@@ -1224,10 +1197,6 @@ FROM incoming d LEFT JOIN agg a USING (doc_id)
 #: segmentations (words longer than 6 chars can never be one piece).
 _UNI_VOCAB, _UNI_SEED, _UNI_ITERS, _UNI_MAXLEN = 48, 300, 2, 6
 
-#: sf_dirs the unigram query ran at in this process — the same
-#: oracle-pairing guard as ``_bpe_query_dirs``.
-_uni_query_dirs: set[str] = set()
-
 
 @functools.lru_cache(maxsize=4)
 def _uni_artifacts(sf_dir: str) -> tuple:
@@ -1267,7 +1236,6 @@ def q_doc_unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     word→segmentation join the BPE gate uses
     (:func:`bpe.bpe_token_counts` — the segmentation-cache contract is
     the interface, the trainer is pluggable)."""
-    _uni_query_dirs.add(sf_dir)
     model, table = _uni_artifacts(sf_dir)
     from scraping_etl_spark.operators import unigram as UNI
 
@@ -1279,26 +1247,13 @@ def q_doc_unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_doc_unigram_tokens(sf_dir: str | None = None) -> str:
+def oracle_doc_unigram_tokens(sf_dir: str) -> str:
     """Lazy DuckDB twin of :func:`q_doc_unigram_tokens` — identical
     shape to :func:`oracle_doc_bpe_tokens`: the learned word→piece-
     count table rides in as VALUES plan constants (training is
     deterministic — integer counts, total-order tie-breaks — so both
     engines share one model); tokenization is the exact relational
     mirror."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_uni_query_dirs) == 1:
-            sf_dir = next(iter(_uni_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _uni_query_dirs and sf_dir not in _uni_query_dirs:
-            raise RuntimeError(
-                f"doc_unigram_tokens oracle: would train at {sf_dir!r} but "
-                f"the query ran at {sorted(_uni_query_dirs)!r} — pass sf_dir "
-                "or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
     _, table = _uni_artifacts(sf_dir)
     values = ",\n    ".join(
         "('{}', {})".format(w.replace("'", "''"), n) for w, n in table
@@ -1334,8 +1289,6 @@ def q_doc_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus collapses to (lang, word) counts once per branch and both
     rollups are language-count rows, so the join is trivially
     broadcast-able."""
-    _bpe_query_dirs.add(sf_dir)
-    _uni_query_dirs.add(sf_dir)
     from scraping_etl_spark.operators import unigram as UNI
 
     merges, table_b = _bpe_artifacts(sf_dir)
@@ -1358,26 +1311,13 @@ def q_doc_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_doc_unigram_fertility(sf_dir: str | None = None) -> str:
+def oracle_doc_unigram_fertility(sf_dir: str) -> str:
     """Lazy DuckDB twin of :func:`q_doc_unigram_fertility`: both
     learned word→n_sub tables ride in as VALUES plan constants (the
-    ``oracle_doc_bpe_fertility`` convention, same pairing guard) and
+    ``oracle_doc_bpe_fertility`` convention) and
     the two per-language rollups are exact relational mirrors. The
     ratio divides the ROUNDED fertilities, exactly as the Spark side
     does, so it hashes."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_uni_query_dirs) == 1:
-            sf_dir = next(iter(_uni_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _uni_query_dirs and sf_dir not in _uni_query_dirs:
-            raise RuntimeError(
-                f"doc_unigram_fertility oracle: would train at {sf_dir!r} "
-                f"but the query ran at {sorted(_uni_query_dirs)!r} — pass "
-                "sf_dir or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
     _, table_b = _bpe_artifacts(sf_dir)
     _, table_u = _uni_artifacts(sf_dir)
     vb = ",\n    ".join(
@@ -1427,10 +1367,6 @@ FROM fb JOIN fu USING (lang)
 #: dominate real words while the expression budget stays test-sized.
 _WP_MERGES = 24
 
-#: sf_dirs the WordPiece query ran at — same oracle-pairing guard as
-#: ``_bpe_query_dirs`` / ``_uni_query_dirs``.
-_wp_query_dirs: set[str] = set()
-
 
 @functools.lru_cache(maxsize=4)
 def _wp_artifacts(sf_dir: str) -> tuple:
@@ -1472,7 +1408,6 @@ def q_doc_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     then tokenize every document through the same broadcast
     word→segmentation join all three tokenizers share
     (:func:`bpe.bpe_token_counts`)."""
-    _wp_query_dirs.add(sf_dir)
     _, vocab, table = _wp_artifacts(sf_dir)
     from scraping_etl_spark.operators import wordpiece as WP
 
@@ -1484,26 +1419,13 @@ def q_doc_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_doc_wordpiece_tokens(sf_dir: str | None = None) -> str:
+def oracle_doc_wordpiece_tokens(sf_dir: str) -> str:
     """Lazy DuckDB twin of :func:`q_doc_wordpiece_tokens` — identical
     shape to :func:`oracle_doc_unigram_tokens`: the learned word→
     piece-count table rides in as VALUES plan constants (training is
     deterministic — integer counts with exact-fraction argmax ties
     broken lexicographically, greedy matching is a pure function of
     the vocab); tokenization is the exact relational mirror."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_wp_query_dirs) == 1:
-            sf_dir = next(iter(_wp_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _wp_query_dirs and sf_dir not in _wp_query_dirs:
-            raise RuntimeError(
-                f"doc_wordpiece_tokens oracle: would train at {sf_dir!r} "
-                f"but the query ran at {sorted(_wp_query_dirs)!r} — pass "
-                "sf_dir or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
     _, _, table = _wp_artifacts(sf_dir)
     values = ",\n    ".join(
         "('{}', {})".format(w.replace("'", "''"), n) for w, n in table
@@ -2302,7 +2224,6 @@ def q_doc_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bpe.encode_token_ids — the one token-cardinality shuffle with a
     (pos, subpos)-sorted reassembly). Emits the id count and the
     space-joined id string so the order itself is hash-gated."""
-    _bpe_query_dirs.add(sf_dir)
     merges, table = _bpe_artifacts(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     seg = BPE.word_segment_table(d, list(merges))
@@ -2317,24 +2238,11 @@ def q_doc_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_doc_token_ids(sf_dir: str | None = None) -> str:
+def oracle_doc_token_ids(sf_dir: str) -> str:
     """Lazy DuckDB twin: segmentation + vocabulary embedded as plan
     constants; the ordered encode is an exact relational mirror
     (unnest-with-subscripts twice, id join, ORDER BY (pos, spos)
-    string_agg). Same dir-pairing guard as the other lazy oracles."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_bpe_query_dirs) == 1:
-            sf_dir = next(iter(_bpe_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _bpe_query_dirs and sf_dir not in _bpe_query_dirs:
-            raise RuntimeError(
-                f"doc_token_ids oracle: would train at {sf_dir!r} but the "
-                f"query ran at {sorted(_bpe_query_dirs)!r} — pass sf_dir or "
-                f"set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
+    string_agg)."""
     seg_rows, vocab_rows = _bpe_encode_artifacts(sf_dir)
     seg_values = ",\n    ".join(
         "('{}', '{}')".format(w.replace("'", "''"), s.replace("'", "''"))
@@ -2432,7 +2340,6 @@ def q_train_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash exchange + per-shard task-sized sorts."""
     from scraping_etl_spark.operators.curation import shuffle_to_shards
 
-    _bpe_query_dirs.add(sf_dir)
     merges, table = _bpe_artifacts(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     corpus = _te_corpus(spark, sf_dir)
@@ -2486,26 +2393,12 @@ def q_train_export_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("shard", "shard_pos")
 
 
-def oracle_train_export_pipeline(sf_dir: str | None = None) -> str:
+def oracle_train_export_pipeline(sf_dir: str) -> str:
     """Lazy DuckDB twin of the export composition: the trained
     segmentation + vocabulary embedded as plan constants (shared
     ``_bpe_encode_artifacts`` — same artifacts the encode gate uses),
     then dedup → per-doc (n_ids, ids_sum) → md5-shard window packing →
-    md5-perm shard ranking, each an exact relational mirror. Same
-    dir-pairing guard as the other lazy BPE oracles."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_bpe_query_dirs) == 1:
-            sf_dir = next(iter(_bpe_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _bpe_query_dirs and sf_dir not in _bpe_query_dirs:
-            raise RuntimeError(
-                f"train_export_pipeline oracle: would train at {sf_dir!r} "
-                f"but the query ran at {sorted(_bpe_query_dirs)!r} — pass "
-                f"sf_dir or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
+    md5-perm shard ranking, each an exact relational mirror."""
     seg_rows, vocab_rows = _bpe_encode_artifacts(sf_dir)
     seg_values = ",\n    ".join(
         "('{}', '{}')".format(w.replace("'", "''"), s.replace("'", "''"))
@@ -2684,30 +2577,16 @@ def q_doc_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language fertility/compression of the trained BPE
     vocabulary (bpe.tokenizer_fertility) — same train-once artifacts
     as ``doc_bpe_tokens``, rolled up per language instead of per doc."""
-    _bpe_query_dirs.add(sf_dir)
     merges, table = _bpe_artifacts(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     seg = BPE.word_segment_table(d, list(merges))
     return BPE.tokenizer_fertility(d, seg, seg_rows=len(table))
 
 
-def oracle_doc_bpe_fertility(sf_dir: str | None = None) -> str:
+def oracle_doc_bpe_fertility(sf_dir: str) -> str:
     """Lazy DuckDB twin: the learned word→n_sub table rides in as plan
-    constants (the ``oracle_doc_bpe_tokens`` convention, same pairing
-    guard); the report is then an exact relational mirror."""
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_bpe_query_dirs) == 1:
-            sf_dir = next(iter(_bpe_query_dirs))
-        else:
-            sf_dir = _BPE_ORACLE_SF_DIR
-        if _bpe_query_dirs and sf_dir not in _bpe_query_dirs:
-            raise RuntimeError(
-                f"doc_bpe_fertility oracle: would train at {sf_dir!r} but "
-                f"the query ran at {sorted(_bpe_query_dirs)!r} — pass sf_dir "
-                f"or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
+    constants (the ``oracle_doc_bpe_tokens`` convention); the report
+    is then an exact relational mirror."""
     _, table = _bpe_artifacts(sf_dir)
     values = ",\n    ".join(
         "('{}', {})".format(w.replace("'", "''"), n) for w, n in table
@@ -2792,7 +2671,6 @@ def q_doc_bpe_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE — so the hash gate certifies that the entire
     train→segment→encode→decode composition is lossless on the corpus
     it was trained on."""
-    _bpe_query_dirs.add(sf_dir)
     merges, table = _bpe_artifacts(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     seg = BPE.word_segment_table(d, list(merges))

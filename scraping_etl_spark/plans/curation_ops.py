@@ -7,14 +7,13 @@ classifier) and the SemDeDup pair/survivor operators in
 ``operators/similarity.py``. Conventions follow ``plans/corpus_ops.py``
 (shared token-SQL fragments, deterministic corpus construction for
 operators that need planted structure) and ``plans/ml_ops.py`` (lazy
-oracles embedding run-time-trained model constants, with the
-query/oracle sf-dir pairing guard).
+oracles embedding run-time-trained model constants, built for the
+scale dir they are given).
 """
 
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,6 +24,11 @@ from scraping_etl_spark.operators import curation as CU
 from scraping_etl_spark.operators import similarity as SIM
 from scraping_etl_spark.operators.search import bm25_topk, hybrid_prf_topk
 from scraping_etl_spark.operators.textstats import STOPWORDS
+from scraping_etl_spark.plans.ml_ops import (
+    _ivf_index,
+    double_list_sql,
+    oracle_emb_cluster_assign,
+)
 from scraping_etl_spark.sources.readers import load_table, spread_narrow_scan
 
 _TOKS = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
@@ -170,14 +174,6 @@ _SEM_ID_SHIFT = 10_000
 _SEM_THRESHOLD = 0.99
 _SEM_CLUSTERS = 8
 
-_sem_query_dirs: set[str] = set()
-_sem_zero_arg_oracle_dir: str | None = None
-_sem_explicit_oracle_dirs: set[str] = set()
-
-_SEM_ORACLE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
-
 
 @functools.lru_cache(maxsize=4)
 def _sem_centroids(sf_dir: str) -> tuple:
@@ -219,54 +215,22 @@ def q_emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy min-id survivors. The 25 copies (cosine exactly 1.0 with
     their originals, same cluster by the normalization contract) are
     dropped; the random base vectors survive."""
-    if (
-        _sem_zero_arg_oracle_dir is not None
-        and _sem_zero_arg_oracle_dir != sf_dir
-        and sf_dir not in _sem_explicit_oracle_dirs
-    ):
-        raise RuntimeError(
-            f"emb_semantic_dedup: zero-arg oracle trained at "
-            f"{_sem_zero_arg_oracle_dir!r} but the query runs at {sf_dir!r} "
-            f"— pass sf_dir to oracle_emb_semantic_dedup or set "
-            f"SPARK_GRAFT_ORACLE_SF_DIR."
-        )
-    _sem_query_dirs.add(sf_dir)
     centroids = [list(c) for c in _sem_centroids(sf_dir)]
     return SIM.semantic_dedup_survivors(
         _sem_corpus(spark, sf_dir), centroids, threshold=_SEM_THRESHOLD
     )
 
 
-def oracle_emb_semantic_dedup(sf_dir: str | None = None) -> str:
+def oracle_emb_semantic_dedup(sf_dir: str) -> str:
     """Lazy DuckDB twin: centroids embedded as DOUBLE plan constants
-    (``oracle_emb_ivf_topk`` convention, same pairing guard); the SQL
+    (``oracle_emb_ivf_topk`` convention); the SQL
     reproduces the union corpus, unit normalization, L2 assignment
     over the sphere, within-cluster pairs at cosine ≥ threshold
     (rounded 6 before the compare, as the operator does) and the
     greedy id_b drop."""
-    global _sem_zero_arg_oracle_dir
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            resolved = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_sem_query_dirs) == 1:
-            resolved = next(iter(_sem_query_dirs))
-        else:
-            resolved = _SEM_ORACLE_SF_DIR
-        if _sem_query_dirs and resolved not in _sem_query_dirs:
-            raise RuntimeError(
-                f"emb_semantic_dedup oracle: would train at {resolved!r} but "
-                f"the query ran at {sorted(_sem_query_dirs)!r}."
-            )
-        _sem_zero_arg_oracle_dir = resolved
-        sf_dir = resolved
-    else:
-        _sem_explicit_oracle_dirs.add(sf_dir)
     centroids = _sem_centroids(sf_dir)
     cent_rows = ",\n         ".join(
-        "({i}, [{xs}])".format(
-            i=i, xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c)
-        )
-        for i, c in enumerate(centroids)
+        f"({i}, [{double_list_sql(c)}])" for i, c in enumerate(centroids)
     )
     dim = len(centroids[0])
     dot_self = (
@@ -418,14 +382,6 @@ LEFT JOIN per_doc_runs r USING (doc_id)
 _CLF_ITERS = 40
 _CLF_LR = 0.5
 
-_clf_query_dirs: set[str] = set()
-_clf_zero_arg_oracle_dir: str | None = None
-_clf_explicit_oracle_dirs: set[str] = set()
-
-_CLF_ORACLE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
-
 
 def _corrupted_negatives(d: DataFrame) -> DataFrame:
     toks = F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
@@ -462,16 +418,6 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-classifier gate: score every document with the
     train-once logistic model (weights as plan constants — map-side
     scoring, the deployment path)."""
-    if (
-        _clf_zero_arg_oracle_dir is not None
-        and _clf_zero_arg_oracle_dir != sf_dir
-        and sf_dir not in _clf_explicit_oracle_dirs
-    ):
-        raise RuntimeError(
-            f"doc_quality_classifier: zero-arg oracle trained at "
-            f"{_clf_zero_arg_oracle_dir!r} but the query runs at {sf_dir!r}."
-        )
-    _clf_query_dirs.add(sf_dir)
     w = list(_clf_weights(sf_dir))
     d = load_table(spark, sf_dir, "documents")
     return CLF.score_logreg(CLF.quality_features(d), w).select(
@@ -479,28 +425,11 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_doc_quality_classifier(sf_dir: str | None = None) -> str:
+def oracle_doc_quality_classifier(sf_dir: str) -> str:
     """Lazy DuckDB twin: the learned weights are plan constants; the
     feature pipeline (ln(1+tokens), distinct ratio, stopword ratio
     rounded 6, mean token length, non-alnum ratio) and the
     left-to-right sigmoid dot fold are written out explicitly."""
-    global _clf_zero_arg_oracle_dir
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            resolved = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_clf_query_dirs) == 1:
-            resolved = next(iter(_clf_query_dirs))
-        else:
-            resolved = _CLF_ORACLE_SF_DIR
-        if _clf_query_dirs and resolved not in _clf_query_dirs:
-            raise RuntimeError(
-                f"doc_quality_classifier oracle: would train at {resolved!r} "
-                f"but the query ran at {sorted(_clf_query_dirs)!r}."
-            )
-        _clf_zero_arg_oracle_dir = resolved
-        sf_dir = resolved
-    else:
-        _clf_explicit_oracle_dirs.add(sf_dir)
     w = _clf_weights(sf_dir)
     stop_list = ", ".join(f"'{s}'" for s in STOPWORDS["en"])
     feats = [
@@ -811,10 +740,8 @@ def q_emb_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain-discovery face of `emb_cluster_assign`): vector count,
     distinct labels, label range and mean centroid distance per
     cluster — a groupBy over the zero-shuffle assignment."""
-    from scraping_etl_spark.plans.ml_ops import _ivf_index, _ivf_query_dirs
     from scraping_etl_spark.operators.similarity import cluster_assign
 
-    _ivf_query_dirs.add(sf_dir)  # oracle-pairing guard (ml_ops convention)
     e = load_table(spark, sf_dir, "embeddings")
     centroids = [list(c) for c in _ivf_index(sf_dir)]
     assigned = cluster_assign(e, centroids).join(
@@ -829,11 +756,9 @@ def q_emb_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_emb_cluster_profile(sf_dir: str | None = None) -> str:
+def oracle_emb_cluster_profile(sf_dir: str) -> str:
     """Lazy DuckDB twin sharing ``oracle_emb_cluster_assign``'s
     centroid plan constants and assignment SQL, plus the rollup."""
-    from scraping_etl_spark.plans.ml_ops import oracle_emb_cluster_assign
-
     assign_sql = oracle_emb_cluster_assign(sf_dir)
     return f"""
 WITH assign AS (
@@ -1082,10 +1007,6 @@ _FCLF_LR = 0.5
 #: their positives in the (doc, slot) tf aggregation.
 _FCLF_NEG_OFFSET = 10**12
 
-_fclf_query_dirs: set[str] = set()
-_fclf_zero_arg_oracle_dir: str | None = None
-_fclf_explicit_oracle_dirs: set[str] = set()
-
 
 @functools.lru_cache(maxsize=4)
 def _fclf_model(sf_dir: str) -> tuple:
@@ -1143,16 +1064,6 @@ def q_doc_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     trained (idf, weights) ride as plan constants; scoring is one
     (doc, slot) partial agg + a fixed-point sparse dot — no
     corpus-scale joins (classifier.score_hashed_logreg)."""
-    if (
-        _fclf_zero_arg_oracle_dir is not None
-        and _fclf_zero_arg_oracle_dir != sf_dir
-        and sf_dir not in _fclf_explicit_oracle_dirs
-    ):
-        raise RuntimeError(
-            f"doc_hashed_classifier: zero-arg oracle trained at "
-            f"{_fclf_zero_arg_oracle_dir!r} but the query runs at {sf_dir!r}."
-        )
-    _fclf_query_dirs.add(sf_dir)
     idf, w = _fclf_model(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     return CLF.score_hashed_logreg(
@@ -1160,30 +1071,13 @@ def q_doc_hashed_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "quality_prob")
 
 
-def oracle_doc_hashed_classifier(sf_dir: str | None = None) -> str:
+def oracle_doc_hashed_classifier(sf_dir: str) -> str:
     """Lazy DuckDB twin: idf + weights as plan constants; the md5-slot
     hash, the round-6 tfidf, and the fixed-point dot grid are written
     out with the exact Spark-side arithmetic shape."""
-    global _fclf_zero_arg_oracle_dir
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            resolved = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_fclf_query_dirs) == 1:
-            resolved = next(iter(_fclf_query_dirs))
-        else:
-            resolved = _CLF_ORACLE_SF_DIR
-        if _fclf_query_dirs and resolved not in _fclf_query_dirs:
-            raise RuntimeError(
-                f"doc_hashed_classifier oracle: would train at {resolved!r} "
-                f"but the query ran at {sorted(_fclf_query_dirs)!r}."
-            )
-        _fclf_zero_arg_oracle_dir = resolved
-        sf_dir = resolved
-    else:
-        _fclf_explicit_oracle_dirs.add(sf_dir)
     idf, w = _fclf_model(sf_dir)
-    idf_list = ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in idf)
-    w_list = ", ".join(f"CAST({float(v)!r} AS DOUBLE)" for v in w[1:])
+    idf_list = double_list_sql(idf)
+    w_list = double_list_sql(w[1:])
     fx = "1000000000000.0"
     return f"""
 WITH tok AS (

@@ -18,7 +18,6 @@ remaining hash-comparable.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -444,6 +443,13 @@ _DOT = (
 )
 
 
+def double_list_sql(xs) -> str:
+    """``xs`` as comma-separated DuckDB DOUBLE literals — how the lazy
+    oracles embed trained plan constants (``repr`` round-trips every
+    float bit, so both engines see the same values)."""
+    return ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in xs)
+
+
 def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force cosine top-3 for the first 20 vectors against
     the whole corpus (operators/similarity.py — broadcast probes,
@@ -820,79 +826,12 @@ def _ivf_index(sf_dir: str) -> tuple:
     return tuple(tuple(c) for c in SIM.ivf_train(e, n_clusters=16))
 
 
-#: sf_dirs this process has run :func:`q_emb_ivf_topk` at, the dir the
-#: ZERO-ARG oracle (the driver's path) trained at, and the dirs oracles
-#: were built for EXPLICITLY — used to fail fast on the silent-mismatch
-#: hazard where the Spark query trains at one scale while the
-#: default-built oracle trained at another. An explicit
-#: ``oracle_emb_ivf_topk(sf_dir)`` marks that dir correctly paired, so
-#: a stray zero-arg enumeration earlier in the process cannot produce
-#: a spurious failure for properly-paired compares.
-_ivf_query_dirs: set[str] = set()
-_ivf_zero_arg_oracle_dir: str | None = None
-_ivf_explicit_oracle_dirs: set[str] = set()
-
-#: The driver's correctness compare runs at sf=0.01 (driver contract in
-#: ``__spark_entry__``), so the lazily-built IVF oracles train there by
-#: default; override for local experiments at other scales.
-_IVF_ORACLE_SF_DIR = os.environ.get(
-    "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-)
-
-
-def _ivf_guard_query_dir(sf_dir: str, gate: str) -> None:
-    """Fail-fast half of the index-pairing hazard guard, shared by
-    every gate that serves off ``_ivf_index``: if a zero-arg oracle
-    already trained at one dir, a query at another dir would silently
-    hash-mismatch."""
-    if (
-        _ivf_zero_arg_oracle_dir is not None
-        and _ivf_zero_arg_oracle_dir != sf_dir
-        and sf_dir not in _ivf_explicit_oracle_dirs
-    ):
-        raise RuntimeError(
-            f"{gate}: the zero-arg oracle trained its index at "
-            f"{_ivf_zero_arg_oracle_dir!r} but the query is running at "
-            f"{sf_dir!r} — the hash compare would silently mismatch. Set "
-            f"SPARK_GRAFT_ORACLE_SF_DIR={sf_dir} (or pass sf_dir to "
-            f"the oracle builder) so both sides share one index."
-        )
-    _ivf_query_dirs.add(sf_dir)
-
-
-def _ivf_oracle_dir(sf_dir: "str | None", gate: str) -> str:
-    """Resolution half of the pairing guard (see
-    :func:`oracle_emb_ivf_topk` for the full hazard story): zero-arg
-    adopts the live query dir when unambiguous, else the driver
-    default — refusing outright if queries ran at dirs the default
-    doesn't cover."""
-    global _ivf_zero_arg_oracle_dir
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            resolved = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_ivf_query_dirs) == 1:
-            resolved = next(iter(_ivf_query_dirs))
-        else:
-            resolved = _IVF_ORACLE_SF_DIR
-        if _ivf_query_dirs and resolved not in _ivf_query_dirs:
-            raise RuntimeError(
-                f"{gate} oracle: would train at {resolved!r} but the "
-                f"query ran at {sorted(_ivf_query_dirs)!r} — pass sf_dir "
-                f"or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
-        _ivf_zero_arg_oracle_dir = resolved
-        return resolved
-    _ivf_explicit_oracle_dirs.add(sf_dir)
-    return sf_dir
-
-
 def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means inverted-list) approximate top-3 — the
     cluster-pruned scale path beside the LSH one; probes search their 4
     nearest of 16 lists (operators/similarity.ivf_topk). The index is
     built once per sf_dir and reused. Approximate by design + iterative
     training → rows-only driver check."""
-    _ivf_guard_query_dir(sf_dir, "emb_ivf_topk")
     e = load_table(spark, sf_dir, "embeddings")
     probes = e.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -903,7 +842,7 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_emb_ivf_topk(sf_dir: str | None = None) -> str:
+def oracle_emb_ivf_topk(sf_dir: str) -> str:
     """DuckDB twin of :func:`q_emb_ivf_topk`, built *lazily* (the
     registry's callable-oracle support exists for exactly this case)
     because the centroids are run-time plan constants: ``ivf_train``
@@ -914,24 +853,10 @@ def oracle_emb_ivf_topk(sf_dir: str | None = None) -> str:
     arithmetic mirrored bit-for-bit: the same left-fold squared-distance
     sum, the same (distance, cid) lexicographic nearest-centroid pick
     (Spark's ``array_sort`` over structs ≡ ``ORDER BY d, cid``), the
-    same 4-probe fan-out, and the same (cos DESC, id ASC) ranking.
-
-    Zero-arg (the registry's lazy-oracle contract) trains at the
-    driver's correctness scale; tests comparing at another sf pass
-    their own ``sf_dir`` so both sides share one index. The zero-arg
-    path threads the live sf rather than trusting the import-time env
-    default: if this process has already run the IVF *query* at exactly
-    one sf_dir, the oracle adopts it (driver runs query + oracle in one
-    process, so this pairs them by construction); the chosen dir is
-    recorded and :func:`q_emb_ivf_topk` fails fast on any later
-    divergence instead of letting the hash gate silently mismatch."""
-    sf_dir = _ivf_oracle_dir(sf_dir, "emb_ivf_topk")
+    same 4-probe fan-out, and the same (cos DESC, id ASC) ranking."""
     centroids = _ivf_index(sf_dir)
     cent_rows = ",\n         ".join(
-        "({i}, [{xs}])".format(
-            i=i, xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c)
-        )
-        for i, c in enumerate(centroids)
+        f"({i}, [{double_list_sql(c)}])" for i, c in enumerate(centroids)
     )
     # identical fold order to similarity._sq_dist_to: (a - b) * (a - b)
     sq_dist = (
@@ -1101,9 +1026,7 @@ def _media_votes_sql() -> str:
     return " + ".join(terms)
 
 
-def oracle_doc_media_dedup(sf_dir: str | None = None) -> str:
-    """Callable-oracle contract takes the scale dir; this oracle has
-    no plan constants, so it is accepted and ignored."""
+def _media_dedup_oracle() -> str:
     width = _MEDIA_BITS // _MEDIA_BANDS
     mask = (1 << width) - 1
     step = 2 * _MEDIA_CHUNK
@@ -1143,6 +1066,9 @@ JOIN sig sa ON sa.doc_id = c.id_a
 JOIN sig sb ON sb.doc_id = c.id_b
 WHERE bit_count(xor(sa.s, sb.s)) <= {_MEDIA_HAM}
 """
+
+
+ORACLE_DOC_MEDIA_DEDUP = _media_dedup_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1630,58 +1556,23 @@ def q_emb_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic clustering: every embedding assigned to its nearest
     trained IVF centroid (operators/similarity.cluster_assign) — the
     per-doc domain label a mixture-balancing pipeline keys on. Shares
-    the per-sf index cache (and the oracle-pairing guard) with
-    q_emb_ivf_topk; assignment itself is map-side over centroid plan
-    constants, zero shuffle."""
-    if (
-        _ivf_zero_arg_oracle_dir is not None
-        and _ivf_zero_arg_oracle_dir != sf_dir
-        and sf_dir not in _ivf_explicit_oracle_dirs
-    ):
-        raise RuntimeError(
-            f"emb_cluster_assign: the zero-arg oracle trained its index at "
-            f"{_ivf_zero_arg_oracle_dir!r} but the query is running at "
-            f"{sf_dir!r} — the hash compare would silently mismatch. Set "
-            f"SPARK_GRAFT_ORACLE_SF_DIR={sf_dir} so both sides share one "
-            f"index."
-        )
-    _ivf_query_dirs.add(sf_dir)
+    the per-sf index cache with q_emb_ivf_topk; assignment itself is
+    map-side over centroid plan constants, zero shuffle."""
     e = load_table(spark, sf_dir, "embeddings")
     centroids = [list(c) for c in _ivf_index(sf_dir)]
     return SIM.cluster_assign(e, centroids)
 
 
-def oracle_emb_cluster_assign(sf_dir: str | None = None) -> str:
+def oracle_emb_cluster_assign(sf_dir: str) -> str:
     """DuckDB twin of :func:`q_emb_cluster_assign` — same lazy
     constants-in-the-plan pattern as :func:`oracle_emb_ivf_topk` (the
-    two share one `_ivf_index` cache and one pairing state, so driver
-    runs that execute both queries in one process train exactly one
-    index per scale dir). Same left-fold squared distance, same
-    (d, cid) lexicographic argmin, same round-6 distance."""
-    global _ivf_zero_arg_oracle_dir
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            resolved = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_ivf_query_dirs) == 1:
-            resolved = next(iter(_ivf_query_dirs))
-        else:
-            resolved = _IVF_ORACLE_SF_DIR
-        if _ivf_query_dirs and resolved not in _ivf_query_dirs:
-            raise RuntimeError(
-                f"emb_cluster_assign oracle: would train at {resolved!r} but "
-                f"the query ran at {sorted(_ivf_query_dirs)!r} — pass sf_dir "
-                f"or set SPARK_GRAFT_ORACLE_SF_DIR to pair them."
-            )
-        _ivf_zero_arg_oracle_dir = resolved
-        sf_dir = resolved
-    else:
-        _ivf_explicit_oracle_dirs.add(sf_dir)
+    two share one `_ivf_index` cache, so a run that executes both
+    queries trains exactly one index per scale dir). Same left-fold
+    squared distance, same (d, cid) lexicographic argmin, same round-6
+    distance."""
     centroids = _ivf_index(sf_dir)
     cent_rows = ",\n         ".join(
-        "({i}, [{xs}])".format(
-            i=i, xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c)
-        )
-        for i, c in enumerate(centroids)
+        f"({i}, [{double_list_sql(c)}])" for i, c in enumerate(centroids)
     )
     sq_dist = (
         "list_reduce(list_transform(generate_series(1, {d}), "
@@ -1788,7 +1679,6 @@ def q_emb_decontaminate_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays the operator-suite contract; the subset-honesty pin
     (partial flags ⊆ exact flags, hit counts never higher) lives in
     the staged-gate test."""
-    _ivf_guard_query_dir(sf_dir, "emb_decontaminate_ivf")
     e = load_table(spark, sf_dir, "embeddings")
     bench = e.filter(F.col("vec_id") % _DECON_MOD == 0).select(
         "vec_id", "embedding"
@@ -1803,11 +1693,10 @@ def q_emb_decontaminate_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def oracle_emb_decontaminate_ivf(sf_dir: str | None = None) -> str:
+def oracle_emb_decontaminate_ivf(sf_dir: str) -> str:
     """DuckDB twin of :func:`q_emb_decontaminate_ivf`, built lazily
     (the registry's callable-oracle support) because the centroids are
-    run-time plan constants shared through ``_ivf_index`` — the same
-    pairing-guard rules as :func:`oracle_emb_ivf_topk`. The replay:
+    run-time plan constants shared through ``_ivf_index``. The replay:
     every vector's squared distance to every centroid literal with the
     identical left-fold order, (d, cid)-lexicographic ranking, bench
     rows keep their ONE nearest cell, corpus rows fan out to their
@@ -1815,13 +1704,9 @@ def oracle_emb_decontaminate_ivf(sf_dir: str | None = None) -> str:
     flagged/ranked SQL verbatim with the join restricted to matching
     cells — so ``n_bench_hits`` counts within probed cells, exactly
     the operator's documented IVF recall trade."""
-    sf_dir = _ivf_oracle_dir(sf_dir, "emb_decontaminate_ivf")
     centroids = _ivf_index(sf_dir)
     cent_rows = ",\n         ".join(
-        "({i}, [{xs}])".format(
-            i=i, xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c)
-        )
-        for i, c in enumerate(centroids)
+        f"({i}, [{double_list_sql(c)}])" for i, c in enumerate(centroids)
     )
     # identical fold order to similarity._sq_dist_to: (a - b) * (a - b)
     sq_dist = (

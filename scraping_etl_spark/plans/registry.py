@@ -426,10 +426,11 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    #: SQL string, or a zero-arg callable building it lazily (used when
-    #: the oracle embeds plan constants computed at run time, e.g. the
-    #: IVF centroids), or None for the driver's rows-only check.
-    oracle: str | Callable[[], str] | None
+    #: SQL string; or a callable taking the scale dir and building the
+    #: SQL for it (used when the oracle embeds state trained at run
+    #: time, e.g. IVF centroids, so it must be built for the same dir
+    #: the query ran at); or None for the driver's rows-only check.
+    oracle: str | Callable[[str], str] | None
     description: str
 
 
@@ -1243,7 +1244,7 @@ _REGISTERED += [
         "plan-constants oracle; operators/unigram.py)",
     ),
     QuerySpec(
-        "doc_media_dedup", M.q_doc_media_dedup, M.oracle_doc_media_dedup,
+        "doc_media_dedup", M.q_doc_media_dedup, M.ORACLE_DOC_MEDIA_DEDUP,
         "binary-asset near-dup pairs without decoding: byte-chunk "
         "SimHash + banded Hamming-ball lookup over re-hosted and "
         "tail-edited payload copies (multimodal.payload_simhash / "
@@ -1429,9 +1430,9 @@ _REGISTERED += [
 #      PRODUCTION partial-probe setting, 4 of 16 cells — r15 verdict
 #      item 4; hash-exact because the lazy callable oracle replays
 #      the whole index — centroid literals, (d, cid) assignment,
-#      probe fan-out — the oracle_emb_ivf_topk pattern, with the
-#      same shared pairing guard. Full probe would cost exactly the
-#      expression tier + a shuffle, certifying nothing new).
+#      probe fan-out — the oracle_emb_ivf_topk pattern. Full probe
+#      would cost exactly the expression tier + a shuffle, certifying
+#      nothing new).
 #   2. ml_ops.q_emb_kcenter_select + ORACLE_EMB_KCENTER_SELECT
 #      (similarity.kcenter_select — Gonzalez'85 farthest-point
 #      diversity core-set, Sener & Savarese ICLR'18; the oracle
@@ -1554,9 +1555,11 @@ def queries_map() -> dict[str, QueryFn]:
     return {q.name: q.fn for q in QUERIES}
 
 
-def oracle_sql_map() -> dict[str, str]:
+def oracle_sql_map(sf_dir: str) -> dict[str, str]:
+    """Oracle SQL per query name, with every callable oracle built for
+    ``sf_dir`` — the dir the queries are compared at."""
     return {
-        q.name: (q.oracle() if callable(q.oracle) else q.oracle)
+        q.name: (q.oracle(sf_dir) if callable(q.oracle) else q.oracle)
         for q in QUERIES
         if q.oracle is not None
     }

@@ -27,6 +27,8 @@ planted twins, the winnow corpus pattern).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +36,7 @@ from scraping_etl_spark.operators import bloom as BL
 from scraping_etl_spark.operators import normalize as NORM
 from scraping_etl_spark.operators.dedup import containment_pairs
 from scraping_etl_spark.operators.textstats import pmi_collocations, tokens
+from scraping_etl_spark.plans.ml_ops import double_list_sql
 from scraping_etl_spark.sources.readers import load_table
 
 _LTOKS = r"list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')"
@@ -565,12 +568,7 @@ ORDER BY doc_id
 # Product-quantization ANN tier (similarity.pq_* gate — r10 queue)
 # ---------------------------------------------------------------------------
 
-import functools
-import os
-
 _PQ_M, _PQ_K, _PQ_TOPK, _PQ_N_PROBES = 8, 16, 3, 3
-
-_pq_query_dirs: set[str] = set()
 
 
 @functools.lru_cache(maxsize=4)
@@ -602,7 +600,6 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN tier (similarity.pq_train/pq_encode/pq_topk)."""
     from scraping_etl_spark.operators import similarity as SIM
 
-    _pq_query_dirs.add(sf_dir)
     books, probes = _pq_index(sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
     enc = SIM.pq_encode(e, [list(map(list, b)) for b in books])
@@ -612,7 +609,7 @@ def q_emb_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "neighbor_id", "adc_dist", "rank")
 
 
-def oracle_emb_pq_topk(sf_dir: str | None = None) -> str:
+def oracle_emb_pq_topk(sf_dir: str) -> str:
     """Lazy DuckDB twin: codebooks embedded as VALUES, per-subspace
     argmin replayed with the identical left-fold squared distance and
     (d, cid) tie-break, codes pivoted to columns, and the ADC sum
@@ -621,26 +618,10 @@ def oracle_emb_pq_topk(sf_dir: str | None = None) -> str:
     derivation can disagree)."""
     from scraping_etl_spark.operators import similarity as SIM
 
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_pq_query_dirs) == 1:
-            sf_dir = next(iter(_pq_query_dirs))
-        else:
-            sf_dir = "/root/testdata/sf0.01"
-        if _pq_query_dirs and sf_dir not in _pq_query_dirs:
-            raise RuntimeError(
-                f"emb_pq_topk oracle: would train at {sf_dir!r} but the "
-                f"query ran at {sorted(_pq_query_dirs)!r} — pair them via "
-                "SPARK_GRAFT_ORACLE_SF_DIR."
-            )
     books, probes = _pq_index(sf_dir)
     m, sub = len(books), len(books[0][0])
     book_rows = ",\n         ".join(
-        "({j}, {cid}, [{xs}])".format(
-            j=j, cid=cid,
-            xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c),
-        )
+        f"({j}, {cid}, [{double_list_sql(c)}])"
         for j, b in enumerate(books)
         for cid, c in enumerate(b)
     )
@@ -658,11 +639,7 @@ def oracle_emb_pq_topk(sf_dir: str | None = None) -> str:
             [list(map(list, b)) for b in books], list(q)
         )
         terms = " + ".join(
-            "[{xs}][c{j} + 1]".format(
-                xs=", ".join(f"CAST({float(t)!r} AS DOUBLE)" for t in tables[j]),
-                j=j,
-            )
-            for j in range(m)
+            f"[{double_list_sql(tables[j])}][c{j} + 1]" for j in range(m)
         )
         probe_selects.append(
             f"SELECT CAST({qid} AS BIGINT) AS query_id, vec_id AS neighbor_id,\n"
@@ -1016,8 +993,6 @@ _IVFPQ_NC, _IVFPQ_M, _IVFPQ_K = 6, 4, 8
 _IVFPQ_NPROBE, _IVFPQ_TOPK, _IVFPQ_NQ = 2, 3, 8
 _IVFPQ_DIM = 64
 
-_ivfpq_query_dirs: set[str] = set()
-
 
 @functools.lru_cache(maxsize=4)
 def _ivfpq_index(sf_dir: str) -> tuple:
@@ -1055,7 +1030,6 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     table lookups per candidate (similarity.ivfpq_*)."""
     from scraping_etl_spark.operators import similarity as SIM
 
-    _ivfpq_query_dirs.add(sf_dir)
     cents, books, probes = _ivfpq_index(sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
     # the encoded relation feeds probes x n_probe TakeOrdered branches
@@ -1074,42 +1048,23 @@ def q_emb_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "neighbor_id", "cluster", "adc_dist", "rank")
 
 
-def oracle_emb_ivfpq_topk(sf_dir: str | None = None) -> str:
+def oracle_emb_ivfpq_topk(sf_dir: str) -> str:
     """Lazy DuckDB twin: centroids + residual codebooks as VALUES,
     coarse argmin replayed with the identical left-fold distance and
     (d, cid) tie-break, residuals recomputed relationally, subspace
     codes pivoted, and each probe's per-probed-cluster ADC sum written
     as the same fixed-order chain over driver-computed tables (the
-    ``oracle_emb_pq_topk`` convention, pairing guard included)."""
+    ``oracle_emb_pq_topk`` convention)."""
     from scraping_etl_spark.operators import similarity as SIM
 
-    if sf_dir is None:
-        if "SPARK_GRAFT_ORACLE_SF_DIR" in os.environ:
-            sf_dir = os.environ["SPARK_GRAFT_ORACLE_SF_DIR"]
-        elif len(_ivfpq_query_dirs) == 1:
-            sf_dir = next(iter(_ivfpq_query_dirs))
-        else:
-            sf_dir = "/root/testdata/sf0.01"
-        if _ivfpq_query_dirs and sf_dir not in _ivfpq_query_dirs:
-            raise RuntimeError(
-                f"emb_ivfpq_topk oracle: would train at {sf_dir!r} but the "
-                f"query ran at {sorted(_ivfpq_query_dirs)!r} — pair them via "
-                "SPARK_GRAFT_ORACLE_SF_DIR."
-            )
     cents, books, probes = _ivfpq_index(sf_dir)
     m, sub = len(books), len(books[0][0])
     dim = _IVFPQ_DIM
     cent_rows = ",\n         ".join(
-        "({cid}, [{xs}])".format(
-            cid=cid, xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c)
-        )
-        for cid, c in enumerate(cents)
+        f"({cid}, [{double_list_sql(c)}])" for cid, c in enumerate(cents)
     )
     book_rows = ",\n         ".join(
-        "({j}, {cid}, [{xs}])".format(
-            j=j, cid=cid,
-            xs=", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in c),
-        )
+        f"({j}, {cid}, [{double_list_sql(c)}])"
         for j, b in enumerate(books)
         for cid, c in enumerate(b)
     )
@@ -1141,13 +1096,7 @@ def oracle_emb_ivfpq_topk(sf_dir: str | None = None) -> str:
                 [list(map(list, b)) for b in books], resq
             )
             terms = " + ".join(
-                "[{xs}][c{j} + 1]".format(
-                    xs=", ".join(
-                        f"CAST({float(t)!r} AS DOUBLE)" for t in tables[j]
-                    ),
-                    j=j,
-                )
-                for j in range(m)
+                f"[{double_list_sql(tables[j])}][c{j} + 1]" for j in range(m)
             )
             probe_selects.append(
                 f"SELECT CAST({qid} AS BIGINT) AS query_id, vec_id AS neighbor_id,\n"

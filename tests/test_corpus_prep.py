@@ -497,40 +497,6 @@ def test_dedup_clusters_integral_doubles_ok(spark):
 
 
 # ---------------------------------------------------------------------------
-# IVF oracle/query sf pairing (ADVICE r4)
-# ---------------------------------------------------------------------------
-
-def test_ivf_query_fails_fast_on_oracle_sf_divergence(spark):
-    from scraping_etl_spark.plans import ml_ops as M
-
-    saved = (M._ivf_zero_arg_oracle_dir, set(M._ivf_query_dirs))
-    try:
-        M._ivf_zero_arg_oracle_dir = "/root/testdata/sf0.01"
-        with pytest.raises(RuntimeError, match="silently mismatch"):
-            M.q_emb_ivf_topk(spark, "/root/testdata/sf0.001")
-    finally:
-        M._ivf_zero_arg_oracle_dir, M._ivf_query_dirs = saved[0], saved[1]
-
-
-def test_ivf_zero_arg_oracle_rejects_unpaired_default(monkeypatch):
-    from scraping_etl_spark.plans import ml_ops as M
-
-    saved = (M._ivf_zero_arg_oracle_dir, set(M._ivf_query_dirs))
-    monkeypatch.delenv("SPARK_GRAFT_ORACLE_SF_DIR", raising=False)
-    try:
-        # queries ran at two dirs, default at neither -> ambiguous: raise
-        M._ivf_query_dirs.clear()
-        M._ivf_query_dirs.update({"/a", "/b"})
-        M._ivf_zero_arg_oracle_dir = None
-        with pytest.raises(RuntimeError, match="pair them"):
-            M.oracle_emb_ivf_topk()
-    finally:
-        M._ivf_zero_arg_oracle_dir = saved[0]
-        M._ivf_query_dirs.clear()
-        M._ivf_query_dirs.update(saved[1])
-
-
-# ---------------------------------------------------------------------------
 # load_table timestamp normalization (NTZ parquet writers)
 # ---------------------------------------------------------------------------
 
@@ -599,34 +565,6 @@ def test_scrub_pii_custom_columns_and_no_counts(spark):
     out = CP.scrub_pii(df, text_col="body", out_col="clean", with_counts=False)
     assert out.columns == ["id", "body", "clean"]
     assert out.collect()[0].clean == "<EMAIL>"
-
-
-def test_ivf_explicit_pairing_not_poisoned_by_zero_arg_oracle():
-    """A zero-arg oracle enumeration earlier in the process must NOT
-    make a later, explicitly-paired (query at X, oracle(X)) compare
-    raise — only genuinely unpaired zero-arg usage fails fast."""
-    from scraping_etl_spark.plans import ml_ops as M
-
-    saved = (M._ivf_zero_arg_oracle_dir, set(M._ivf_query_dirs),
-             set(M._ivf_explicit_oracle_dirs))
-    try:
-        M._ivf_zero_arg_oracle_dir = "/root/testdata/sf0.01"
-        M._ivf_explicit_oracle_dirs.clear()
-        M._ivf_explicit_oracle_dirs.add("/root/testdata/sf0.001")
-        # the guard inside q_emb_ivf_topk runs before any Spark work;
-        # with the explicit pairing recorded it must not raise at the
-        # guard (we don't run the full query here — just confirm the
-        # guard logic via the same predicate)
-        assert not (
-            M._ivf_zero_arg_oracle_dir is not None
-            and M._ivf_zero_arg_oracle_dir != "/root/testdata/sf0.001"
-            and "/root/testdata/sf0.001" not in M._ivf_explicit_oracle_dirs
-        )
-    finally:
-        M._ivf_zero_arg_oracle_dir = saved[0]
-        M._ivf_query_dirs.clear(); M._ivf_query_dirs.update(saved[1])
-        M._ivf_explicit_oracle_dirs.clear()
-        M._ivf_explicit_oracle_dirs.update(saved[2])
 
 
 # ---------------------------------------------------------------------------

@@ -888,6 +888,10 @@ def test_pq_validates(spark):
     with _pt.raises(ValueError):
         SIM.pq_train(e, m=2, k=1)
     books = SIM.pq_train(e, m=2, k=4)
+    ragged = [books[0], [books[1][0][:-1]] + books[1][1:]]
+    for bad in ([], [[]], books[:1] + [books[1][:-1]], ragged):
+        with _pt.raises(ValueError):
+            SIM.pq_encode(e, bad)
     enc = SIM.pq_encode(e, books)
     with _pt.raises(ValueError):
         SIM.pq_topk(enc, books, [], k=3)
@@ -1159,6 +1163,11 @@ def test_ivfpq_topk_validates(spark):
 
     e = _clustered_vecs(spark, n_per=5).localCheckpoint()
     cents, books = SIM.ivfpq_train(e, n_clusters=3, m=4, k=4)
+    ragged = [list(b) for b in books]
+    ragged[2] = [ragged[2][0] + [0.0]] + ragged[2][1:]
+    for bad in ([], [[]], ragged):
+        with _pt.raises(ValueError):
+            SIM.ivfpq_encode(e, cents, bad)
     enc = SIM.ivfpq_encode(e, cents, books)
     with _pt.raises(ValueError):
         SIM.ivfpq_topk(enc, cents, books, [(0, [0.0] * 8)], n_probe=9)

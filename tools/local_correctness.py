@@ -60,7 +60,7 @@ def main() -> int:
             if spec.oracle is None:
                 row.update(rows=out.count() >= 0, schema=True, hash=None)
             else:
-                sql = spec.oracle() if callable(spec.oracle) else spec.oracle
+                sql = spec.oracle(SF_DIR) if callable(spec.oracle) else spec.oracle
                 assert_matches_oracle(out, sql, SF_DIR)
                 row.update(rows=True, schema=True, hash=True)
             n_ok += 1
