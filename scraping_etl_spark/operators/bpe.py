@@ -11,13 +11,21 @@ Design — the scale insight is that BPE never needs the corpus after
 one pass (Sennrich et al. 2016, arXiv:1508.07909, train on the word
 FREQUENCY table):
 
-- :func:`bpe_train` collapses the corpus to its distinct-word frequency
-  table (one partial-agg shuffle — the only corpus-scale step), then
-  iterates merge selection over that VOCABULARY-scale table: each round
-  is a pair-count aggregation + an O(1)-row ``limit(1).collect()``
-  probe (the ``dedup_clusters`` fixpoint-probe pattern, not a
-  driver-side loop over data) + a per-row fold applying the merge.
-  Rounds ``localCheckpoint`` so the plan never nests ``n_merges`` deep.
+- :func:`word_table_tier` is the ONE corpus-scale step every trainer
+  here shares (BPE, ``wordpiece``, ``unigram``): explode → groupBy
+  word → ``localCheckpoint`` → a ``limit(cap+1).count()`` probe → the
+  collected ``(word, cnt)`` table when it fits under the cap. It picks
+  the training tier: in-process (driver) under the cap, Spark jobs at
+  vocabulary scale past it.
+- :func:`bpe_train` runs the merge loop over that table —
+  :func:`merge_loop_driver` in-process, or :func:`merge_loop_dist`
+  (per round a pair-count aggregation + an O(1)-row
+  ``limit(1).collect()`` argmax probe + a per-row fold applying the
+  merge, ``localCheckpoint``-ing every :data:`CHECKPOINT_EVERY`
+  rounds). Both loops are shared with WordPiece, which passes its own
+  initial symbols, merged-piece name and likelihood score. Either
+  tier ends holding every distinct word in its merged state, so the
+  trainer returns that word→symbols table next to the merges.
 - :func:`word_segment_table` replays learned merges over a corpus's
   distinct words — the word-level segmentation cache every fast BPE
   encoder builds. Vocabulary-scale, and the per-merge fold-expression
@@ -47,6 +55,9 @@ convention, plans/ml_ops.py).
 
 from __future__ import annotations
 
+import operator
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -64,6 +75,14 @@ _CHAR_SPLIT = "(?!^)"
 #: module docstring.
 MAX_BROADCAST_WORDS = 2_000_000
 
+#: The distributed merge loop and :func:`word_segment_table`'s fold
+#: chain ``localCheckpoint`` every this many merges, so plans never
+#: nest deep while most rounds skip the materialization job.
+CHECKPOINT_EVERY = 4
+
+#: A word-level segmentation table: ``(word, symbols)`` sorted by word.
+SegTable = list[tuple[str, tuple[str, ...]]]
+
 
 def char_symbols(word: Column | str) -> Column:
     """Initial BPE symbol sequence of a word: its characters. Spark's
@@ -73,14 +92,15 @@ def char_symbols(word: Column | str) -> Column:
     return F.filter(F.split(c, _CHAR_SPLIT), lambda x: x != "")
 
 
-def apply_merge(sym: Column, a: str, b: str) -> Column:
+def apply_merge(sym: Column, a: str, b: str, merged: str) -> Column:
     """One left-to-right merge pass: every adjacent ``(a, b)`` becomes
-    the single symbol ``a+b`` — a per-row ``F.aggregate`` fold (acc
-    ends with ``a`` and next is ``b`` → replace tail, else append),
-    which is exactly the single-pass greedy semantics of classic BPE.
-    A freshly merged ``a+b`` can't re-merge with a following ``b``
-    because the tail is now ``a+b``, not ``a``."""
-    merged = a + b
+    the single symbol ``merged`` (``a+b`` for BPE,
+    ``wordpiece.wp_merge_name`` for WordPiece) — a per-row
+    ``F.aggregate`` fold (acc ends with ``a`` and next is ``b`` →
+    replace tail, else append), which is exactly the single-pass greedy
+    semantics of classic BPE. A freshly merged piece can't re-merge
+    with a following ``b`` because the tail is now ``merged``, not
+    ``a``."""
 
     def step(acc: Column, x: Column) -> Column:
         hit = (F.size(acc) > 0) & (F.element_at(acc, -1) == a) & (x == b)
@@ -125,106 +145,161 @@ def _merge_pass_py(sym: list[str], a: str, b: str, merged: str) -> list[str]:
     return out
 
 
-def _bpe_merge_loop_py(
+def corpus_words(df: DataFrame, text_col: str) -> DataFrame:
+    """Every lowercased whitespace token of the corpus as a ``word``
+    row (one per occurrence)."""
+    return df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
+
+
+def word_table_tier(
+    df: DataFrame, text_col: str, max_driver_words: int
+) -> tuple[DataFrame, "list[tuple[str, int]] | None"]:
+    """The ONE corpus-scale pass of every trainer: the distinct-word
+    frequency table ``(word, cnt)``, ``localCheckpoint``-ed because the
+    cap probe and whichever tier runs all consume it. Returns ``(wc,
+    head)``: ``head`` is the collected ``[(word, cnt)]`` table when a
+    ``limit(cap+1).count()`` probe says it holds at most
+    ``max_driver_words`` rows (the driver tier), else ``None`` (the
+    distributed tier trains over ``wc``). The probe is a count, never a
+    collect: the over-cap (100 TB) path must not ship the word table to
+    the driver just to learn it is over the cap.
+    ``max_driver_words=0`` skips the probe and forces the distributed
+    tier."""
+    wc = (
+        corpus_words(df, text_col)
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint()
+    )
+    if (
+        max_driver_words > 0
+        and wc.limit(max_driver_words + 1).count() <= max_driver_words
+    ):
+        return wc, [(r["word"], int(r["cnt"])) for r in wc.collect()]
+    return wc, None
+
+
+def segmentation_rows(seg: DataFrame) -> SegTable:
+    """A distributed ``(word, sym)`` relation as the sorted
+    :data:`SegTable` the driver tiers build in-process. Rows stream one
+    partition at a time (``toLocalIterator``), so the driver never
+    holds a second whole-table copy while the list fills."""
+    return sorted(
+        (r["word"], tuple(r["sym"]))
+        for r in seg.select("word", "sym").toLocalIterator()
+    )
+
+
+def check_merge_args(n_merges: int, min_pair_count: int) -> None:
+    """Reject a negative merge budget or a pair-count floor below 1."""
+    if n_merges < 0:
+        raise ValueError(f"n_merges must be >= 0, got {n_merges}")
+    if min_pair_count < 1:
+        raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
+
+
+def merge_loop_driver(
     words: list[tuple[list[str], int]],
     n_merges: int,
     min_pair_count: int,
+    merge_name: Callable[[str, str], str],
+    likelihood: bool,
 ) -> tuple[list[tuple[str, str]], list[tuple[list[str], int]]]:
-    """The BPE merge loop over an in-memory word-frequency table —
-    EXACTLY the distributed loop's semantics on integer counts: pair
-    counts are occurrence-weighted over ALL adjacent positions
-    (overlapping runs count every position, as ``_pair_structs`` does),
-    the winner is ``(count DESC, a ASC, b ASC)``, application is the
-    left-to-right greedy pass. Integer arithmetic end to end, so the
-    merge list is bit-identical to the distributed tier (pinned by
-    tests/test_bpe.py equivalence tests). Returns ``(merges, words)``
-    with ``words`` in its FINAL merged state — the word-level
-    segmentation under the learned table, exactly what
-    :func:`word_segment_table` would recompute (same merges, same
-    greedy pass), handed back so train-once artifact builders skip
-    that second pass."""
+    """The merge loop over an in-memory ``[(initial symbols, cnt)]``
+    word-frequency table — EXACTLY :func:`merge_loop_dist`'s semantics:
+    occurrence-weighted integer pair counts over ALL adjacent positions
+    (overlapping runs count every position, as ``_pair_structs``
+    does), the winner by ``(score DESC, a, b)``, stop when the winner's
+    RAW count falls below ``min_pair_count``, application = the
+    left-to-right greedy pass producing ``merge_name(a, b)``. The score
+    is the pair count (BPE), or with ``likelihood`` the WordPiece gain
+    ``n_ab / (n_a * n_b)`` (symbol counts are only tallied then). The
+    merge list is bit-identical to the distributed tier (pinned by the
+    tier-equality tests). Returns ``(merges, words)`` with ``words`` in
+    their FINAL merged state."""
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
+        pair_n: dict[tuple[str, str], int] = {}
+        sym_n: dict[str, int] = {}
         for sym, cnt in words:
+            if likelihood:
+                for s in sym:
+                    sym_n[s] = sym_n.get(s, 0) + cnt
             for i in range(len(sym) - 1):
                 p = (sym[i], sym[i + 1])
-                counts[p] = counts.get(p, 0) + cnt
-        if not counts:
+                pair_n[p] = pair_n.get(p, 0) + cnt
+        if not pair_n:
             break
-        (a, b), n = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
+        if likelihood:
+            # mirror the JVM exactly: bigint->double casts, THEN one
+            # double division (Python's exact-int true division can
+            # differ by 1 ulp past 2^53, which could flip a near-tie
+            # argmax and break the cross-tier bit-identity)
+            def key(kv):
+                (a, b), n = kv
+                return -(float(n) / float(sym_n[a] * sym_n[b])), a, b
+        else:
+            def key(kv):
+                (a, b), n = kv
+                return -n, a, b
+        (a, b), n = min(pair_n.items(), key=key)
         if n < min_pair_count:
             break
         merges.append((a, b))
-        merged = a + b
+        merged = merge_name(a, b)
         words = [
-            (
-                _merge_pass_py(sym, a, b, merged)
-                if len(sym) >= 2
-                else sym,
-                cnt,
-            )
+            (_merge_pass_py(sym, a, b, merged) if len(sym) >= 2 else sym, cnt)
             for sym, cnt in words
         ]
     return merges, words
 
 
-def bpe_train_with_segmentation(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 16,
-    min_pair_count: int = 2,
-    max_driver_words: int = MAX_BROADCAST_WORDS,
-) -> tuple[list[tuple[str, str]], "list[tuple[str, tuple[str, ...]]] | None"]:
-    """Driver-tier training that ALSO returns the final word→symbols
-    segmentation table (sorted by word, deterministic) — the merge
-    loop ends holding every distinct word in its fully merged state,
-    which is exactly :func:`word_segment_table`'s output for the same
-    merges (same greedy pass, pinned by tests/test_bpe.py), so the
-    train-once artifact builders (subword counts AND the id-encode
-    table) skip that whole second vocabulary pass + collect. Over the
-    cap the segmentation is ``None`` and the caller falls back to the
-    distributed :func:`word_segment_table`; the merges come from the
-    distributed loop either way."""
-    if max_driver_words > 0:
-        wc = (
-            df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint()  # ONE corpus pass feeds probe + both tiers
+def merge_loop_dist(
+    syms: DataFrame,
+    n_merges: int,
+    min_pair_count: int,
+    merge_name: Callable[[str, str], str],
+    likelihood: bool,
+) -> tuple[list[tuple[str, str]], DataFrame]:
+    """The distributed twin of :func:`merge_loop_driver` over a
+    ``(word, cnt, sym)`` relation holding the initial symbols: per
+    round the occurrence-weighted pair aggregation (plus, with
+    ``likelihood``, the symbol aggregation and the score ``n / (na ·
+    nb)``) and an O(1)-row argmax probe, ``localCheckpoint``-ing every
+    :data:`CHECKPOINT_EVERY` merges. Returns ``(merges, syms)`` with
+    ``syms`` in its final merged state (lazy: the last fold runs only
+    if the caller reads it)."""
+    merges: list[tuple[str, str]] = []
+    for i in range(n_merges):
+        pairs = (
+            syms.select("cnt", F.explode(_pair_structs(F.col("sym"))).alias("p"))
+            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .agg(F.sum("cnt").alias("n"))
         )
-        # count probe, never a collect: the over-cap (100 TB) path must
-        # not ship the word table to the driver just to learn it is
-        # over-cap (r17; the bpe_token_counts probe convention)
-        if wc.limit(max_driver_words + 1).count() <= max_driver_words:
-            words = [
-                ([c for c in r["word"]], int(r["cnt"])) for r in wc.collect()
-            ]
-            merges, final = _bpe_merge_loop_py(
-                words, n_merges, min_pair_count
+        score = F.col("n")
+        if likelihood:
+            scnt = (
+                syms.select("cnt", F.explode("sym").alias("s"))
+                .groupBy("s")
+                .agg(F.sum("cnt").alias("ns"))
             )
-            # join-back by word is exact because symbols concatenate
-            # to the original word (merges only fuse adjacent symbols)
-            table = sorted(
-                ("".join(sym), tuple(sym)) for sym, _ in final
+            pairs = pairs.join(
+                scnt.select(F.col("s").alias("a"), F.col("ns").alias("na")), "a"
+            ).join(
+                scnt.select(F.col("s").alias("b"), F.col("ns").alias("nb")), "b"
             )
-            return merges, table
-        # over the cap: the distributed loop reuses the materialized
-        # word table instead of re-running the corpus explode
-        syms = wc.withColumn("sym", char_symbols("word"))
-        return (
-            _bpe_merge_loop_dist(syms, n_merges, min_pair_count, 4),
-            None,
+            score = F.col("n") / (F.col("na") * F.col("nb"))
+        best = pairs.orderBy(score.desc(), "a", "b").limit(1).collect()
+        if not best or best[0]["n"] < min_pair_count:
+            break
+        a, b = best[0]["a"], best[0]["b"]
+        merges.append((a, b))
+        syms = syms.withColumn(
+            "sym", apply_merge(F.col("sym"), a, b, merge_name(a, b))
         )
-    return (
-        bpe_train(
-            df, text_col, n_merges, min_pair_count,
-            max_driver_words=0,
-        ),
-        None,
-    )
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < n_merges:
+            syms = syms.localCheckpoint()
+    return merges, syms
 
 
 def bpe_train(
@@ -232,114 +307,68 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 16,
     min_pair_count: int = 2,
-    checkpoint_every: int = 4,
     max_driver_words: int = MAX_BROADCAST_WORDS,
-) -> list[tuple[str, str]]:
-    """Learn an ordered BPE merge table from the corpus. One
-    corpus-scale pass builds the word frequency table (the only
-    corpus-scale step — Sennrich et al. 2016 train on the frequency
-    table, never the corpus); the merge loop then runs at VOCABULARY
-    scale in one of two tiers behind the same measured-cardinality
-    probe as :func:`bpe_token_counts`:
+) -> tuple[list[tuple[str, str]], SegTable]:
+    """Learn an ordered BPE merge table from the corpus. Returns
+    ``(merges, table)``: ``table`` is the word→symbols segmentation of
+    every distinct corpus word under the learned merges — exactly what
+    :func:`word_segment_table` recomputes (same merges, same greedy
+    pass; pinned by tests/test_bpe.py), so the train-once artifact
+    builders skip that second vocabulary pass.
 
-    - **driver tier** (≤ ``max_driver_words`` distinct words): collect
-      the frequency table once and run the merge loop in-process —
-      the table is model-scale by the module's own convention (the
-      serving artifacts collect the equally-sized segmentation table),
-      and n sequential merge rounds as Spark jobs cost n scheduling
+    One corpus-scale pass builds the word frequency table
+    (:func:`word_table_tier`); the merge loop then runs at VOCABULARY
+    scale in one of two tiers:
+
+    - **driver tier** (≤ ``max_driver_words`` distinct words): the
+      collected table runs :func:`merge_loop_driver` in-process — the
+      table is model-scale by the module's own convention (the serving
+      artifacts collect the equally-sized segmentation table), and n
+      sequential merge rounds as Spark jobs cost n scheduling
       round-trips for no parallelism benefit at this cardinality
       (measured: 12.2 s -> ~2 s for the 16-merge gate at sf0.1).
     - **distributed tier** (past the cap — the 1e8+-distinct-word web
-      vocabulary): the original per-round aggregation + O(1)-row
-      argmax probe, ``localCheckpoint``-ing every ``checkpoint_every``
-      merges so plans never nest deep while skipping the per-round
-      materialization job.
+      vocabulary): :func:`merge_loop_dist` over the checkpointed table;
+      its final merged relation is the segmentation table.
 
     Both tiers share integer pair-count arithmetic and the
-    ``(count DESC, a, b)`` tie-break, so the learned merge list is
+    ``(count DESC, a, b)`` tie-break, so the merges and the table are
     bit-identical (pinned by tests/test_bpe.py); pass
     ``max_driver_words=0`` to force the distributed tier."""
-    if n_merges < 0:
-        raise ValueError(f"n_merges must be >= 0, got {n_merges}")
-    if min_pair_count < 1:
-        raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
+    check_merge_args(n_merges, min_pair_count)
+    wc, head = word_table_tier(df, text_col, max_driver_words)
+    if head is None:
+        merges, syms = merge_loop_dist(
+            wc.withColumn("sym", char_symbols("word")),
+            n_merges, min_pair_count, operator.add, likelihood=False,
         )
-    wc = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        return merges, segmentation_rows(syms)
+    merges, final = merge_loop_driver(
+        [(list(w), cnt) for w, cnt in head],
+        n_merges, min_pair_count, operator.add, likelihood=False,
     )
-    if max_driver_words > 0:
-        # one corpus pass feeds the probe and whichever tier runs; the
-        # probe is a count, never a collect (the over-cap path must not
-        # ship the word table to the driver — r17)
-        wc = wc.localCheckpoint()
-        if wc.limit(max_driver_words + 1).count() <= max_driver_words:
-            words = [
-                ([c for c in r["word"]], int(r["cnt"])) for r in wc.collect()
-            ]
-            return _bpe_merge_loop_py(words, n_merges, min_pair_count)[0]
-        syms = wc.withColumn("sym", char_symbols("word"))
-    else:
-        syms = wc.withColumn("sym", char_symbols("word")).localCheckpoint()
-    return _bpe_merge_loop_dist(syms, n_merges, min_pair_count, checkpoint_every)
-
-
-def _bpe_merge_loop_dist(
-    syms: DataFrame,
-    n_merges: int,
-    min_pair_count: int,
-    checkpoint_every: int,
-) -> list[tuple[str, str]]:
-    """The distributed merge loop over a materialized ``(word, cnt,
-    sym)`` relation: per round one occurrence-weighted pair aggregation
-    + an O(1)-row argmax probe, ``localCheckpoint``-ing every
-    ``checkpoint_every`` merges so plans never nest deep while skipping
-    the per-round materialization job."""
-    merges: list[tuple[str, str]] = []
-    for i in range(n_merges):
-        best = (
-            syms.select("cnt", F.explode(_pair_structs(F.col("sym"))).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("n"))
-            .orderBy(F.desc("n"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] < min_pair_count:
-            break
-        a, b = best[0]["a"], best[0]["b"]
-        merges.append((a, b))
-        if i + 1 < n_merges:  # the post-final-round fold feeds nothing
-            syms = syms.withColumn("sym", apply_merge(F.col("sym"), a, b))
-            if (i + 1) % checkpoint_every == 0:
-                syms = syms.localCheckpoint()
-    return merges
+    # join-back by word is exact because symbols concatenate to the
+    # original word (merges only fuse adjacent symbols)
+    return merges, sorted(("".join(sym), tuple(sym)) for sym, _ in final)
 
 
 def word_segment_table(
     df: DataFrame,
     merges: list[tuple[str, str]],
     text_col: str = "text",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Segment every distinct corpus word with a learned merge table —
     the word-level cache a fast BPE encoder keys on. Vocabulary-scale
     throughout (one distinct shuffle, then per-row folds); the plan is
-    ``localCheckpoint``-ed every ``checkpoint_every`` merges so the
+    ``localCheckpoint``-ed every :data:`CHECKPOINT_EVERY` merges so the
     fold chain never nests deep enough to stress codegen. Returns
     ``(word, sym array<string>, n_sub)``."""
-    seg = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .distinct()
-        .withColumn("sym", char_symbols("word"))
+    seg = corpus_words(df, text_col).distinct().withColumn(
+        "sym", char_symbols("word")
     )
     for i, (a, b) in enumerate(merges):
-        seg = seg.withColumn("sym", apply_merge(F.col("sym"), a, b))
-        if (i + 1) % checkpoint_every == 0:
+        seg = seg.withColumn("sym", apply_merge(F.col("sym"), a, b, a + b))
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             seg = seg.localCheckpoint()
     return seg.select("word", "sym", F.size("sym").cast("long").alias("n_sub"))
 
@@ -381,25 +410,13 @@ def word_segment_arrow(
             break
         produced.add(a + b)
 
-    def _merge_pass(sym: list[str], a: str, b: str) -> list[str]:
-        out: list[str] = []
-        i, n = 0, len(sym)
-        while i < n:
-            if i < n - 1 and sym[i] == a and sym[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(sym[i])
-                i += 1
-        return out
-
     def _encode(word: str) -> list[str]:
         sym = [c for c in word]
         if not consistent:
             for a, b in merges:
                 if len(sym) < 2:
                     break
-                sym = _merge_pass(sym, a, b)
+                sym = _merge_pass_py(sym, a, b, a + b)
             return sym
         while len(sym) >= 2:
             best = None
@@ -409,7 +426,8 @@ def word_segment_arrow(
                     best = r
             if best is None:
                 break
-            sym = _merge_pass(sym, *merges[best])
+            a, b = merges[best]
+            sym = _merge_pass_py(sym, a, b, a + b)
         return sym
 
     def _segment(batches):
@@ -427,10 +445,9 @@ def word_segment_arrow(
                 }
             )
 
-    words = df.select(
-        F.explode(tokens(text_col, lowercase=True)).alias("word")
-    ).distinct()
-    return words.mapInPandas(_segment, "word string, sym array<string>, n_sub long")
+    return corpus_words(df, text_col).distinct().mapInPandas(
+        _segment, "word string, sym array<string>, n_sub long"
+    )
 
 
 #: Above this many merges the fold-expression chain of

@@ -1161,6 +1161,26 @@ def _codebook_shape(
     return len(codebooks), k, sub
 
 
+def _probe_shape(
+    codebooks: list[list[list[float]]],
+    probes: list[tuple[int, list[float]]],
+    who: str,
+) -> tuple[int, int]:
+    """``(m, dim)`` of PQ codebooks after :func:`_codebook_shape`, with
+    every probe vector checked to have ``dim = m * sub`` components —
+    the ADC tables slice the probe per subspace, so a short or long
+    probe would otherwise be truncated into wrong distances."""
+    m, _, sub = _codebook_shape(codebooks, who)
+    dim = m * sub
+    bad = [qid for qid, q in probes if len(q) != dim]
+    if bad:
+        raise ValueError(
+            f"{who}: probe vectors must have {dim} components "
+            f"(m={m} x sub={sub}), probes {bad[:3]} do not"
+        )
+    return m, dim
+
+
 def pq_encode(
     corpus: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1249,11 +1269,16 @@ def pq_topk(
     point at 100 TB: the scan is code-bandwidth, not vector-bandwidth,
     and no shuffle touches anything but the k survivors per probe.
     Returns ``(query_id, neighbor_id, adc_dist, rank)`` with the
-    distance rounded to 6 for the cross-engine gate."""
+    distance rounded to 6 for the cross-engine gate.
+
+    Raises ``ValueError`` unless ``k >= 1``, ``probes`` is non-empty,
+    ``codebooks`` has the shape :func:`pq_encode` requires and every
+    probe vector has ``m * sub`` components."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if not probes:
         raise ValueError("probes must be non-empty")
+    _probe_shape(codebooks, probes, "pq_topk")
     # every probe branch scans the code relation; without a cut the
     # per-row argmin ENCODE expression upstream re-evaluates once per
     # probe (the emb_ivfpq_topk audit's finding — m x k x dim work
@@ -1422,7 +1447,12 @@ def ivfpq_topk(
     the same rows read. The window shuffles only probed-list
     candidates (|list| × n_probe per query — exactly the rows IVFADC
     scans by contract). Returns
-    ``(query_id, neighbor_id, cluster, adc_dist, rank)``."""
+    ``(query_id, neighbor_id, cluster, adc_dist, rank)``.
+
+    Raises ``ValueError`` unless ``k >= 1``, ``1 <= n_probe <=
+    len(centroids)``, ``probes`` is non-empty, ``codebooks`` has the
+    shape :func:`pq_encode` requires, and every probe vector and every
+    centroid has ``m * sub`` components."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if not 1 <= n_probe <= len(centroids):
@@ -1431,7 +1461,9 @@ def ivfpq_topk(
         )
     if not probes:
         raise ValueError("probes must be non-empty")
-    m = len(codebooks)
+    m, dim = _probe_shape(codebooks, probes, "ivfpq_topk")
+    if any(len(c) != dim for c in centroids):
+        raise ValueError(f"ivfpq_topk: centroids must have {dim} components")
     rows = []
     for qid, qvec in probes:
         coarse = sorted(

@@ -14,8 +14,10 @@ Design — the same scale insight as :func:`bpe.bpe_train` (the corpus
 is never needed after ONE pass):
 
 - :func:`train_unigram` collapses the corpus to its distinct-word
-  frequency table (one partial-agg shuffle — the only corpus-scale
-  step). Seeding, EM and pruning all run at VOCABULARY scale:
+  frequency table (:func:`bpe.word_table_tier` — one partial-agg
+  shuffle, the only corpus-scale step, and the driver/distributed tier
+  probe every trainer here shares). Seeding, EM and pruning all run at
+  VOCABULARY scale:
   - seed: every substring up to ``max_piece_len`` of every distinct
     word, occurrence-weighted (pure array expressions, one explode +
     one agg over the word table), top ``seed_size`` by
@@ -37,8 +39,10 @@ is never needed after ONE pass):
     (Hard-EM pruning by used-count is the deterministic simplification
     of Kudo's soft-EM loss ranking — documented, and exactly mirrored
     by the loop oracle in tests.)
-- :func:`word_segment_unigram` runs the final Viterbi pass over a
-  corpus's distinct words and returns the same ``(word, sym, n_sub)``
+- The trainer returns the model with its final Viterbi segmentation
+  of every distinct training word. :func:`word_segment_unigram` runs
+  the same pass over any corpus's distinct words and returns the same
+  ``(word, sym, n_sub)``
   contract as :func:`bpe.word_segment_table`, so the downstream
   tokenize/encode/count plumbing (:func:`bpe.bpe_token_counts`,
   :func:`bpe.encode_token_ids`) is reused verbatim — the segmentation
@@ -63,13 +67,25 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scraping_etl_spark.operators.bpe import MAX_BROADCAST_WORDS
-from scraping_etl_spark.operators.textstats import tokens
+from scraping_etl_spark.operators.bpe import (
+    SegTable,
+    corpus_words,
+    segmentation_rows,
+    word_table_tier,
+)
 
 #: Unknown single characters (absent from training) score this far
 #: below the model's worst piece — finite, so encoding never fails,
 #: and constant, so the fallback is deterministic.
 UNK_LOGP_MARGIN = 10.0
+
+#: Driver-tier cap of :func:`train_unigram`, set from a measured
+#: crossover (``tools/unigram_cap_probe.py``, gate parameters, 4-core
+#: Xeon VM): in-process 2.5 / 18.2 / 202.8 s vs distributed 13.2 / 19.7
+#: / 150.8 s at 20k / 200k / 2M distinct words, so the tiers cross near
+#: 250k. Viterbi EM costs ~0.1 ms per word in one Python process, so
+#: BPE's 2M cap (merge rounds are integer sums) does not carry over.
+MAX_DRIVER_WORDS = 250_000
 
 
 def substring_candidates(word: Column, max_len: int) -> Column:
@@ -281,19 +297,6 @@ def _train_unigram_dist(
     return counts
 
 
-def _word_counts(df: DataFrame, text_col: str) -> DataFrame:
-    """The ONE corpus-scale pass: the distinct-word frequency table,
-    ``localCheckpoint``-ed because every downstream step (cardinality
-    probe, driver collect / seeding + every EM round) consumes it —
-    without the materialization each would re-run the corpus explode."""
-    return (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
-    )
-
-
 def _validate_train_args(
     vocab_size: int, seed_size: int, max_piece_len: int
 ) -> None:
@@ -313,91 +316,54 @@ def train_unigram(
     n_iters: int = 2,
     max_piece_len: int = 6,
     min_seed_count: int = 2,
-    max_driver_words: int = MAX_BROADCAST_WORDS,
-) -> dict[str, int]:
+    max_driver_words: int = MAX_DRIVER_WORDS,
+) -> tuple[dict[str, int], SegTable]:
     """Learn a unigram-LM piece vocabulary from the corpus (module
-    docstring has the full design). Returns the final integer piece
-    counts ``{piece: count}`` — the model; probabilities are derived
-    on demand by :func:`_model_logp` so every consumer shares one
-    arithmetic.
+    docstring has the full design). Returns ``(model, table)``: the
+    final integer piece counts ``{piece: count}`` — probabilities are
+    derived on demand by :func:`_model_logp` so every consumer shares
+    one arithmetic — and the word→pieces Viterbi segmentation of every
+    distinct corpus word under that model (what
+    :func:`word_segment_unigram` computes; identity pinned by
+    tests/test_unigram.py).
 
-    Tiering (the :func:`bpe.bpe_train` contract, r17 optimization
-    round): the corpus collapses to its checkpointed word-frequency
-    table once; a ``limit(n+1).count()`` probe over the MATERIALIZED
-    table (never a collect — the over-cap path must not ship rows to
-    the driver) routes to
+    Tiering (:func:`bpe.word_table_tier`): the corpus collapses to its
+    checkpointed word-frequency table once; a ``limit(n+1).count()``
+    probe over it (never a collect — the over-cap path must not ship
+    rows to the driver) routes to
 
     - **driver tier** (≤ ``max_driver_words`` distinct words): collect
-      the frequency table once and run seeding + EM + pruning
-      in-process — the table is model-scale by the module's own
-      convention (the serving artifacts collect the equally-sized
-      word→n_sub table), and at this cardinality every Spark round is
-      pure scheduling cost (measured r17: 12 jobs → 4, and the first
-      ``mapInPandas`` round no longer pays the Python-worker warm-up);
-    - **distributed tier** (past the cap): the original
-      vocabulary-scale seeding + EM over the same checkpointed table.
+      the frequency table once and run seeding + EM + pruning and the
+      final segmentation in-process — the table is model-scale by the
+      module's own convention, and at this cardinality every Spark
+      round is pure scheduling cost (measured r17: 12 jobs → 4, and
+      the first ``mapInPandas`` round no longer pays the Python-worker
+      warm-up);
+    - **distributed tier** (past the cap): the vocabulary-scale
+      seeding + EM and the Arrow Viterbi pass over the same
+      checkpointed table.
 
     Both tiers share integer counts, :func:`_model_logp`,
-    :func:`_viterbi` and :func:`_prune_counts`, so the learned model is
-    bit-identical (pinned by tests/test_unigram.py);
+    :func:`_viterbi` and :func:`_prune_counts`, so the model and the
+    table are bit-identical (pinned by tests/test_unigram.py);
     ``max_driver_words=0`` forces the distributed tier."""
     _validate_train_args(vocab_size, seed_size, max_piece_len)
-    wc = _word_counts(df, text_col)
-    if (
-        max_driver_words > 0
-        and wc.limit(max_driver_words + 1).count() <= max_driver_words
-    ):
-        head = [(r["word"], int(r["cnt"])) for r in wc.collect()]
-        return _train_unigram_py(
-            head, vocab_size, seed_size, n_iters, max_piece_len,
-            min_seed_count,
-        )
-    return _train_unigram_dist(
-        wc, vocab_size, seed_size, n_iters, max_piece_len, min_seed_count
-    )
-
-
-def train_unigram_with_segmentation(
-    df: DataFrame,
-    text_col: str = "text",
-    vocab_size: int = 400,
-    seed_size: int = 1200,
-    n_iters: int = 2,
-    max_piece_len: int = 6,
-    min_seed_count: int = 2,
-    max_driver_words: int = MAX_BROADCAST_WORDS,
-) -> tuple[dict[str, int], "list[tuple[str, tuple[str, ...]]] | None"]:
-    """Driver-tier training that ALSO returns the final word→pieces
-    segmentation table (sorted by word, deterministic) — the collected
-    word table the driver tier already holds is exactly the vocabulary
-    :func:`word_segment_unigram` would re-derive with a second corpus
-    explode + distinct + Arrow pass, so the train-once artifact builder
-    skips that whole pass (the :func:`bpe.bpe_train_with_segmentation`
-    convention, identity pinned by tests/test_unigram.py). Over the cap
-    the segmentation is ``None`` and the caller falls back to the
-    distributed :func:`word_segment_unigram`; the model comes from the
-    distributed tier either way."""
-    _validate_train_args(vocab_size, seed_size, max_piece_len)
-    wc = _word_counts(df, text_col)
-    if (
-        max_driver_words > 0
-        and wc.limit(max_driver_words + 1).count() <= max_driver_words
-    ):
-        head = [(r["word"], int(r["cnt"])) for r in wc.collect()]
-        model = _train_unigram_py(
-            head, vocab_size, seed_size, n_iters, max_piece_len,
-            min_seed_count,
+    wc, head = word_table_tier(df, text_col, max_driver_words)
+    if head is None:
+        model = _train_unigram_dist(
+            wc, vocab_size, seed_size, n_iters, max_piece_len, min_seed_count
         )
         logp, unk = _model_logp(model)
-        table = sorted(
-            (w, tuple(_viterbi(w, logp, max_piece_len, unk)))
-            for w, _ in head
-        )
-        return model, table
-    model = _train_unigram_dist(
-        wc, vocab_size, seed_size, n_iters, max_piece_len, min_seed_count
+        seg = _segment_words_arrow(wc.select("word"), logp, max_piece_len, unk)
+        return model, segmentation_rows(seg)
+    model = _train_unigram_py(
+        head, vocab_size, seed_size, n_iters, max_piece_len, min_seed_count
     )
-    return model, None
+    logp, unk = _model_logp(model)
+    table = sorted(
+        (w, tuple(_viterbi(w, logp, max_piece_len, unk))) for w, _ in head
+    )
+    return model, table
 
 
 def word_segment_unigram(
@@ -413,8 +379,6 @@ def word_segment_unigram(
     consume it unchanged. Vocabulary-scale: one distinct shuffle +
     the Arrow Viterbi map."""
     logp, unk = _model_logp(model)
-    words = df.select(
-        F.explode(tokens(text_col, lowercase=True)).alias("word")
-    ).distinct()
+    words = corpus_words(df, text_col).distinct()
     seg = _segment_words_arrow(words, logp, max_piece_len, unk)
     return seg.select("word", "sym", F.size("sym").cast("long").alias("n_sub"))

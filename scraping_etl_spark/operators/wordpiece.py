@@ -22,15 +22,15 @@ BPE in BOTH phases and both differences are implemented, not faked:
   replays merges — matching the deployed tokenizer's semantics, not
   the trainer's internals.
 
-Scale design mirrors :func:`bpe.bpe_train` (the one-corpus-pass
-contract): training collapses the corpus to its distinct-word
-frequency table once, then every merge round runs at VOCABULARY scale
-— pair counts and symbol counts are occurrence-weighted aggregates of
-that table, the round winner is an O(1)-row ``limit(1).collect()``
-probe, and rounds ``localCheckpoint`` so plans never nest ``n_merges``
-deep. Encoding segments the corpus's DISTINCT words per Arrow batch
-(the ``unigram._segment_words_arrow`` convention — per-batch Python
-over a model-scale vocabulary set, never per-row UDFs) and tokenizes
+Scale design is the :func:`bpe.bpe_train` skeleton (the one-corpus-pass
+contract): :func:`bpe.word_table_tier` collapses the corpus to its
+distinct-word frequency table once and picks the tier, then the merge
+loop BPE also runs (:func:`bpe.merge_loop_driver` in-process, or
+:func:`bpe.merge_loop_dist` at VOCABULARY scale) does the rounds with
+WordPiece's initial symbols, merged-piece name and likelihood score.
+Encoding segments the corpus's DISTINCT words per Arrow batch (the
+``unigram._segment_words_arrow`` convention — per-batch Python over a
+model-scale vocabulary set, never per-row UDFs) and tokenizes
 documents through the same broadcast word→segmentation join
 (``bpe.bpe_token_counts``) every tokenizer here shares.
 
@@ -46,8 +46,17 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from scraping_etl_spark.operators.bpe import MAX_BROADCAST_WORDS, _pair_structs
-from scraping_etl_spark.operators.textstats import tokens
+from scraping_etl_spark.operators.bpe import (
+    MAX_BROADCAST_WORDS,
+    SegTable,
+    char_symbols,
+    check_merge_args,
+    corpus_words,
+    merge_loop_dist,
+    merge_loop_driver,
+    segmentation_rows,
+    word_table_tier,
+)
 
 #: BERT's unknown-word sentinel: a word any of whose chars (or greedy
 #: dead-ends) fall outside the vocabulary encodes as ONE [UNK] piece.
@@ -86,78 +95,24 @@ def wp_merge_name(a: str, b: str) -> str:
     return a + _strip_cont(b)
 
 
-def wp_apply_merge(sym: Column, a: str, b: str) -> Column:
-    """One left-to-right merge pass under WordPiece naming — the same
-    single-pass greedy fold as :func:`bpe.apply_merge`, only the
-    merged symbol's name differs."""
-    merged = wp_merge_name(a, b)
-
-    def step(acc: Column, x: Column) -> Column:
-        hit = (F.size(acc) > 0) & (F.element_at(acc, -1) == a) & (x == b)
-        return F.when(
-            hit,
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1),
-                F.array(F.lit(merged)),
-            ),
-        ).otherwise(F.concat(acc, F.array(x)))
-
-    return F.aggregate(sym, F.array().cast("array<string>"), step)
+def _alphabet(words: DataFrame) -> list[str]:
+    """Distinct characters of a ``word`` relation — one aggregated row
+    (model-scale: the alphabet), never one row per character."""
+    return (
+        words.select(F.explode(char_symbols("word")).alias("c"))
+        .agg(F.collect_set("c").alias("cs"))
+        .collect()[0]["cs"]
+    )
 
 
-def _wp_merge_loop_py(
-    words: list[tuple[list[str], int]],
-    n_merges: int,
-    min_pair_count: int,
-) -> list[tuple[str, str]]:
-    """The WordPiece merge loop over an in-memory word-frequency
-    table — EXACTLY the distributed loop's semantics: occurrence-
-    weighted BIGINT pair counts and symbol counts (all adjacent
-    positions, as ``_pair_structs``/``explode(sym)`` count them),
-    score = ``n_ab / (n_a * n_b)`` as one IEEE-754 double division
-    (the same op the JVM executes), winner by ``(score DESC, a, b)``,
-    stop when the winner's RAW count falls below ``min_pair_count``,
-    application = the left-to-right greedy pass under WordPiece
-    naming. Bit-identical to the distributed tier (pinned by
-    tests/test_wordpiece.py equivalence tests)."""
-    from scraping_etl_spark.operators.bpe import _merge_pass_py
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pair_n: dict[tuple[str, str], int] = {}
-        sym_n: dict[str, int] = {}
-        for sym, cnt in words:
-            for s in sym:
-                sym_n[s] = sym_n.get(s, 0) + cnt
-            for i in range(len(sym) - 1):
-                p = (sym[i], sym[i + 1])
-                pair_n[p] = pair_n.get(p, 0) + cnt
-        if not pair_n:
-            break
-        # mirror the JVM exactly: bigint->double casts, THEN one double
-        # division (Python's exact-int true division can differ by
-        # 1 ulp past 2^53, which could flip a near-tie argmax and break
-        # the pinned cross-tier bit-identity — r17, ADVICE item)
-        (a, b), n = min(
-            pair_n.items(),
-            key=lambda kv: (
-                -(float(kv[1]) / float(sym_n[kv[0][0]] * sym_n[kv[0][1]])),
-                kv[0][0],
-                kv[0][1],
-            ),
-        )
-        if n < min_pair_count:
-            break
-        merges.append((a, b))
-        merged = wp_merge_name(a, b)
-        words = [
-            (
-                _merge_pass_py(sym, a, b, merged) if len(sym) >= 2 else sym,
-                cnt,
-            )
-            for sym, cnt in words
-        ]
-    return merges
+def _vocab(chars: Iterable[str], merges: Iterable[tuple[str, str]]) -> list[str]:
+    """The alphabet in BOTH position forms plus every merge product."""
+    chars = set(chars)
+    return sorted(
+        chars
+        | {CONT + c for c in chars}
+        | {wp_merge_name(a, b) for a, b in merges}
+    )
 
 
 def wordpiece_train(
@@ -165,172 +120,51 @@ def wordpiece_train(
     text_col: str = "text",
     n_merges: int = 16,
     min_pair_count: int = 2,
-    checkpoint_every: int = 4,
-    max_driver_words: int = MAX_BROADCAST_WORDS,
-) -> list[tuple[str, str]]:
-    """Learn an ordered WordPiece merge list from the corpus. One
-    corpus-scale pass builds the word frequency table; the merge loop
-    then runs at VOCABULARY scale: occurrence-weighted pair counts AND
-    symbol counts, winner = argmax of ``n_ab / (n_a * n_b)`` with
-    ``(score DESC, a, b)`` tie-break, stop when the best pair's raw
-    count falls below ``min_pair_count``.
-
-    Tiering (the :func:`bpe.bpe_train` contract, r16 optimization
-    round): under ``max_driver_words`` distinct words — measured by
-    the same ``limit(n+1)`` probe every vocabulary consumer here uses
-    — the frequency table is collected once (model-scale by the
-    module's own convention) and the loop runs in-process, replacing
-    ~5 scheduled jobs per merge round with pure arithmetic; past the
-    cap the loop stays distributed with the O(1)-row argmax probe per
-    round, ``localCheckpoint``-ing every ``checkpoint_every`` merges.
-    Both tiers share BIGINT counts and one double division per score,
-    so the merge list is bit-identical (pinned by
-    tests/test_wordpiece.py); ``max_driver_words=0`` forces the
-    distributed tier."""
-    if n_merges < 0:
-        raise ValueError(f"n_merges must be >= 0, got {n_merges}")
-    if min_pair_count < 1:
-        raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    wc = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    ckpt = False
-    if max_driver_words > 0:
-        # one corpus pass feeds the probe and whichever tier runs; the
-        # probe is a count, never a collect (the over-cap path must not
-        # ship the word table to the driver — r17)
-        wc = wc.localCheckpoint()
-        ckpt = True
-        if wc.limit(max_driver_words + 1).count() <= max_driver_words:
-            words = []
-            for r in wc.collect():
-                w = r["word"]
-                words.append(
-                    (
-                        [
-                            w[0] if i == 0 else CONT + w[i]
-                            for i in range(len(w))
-                        ],
-                        int(r["cnt"]),
-                    )
-                )
-            return _wp_merge_loop_py(words, n_merges, min_pair_count)
-    syms = wc.withColumn("sym", wp_char_symbols(F.col("word")))
-    if not ckpt:
-        syms = syms.localCheckpoint()
-    return _wp_merge_loop_dist(syms, n_merges, min_pair_count, checkpoint_every)
-
-
-def _wp_merge_loop_dist(
-    syms: DataFrame,
-    n_merges: int,
-    min_pair_count: int,
-    checkpoint_every: int,
-) -> list[tuple[str, str]]:
-    """The distributed merge loop over a materialized ``(word, cnt,
-    sym)`` relation: per round the occurrence-weighted pair + symbol
-    aggregations, the likelihood score ``n / (na · nb)`` and an
-    O(1)-row argmax probe, ``localCheckpoint``-ing every
-    ``checkpoint_every`` merges."""
-    merges: list[tuple[str, str]] = []
-    for i in range(n_merges):
-        scnt = (
-            syms.select("cnt", F.explode("sym").alias("s"))
-            .groupBy("s")
-            .agg(F.sum("cnt").alias("ns"))
-        )
-        best = (
-            syms.select("cnt", F.explode(_pair_structs(F.col("sym"))).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("cnt").alias("n"))
-            .join(scnt.select(F.col("s").alias("a"), F.col("ns").alias("na")), "a")
-            .join(scnt.select(F.col("s").alias("b"), F.col("ns").alias("nb")), "b")
-            .select(
-                "a", "b", "n",
-                (F.col("n") / (F.col("na") * F.col("nb"))).alias("score"),
-            )
-            .orderBy(F.desc("score"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not best or best[0]["n"] < min_pair_count:
-            break
-        a, b = best[0]["a"], best[0]["b"]
-        merges.append((a, b))
-        if i + 1 < n_merges:  # the post-final-round fold feeds nothing
-            syms = syms.withColumn("sym", wp_apply_merge(F.col("sym"), a, b))
-            if (i + 1) % checkpoint_every == 0:
-                syms = syms.localCheckpoint()
-    return merges
-
-
-def wordpiece_train_with_artifacts(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 16,
-    min_pair_count: int = 2,
     max_driver_words: int = MAX_BROADCAST_WORDS,
     max_piece_len: int = 32,
-) -> tuple[
-    list[tuple[str, str]],
-    "list[str] | None",
-    "list[tuple[str, tuple[str, ...]]] | None",
-]:
-    """Driver-tier training that ALSO returns the encoder vocabulary
-    and the word→pieces segmentation table (sorted by word,
-    deterministic) — the collected word table the driver tier already
-    holds is exactly what :func:`wordpiece_vocab` (distinct corpus
-    chars in both position forms + merge products) and
-    :func:`word_segment_wordpiece` (:func:`greedy_segment` per distinct
-    word — already a pure Python function) would re-derive with two
-    more corpus passes and an Arrow stage, so the train-once artifact
-    builder skips all of it (the ``bpe_train_with_segmentation``
-    convention; identity pinned by tests/test_wordpiece.py). Character
-    iteration is by code point, mirroring ``wp_char_symbols``'s
-    ``substr`` semantics. Over the cap: distributed merges from the
-    same checkpointed word table, vocabulary and table ``None`` (the
-    caller falls back to the distributed derivations)."""
-    if n_merges < 0:
-        raise ValueError(f"n_merges must be >= 0, got {n_merges}")
-    if min_pair_count < 1:
-        raise ValueError(f"min_pair_count must be >= 1, got {min_pair_count}")
-    wc = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()  # ONE corpus pass feeds probe + both tiers
+) -> tuple[list[tuple[str, str]], list[str], SegTable]:
+    """Learn an ordered WordPiece merge list from the corpus. Returns
+    ``(merges, vocab, table)``: the encoder vocabulary (what
+    :func:`wordpiece_vocab` derives) and the word→pieces segmentation
+    of every distinct corpus word (what :func:`word_segment_wordpiece`
+    computes — :func:`greedy_segment` per word), so the train-once
+    artifact builder needs no further corpus pass (identity pinned by
+    tests/test_wordpiece.py).
+
+    One corpus-scale pass builds the word frequency table
+    (:func:`bpe.word_table_tier`); the merge loop BPE shares then runs
+    at VOCABULARY scale: occurrence-weighted pair counts AND symbol
+    counts, winner = argmax of ``n_ab / (n_a * n_b)`` with ``(score
+    DESC, a, b)`` tie-break, stop when the best pair's raw count falls
+    below ``min_pair_count``. Under ``max_driver_words`` distinct words
+    the loop, the vocabulary and the table are in-process over the
+    collected table (character iteration by code point, mirroring
+    ``wp_char_symbols``' ``substr``); past the cap they are Spark jobs
+    over the checkpointed word table (one-row alphabet aggregate, Arrow
+    greedy segmentation). Both tiers share BIGINT counts and one double
+    division per score, so all three artifacts are bit-identical
+    (pinned by tests/test_wordpiece.py); ``max_driver_words=0`` forces
+    the distributed tier."""
+    check_merge_args(n_merges, min_pair_count)
+    wc, head = word_table_tier(df, text_col, max_driver_words)
+    if head is None:
+        merges, _ = merge_loop_dist(
+            wc.withColumn("sym", wp_char_symbols(F.col("word"))),
+            n_merges, min_pair_count, wp_merge_name, likelihood=True,
+        )
+        vocab = _vocab(_alphabet(wc), merges)
+        seg = _segment_greedy(wc.select("word"), vocab, max_piece_len)
+        return merges, vocab, segmentation_rows(seg)
+    merges, _ = merge_loop_driver(
+        [([w[0]] + [CONT + c for c in w[1:]], cnt) for w, cnt in head],
+        n_merges, min_pair_count, wp_merge_name, likelihood=True,
     )
-    if (
-        max_driver_words > 0
-        and wc.limit(max_driver_words + 1).count() <= max_driver_words
-    ):
-        head = [(r["word"], int(r["cnt"])) for r in wc.collect()]
-        words = [
-            ([w[0] if i == 0 else CONT + w[i] for i in range(len(w))], cnt)
-            for w, cnt in head
-        ]
-        merges = _wp_merge_loop_py(words, n_merges, min_pair_count)
-        chars = {c for w, _ in head for c in w}
-        vocab = sorted(
-            {c for c in chars}
-            | {CONT + c for c in chars}
-            | {wp_merge_name(a, b) for a, b in merges}
-        )
-        vset = set(vocab)
-        table = sorted(
-            (w, tuple(greedy_segment(w, vset, max_piece_len)))
-            for w, _ in head
-        )
-        return merges, vocab, table
-    syms = wc.withColumn("sym", wp_char_symbols(F.col("word")))
-    merges = _wp_merge_loop_dist(syms, n_merges, min_pair_count, 4)
-    return merges, None, None
+    vocab = _vocab({c for w, _ in head for c in w}, merges)
+    vset = set(vocab)
+    table = sorted(
+        (w, tuple(greedy_segment(w, vset, max_piece_len))) for w, _ in head
+    )
+    return merges, vocab, table
 
 
 def wordpiece_vocab(
@@ -343,16 +177,7 @@ def wordpiece_vocab(
     vocab's structure (alphabet rows keep greedy encoding total on any
     word over known characters; merge products are the learned
     pieces). Model-scale: one distinct-char aggregation collect."""
-    chars = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("w"))
-        .select(F.explode(F.split("w", "(?!^)")).alias("c"))
-        .filter(F.col("c") != "")
-        .distinct()
-        .collect()
-    )
-    vocab = {r["c"] for r in chars} | {CONT + r["c"] for r in chars}
-    vocab |= {wp_merge_name(a, b) for a, b in merges}
-    return sorted(vocab)
+    return _vocab(_alphabet(corpus_words(df, text_col)), merges)
 
 
 def greedy_segment(word: str, vocab: set[str], max_piece_len: int) -> list[str]:
@@ -379,24 +204,13 @@ def greedy_segment(word: str, vocab: set[str], max_piece_len: int) -> list[str]:
     return out
 
 
-def word_segment_wordpiece(
-    df: DataFrame,
-    vocab: Iterable[str],
-    text_col: str = "text",
-    max_piece_len: int = 32,
+def _segment_greedy(
+    words: DataFrame, vocab: Iterable[str], max_piece_len: int
 ) -> DataFrame:
-    """Greedy-encode every distinct corpus word against ``vocab`` —
-    the ``(word, sym, n_sub)`` segmentation-cache contract shared by
-    all three tokenizers (so :func:`bpe.bpe_token_counts` and
-    :func:`bpe.tokenizer_fertility` compose unchanged). Vocabulary-
-    scale; per-ARROW-BATCH Python (the ``unigram._segment_words_arrow``
-    convention), the vocab set riding in the closure as a plan
-    constant, never a per-row UDF."""
+    """``(word) -> (word, sym, n_sub)`` by :func:`greedy_segment` per
+    Arrow batch, the vocab set riding in the closure as a plan
+    constant."""
     vset = set(vocab)
-    words = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("word"))
-        .distinct()
-    )
 
     def _seg(batches):
         import pandas as pd
@@ -414,4 +228,21 @@ def word_segment_wordpiece(
 
     return words.mapInPandas(
         _seg, "word string, sym array<string>, n_sub long"
+    )
+
+
+def word_segment_wordpiece(
+    df: DataFrame,
+    vocab: Iterable[str],
+    text_col: str = "text",
+    max_piece_len: int = 32,
+) -> DataFrame:
+    """Greedy-encode every distinct corpus word against ``vocab`` —
+    the ``(word, sym, n_sub)`` segmentation-cache contract shared by
+    all three tokenizers (so :func:`bpe.bpe_token_counts` and
+    :func:`bpe.tokenizer_fertility` compose unchanged). Vocabulary-
+    scale; per-ARROW-BATCH Python (the ``unigram._segment_words_arrow``
+    convention), never a per-row UDF."""
+    return _segment_greedy(
+        corpus_words(df, text_col).distinct(), vocab, max_piece_len
     )

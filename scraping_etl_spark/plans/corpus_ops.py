@@ -1012,39 +1012,26 @@ _BPE_MERGES = 16
 @functools.lru_cache(maxsize=4)
 def _bpe_trained(sf_dir: str) -> tuple:
     """Train-once shared BPE state per scale dir: the ordered merge
-    table plus (under the driver-tier cap) the full word→symbols
-    segmentation the merge loop ends holding — the same table
-    ``word_segment_table`` + collect would rebuild with a second
-    vocabulary pass (identity pytest-pinned); ``None`` over the cap
-    (r16). Both artifact builders derive from this one training."""
+    table plus the word→symbols segmentation :func:`bpe.bpe_train`
+    returns with it (the table ``word_segment_table`` + collect would
+    rebuild with a second vocabulary pass; identity pytest-pinned).
+    Both artifact builders derive from this one training."""
     from scraping_etl_spark.session import get_spark
 
     spark = SparkSession.getActiveSession() or get_spark()
     d = load_table(spark, sf_dir, "documents")
-    merges, seg_tbl = BPE.bpe_train_with_segmentation(d, n_merges=_BPE_MERGES)
-    return tuple(merges), None if seg_tbl is None else tuple(seg_tbl)
+    merges, seg_tbl = BPE.bpe_train(d, n_merges=_BPE_MERGES)
+    return tuple(merges), tuple(seg_tbl)
 
 
 @functools.lru_cache(maxsize=4)
 def _bpe_artifacts(sf_dir: str) -> tuple:
     """Train-once BPE artifacts per scale dir: the ordered merge table
-    AND the collected word→n_sub segmentation (vocabulary-scale — ~31
-    rows on the synthetic corpus — the only collect, and it is of the
-    model, not the data; the ``ivf_train`` plan-constants convention)."""
-    from scraping_etl_spark.session import get_spark
-
+    AND the word→n_sub segmentation (vocabulary-scale — ~31 rows on
+    the synthetic corpus — a table of the model, not the data; the
+    ``ivf_train`` plan-constants convention)."""
     merges, seg_tbl = _bpe_trained(sf_dir)
-    if seg_tbl is None:
-        spark = SparkSession.getActiveSession() or get_spark()
-        d = load_table(spark, sf_dir, "documents")
-        seg = BPE.word_segment_table(d, list(merges))
-        table = tuple(
-            (r["word"], int(r["n_sub"]))
-            for r in seg.select("word", "n_sub").collect()
-        )
-    else:
-        table = tuple((w, len(sym)) for w, sym in seg_tbl)
-    return tuple(merges), table
+    return merges, tuple((w, len(sym)) for w, sym in seg_tbl)
 
 
 def q_doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,30 +1188,19 @@ _UNI_VOCAB, _UNI_SEED, _UNI_ITERS, _UNI_MAXLEN = 48, 300, 2, 6
 @functools.lru_cache(maxsize=4)
 def _uni_artifacts(sf_dir: str) -> tuple:
     """Train-once unigram artifacts per scale dir: the piece-count
-    model and the collected word→n_sub segmentation (both model-scale;
-    the ``ivf_train`` plan-constants convention). The driver tier ends
-    holding every distinct word, so its final Viterbi pass yields the
-    segmentation table without the second corpus explode
-    ``word_segment_unigram`` would pay (identity pytest-pinned); over
-    the cap the distributed pass remains."""
+    model and the word→n_sub segmentation :func:`unigram.train_unigram`
+    returns with it (both model-scale; the ``ivf_train`` plan-constants
+    convention)."""
     from scraping_etl_spark.operators import unigram as UNI
     from scraping_etl_spark.session import get_spark
 
     spark = SparkSession.getActiveSession() or get_spark()
     d = load_table(spark, sf_dir, "documents")
-    model, seg_tbl = UNI.train_unigram_with_segmentation(
+    model, seg_tbl = UNI.train_unigram(
         d, vocab_size=_UNI_VOCAB, seed_size=_UNI_SEED,
         n_iters=_UNI_ITERS, max_piece_len=_UNI_MAXLEN,
     )
-    if seg_tbl is None:
-        seg = UNI.word_segment_unigram(d, model, max_piece_len=_UNI_MAXLEN)
-        table = tuple(
-            (r["word"], int(r["n_sub"]))
-            for r in seg.select("word", "n_sub").collect()
-        )
-    else:
-        table = tuple((w, len(sym)) for w, sym in seg_tbl)
-    return model, table
+    return model, tuple((w, len(sym)) for w, sym in seg_tbl)
 
 
 def q_doc_unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1371,31 +1347,16 @@ _WP_MERGES = 24
 @functools.lru_cache(maxsize=4)
 def _wp_artifacts(sf_dir: str) -> tuple:
     """Train-once WordPiece artifacts per scale dir: the merge list,
-    the encoder vocabulary, and the collected word→n_sub segmentation
-    (all model-scale; the ``ivf_train`` plan-constants convention).
-    The driver tier ends holding every distinct word, so the vocabulary
-    (corpus chars + merge products) and the greedy segmentation table
-    derive in-process — skipping the two extra corpus passes + Arrow
-    stage the separate builders would pay (identity pytest-pinned);
-    over the cap the distributed derivations remain."""
+    the encoder vocabulary, and the word→n_sub segmentation, all three
+    returned by :func:`wordpiece.wordpiece_train` (model-scale; the
+    ``ivf_train`` plan-constants convention)."""
     from scraping_etl_spark.operators import wordpiece as WP
     from scraping_etl_spark.session import get_spark
 
     spark = SparkSession.getActiveSession() or get_spark()
     d = load_table(spark, sf_dir, "documents")
-    merges, vocab, seg_tbl = WP.wordpiece_train_with_artifacts(
-        d, n_merges=_WP_MERGES
-    )
-    if vocab is None:
-        vocab = WP.wordpiece_vocab(d, merges)
-        seg = WP.word_segment_wordpiece(d, vocab)
-        table = tuple(
-            (r["word"], int(r["n_sub"]))
-            for r in seg.select("word", "n_sub").collect()
-        )
-    else:
-        table = tuple((w, len(sym)) for w, sym in seg_tbl)
-    return merges, vocab, table
+    merges, vocab, seg_tbl = WP.wordpiece_train(d, n_merges=_WP_MERGES)
+    return merges, vocab, tuple((w, len(sym)) for w, sym in seg_tbl)
 
 
 def q_doc_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2199,20 +2160,8 @@ def _bpe_encode_artifacts(sf_dir: str) -> tuple:
     vocabulary — both model-scale collects under the ``ivf_train``
     convention, and the vocabulary derivation (sorted distinct
     subwords) is exactly :func:`bpe.bpe_vocab`'s rank."""
-    from scraping_etl_spark.session import get_spark
-
-    merges, seg_tbl = _bpe_trained(sf_dir)
-    if seg_tbl is None:
-        spark = SparkSession.getActiveSession() or get_spark()
-        d = load_table(spark, sf_dir, "documents")
-        seg = BPE.word_segment_table(d, list(merges))
-        seg_rows = tuple(
-            (r["word"], " ".join(r["sym"]))
-            for r in seg.select("word", "sym").collect()
-        )
-    else:
-        # the shared driver-tier segmentation (identity pytest-pinned)
-        seg_rows = tuple((w, " ".join(sym)) for w, sym in seg_tbl)
+    _, seg_tbl = _bpe_trained(sf_dir)
+    seg_rows = tuple((w, " ".join(sym)) for w, sym in seg_tbl)
     subwords = sorted({s for _, syms in seg_rows for s in syms.split(" ")})
     vocab_rows = tuple((s, i) for i, s in enumerate(subwords))
     return seg_rows, vocab_rows

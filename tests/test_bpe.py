@@ -27,7 +27,7 @@ def test_bpe_train_matches_hand_computed_merges(classic):
     then the (l,o)/(o,w) 7-tie breaks lexicographically to (l,o);
     then (lo,w) 7; then the 6-tie among (e,w)/(n,e)/(w,est) breaks
     to (e,w)."""
-    merges = bpe.bpe_train(classic, n_merges=5)
+    merges, _ = bpe.bpe_train(classic, n_merges=5)
     assert merges == [("e", "s"), ("es", "t"), ("l", "o"), ("lo", "w"), ("e", "w")]
 
 
@@ -38,7 +38,8 @@ def test_bpe_train_is_rerun_deterministic(classic):
 def test_bpe_train_stops_below_min_pair_count(spark):
     """Every pair unique → nothing reaches min_pair_count=2 → no
     merges, regardless of the merge budget."""
-    assert bpe.bpe_train(_docs(spark, [(1, "abc def")]), n_merges=10) == []
+    merges, _ = bpe.bpe_train(_docs(spark, [(1, "abc def")]), n_merges=10)
+    assert merges == []
 
 
 def test_bpe_train_validates_args(spark):
@@ -52,7 +53,7 @@ def test_bpe_train_validates_args(spark):
 def test_segment_unseen_word_with_learned_merges(spark, classic):
     """'lowest' is not in the training corpus, but the learned merges
     segment it to [low, est] — the canonical generalization check."""
-    merges = bpe.bpe_train(classic, n_merges=5)
+    merges, _ = bpe.bpe_train(classic, n_merges=5)
     seg = bpe.word_segment_table(_docs(spark, [(2, "lowest")]), merges)
     row = seg.collect()[0]
     assert row.word == "lowest" and list(row.sym) == ["low", "est"]
@@ -64,8 +65,8 @@ def test_apply_merge_is_left_to_right_single_pass(spark):
     'a a a' → [aa, a] — a fresh merge never re-merges with the next
     symbol in the same pass."""
     df = spark.range(1).select(
-        bpe.apply_merge(F.array(F.lit("a"), F.lit("a"), F.lit("a"), F.lit("a")), "a", "a").alias("x4"),
-        bpe.apply_merge(F.array(F.lit("a"), F.lit("a"), F.lit("a")), "a", "a").alias("x3"),
+        bpe.apply_merge(F.array(F.lit("a"), F.lit("a"), F.lit("a"), F.lit("a")), "a", "a", "aa").alias("x4"),
+        bpe.apply_merge(F.array(F.lit("a"), F.lit("a"), F.lit("a")), "a", "a", "aa").alias("x3"),
     )
     row = df.collect()[0]
     assert list(row.x4) == ["aa", "aa"]
@@ -75,7 +76,7 @@ def test_apply_merge_is_left_to_right_single_pass(spark):
 def test_token_counts_fallback_chars_for_unseen_words(spark, classic):
     """Words outside the segmentation table count their characters
     (the untrained floor); empty docs are (0, 0) not null."""
-    merges = bpe.bpe_train(classic, n_merges=5)
+    merges, _ = bpe.bpe_train(classic, n_merges=5)
     seg = bpe.word_segment_table(classic, merges)
     docs = _docs(spark, [(9, "lowest zzz"), (10, "   ")])
     got = {r.doc_id: (r.n_tokens, r.n_bpe_tokens)
@@ -88,7 +89,7 @@ def test_token_counts_fallback_chars_for_unseen_words(spark, classic):
 def test_token_counts_uses_broadcast_join_no_shuffle_of_seg(spark, classic):
     """Plan contract: the word→segmentation join is a BroadcastHashJoin
     (the table is vocabulary-scale by construction)."""
-    merges = bpe.bpe_train(classic, n_merges=3)
+    merges, _ = bpe.bpe_train(classic, n_merges=3)
     seg = bpe.word_segment_table(classic, merges)
     out = bpe.bpe_token_counts(classic, seg)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -100,7 +101,7 @@ def test_token_counts_shuffle_fallback_past_broadcast_cap(spark, classic):
     """The measured probe: a cap smaller than the vocabulary must
     drop the broadcast hint (un-hinted equi-join — no driver-side
     vocabulary materialization), with identical counts."""
-    merges = bpe.bpe_train(classic, n_merges=3)
+    merges, _ = bpe.bpe_train(classic, n_merges=3)
     seg = bpe.word_segment_table(classic, merges).localCheckpoint()
     hinted = bpe.bpe_token_counts(classic, seg)
     capped = bpe.bpe_token_counts(classic, seg, max_broadcast_words=2)
@@ -115,7 +116,7 @@ def test_word_segment_arrow_identical_to_expression_tier(spark, classic):
     """The Arrow min-rank encoder and the fold-expression chain must
     produce the SAME segmentation table on a trained (self-consistent)
     merge list — including on words the training never saw."""
-    merges = bpe.bpe_train(classic, n_merges=8)
+    merges, _ = bpe.bpe_train(classic, n_merges=8)
     probe = _docs(spark, [(1, "lowest widest newest low slower wows")])
     expr = bpe.word_segment_table(probe, merges)
     arrow = bpe.word_segment_arrow(probe, merges)
@@ -146,7 +147,7 @@ def test_word_segment_dispatch_and_production_merge_budget(spark):
     Arrow tier past ARROW_SEGMENT_THRESHOLD; a 1k-merge synthetic
     self-consistent table segments a 1k-word vocabulary in bounded
     time (the plan must not nest 1000 folds)."""
-    merges = bpe.bpe_train(
+    merges, _ = bpe.bpe_train(
         _docs(spark, [(1, "low low lower")]), n_merges=2
     )
     small = bpe.word_segment(_docs(spark, [(1, "low")]), merges)
@@ -184,7 +185,7 @@ def test_char_symbols_drops_spark_trailing_empty(spark):
 
 
 def test_bpe_vocab_dense_lexicographic_ids(spark, classic):
-    merges = bpe.bpe_train(classic, n_merges=5)
+    merges, _ = bpe.bpe_train(classic, n_merges=5)
     seg = bpe.word_segment_table(classic, merges)
     vocab = {r.subword: r.token_id for r in bpe.bpe_vocab(seg).collect()}
     assert sorted(vocab.values()) == list(range(len(vocab)))
@@ -197,7 +198,7 @@ def test_encode_token_ids_order_and_unseen_fallback(spark, classic):
     """'lowest low' encodes as seg ids in order; an unseen word with
     unseen characters contributes UNK (-1) per char; empty docs give
     empty arrays."""
-    merges = bpe.bpe_train(classic, n_merges=5)
+    merges, _ = bpe.bpe_train(classic, n_merges=5)
     corpus = _docs(spark, [(1, "lowest low"), (2, "zz"), (3, "   ")])
     seg = bpe.word_segment_table(
         _docs(spark, [(9, "lowest low zz")]), merges
@@ -214,7 +215,7 @@ def test_encode_token_ids_order_and_unseen_fallback(spark, classic):
 
 @pytest.mark.slow
 def test_encode_token_ids_composes_with_arrow_segmentation(spark, classic):
-    merges = bpe.bpe_train(classic, n_merges=5)
+    merges, _ = bpe.bpe_train(classic, n_merges=5)
     probe = _docs(spark, [(1, "newest widest lowest")])
     seg_e = bpe.word_segment_table(probe, merges)
     seg_a = bpe.word_segment_arrow(probe, merges)
@@ -259,7 +260,7 @@ def test_fertility_shuffle_fallback_matches_broadcast(spark):
          for i in range(8)],
         "doc_id long, text string, lang string",
     )
-    seg = word_segment_table(docs, bpe_train(docs, n_merges=6))
+    seg = word_segment_table(docs, bpe_train(docs, n_merges=6)[0])
     a = sorted(map(tuple, tokenizer_fertility(docs, seg).collect()))
     b = sorted(map(tuple, tokenizer_fertility(
         docs, seg, max_broadcast_words=0).collect()))
@@ -275,7 +276,7 @@ def test_encode_decode_roundtrip_on_training_corpus(spark):
         [(1, "low lower lowest"), (2, "new newer lowest"), (3, "")],
         "doc_id LONG, text STRING",
     )
-    merges = bpe.bpe_train(df, n_merges=8, min_pair_count=1)
+    merges, _ = bpe.bpe_train(df, n_merges=8, min_pair_count=1)
     seg = bpe.word_segment_table(df, merges)
     vocab = bpe.bpe_vocab(seg)
     enc = bpe.encode_token_ids(df, seg, vocab, append_eow=True)
@@ -288,7 +289,7 @@ def test_encode_decode_roundtrip_on_training_corpus(spark):
 @pytest.mark.slow
 def test_encode_eow_ids_present_and_decode_unknown_lossy(spark):
     train = spark.createDataFrame([(1, "aa bb")], "doc_id LONG, text STRING")
-    merges = bpe.bpe_train(train, n_merges=2, min_pair_count=1)
+    merges, _ = bpe.bpe_train(train, n_merges=2, min_pair_count=1)
     seg = bpe.word_segment_table(train, merges)
     vocab = bpe.bpe_vocab(seg)
     # unseen word with chars outside the training alphabet -> UNK ids
@@ -311,7 +312,7 @@ def test_encode_sentinel_collision_token_round_trips(spark):
     df = spark.createDataFrame(
         [(1, f"{evil} {evil} plain")], "doc_id LONG, text STRING"
     )
-    merges = bpe.bpe_train(df, n_merges=8, min_pair_count=1)
+    merges, _ = bpe.bpe_train(df, n_merges=8, min_pair_count=1)
     seg = bpe.word_segment_table(df, merges)
     vocab = bpe.bpe_vocab(seg)
     enc = bpe.encode_token_ids(df, seg, vocab, append_eow=True)
@@ -324,48 +325,50 @@ def test_encode_sentinel_collision_token_round_trips(spark):
 def test_bpe_train_driver_tier_equals_distributed_tier(spark, classic):
     """r16 optimization: under the measured word cap the merge loop
     runs in-process over the collected frequency table; the merge list
-    must be bit-identical to the distributed per-round-aggregation
-    tier, including occurrence-weighted OVERLAPPING pair counts
-    ('aaa' counts (a,a) twice) and the (count DESC, a, b) tie-break."""
+    AND the word→symbols table must be bit-identical to the
+    distributed per-round-aggregation tier — probe skipped (cap 0) or
+    probed over the cap (cap 3) — including occurrence-weighted
+    OVERLAPPING pair counts ('aaa' counts (a,a) twice), the
+    (count DESC, a, b) tie-break and checkpoint boundaries (9
+    merges)."""
     assert bpe.bpe_train(classic, n_merges=5) == bpe.bpe_train(
         classic, n_merges=5, max_driver_words=0
     )
     edge = _docs(
         spark, [(1, "aaa bb aaa aaa cab cab bcab"), (2, "aaaa ab ab caa")]
     )
-    for nm in (1, 2, 5):
-        assert bpe.bpe_train(
-            edge, n_merges=nm, min_pair_count=1
-        ) == bpe.bpe_train(
-            edge, n_merges=nm, min_pair_count=1, max_driver_words=0
-        )
+    for nm in (1, 2, 5, 9):
+        _, table = driver = bpe.bpe_train(edge, n_merges=nm, min_pair_count=1)
+        assert len(table) > 3  # more distinct words than the cap below
+        for cap in (0, 3):
+            assert bpe.bpe_train(
+                edge, n_merges=nm, min_pair_count=1, max_driver_words=cap
+            ) == driver
 
 
-def test_bpe_train_with_segmentation_matches_segment_table(spark, classic):
-    """r16: the driver-tier trainer's final merged vocabulary must be
-    exactly the (word, n_sub) table word_segment_table rebuilds from
-    the same merges — the artifacts builder relies on this identity."""
-    merges, table = bpe.bpe_train_with_segmentation(classic, n_merges=5)
+def test_bpe_train_table_matches_segment_table(spark, classic):
+    """The trainer's final merged vocabulary must be exactly the
+    (word, sym) table word_segment_table rebuilds from the same merges
+    — the artifacts builder relies on this identity — in both tiers."""
+    merges, table = bpe.bpe_train(classic, n_merges=5)
     seg = bpe.word_segment_table(classic, merges)
     expected = sorted(
         (r["word"], tuple(r["sym"]))
         for r in seg.select("word", "sym").collect()
     )
-    assert merges == bpe.bpe_train(classic, n_merges=5)
     assert table == expected
-    # over-cap fallback: distributed merges, no table
-    m2, t2 = bpe.bpe_train_with_segmentation(
-        classic, n_merges=5, max_driver_words=0
+    # distributed tier: same merges, same table
+    assert bpe.bpe_train(classic, n_merges=5, max_driver_words=0) == (
+        merges, table
     )
-    assert m2 == merges and t2 is None
 
 
 def test_bpe_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
-    """r17 (ADVICE): past the cap, bpe_train and
-    bpe_train_with_segmentation must learn they are over-cap from a
-    count probe over the checkpointed word table, never by collecting
-    cap+1 word rows — every collect in the over-cap path is the
-    O(1)-row per-round argmax probe."""
+    """r17 (ADVICE): past the cap, bpe_train must learn it is over-cap
+    from a count probe over the checkpointed word table, never by
+    collecting cap+1 word rows — every collect in the over-cap path is
+    the O(1)-row per-round argmax probe (the returned table streams
+    through toLocalIterator)."""
     docs = _docs(
         spark, [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta")]
     )
@@ -385,8 +388,31 @@ def test_bpe_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
     got = bpe.bpe_train(
         docs, n_merges=3, min_pair_count=1, max_driver_words=3
     )
-    m2, t2 = bpe.bpe_train_with_segmentation(
-        docs, n_merges=3, min_pair_count=1, max_driver_words=3
-    )
-    assert got == expected == m2 and t2 is None
+    assert got == expected
     assert sizes and max(sizes) <= 1  # argmax probes only
+
+
+def test_one_trainer_entry_point_per_tokenizer():
+    """Spark-free guard: each tokenizer has ONE public trainer (no
+    ``*_with_segmentation`` / ``*_with_artifacts`` twins) and the
+    checkpoint cadence is a module constant, not a ``checkpoint_every``
+    parameter, anywhere in the package or its tools."""
+    import inspect
+    import pathlib
+    import re
+
+    from scraping_etl_spark.operators import unigram, wordpiece
+
+    root = pathlib.Path(bpe.__file__).resolve().parents[2]
+    banned = re.compile(r"\w+_with_(segmentation|artifacts)\b|checkpoint_every")
+    hits = [
+        f"{p.relative_to(root)}: {m.group(0)}"
+        for d in ("scraping_etl_spark", "tools")
+        for p in sorted((root / d).rglob("*"))
+        if p.suffix in (".py", ".md")
+        for m in banned.finditer(p.read_text(encoding="utf-8"))
+    ]
+    assert hits == []
+    for fn in (bpe.bpe_train, wordpiece.wordpiece_train, unigram.train_unigram):
+        assert "checkpoint_every" not in inspect.signature(fn).parameters
+    assert bpe.CHECKPOINT_EVERY >= 1

@@ -897,6 +897,16 @@ def test_pq_validates(spark):
         SIM.pq_topk(enc, books, [], k=3)
     with _pt.raises(ValueError):
         SIM.pq_topk(enc, books, [(0, [0.0] * 6)], k=0)
+    # malformed codebooks and probes whose length is not m * sub
+    for bad_books, probe in (
+        ([], [0.0] * 6),
+        ([[]], [0.0] * 6),
+        (ragged, [0.0] * 6),
+        (books, [0.0] * 5),
+        (books, [0.0] * 7),
+    ):
+        with _pt.raises(ValueError):
+            SIM.pq_topk(enc, bad_books, [(0, probe)], k=3)
 
 
 def test_pq_topk_scans_only_code_column(spark):
@@ -1173,6 +1183,19 @@ def test_ivfpq_topk_validates(spark):
         SIM.ivfpq_topk(enc, cents, books, [(0, [0.0] * 8)], n_probe=9)
     with _pt.raises(ValueError):
         SIM.ivfpq_topk(enc, cents, books, [], k=3)
+    # malformed codebooks, probes whose length is not m * sub, and
+    # centroids of the wrong dimension
+    short = [c[:-1] for c in cents]
+    for bad_cents, bad_books, probe in (
+        (cents, [], [0.0] * 8),
+        (cents, [[]], [0.0] * 8),
+        (cents, ragged, [0.0] * 8),
+        (cents, books, [0.0] * 7),
+        (cents, books, [0.0] * 9),
+        (short, books, [0.0] * 8),
+    ):
+        with _pt.raises(ValueError):
+            SIM.ivfpq_topk(enc, bad_cents, bad_books, [(0, probe)], k=3)
 
 
 # ---------------------------------------------------------------------------

@@ -98,8 +98,8 @@ def test_train_matches_loop_oracle_on_fixed_corpus(spark):
         "lazy dogs and quick foxes",
     ]
     df = _docs(spark, list(enumerate(texts)))
-    got = U.train_unigram(df, vocab_size=24, seed_size=80, n_iters=2,
-                          max_piece_len=4)
+    got, _ = U.train_unigram(df, vocab_size=24, seed_size=80, n_iters=2,
+                             max_piece_len=4)
     want = _ref_train(texts, 24, 80, 2, 4)
     assert got == want
     assert len(got) <= 24 + 2  # vocab cap (+ slack only for chars)
@@ -114,8 +114,8 @@ def test_train_matches_loop_oracle_on_fixed_corpus(spark):
 )
 def test_train_fuzz_matches_loop_oracle(spark, texts):
     df = _docs(spark, list(enumerate(texts)))
-    got = U.train_unigram(df, vocab_size=10, seed_size=40, n_iters=2,
-                          max_piece_len=3, min_seed_count=2)
+    got, _ = U.train_unigram(df, vocab_size=10, seed_size=40, n_iters=2,
+                             max_piece_len=3, min_seed_count=2)
     want = _ref_train(texts, 10, 40, 2, 3)
     assert got == want
 
@@ -126,7 +126,7 @@ def test_train_stable_under_repartition(spark):
     a = U.train_unigram(df, vocab_size=16, seed_size=64, n_iters=2)
     b = U.train_unigram(df.repartition(13), vocab_size=16, seed_size=64,
                         n_iters=2)
-    assert a == b and a
+    assert a == b and a[0]
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +136,7 @@ def test_train_stable_under_repartition(spark):
 def test_segmentation_is_a_partition_of_each_word(spark):
     df = _docs(spark, [(1, "tokenization of compound works"),
                        (2, "works of tokenization")])
-    model = U.train_unigram(df, vocab_size=20, seed_size=60, n_iters=2)
+    model, _ = U.train_unigram(df, vocab_size=20, seed_size=60, n_iters=2)
     seg = U.word_segment_unigram(df, model).collect()
     assert seg
     for r in seg:
@@ -148,8 +148,8 @@ def test_token_counts_reuse_bpe_plumbing(spark):
     from scraping_etl_spark.operators.bpe import bpe_token_counts
 
     df = _docs(spark, [(1, "aaa bbb aaa"), (2, ""), (3, "zzzz")])
-    model = U.train_unigram(df, vocab_size=8, seed_size=24, n_iters=1,
-                            max_piece_len=3)
+    model, _ = U.train_unigram(df, vocab_size=8, seed_size=24, n_iters=1,
+                               max_piece_len=3)
     seg = U.word_segment_unigram(df, model, max_piece_len=3)
     got = {r.doc_id: r for r in bpe_token_counts(df, seg).collect()}
     assert got[1].n_tokens == 3
@@ -194,10 +194,11 @@ def test_fertility_gate_compares_both_tokenizers(spark):
 
 def test_train_driver_tier_equals_distributed_tier(spark):
     """r17: under the measured word cap, seeding + EM + pruning run
-    in-process over the collected frequency table; the model must be
-    bit-identical to the distributed tier (integer counts, shared
-    _viterbi/_model_logp/_prune_counts arithmetic, (count DESC, piece)
-    seed/prune order)."""
+    in-process over the collected frequency table; the model and the
+    word→pieces table must be bit-identical to the distributed tier —
+    probe skipped (cap 0) or probed over the cap (cap 3) — (integer
+    counts, shared _viterbi/_model_logp/_prune_counts arithmetic,
+    (count DESC, piece) seed/prune order)."""
     texts = [
         "the quick brown fox jumps over the lazy dog",
         "the quick brown fox naps",
@@ -206,38 +207,36 @@ def test_train_driver_tier_equals_distributed_tier(spark):
     ]
     df = _docs(spark, list(enumerate(texts)))
     for vs, ss, it, ml in [(24, 80, 2, 4), (10, 40, 1, 3), (16, 64, 3, 6)]:
-        driver = U.train_unigram(
+        model, table = driver = U.train_unigram(
             df, vocab_size=vs, seed_size=ss, n_iters=it, max_piece_len=ml
         )
-        dist = U.train_unigram(
-            df, vocab_size=vs, seed_size=ss, n_iters=it, max_piece_len=ml,
-            max_driver_words=0,
-        )
-        assert driver == dist and driver
+        assert model and len(table) > 3  # more words than the cap below
+        for cap in (0, 3):
+            dist = U.train_unigram(
+                df, vocab_size=vs, seed_size=ss, n_iters=it, max_piece_len=ml,
+                max_driver_words=cap,
+            )
+            assert dist == driver
 
 
-def test_train_with_segmentation_matches_word_segment_unigram(spark):
-    """r17: the fused driver-tier trainer's segmentation table must be
-    exactly the (word, sym) set word_segment_unigram recomputes under
-    the same model — the artifacts builder relies on this identity.
-    Over the cap the table is None and the model still matches."""
+def test_train_table_matches_word_segment_unigram(spark):
+    """r17: the trainer's segmentation table must be exactly the
+    (word, sym) set word_segment_unigram recomputes under the same
+    model — the artifacts builder relies on this identity — and the
+    distributed tier returns the same model and table."""
     texts = ["tokenization of compound works", "works of tokenization",
              "unseen zz pieces"]
     df = _docs(spark, list(enumerate(texts)))
-    model, table = U.train_unigram_with_segmentation(
-        df, vocab_size=20, seed_size=60, n_iters=2
-    )
-    assert model == U.train_unigram(df, vocab_size=20, seed_size=60, n_iters=2)
+    model, table = U.train_unigram(df, vocab_size=20, seed_size=60, n_iters=2)
     seg = U.word_segment_unigram(df, model)
     expected = sorted(
         (r["word"], tuple(r["sym"]))
         for r in seg.select("word", "sym").collect()
     )
     assert table == expected
-    m2, t2 = U.train_unigram_with_segmentation(
+    assert U.train_unigram(
         df, vocab_size=20, seed_size=60, n_iters=2, max_driver_words=0
-    )
-    assert m2 == model and t2 is None
+    ) == (model, table)
 
 
 def test_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):

@@ -73,7 +73,7 @@ def test_train_matches_loop_oracle(spark):
         "that mat on that bat",
     ]
     df = _docs(spark, list(enumerate(texts)))
-    got = WP.wordpiece_train(df, n_merges=6)
+    got, _, _ = WP.wordpiece_train(df, n_merges=6)
     assert got == _ref_train(texts, 6)
 
 
@@ -96,7 +96,7 @@ def test_likelihood_beats_frequency():
 def test_spark_trainer_agrees_on_likelihood_corpus(spark):
     texts = ["xaay xaay xaay xaay aqza", "axaa aaxa aaay aaza"]
     df = _docs(spark, list(enumerate(texts)))
-    got = WP.wordpiece_train(df, n_merges=3, min_pair_count=1)
+    got, _, _ = WP.wordpiece_train(df, n_merges=3, min_pair_count=1)
     assert got == _ref_train(texts, 3, min_pair_count=1)
 
 
@@ -113,7 +113,7 @@ def test_greedy_segment_longest_match_and_unk():
 
 def test_vocab_covers_alphabet_and_merges(spark):
     df = _docs(spark, [(1, "abc abd abc")])
-    merges = WP.wordpiece_train(df, n_merges=2, min_pair_count=1)
+    merges, _, _ = WP.wordpiece_train(df, n_merges=2, min_pair_count=1)
     vocab = WP.wordpiece_vocab(df, merges)
     for c in "abcd":
         assert c in vocab and WP.CONT + c in vocab
@@ -123,7 +123,7 @@ def test_vocab_covers_alphabet_and_merges(spark):
 
 def test_segmentation_partitions_each_word(spark):
     df = _docs(spark, [(1, "the cat sat on the mat"), (2, "zebra cat")])
-    merges = WP.wordpiece_train(df, n_merges=4, min_pair_count=1)
+    merges, _, _ = WP.wordpiece_train(df, n_merges=4, min_pair_count=1)
     vocab = WP.wordpiece_vocab(df, merges)
     seg = WP.word_segment_wordpiece(df, vocab).collect()
     assert seg
@@ -149,9 +149,11 @@ def test_gate_runs_and_every_doc_appears(spark):
 def test_wordpiece_train_driver_tier_equals_distributed_tier(spark):
     """r16 optimization: the in-process merge loop (collected
     frequency table under the measured cap) must learn the exact
-    merge list of the distributed tier — same BIGINT pair/symbol
-    counts over all adjacent positions, same single-double-division
-    likelihood score, same (score DESC, a, b) tie-break."""
+    merge list, vocabulary and word→pieces table of the distributed
+    tier — probe skipped (cap 0) or probed over the cap (cap 3) — same
+    BIGINT pair/symbol counts over all adjacent positions, same
+    single-double-division likelihood score, same (score DESC, a, b)
+    tie-break."""
     rows = [
         (1, "aaa bb aaa aaa cab cab bcab"),
         (2, "quick quicker quickest wide widest"),
@@ -159,11 +161,14 @@ def test_wordpiece_train_driver_tier_equals_distributed_tier(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for nm in (1, 3, 8):
-        assert WP.wordpiece_train(
+        _, _, table = driver = WP.wordpiece_train(
             df, n_merges=nm, min_pair_count=1
-        ) == WP.wordpiece_train(
-            df, n_merges=nm, min_pair_count=1, max_driver_words=0
         )
+        assert len(table) > 3  # more distinct words than the cap below
+        for cap in (0, 3):
+            assert WP.wordpiece_train(
+                df, n_merges=nm, min_pair_count=1, max_driver_words=cap
+            ) == driver
 
 
 def test_wordpiece_train_over_cap_probe_never_ships_word_table(
@@ -171,7 +176,8 @@ def test_wordpiece_train_over_cap_probe_never_ships_word_table(
 ):
     """r17 (ADVICE): same count-probe contract as bpe_train — the
     over-cap tier never collects the word table, only the O(1)-row
-    per-round argmax probes."""
+    per-round argmax probes (and the one-row alphabet aggregate; the
+    returned table streams through toLocalIterator)."""
     docs = _docs(
         spark, [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta")]
     )
@@ -195,18 +201,16 @@ def test_wordpiece_train_over_cap_probe_never_ships_word_table(
     assert sizes and max(sizes) <= 1  # argmax probes only
 
 
-def test_wordpiece_train_with_artifacts_matches_separate_builders(spark):
-    """r17: the fused driver-tier builder's vocabulary and greedy
-    segmentation table must be exactly what wordpiece_vocab +
-    word_segment_wordpiece recompute from the same merges — the
-    artifacts builder relies on this identity. Over the cap all three
-    fall back (vocab/table None, distributed merges)."""
+def test_wordpiece_train_artifacts_match_separate_builders(spark):
+    """r17: the trainer's vocabulary and greedy segmentation table must
+    be exactly what wordpiece_vocab + word_segment_wordpiece recompute
+    from the same merges — the artifacts builder relies on this
+    identity — and the distributed tier returns all three unchanged."""
     docs = _docs(
         spark,
         [(1, "unable unable undo redo redo"), (2, "able undo doing")],
     )
-    merges, vocab, table = WP.wordpiece_train_with_artifacts(docs, n_merges=5)
-    assert merges == WP.wordpiece_train(docs, n_merges=5)
+    merges, vocab, table = WP.wordpiece_train(docs, n_merges=5)
     assert vocab == WP.wordpiece_vocab(docs, merges)
     seg = WP.word_segment_wordpiece(docs, vocab)
     expected = sorted(
@@ -214,7 +218,6 @@ def test_wordpiece_train_with_artifacts_matches_separate_builders(spark):
         for r in seg.select("word", "sym").collect()
     )
     assert table == expected
-    m2, v2, t2 = WP.wordpiece_train_with_artifacts(
-        docs, n_merges=5, max_driver_words=0
+    assert WP.wordpiece_train(docs, n_merges=5, max_driver_words=0) == (
+        merges, vocab, table
     )
-    assert m2 == merges and v2 is None and t2 is None
