@@ -36,8 +36,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # Absorb fixed startup costs so per-query numbers measure the
-    # engine, not environment: JVM/session spin-up, parquet footer
-    # reads and file listing for every table the queries will touch.
+    # engine, not environment: JVM/session spin-up. (Opening a table
+    # needs no warm-up: load_table reads its schema from the parquet
+    # footer on the driver and launches no job.)
     spark.range(1).count()
     # Python-worker pool spin-up (daemon fork + pandas/pyarrow import,
     # ~2-3 s at 32 cores) is environment cost of the same class as the
@@ -53,11 +54,6 @@ def main() -> None:
     spark.range(n_workers, numPartitions=n_workers).mapInPandas(
         lambda batches: batches, "id long"
     ).write.format("noop").mode("overwrite").save()
-    from scraping_etl_spark.schemas import TESTDATA_TABLES
-    from scraping_etl_spark.sources.readers import load_table
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, SF_DIR, t).schema
 
     timings: dict[str, float | None] = {}
     errors: dict[str, str] = {}

@@ -16,11 +16,14 @@ replaces the reference's drop-the-row cleaning (SURVEY §1.3).
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 from scraping_etl_spark import schemas
 
@@ -84,8 +87,11 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     so queries behave identically under an externally-created session
     (e.g. the driver harness's own SparkSession):
 
-    - ``nanosAsLong``: events.parquet stores TIMESTAMP(NANOS), which Spark
-      otherwise refuses to read (PARQUET_TYPE_ILLEGAL);
+    - ``nanosAsLong``: a parquet TIMESTAMP(NANOS) column (pyarrow writes
+      one for a nanosecond timestamp; the committed scale tables are all
+      ``timestamp[us]``) scans as the long :func:`load_table` declares
+      for it; without the conf Spark refuses the file
+      (PARQUET_TYPE_ILLEGAL);
     - UTC session timezone: matches DuckDB's UTC-naive timestamps in the
       correctness oracle.
     """
@@ -93,7 +99,7 @@ def _ensure_session_confs(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     except Exception:
-        pass  # conf locked down — readers fall back to declared behavior
+        pass  # conf locked down: nanos files then fail at scan time
 
 
 def read_mongodb(
@@ -124,16 +130,92 @@ def read_mongodb(
         ) from exc
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-provided parquet table from a scale-factor dir.
+#: Footer key under which Spark stores the schema of a file it wrote;
+#: Spark's own inference reads the schema from it when present.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
-    Parquet carries its own schema; we assert it against the declared one
-    (names only — parquet int32/int64 nuances are tolerated) so a drifted
-    file fails loudly instead of mis-joining.
+
+def _spark_type(at: pa.DataType) -> T.DataType:
+    """The type Spark's default parquet inference gives one footer type."""
+    if pa.types.is_timestamp(at) and at.unit == "ns":
+        return T.LongType()  # what spark.sql.legacy.parquet.nanosAsLong infers
+    if pa.types.is_time(at) or pa.types.is_duration(at):
+        # from_arrow_type has a Spark type for these, but Spark's parquet
+        # inference gives another (duration: long) or refuses (time)
+        raise TypeError(f"parquet {at} has no matching Spark inference")
+    if pa.types.is_struct(at):
+        return T.StructType([T.StructField(f.name, _spark_type(f.type)) for f in at])
+    if pa.types.is_list(at) or pa.types.is_large_list(at) or pa.types.is_fixed_size_list(at):
+        return T.ArrayType(_spark_type(at.value_type))
+    if pa.types.is_map(at):
+        return T.MapType(_spark_type(at.key_type), _spark_type(at.item_type))
+    return from_arrow_type(at, prefer_timestamp_ntz=True)
+
+
+def footer_schema(path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from the
+    parquet footer on the driver: no Spark job.
+
+    ``path`` is a local parquet file or a directory of part files
+    (``_``/``.``-prefixed files such as ``_SUCCESS`` and ``.crc`` are
+    skipped, as Spark skips them). A file Spark wrote carries its Spark
+    schema in the footer and that schema is used, as Spark's inference
+    uses it; any other writer's arrow schema is mapped type by type.
+    Raises ``ValueError`` for a non-local path, a Hive-partitioned
+    layout, or a column whose footer type has no mapping here.
     """
-    _ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    # imported here: it costs ~0.3 s, and the write-side pipeline imports
+    # this module without ever opening a table
+    import pyarrow.dataset as pads
+
+    if "://" in path:
+        raise ValueError(f"{path}: only local paths are supported")
+    footer = pads.dataset(path, format="parquet")
+    if any(os.sep in os.path.relpath(f, path) for f in footer.files):
+        raise ValueError(f"{path}: partitioned (nested) layouts are not supported")
+    spark_json = (footer.schema.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if spark_json is not None:
+        return T.StructType.fromJson(json.loads(spark_json)).toNullable()
+    fields = []
+    for f in footer.schema:
+        try:
+            fields.append(T.StructField(f.name, _spark_type(f.type)))
+        except TypeError as exc:
+            raise ValueError(
+                f"{path}: column {f.name!r} has footer type {f.type}, "
+                "which load_table cannot map to a Spark type"
+            ) from exc
+    return T.StructType(fields).toNullable()
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one driver-provided parquet table from a scale-factor dir,
+    launching no Spark job.
+
+    Contract:
+
+    - ``sf_dir`` is a local path, and ``<sf_dir>/<name>.parquet`` is one
+      un-partitioned file or a directory of part files; Hive-partitioned
+      layouts are rejected (no table uses one);
+    - the schema comes from the footer (:func:`footer_schema`), typed as
+      Spark's default inference types it, so the read needs no inference
+      job; a footer type without such a mapping raises ``ValueError``
+      naming the column;
+    - the footer's column names must equal the declared ones (names
+      only: parquet int32/int64 nuances are tolerated), checked before
+      any Spark call, so a drifted file fails loudly with ``ValueError``
+      instead of mis-joining.
+    """
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(path)
     expected = schemas.TESTDATA_TABLES.get(name)
+    if expected is not None:
+        got = set(schema.fieldNames())
+        want = set(expected.fieldNames())
+        if got != want:
+            raise ValueError(f"table {name}: columns {got} != expected {want}")
+    _ensure_session_confs(spark)
+    df = spark.read.schema(schema).parquet(path)
     # Parquet TIMESTAMP(NANOS) columns arrive as long (nanosAsLong conf);
     # convert to microsecond timestamps losslessly (integer div, no float).
     # Driven by the declared schema: exactly the columns that are declared
@@ -142,7 +224,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         declared_ts = {
             f.name for f in expected.fields if isinstance(f.dataType, T.TimestampType)
         }
-        for f in df.schema.fields:
+        for f in schema.fields:
             if isinstance(f.dataType, T.LongType) and f.name in declared_ts:
                 df = df.withColumn(f.name, F.timestamp_micros(F.expr(f"{f.name} div 1000")))
             # TIMESTAMP_NTZ (how DuckDB/pandas write micros parquet):
@@ -150,11 +232,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # unix_micros/window math sees one type everywhere
             elif isinstance(f.dataType, T.TimestampNTZType) and f.name in declared_ts:
                 df = df.withColumn(f.name, F.col(f.name).cast(T.TimestampType()))
-    if expected is not None:
-        got = set(df.columns)
-        want = set(expected.fieldNames())
-        if got != want:
-            raise ValueError(f"table {name}: columns {got} != expected {want}")
     return df
 
 

@@ -504,8 +504,8 @@ def test_load_table_normalizes_ntz_timestamps(spark, tmp_path):
     """DuckDB/pandas write micros parquet as TIMESTAMP_NTZ; load_table
     must hand every declared-timestamp column to queries as plain
     TimestampType so unix_micros/window math works on any writer's
-    files (the driver's nanos files already get the long→micros
-    repair)."""
+    files (TIMESTAMP(NANOS) files get the long→micros repair, pinned by
+    test_load_table.py::test_nanos_events_file_loads_as_micros)."""
     import duckdb
     import pyspark.sql.types as T
 

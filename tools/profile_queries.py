@@ -29,11 +29,6 @@ def main() -> None:
     spark = get_spark(app_name="profile-queries")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
-    from scraping_etl_spark.schemas import TESTDATA_TABLES
-    from scraping_etl_spark.sources.readers import load_table
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, SF_DIR, t).schema
 
     # warm the train-once artifact caches exactly as bench.py does, so
     # a profiled row measures SERVE time (training is its own bench

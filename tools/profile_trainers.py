@@ -44,11 +44,6 @@ def main() -> None:
     spark = get_spark(app_name="profile-trainers")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1).count()
-    from scraping_etl_spark.schemas import TESTDATA_TABLES
-    from scraping_etl_spark.sources.readers import load_table
-
-    for t in TESTDATA_TABLES:
-        load_table(spark, SF_DIR, t).schema
 
     tracker = spark.sparkContext.statusTracker()
     only = set(sys.argv[1:])
