@@ -87,22 +87,28 @@ def build_publishers(clean: DataFrame, dedup_issn: bool = True) -> DataFrame:
     distinct. The reference keys articles→publishers on ISSN while the
     dim is distinct on all three columns, so one ISSN with two observed
     (Name, Quartile) pairs fans the fact join out; ``dedup_issn`` keeps
-    one deterministic row per ISSN (min Name, then min Quartile)."""
+    one deterministic row per ISSN (:func:`one_publisher_per_issn`)."""
     dim = clean.select(
         F.col("publisher.ISSN").alias("ISSN"),
         F.col("publisher.name").alias("Name"),
         F.col("publisher.Quartile").alias("Quartile"),
     ).distinct()
-    if dedup_issn:
-        from pyspark.sql import Window
+    return one_publisher_per_issn(dim) if dedup_issn else dim
 
-        w = Window.partitionBy("ISSN").orderBy("Name", "Quartile")
-        dim = (
-            dim.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    return dim
+
+def one_publisher_per_issn(publishers: DataFrame) -> DataFrame:
+    """Keep one row per ISSN of a distinct (ISSN, Name, Quartile)
+    relation: min Name, then min Quartile. The pick is a minimum, so
+    picking over the union of picked dims gives the pick over the union
+    of their inputs: an incremental load merges its dims this way."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("ISSN").orderBy("Name", "Quartile")
+    return (
+        publishers.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def build_topics(source: DataFrame) -> DataFrame:

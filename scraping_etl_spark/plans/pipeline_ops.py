@@ -118,50 +118,8 @@ FROM toks
 """
 
 
-def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-count language-ID heuristic (textstats.with_lang_id).
-
-    RETIRED as a standalone driver gate at r14 (window-saturation
-    fold): the n-gram tier carries the driver-checked language-ID
-    surface (``doc_lang_id_ngram`` argmin, ``doc_lang_margin``
-    top-2/abstain) and the stopword-vote machinery this heuristic
-    uses stays driver-exercised through ``doc_lang_segments``. Kept
-    as the library query (tests/test_langid.py + local DuckDB
-    suite)."""
-    d = load_table(spark, sf_dir, "documents")
-    return TS.with_lang_id(d).select(
-        "doc_id", "lang_pred", "score_en", "score_de", "score_es", "score_fr"
-    )
-
-
 def _sw_list(lang: str) -> str:
     return ", ".join(f"'{w}'" for w in TS.STOPWORDS[lang])
-
-
-ORACLE_DOC_LANG_ID = rf"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
-  FROM documents
-), scores AS (
-  SELECT doc_id,
-         CAST(len(list_filter(t, x -> x IN ({_sw_list('en')}))) AS BIGINT) AS score_en,
-         CAST(len(list_filter(t, x -> x IN ({_sw_list('de')}))) AS BIGINT) AS score_de,
-         CAST(len(list_filter(t, x -> x IN ({_sw_list('es')}))) AS BIGINT) AS score_es,
-         CAST(len(list_filter(t, x -> x IN ({_sw_list('fr')}))) AS BIGINT) AS score_fr
-  FROM toks
-)
-SELECT doc_id,
-       CASE
-         WHEN score_en > 0 AND score_en >= score_de AND score_en >= score_es AND score_en >= score_fr THEN 'en'
-         WHEN score_de > 0 AND score_de >= score_es AND score_de >= score_fr THEN 'de'
-         WHEN score_es > 0 AND score_es >= score_fr THEN 'es'
-         WHEN score_fr > 0 THEN 'fr'
-         ELSE 'unknown'
-       END AS lang_pred,
-       score_en, score_de, score_es, score_fr
-FROM scores
-"""
 
 
 _CT_N, _CT_TOP_M, _CT_DOC_M = 3, 200, 20

@@ -3,39 +3,95 @@
 The reference has no true streaming, but its incremental
 append-per-article sink (ScienceDirect/ScienceDirect.py:457-488
 ``save_to_json`` — an O(n²) whole-file rewrite per record) is
-stream-shaped; SURVEY §1.1 maps it to Structured Streaming. Two twins:
+stream-shaped; SURVEY §1.1 maps it to Structured Streaming. Each stream
+here is the incremental form of a batch operator or of the warehouse
+build (:func:`incremental_star_stream` runs ``build_star`` per
+micro-batch), and all of them share three guarantees:
 
-- :func:`incremental_append_stream` — S11's streaming form: file-source
-  stream → true append parquet sink (replacing the reference's
-  read-modify-write loop with an idempotent, checkpointed append).
-- :func:`hourly_rollup_stream` — the streaming twin of the batch
-  ``hourly_event_rollup`` query (plans/relational.py): 1-hour tumbling
-  windows with a watermark for late data, upserted per micro-batch via
-  ``foreachBatch`` + dynamic partition overwrite (the portable upsert
-  for plain parquet — each batch rewrites exactly the window partitions
-  it touched; with a Delta/Iceberg sink this becomes a MERGE).
-
-Scale notes: the rollup state is bounded by the watermark horizon
-(2 h of windows per key); ``foreachBatch`` writes are idempotent per
-(window, event_type) partition so replays after failure are safe;
-file-source listing uses ``maxFilesPerTrigger`` to bound batch size at
-a 100 TB backfill.
+- **Replay-safe batch partitions.** A micro-batch lands each output as
+  its own ``batch_id=N`` partition with dynamic partition overwrite
+  (:func:`_write_batch_partition`), so a checkpoint replay rewrites
+  exactly that partition instead of appending duplicates. Lake-state
+  screens read only ``batch_id < N`` partitions, so a replay never
+  screens against its own earlier output.
+- **Rename-aside swap for merged sinks.** A sink that is rewritten as a
+  whole per batch (keyed upserts, merged dims, SCD2 history) is written
+  to a sibling temp dir and swapped in by two renames, with a
+  crash-recovery prologue (:func:`_merge_into_sink`).
+- **One read and one start.** Every file-source stream reads through
+  :func:`_read_files` (explicit schema, ``maxFilesPerTrigger`` bounds a
+  micro-batch), and every stream starts through :func:`_start`
+  (checkpoint location, plus the ``availableNow`` trigger that drains
+  the source and stops).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from scraping_etl_spark import schemas
 
 
-def _merge_overwrite_by_key(batch_df: DataFrame, out_dir: str, keys: list[str]) -> None:
-    """Keyed upsert onto a plain-parquet sink: keep every existing row
-    whose key is absent from the batch, union the batch (batch wins),
-    write to a sibling temp dir, swap via rename-aside.
+def _read_files(
+    spark: SparkSession,
+    schema: T.StructType,
+    source: str,
+    max_files_per_trigger: int | None,
+) -> DataFrame:
+    """The file-stream reader every stream shares: parquet files under
+    ``source`` read with an explicit schema; ``max_files_per_trigger``
+    (when set) bounds how many new files one micro-batch takes."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source)
+
+
+def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
+    """Land ``df`` as the ``batch_id=<batch_id>`` partition of ``path``
+    with dynamic partition overwrite: a replayed micro-batch rewrites
+    exactly its own partition and leaves every other batch's alone.
+
+    The guarantee assumes batch boundaries reproduce, which holds for
+    replays under one checkpoint. A checkpoint reset with a different
+    slicing (another ``maxFilesPerTrigger``) can leave stale partitions
+    behind, so the output dir and the checkpoint are one unit of state."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
+
+
+def _start(
+    writer: DataStreamWriter, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start every stream the same way: ``writer`` carries the sink
+    (``foreachBatch`` or a file sink) and its output mode; the query
+    checkpoints under ``checkpoint_dir`` and, with ``available_now``,
+    drains what the source holds now and stops."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _merge_into_sink(
+    batch_df: DataFrame,
+    out_dir: str,
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """Fold ``batch_df`` into a plain-parquet sink that is rewritten as
+    a whole: ``merge(current, batch)`` gives the new contents (the first
+    batch is written as is), which go to a sibling temp dir and are
+    swapped in via rename-aside.
 
     This is the portable MERGE for parquet-on-a-filesystem: the merged
     plan never reads files that the write is concurrently deleting
@@ -57,15 +113,25 @@ def _merge_overwrite_by_key(batch_df: DataFrame, out_dir: str, keys: list[str]) 
     totals (small relative to facts), never for fact appends.
     """
     sink_exists = _restore_consistent_sink(out_dir)
-    spark = batch_df.sparkSession
     if sink_exists:
-        current = spark.read.parquet(out_dir)
-        merged = current.join(
-            batch_df.select(*keys).distinct(), keys, "left_anti"
-        ).unionByName(batch_df)
+        current = batch_df.sparkSession.read.parquet(out_dir)
+        merged = merge(current, batch_df)
     else:  # first batch — sink doesn't exist yet
         merged = batch_df
     _swap_write(merged, out_dir, sink_exists)
+
+
+def _merge_overwrite_by_key(batch_df: DataFrame, out_dir: str, keys: list[str]) -> None:
+    """Keyed upsert through :func:`_merge_into_sink`: keep every
+    existing row whose key is absent from the batch, union the batch
+    (batch wins)."""
+    _merge_into_sink(
+        batch_df,
+        out_dir,
+        lambda current, batch: current.join(
+            batch.select(*keys).distinct(), keys, "left_anti"
+        ).unionByName(batch),
+    )
 
 
 def _restore_consistent_sink(out_dir: str) -> bool:
@@ -89,8 +155,8 @@ def _restore_consistent_sink(out_dir: str) -> bool:
 
 def _swap_write(merged: DataFrame, out_dir: str, sink_exists: bool) -> None:
     """Write ``merged`` to a sibling temp dir and swap it in via the
-    crash-recoverable rename-aside (see :func:`_merge_overwrite_by_key`
-    for why delete-then-rename is not safe)."""
+    crash-recoverable rename-aside (see :func:`_merge_into_sink` for
+    why delete-then-rename is not safe)."""
     import os
     import shutil
 
@@ -115,19 +181,12 @@ def incremental_append_stream(
 ) -> StreamingQuery:
     """S11 streaming twin: watch ``source_dir`` for new parquet files,
     append them to ``out_dir`` exactly once (checkpointed)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
+    return _start(
+        stream.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hourly_rollup_stream(
@@ -155,10 +214,7 @@ def hourly_rollup_stream(
     hour alone would let a batch touching one event_type in an hour
     silently delete the other event_types' rows for that hour.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -188,14 +244,11 @@ def hourly_rollup_stream(
             .parquet(out_dir)
         )
 
-    writer = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        agg.writeStream.outputMode("update").foreachBatch(upsert),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 SESSION_STATE_SCHEMA = T.StructType(
@@ -268,10 +321,7 @@ def sessionize_stream(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
     sessions = (
         stream.select("user_id", "ts", "event_id")
         .groupBy("user_id")
@@ -292,14 +342,11 @@ def sessionize_stream(
         # users sharing a bucket — silent data loss across batches.
         _merge_overwrite_by_key(batch_df, out_dir, ["user_id"])
 
-    writer = (
-        sessions.writeStream.outputMode("update")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        sessions.writeStream.outputMode("update").foreachBatch(upsert),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_stream(
@@ -337,10 +384,7 @@ def dedup_stream(
       pass through. That is the standard at-scale trade (dedup windows
       in CCNet-style pipelines) and the caller opts into it explicitly.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
     # unit separator + NUL null-sentinel keep multi-column keys
     # unambiguous: ("ab","c") vs ("a","bc") and ("a",NULL) vs (NULL,"a")
     # must not hash alike (concat_ws alone both joins and SKIPS nulls).
@@ -360,15 +404,11 @@ def dedup_stream(
         ).dropDuplicatesWithinWatermark(["content_hash"])
     else:
         deduped = hashed.dropDuplicates(["content_hash"])
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start(
+        deduped.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def corpus_prep_stream(
@@ -462,10 +502,7 @@ def corpus_prep_stream(
         prepare_neardup_ref,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     bench_prepared = (
         CP.prepare_bench_grams(bench) if bench is not None else None
@@ -494,14 +531,9 @@ def corpus_prep_stream(
         allowed_langs=allowed_langs,
     )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        stream.writeStream.foreachBatch(gate), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def build_corpus_gate(
@@ -607,13 +639,7 @@ def build_corpus_gate(
                 .select("doc_id")
             )
             kept = kept.join(right_lang, "doc_id", "left_semi")
-        (
-            kept.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(kept, batch_id, out_dir)
 
     return gate
 
@@ -625,124 +651,55 @@ def incremental_star_stream(
     checkpoint_dir: str,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Incremental star-schema maintenance from a record stream — the
-    pipeline-level form of the reference's per-article incremental sink
-    (ScienceDirect.py:457-488 rewrote a whole JSON array per article;
-    here each micro-batch appends fact rows and dedup-merges dims).
+    """Incremental warehouse load: ``etl.star_schema.build_star`` per
+    micro-batch, folded into the eight star tables under
+    ``out_dir/<name>`` — the pipeline-level form of the reference's
+    per-article sink (ScienceDirect.py:457-488 rewrote a whole JSON
+    array per article).
 
-    Per batch (``foreachBatch``):
-    - ``articles`` fact: written with dynamic partition overwrite on a
-      ``batch_id`` partition column — a replayed micro-batch (failure
-      after a partial commit) rewrites exactly its own partition
-      instead of re-appending duplicate fact rows, making the fact
-      path idempotent end-to-end, not just the dims;
-    - ``topics`` / ``authors`` dims: keyed merge via
-      :func:`_merge_overwrite_by_key` (temp-dir write + rename-aside
-      swap — the merged plan never reads the files the overwrite
-      deletes, and nothing funnels through the driver) — idempotent
-      because the surrogate key is a pure function of the natural key
-      (replays converge to the same dim; a nondeterministic key scheme
-      would fork on every retry, which is exactly reference quirk Q1);
-    - ``author_article_map`` bridge: explode(authors) per batch. The
-      bridge grows with the *fact*, not the dims, so it takes the fact
-      path — ``batch_id``-partition dynamic overwrite — rather than a
-      keyed merge (which would rescan the whole fact-scale bridge every
-      micro-batch). Replays rewrite exactly their own partition; no
-      duplicate (DOI, AuthorID) edges survive a retry.
-    - ``keywords`` dim + ``keyword_article_map`` bridge (reference ETL
-      cells 33/45 — the symmetric pair to authors): same keyed-merge
-      dim path, same batch-partition bridge path. Emitted only when the
-      stream carries a ``keywords`` column, so record streams without
-      keywords keep working unchanged.
+    Input contract: ``stream`` carries enriched
+    :data:`~scraping_etl_spark.schemas.RAW_ARTICLES` rows, i.e. with the
+    ``publisher`` struct attached. A stream of pre-enrichment rows
+    composes :func:`~scraping_etl_spark.etl.enrichment.enrich` upstream
+    (``enrich(stream, quartiles)`` is a stream-static broadcast join).
+    Only the fixed semantics are built: parity mode stays batch-only,
+    because its date filter is a ``subtract`` over the whole input.
 
-    Dims are orders smaller than facts, so the scan-merge-swap is
-    cheap at any scale; the fact and bridge paths only ever rewrite the
-    replayed batch's own partition."""
+    Per batch, fixed-mode ``build_star`` is row-local up to its dims
+    (cleaning filters, in-place ``xxhash64`` keys), so:
+
+    - ``articles`` and both bridges land as the batch's own
+      ``batch_id`` partition (:func:`_write_batch_partition`);
+    - the five dims merge as ``distinct(existing ∪ batch)`` through the
+      rename-aside swap (:func:`_merge_into_sink`); ``publishers`` then
+      re-applies ``build_publishers``' per-ISSN pick, a minimum, so the
+      merged pick is the pick over everything loaded.
+
+    After the last trigger every table equals ``build_star`` over all
+    the input, keys included (fact and bridges as multisets ignoring
+    ``batch_id``, dims as sets), and a replayed batch changes nothing."""
     import os
 
-    from scraping_etl_spark.etl.star_schema import surrogate_key
+    from scraping_etl_spark.etl.star_schema import build_star, one_publisher_per_issn
 
-    fact_dir = os.path.join(out_dir, "articles")
-    topic_dir = os.path.join(out_dir, "topics")
-    author_dir = os.path.join(out_dir, "authors")
-    bridge_dir = os.path.join(out_dir, "author_article_map")
-    keyword_dir = os.path.join(out_dir, "keywords")
-    kw_bridge_dir = os.path.join(out_dir, "keyword_article_map")
-
-    def _overwrite_own_partition(df: DataFrame, batch_id: int, path: str) -> None:
-        # idempotent append: each micro-batch owns the batch_id=<id>
-        # partition; a checkpoint replay of the same batch dynamically
-        # overwrites only that partition
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
+    def union(current: DataFrame, batch: DataFrame) -> DataFrame:
+        return current.unionByName(batch).distinct()
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.withColumn("TopicID", surrogate_key("topic"))
-        # fact
-        _overwrite_own_partition(
-            batch_df.select(
-                F.col("doi").alias("DOI"),
-                F.col("title").alias("Title"),
-                "TopicID",
-                F.col("site").alias("Website"),
-            ),
-            batch_id,
-            fact_dir,
+        star = build_star(batch_df)
+        for name in ("articles", "author_article_map", "keyword_article_map"):
+            _write_batch_partition(star[name], batch_id, os.path.join(out_dir, name))
+        for name in ("topics", "dates", "keywords", "authors"):
+            _merge_into_sink(star[name], os.path.join(out_dir, name), union)
+        _merge_into_sink(
+            star["publishers"],
+            os.path.join(out_dir, "publishers"),
+            lambda current, batch: one_publisher_per_issn(union(current, batch)),
         )
-        # dims: keyed dedup-merge (idempotent under replay)
-        new_topics = batch_df.select("TopicID", F.col("topic").alias("Topic")).distinct()
-        _merge_overwrite_by_key(new_topics, topic_dir, ["TopicID"])
-        exploded = batch_df.select(
-            F.col("doi").alias("DOI"), F.explode("authors").alias("FullName")
-        )
-        new_authors = (
-            exploded.select("FullName")
-            .distinct()
-            .withColumn("AuthorID", surrogate_key("FullName"))
-            .select("AuthorID", "FullName")
-        )
-        _merge_overwrite_by_key(new_authors, author_dir, ["AuthorID"])
-        # bridge: fact-scale, so fact-path idempotency
-        _overwrite_own_partition(
-            exploded.select(
-                "DOI", surrogate_key("FullName").alias("AuthorID")
-            ).distinct(),
-            batch_id,
-            bridge_dir,
-        )
-        # keywords dim + bridge — the authors pair's symmetric twin
-        if "keywords" in batch_df.columns:
-            kw_exploded = batch_df.select(
-                F.col("doi").alias("DOI"), F.explode("keywords").alias("Keyword")
-            )
-            new_keywords = (
-                kw_exploded.select("Keyword")
-                .distinct()
-                .withColumn("KeywordID", surrogate_key("Keyword"))
-                .select("KeywordID", "Keyword")
-            )
-            _merge_overwrite_by_key(new_keywords, keyword_dir, ["KeywordID"])
-            _overwrite_own_partition(
-                kw_exploded.select(
-                    "DOI", surrogate_key("Keyword").alias("KeywordID")
-                ).distinct(),
-                batch_id,
-                kw_bridge_dir,
-            )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        stream.writeStream.foreachBatch(upsert), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def scd2_dim_stream(
@@ -770,8 +727,8 @@ def scd2_dim_stream(
     - the effective date is the batch's ``max(date_col)`` — derived
       from DATA, never wall clock, so a checkpoint replay of the same
       batch produces the byte-same dim;
-    - merge + crash-recoverable rename-aside swap (the
-      :func:`_merge_overwrite_by_key` write discipline).
+    - merge + crash-recoverable rename-aside swap
+      (:func:`_merge_into_sink`).
 
     Replays CONVERGE: re-delivering an already-merged batch finds every
     key's current version equal to the update and no-ops —
@@ -796,31 +753,25 @@ def scd2_dim_stream(
             .select(*attr_cols)
         )
         eff = batch_df.agg(F.max(date_col)).collect()[0][0]
-        sink_exists = _restore_consistent_sink(out_dir)
-        sess = batch_df.sparkSession
-        if sink_exists:
-            dim = sess.read.parquet(out_dir)
-            merged = scd2_merge(
+        # first batch: every key inserts as a fresh open version
+        first = latest.select(
+            *attr_cols,
+            F.lit(eff).cast("date").alias("effective_from"),
+            F.lit(None).cast("date").alias("effective_to"),
+            F.lit(True).alias("is_current"),
+        )
+        _merge_into_sink(
+            first,
+            out_dir,
+            lambda dim, _: scd2_merge(
                 dim, latest, key_col=key_col, compare_cols=compare_cols,
                 effective_date=eff,
-            )
-        else:  # first batch: every key inserts as a fresh open version
-            merged = latest.select(
-                *attr_cols,
-                F.lit(eff).cast("date").alias("effective_from"),
-                F.lit(None).cast("date").alias("effective_to"),
-                F.lit(True).alias("is_current"),
-            )
-        _swap_write(merged, out_dir, sink_exists)
+            ),
+        )
 
-    writer = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        stream.writeStream.foreachBatch(upsert), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def frontier_stream(
@@ -857,10 +808,7 @@ def frontier_stream(
     """
     from scraping_etl_spark.operators.urls import canonical_url
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
     canon = stream.withColumn("canonical_url", canonical_url(url_col))
     if watermark is not None:
         if event_time_col is None:
@@ -870,15 +818,11 @@ def frontier_stream(
         ).dropDuplicatesWithinWatermark(["canonical_url"])
     else:
         deduped = canon.dropDuplicates(["canonical_url"])
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _start(
+        deduped.writeStream.format("parquet").option("path", out_dir),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def heavy_hitters_stream(
@@ -930,27 +874,15 @@ def heavy_hitters_stream(
     w = width if width is not None else SK.CMS_WIDTH
     d = depth if depth is not None else SK.CMS_DEPTH
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         sk = SK.cms_build(batch_df, text_col=text_col, width=w, depth=d)
-        (
-            sk.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sketch_dir)
-        )
+        _write_batch_partition(sk, batch_id, sketch_dir)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(fold), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cms_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:
@@ -998,28 +930,16 @@ def bloom_screen_stream(
     m = m_bits if m_bits is not None else BL.BLOOM_BITS
     k = k_hashes if k_hashes is not None else BL.BLOOM_HASHES
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         keys = batch_df.select(F.expr(key_expr).alias("_k"))
         bits = BL.bloom_build(keys, key_col="_k", m_bits=m, k_hashes=k)
-        (
-            bits.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bits_dir)
-        )
+        _write_batch_partition(bits, batch_id, bits_dir)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(fold), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_bloom_bits(spark: SparkSession, bits_dir: str) -> DataFrame:
@@ -1066,10 +986,7 @@ def line_dedup_stream(
 
     from scraping_etl_spark.operators.lines import split_lines
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         import os
@@ -1094,15 +1011,7 @@ def line_dedup_stream(
         else:
             kept = firsts
         kept = kept.localCheckpoint()  # one compute, three consumers
-        (
-            kept.select("_h")
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(seen_dir)
-        )
+        _write_batch_partition(kept.select("_h").distinct(), batch_id, seen_dir)
         rebuilt = kept.groupBy(id_col).agg(
             F.array_join(
                 F.transform(
@@ -1128,20 +1037,11 @@ def line_dedup_stream(
                 F.coalesce(F.col("n_kept"), F.lit(0).cast("long")).alias("n_kept"),
             )
         )
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(out, batch_id, out_dir)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(fold), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def neardup_screen_stream(
@@ -1191,10 +1091,7 @@ def neardup_screen_stream(
 
     from scraping_etl_spark.operators.dedup import minhash_banded
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         new_docs, new_banded = minhash_banded(
@@ -1250,34 +1147,13 @@ def neardup_screen_stream(
             pairs = spark.createDataFrame(
                 [], "new_id long, ref_id long, jaccard double"
             )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        (
-            new_banded.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(bands_dir)
-        )
-        (
-            new_docs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(docs_dir)
-        )
+        _write_batch_partition(pairs, batch_id, out_dir)
+        _write_batch_partition(new_banded, batch_id, bands_dir)
+        _write_batch_partition(new_docs, batch_id, docs_dir)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(fold), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def term_screen_stream(
@@ -1301,32 +1177,16 @@ def term_screen_stream(
     convention."""
     from scraping_etl_spark.operators.curation import term_screen
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         verdicts = term_screen(batch_df, terms, max_hits=max_hits)
-        kept = (
-            batch_df.join(verdicts.filter("keep"), "doc_id", "inner")
-            .drop("keep")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            kept.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        kept = batch_df.join(verdicts.filter("keep"), "doc_id").drop("keep")
+        _write_batch_partition(kept, batch_id, out_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start(
+        stream.writeStream.foreachBatch(gate), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def cdc_chunk_screen_stream(
@@ -1406,10 +1266,7 @@ def cdc_chunk_screen_stream(
     # over-cap probe verdict holds forever
     state = {"fits": True}
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         import os
@@ -1449,15 +1306,9 @@ def cdc_chunk_screen_stream(
         )
         if seen_dir is not None:
             kept = kept.localCheckpoint()  # out write + lake append
-        (
-            kept.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(kept, batch_id, out_dir)
         if seen_dir is not None:
-            (
+            hashes = (
                 kept.select(
                     F.explode_outer(
                         CP.cdc_chunks("text", window, divisor)
@@ -1466,19 +1317,12 @@ def cdc_chunk_screen_stream(
                 .filter(F.col("_c").isNotNull())
                 .select(F.md5("_c").alias("_h"))
                 .distinct()
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(seen_dir)
             )
+            _write_batch_partition(hashes, batch_id, seen_dir)
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(gate), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def edit_screen_stream(
@@ -1532,10 +1376,7 @@ def edit_screen_stream(
         ed_gram_prefix,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
     floor = q * (k + 1)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -1606,35 +1447,13 @@ def edit_screen_stream(
                     T.StructField("dist", T.IntegerType()),
                 ]),
             )
-        (
-            pairs.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        (
-            ed_gram_prefix(occ_all, k, q)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(grams_dir)
-        )
-        (
-            s.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(strings_dir)
-        )
+        _write_batch_partition(pairs, batch_id, out_dir)
+        _write_batch_partition(ed_gram_prefix(occ_all, k, q), batch_id, grams_dir)
+        _write_batch_partition(s, batch_id, strings_dir)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(fold), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def emb_screen_stream(
@@ -1705,10 +1524,7 @@ def emb_screen_stream(
         nearest_centroids,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def screen(batch_df: DataFrame, batch_id: int) -> None:
         import os
@@ -1781,13 +1597,7 @@ def emb_screen_stream(
             )
             .localCheckpoint()  # out write + lake append
         )
-        (
-            landed.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(landed, batch_id, out_dir)
         survivors = b.join(
             landed.filter(~F.col("refused")).select(id_col), id_col
         )
@@ -1801,21 +1611,11 @@ def emb_screen_stream(
                     nearest_centroids(F.col(vec_col), ivf_centroids, 1), 1
                 ),
             )
-        (
-            survivors
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(lake_dir)
-        )
+        _write_batch_partition(survivors, batch_id, lake_dir)
 
-    writer = stream.writeStream.foreachBatch(screen).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(screen), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def corpus_law_stream(
@@ -1862,10 +1662,7 @@ def corpus_law_stream(
         zipf_fit_from_counts,
     )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
+    stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         wc = (
@@ -1876,13 +1673,7 @@ def corpus_law_stream(
             .groupBy("_g", "_w")
             .agg(F.count(F.lit(1)).cast("long").alias("_c"))
         )
-        (
-            wc.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(counts_dir)
-        )
+        _write_batch_partition(wc, batch_id, counts_dir)
         cum = (
             spark.read.parquet(counts_dir)
             .filter(F.col("batch_id") <= batch_id)
@@ -1890,17 +1681,8 @@ def corpus_law_stream(
             .agg(F.sum("_c").cast("long").alias("_c"))
         )
         fit = zipf_fit_from_counts(cum, strata_col=strata_col, top_r=top_r)
-        (
-            fit.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _write_batch_partition(fit, batch_id, out_dir)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint_dir
+    return _start(
+        stream.writeStream.foreachBatch(fold), checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

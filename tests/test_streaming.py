@@ -137,90 +137,200 @@ def test_sessionize_stream_multi_batch(spark, events_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
-@pytest.mark.slow
-def test_incremental_star_stream(spark, tmp_path):
-    """Streaming scrape source → incremental star maintenance: facts
-    append per micro-batch, the topics dim dedup-merges idempotently
-    (deterministic surrogate keys make replays converge)."""
-    from scraping_etl_spark.sources.pyds import ScrapeFixtureStreamDataSource
+STAR_FACTS = ("articles", "author_article_map", "keyword_article_map")
+STAR_DIMS = ("publishers", "topics", "dates", "keywords", "authors")
+
+
+def _write_batches(src, batches):
+    """One JSON-lines file per batch, with increasing modification
+    times: a ``maxFilesPerTrigger=1`` file stream takes them in order."""
+    import json
+    import os
+
+    os.makedirs(src)
+    for i, rows in enumerate(batches):
+        path = os.path.join(src, f"part-{i}.json")
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.writelines(json.dumps(r) + "\n" for r in rows)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _star_stream_equals_batch(spark, tmp_path, batches, schema, quartiles=None):
+    """Stream ``batches`` through ``incremental_star_stream`` one file
+    per trigger and check every table against ``build_star`` over all
+    the files: fact and bridges as multisets ignoring ``batch_id``, dims
+    as sets (with no duplicate rows), keys included. Then delete the
+    last commit and re-run: the replayed batch must change nothing.
+    Returns the sink dir."""
+    import os
+    from collections import Counter
+
+    from scraping_etl_spark.etl.enrichment import enrich
+    from scraping_etl_spark.etl.star_schema import build_star
     from scraping_etl_spark.streaming.pipeline import incremental_star_stream
 
-    spark.dataSource.register(ScrapeFixtureStreamDataSource)
-    out, ckpt = str(tmp_path / "star"), str(tmp_path / "ckpt")
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "star", "ckpt"))
+    _write_batches(src, batches)
 
-    def run_once():
-        stream = (
-            spark.readStream.format("scrapefixture_stream")
-            .option("sites", "sd").option("topics", "AI,IoT")
-            .option("pages", "2").option("pages_per_batch", "1")
-            .load()
-        )
-        q = incremental_star_stream(spark, stream, out, ckpt)
-        q.awaitTermination(120)
+    def enriched(df):
+        return df if quartiles is None else enrich(df, quartiles)
 
-    run_once()  # page 0: 1 site x 2 topics x 2 articles = 4 facts
-    facts1 = spark.read.parquet(f"{out}/articles")
-    assert facts1.count() == 4
-    topics1 = spark.read.parquet(f"{out}/topics").collect()
-    assert sorted(r.Topic for r in topics1) == ["AI", "IoT"]
+    want_star = build_star(enriched(spark.read.schema(schema).json(src)))
+    want = {
+        name: Counter(tuple(r) for r in want_star[name].collect())
+        for name in STAR_FACTS + STAR_DIMS
+    }
 
-    run_once()  # page 1 appends 4 more facts; dim unchanged (same topics)
-    facts2 = spark.read.parquet(f"{out}/articles")
-    assert facts2.count() == 8
-    topics2 = spark.read.parquet(f"{out}/topics").collect()
-    assert sorted(r.Topic for r in topics2) == ["AI", "IoT"]
-    # deterministic keys: both runs agree on every TopicID
-    assert {(r.TopicID, r.Topic) for r in topics1} == {(r.TopicID, r.Topic) for r in topics2}
-    # facts join the dim losslessly
-    joined = facts2.join(spark.read.parquet(f"{out}/topics"), "TopicID")
-    assert joined.count() == 8
+    def run():
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+        q = incremental_star_stream(spark, enriched(stream.json(src)), out, ckpt)
+        q.awaitTermination(600)
+        return q
 
-    # authors dim + bridge: dim is distinct by AuthorID, bridge edges
-    # are unique per (DOI, AuthorID), and the bridge joins the dim
-    # losslessly
-    authors = spark.read.parquet(f"{out}/authors")
-    assert authors.count() == authors.select("AuthorID").distinct().count() > 0
-    bridge = spark.read.parquet(f"{out}/author_article_map")
-    n_edges = bridge.count()
-    assert n_edges == bridge.select("DOI", "AuthorID").distinct().count() > 0
-    assert bridge.join(authors, "AuthorID").count() == n_edges
-    assert bridge.join(facts2, "DOI").count() >= n_edges
+    def check():
+        for name in STAR_FACTS + STAR_DIMS:
+            got = spark.read.parquet(f"{out}/{name}")
+            cols = want_star[name].columns
+            assert set(got.columns) - set(cols) <= {"batch_id"}, name
+            rows = Counter(tuple(r) for r in got.select(*cols).collect())
+            assert rows == want[name], name
 
-    # keywords dim + bridge (reference ETL cells 33/45, the authors
-    # pair's symmetric twin): per-topic + shared keywords dedup into
-    # one dim row each; every edge joins dim and fact losslessly
-    keywords = spark.read.parquet(f"{out}/keywords")
-    kw_names = sorted(r.Keyword for r in keywords.collect())
-    assert kw_names == ["AI", "IoT", "s1", "s2", "scaling"]
-    kw_bridge = spark.read.parquet(f"{out}/keyword_article_map")
-    n_kw_edges = kw_bridge.count()
-    assert n_kw_edges == kw_bridge.select("DOI", "KeywordID").distinct().count()
-    assert n_kw_edges == 8 * 3  # every article carries 3 keywords
-    assert kw_bridge.join(keywords, "KeywordID").count() == n_kw_edges
-    assert kw_bridge.join(facts2, "DOI").count() == n_kw_edges
+    run()
+    commits = os.path.join(ckpt, "commits")
+    done = {f for f in os.listdir(commits) if not f.startswith(".")}
+    assert done == {str(i) for i in range(len(batches))}
+    check()
 
-    # forced full replay: wipe the checkpoint, keep the sink — every
-    # micro-batch re-fires with the same batch ids. Facts and bridge
-    # overwrite their own batch_id partitions, dims re-merge to the
-    # same keys: counts and contents must be stable, no dupes.
-    import shutil
+    last = str(len(batches) - 1)
+    os.remove(os.path.join(commits, last))
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    q = run()
+    replayed = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    assert replayed == [len(batches) - 1]
+    check()
+    return out
 
-    star_tables = (
-        "articles", "topics", "authors", "author_article_map",
-        "keywords", "keyword_article_map",
+
+def test_incremental_star_stream_equals_build_star(spark, tmp_path):
+    """The article fixture in 3 file batches, each with surviving
+    articles and rows the cleaning drops: after the last trigger all
+    8 tables equal the batch ``build_star`` over the whole fixture, keys
+    included, and a forced replay of the last batch changes nothing.
+    The ``"Year not found"`` row is dropped from the fact as in batch,
+    and every bridge edge joins its dim and the fact."""
+    import json
+    import os
+
+    from scraping_etl_spark import schemas
+
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "articles.json")
+    with open(fixture, encoding="utf-8") as fh:
+        rows = json.load(fh)
+    by_doi = {r["doi"].rsplit("/", 1)[1]: r for r in rows}
+    assert by_doi["d7"]["Year"] == "Year not found"
+    batches = [
+        [by_doi[d] for d in ("d1", "d3", "d4", "d5", "d11")],
+        [by_doi[d] for d in ("d2", "d12", "d6", "d7")],
+        [by_doi[d] for d in ("d13", "d8", "d9", "d10")],
+    ]
+    out = _star_stream_equals_batch(spark, tmp_path, batches, schemas.RAW_ARTICLES)
+
+    # the cleaning scrubs DOIs ("10.1/d7" -> "101d7")
+    fact = spark.read.parquet(f"{out}/articles")
+    dois = sorted(r.DOI for r in fact.collect())
+    assert dois == ["101d1", "101d12", "101d13", "101d2"]
+    for bridge, dim, key in (
+        ("author_article_map", "authors", "AuthorID"),
+        ("keyword_article_map", "keywords", "KeywordID"),
+    ):
+        edges = spark.read.parquet(f"{out}/{bridge}")
+        assert edges.count() > 0
+        keys = spark.read.parquet(f"{out}/{dim}")
+        assert edges.join(keys, key, "left_anti").count() == 0
+        assert edges.join(fact, "DOI", "left_anti").count() == 0
+
+
+@pytest.mark.slow
+def test_incremental_star_stream_equals_build_star_perfbench(spark, tmp_path):
+    """The perfbench ``warehouse_build`` seed-1 input (5,000 articles),
+    enriched on the stream, in 3 file batches, plus one planted ISSN
+    whose (Name, Quartile) differs between the first and the last batch.
+    The merged publishers dim keeps the batch build's per-ISSN pick (min
+    Name), not the last batch's row."""
+    import json
+
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from perfbench import gen
+    from scraping_etl_spark import schemas
+
+    rng = np.random.default_rng(1)  # the workload's draw order: articles first
+    articles, quartiles = str(tmp_path / "articles.jsonl"), str(tmp_path / "q.jsonl")
+    gen.write_articles(rng, articles, 5_000)
+    gen.write_quartiles(rng, quartiles)
+    planted = [("Planted Journal A", "Q3"), ("Planted Journal Z", "Q1")]
+    with open(quartiles, "a", encoding="utf-8") as fh:
+        for name, q in planted:
+            fh.write(json.dumps(
+                {"journal": name, "year": 2019, "quartile": q, "issn": "99999999"}
+            ) + "\n")
+    with open(articles, encoding="utf-8") as fh:
+        rows = [json.loads(line) for line in fh]
+
+    def plant(i, journal):
+        aff = {"author": "Author P", "university": "University P",
+               "country": "USA", "location": "City P"}
+        return {
+            "title": "Planted", "abstract": "planted", "doi": f"planted/{i}",
+            "authors": ["Author P"], "authors_with_affiliations": [aff],
+            "universities": ["University P"], "countries": ["USA"],
+            "locations": ["University P, USA"], "Date": "1 May 2020",
+            "Day": "1", "Month": "May", "Year": "2020", "citations": 1,
+            "type": "RESEARCH-ARTICLE", "keywords": ["kw0"], "topic": "AI",
+            "website": "IEEE Xplore", "journal_name": journal,
+        }
+
+    third = len(rows) // 3
+    batches = [
+        rows[:third] + [plant(0, planted[0][0])],
+        rows[third:2 * third],
+        rows[2 * third:] + [plant(1, planted[1][0])],
+    ]
+    schema = T.StructType(
+        [f for f in schemas.RAW_ARTICLES.fields if f.name != "publisher"]
+        + [T.StructField("journal_name", T.StringType())]
     )
-    before = {
-        t: {tuple(r) for r in spark.read.parquet(f"{out}/{t}").drop("batch_id").collect()}
-        for t in star_tables
-    }
-    shutil.rmtree(ckpt)
-    run_once()
-    run_once()
-    after = {
-        t: {tuple(r) for r in spark.read.parquet(f"{out}/{t}").drop("batch_id").collect()}
-        for t in star_tables
-    }
-    assert after == before
+    q_df = spark.read.schema(
+        "journal string, year int, quartile string, issn string"
+    ).json(quartiles)
+    out = _star_stream_equals_batch(spark, tmp_path, batches, schema, q_df)
+
+    pubs = spark.read.parquet(f"{out}/publishers").filter("ISSN = '99999999'")
+    assert [tuple(r) for r in pubs.select("Name", "Quartile").collect()] == [
+        planted[0]
+    ]
+
+
+def test_streams_share_one_read_write_and_start():
+    """Every stream reads, lands its batch partitions and starts through
+    one helper each, and the star stream builds through ``build_star``:
+    no second copy of the write discipline and no surrogate keys of its
+    own in the streaming module."""
+    import os
+
+    import scraping_etl_spark.streaming.pipeline as P
+
+    with open(P.__file__, encoding="utf-8") as fh:
+        src = fh.read()
+    assert src.count('.partitionBy("batch_id")') == 1
+    assert src.count("availableNow=True") == 1
+    assert src.count('option("maxFilesPerTrigger"') == 1
+    streaming = os.path.dirname(P.__file__)
+    for fname in os.listdir(streaming):
+        if fname.endswith(".py"):
+            with open(os.path.join(streaming, fname), encoding="utf-8") as fh:
+                assert "surrogate_key" not in fh.read(), fname
 
 
 def test_merge_overwrite_by_key_crash_recovery(spark, tmp_path):
