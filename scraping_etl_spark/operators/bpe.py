@@ -49,8 +49,8 @@ FREQUENCY table):
 
 Determinism: merge selection breaks count ties lexicographically on
 the pair, so training is rerun-stable and the learned table can be
-embedded in a DuckDB oracle as plan constants (the ``ivf_train``
-convention, plans/ml_ops.py).
+embedded in a DuckDB oracle as plan constants (the train-once
+convention of plans/ml_ops.py).
 """
 
 from __future__ import annotations

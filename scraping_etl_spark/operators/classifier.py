@@ -11,7 +11,7 @@ CCNet: a fastText linear model). This module is that shape on Spark:
   regression as DataFrame aggregations: each iteration is ONE job
   computing the d+1 gradient sums map-side (d is the feature count, a
   handful — the per-iteration collect is O(d) scalars of the MODEL,
-  not data; the ``ivf_train`` convention). Train on a curated+bounded
+  not data; the ``kmeans_train_fx`` convention). Train on a curated+bounded
   labeled set — classifier training data is small by construction; at
   100 TB you train on a sample and SCORE the lake.
 - :func:`score_logreg` — sigmoid(w·x) with the learned weights as

@@ -195,7 +195,7 @@ def canonicalize_countries(
     amap = _alias_map(aliases)
     return df.withColumn(
         col,
-        F.transform(F.col(col), lambda x: F.coalesce(amap.getItem(x), x)),
+        F.transform(F.col(col), lambda x: F.coalesce(amap[x], x)),
     )
 
 
@@ -216,7 +216,7 @@ def canonicalize_affiliation_countries(
             F.col(col),
             lambda x: F.struct(
                 x["author"].alias("author"),
-                F.coalesce(amap.getItem(x["country"]), x["country"]).alias("country"),
+                F.coalesce(amap[x["country"]], x["country"]).alias("country"),
                 x["location"].alias("location"),
                 x["university"].alias("university"),
             ),

@@ -351,27 +351,6 @@ def embedding_dup_pairs(
     )
 
 
-def ivf_train(
-    corpus: DataFrame,
-    n_clusters: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 5,
-) -> list[list[float]]:
-    """Train the IVF index: k-means centroids over the corpus (the
-    one eager step — run once, reuse). Few iterations by default: the
-    index needs balanced-ish lists, not converged centroids — recall is
-    governed by ``n_probe``, and each extra iteration is a full job."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(array_to_vector(F.col(vec_col)).alias("features"))
-    model = KMeans(
-        k=n_clusters, seed=seed, maxIter=max_iter, featuresCol="features"
-    ).fit(train)
-    return [[float(x) for x in c] for c in model.clusterCenters()]
-
-
 def centroid_sq_dist(center: list[float], vec: Column) -> Column:
     """Squared L2 distance to one centroid — identical fold order on
     every engine: ``(a-b)*(a-b)`` left-summed, mirrored by the DuckDB
@@ -663,38 +642,27 @@ def semantic_dedup_survivors(
 def ivf_topk(
     corpus: DataFrame,
     probes: DataFrame,
+    centroids: list[list[float]],
     k: int = 5,
-    n_clusters: int = 16,
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_id_col: str = "query_id",
     probe_vec_col: str = "query_vec",
-    seed: int = 7,
-    max_iter: int = 5,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k — the cluster-pruned alternative to
-    the hyperplane LSH path: k-means partitions the corpus into
-    ``n_clusters`` inverted lists, each probe searches only its
-    ``n_probe`` nearest centroids, exact cosine runs inside those lists.
+    the hyperplane LSH path: trained centroids partition the corpus
+    into ``len(centroids)`` inverted lists, each probe searches only
+    its ``n_probe`` nearest centroids, exact cosine runs inside those
+    lists.
 
-    Plan shape at 100 TB: training samples the corpus (``pyspark.ml``
-    KMeans, one-time cost, centroids broadcast as plan constants);
-    assignment is a per-row expression; the probe→candidate join is a
-    hash equi-join on cluster id (n_probe rows per probe — same
-    no-cross-join contract as the LSH path). Recall rises with
-    ``n_probe`` (= brute force at n_probe = n_clusters).
-
-    Uses ``pyspark.ml.clustering.KMeans`` with a fixed seed; training
-    is an action (the one eager step), so build the index once with
-    :func:`ivf_train` and pass ``centroids`` to amortize it across
-    queries — exactly what a production deployment does."""
-    if centroids is None:
-        centroids = ivf_train(
-            corpus, n_clusters=n_clusters, vec_col=vec_col,
-            seed=seed, max_iter=max_iter,
-        )
+    Plan shape at 100 TB: the centroids are plan constants, trained
+    once by :func:`kmeans_train_fx` (the one eager step — build the
+    index once and reuse it across queries, as a production deployment
+    does); assignment is a per-row expression; the probe→candidate
+    join is a hash equi-join on cluster id (n_probe rows per probe —
+    same no-cross-join contract as the LSH path). Recall rises with
+    ``n_probe`` (= brute force at n_probe = len(centroids))."""
 
     def _nearest(vec: Column, n: int) -> Column:
         return nearest_centroids(vec, centroids, n)
@@ -751,7 +719,7 @@ def hard_negatives_ivf(
     LARGE anchor sets, where broadcasting anchors against the full
     corpus (the brute tier's plan) stops being one cheap map-side
     pass: corpus vectors live in their nearest-centroid inverted list
-    (:func:`ivf_topk`'s layout, trained once via :func:`ivf_train`),
+    (:func:`ivf_topk`'s layout, trained once via :func:`kmeans_train_fx`),
     each anchor probes only its ``n_probe`` nearest cells, and the
     band + rank run inside the probed lists. The candidate join is a
     hash equi-join on cluster id — never a cross join — and the band
@@ -926,7 +894,7 @@ def embedding_decontaminate_ivf(
     vector lake grows without bound, and past the broadcast cap the
     expression tier's fallback is a shuffle-backed all-pairs join.
     Here the lake/bench side lives in its nearest-centroid inverted
-    list (one cell per vector, :func:`ivf_train`'s layout) and each
+    list (one cell per vector, :func:`ivf_topk`'s layout) and each
     corpus/batch vector probes only its ``n_probe`` nearest cells, so
     the candidate join is a hash EQUI-join on cell id — never
     all-pairs — and per-corpus-row work is bounded by the probed
@@ -1101,14 +1069,17 @@ def pq_train(
     m: int = 8,
     k: int = 16,
     vec_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 5,
 ) -> list[list[list[float]]]:
     """Train the PQ codebooks: split the ``dim`` dimensions into ``m``
-    contiguous subspaces and k-means each subspace independently
-    (``m`` small train-once jobs, the ``ivf_train`` convention).
+    contiguous subspaces and k-means each subspace independently.
     Returns ``codebooks[j] = k x (dim/m)`` centroid lists — plan
     constants for encode/query, embeddable in a DuckDB oracle.
+
+    All ``m`` subspaces train in ONE :func:`kmeans_train_fx` loop
+    (:data:`INDEX_ITERS` iterations, one corpus pass each): every
+    subspace seeds from the same md5-smallest ``k`` rows of
+    ``vec_id``, so ``codebooks[j]`` equals ``kmeans_train_fx`` over
+    the slice ``vec[j*sub : (j+1)*sub]`` bit for bit.
 
     PQ's scale contract (the paper's): the corpus is stored as
     ``m`` one-byte-ish codes per vector instead of ``dim`` floats
@@ -1117,31 +1088,7 @@ def pq_train(
     """
     if m < 1 or k < 2:
         raise ValueError(f"need m >= 1 and k >= 2, got m={m} k={k}")
-    first = corpus.select(vec_col).first()
-    if first is None or first[0] is None:
-        raise ValueError("pq_train: empty corpus")
-    dim = len(first[0])
-    if dim % m != 0:
-        raise ValueError(f"m={m} must divide dim={dim}")
-    sub = dim // m
-
-    # The m subspace fits are INDEPENDENT jobs (disjoint column slices,
-    # own seeds): submit them from a small thread pool so each fit's
-    # straggler tail back-fills with the next subspace's tasks instead
-    # of idling the cluster (guide §2.6 — overlap independent jobs).
-    # Results are identical to the sequential loop: every fit is
-    # deterministic in (data, seed) and shares nothing mutable.
-    def _fit(j: int) -> list[list[float]]:
-        sliced = corpus.select(
-            F.slice(F.col(vec_col), j * sub + 1, sub).alias("v")
-        )
-        return ivf_train(sliced, n_clusters=k, vec_col="v", seed=seed + j,
-                         max_iter=max_iter)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, m)) as pool:
-        return list(pool.map(_fit, range(m)))
+    return _lloyd_fx(corpus, k, m, vec_col, "vec_id", INDEX_ITERS)
 
 
 def _codebook_shape(
@@ -1359,16 +1306,15 @@ def ivfpq_train(
     m: int = 8,
     k: int = 16,
     vec_col: str = "embedding",
-    seed: int = 7,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Train the IVFADC index: coarse k-means centroids, then PQ
-    codebooks over the RESIDUALS (train-once eager step, the
-    ``ivf_train`` convention — both artifacts are plan constants).
-    Returns ``(centroids, codebooks)``."""
-    centroids = ivf_train(corpus, n_clusters=n_clusters, vec_col=vec_col,
-                          seed=seed)
+    codebooks over the RESIDUALS (train-once eager step — both
+    artifacts are plan constants). Returns ``(centroids, codebooks)``."""
+    centroids = kmeans_train_fx(
+        corpus, n_clusters=n_clusters, vec_col=vec_col, iters=INDEX_ITERS
+    )
     res = with_residual(corpus, centroids, vec_col=vec_col)
-    books = pq_train(res, m=m, k=k, vec_col="residual", seed=seed)
+    books = pq_train(res, m=m, k=k, vec_col="residual")
     return centroids, books
 
 
@@ -1509,6 +1455,11 @@ def ivfpq_topk(
 #: ``token_divergence`` / ``host_pagerank`` convention).
 KMEANS_FX_SCALE = 10**6
 
+#: Lloyd iterations of the IVF, PQ, IVF-PQ and SemDeDup indexes: the
+#: index needs balanced-ish lists, not converged centroids — recall is
+#: governed by ``n_probe``, and each extra iteration is a corpus pass.
+INDEX_ITERS = 5
+
 
 def kmeans_train_fx(
     corpus: DataFrame,
@@ -1516,98 +1467,141 @@ def kmeans_train_fx(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     iters: int = 4,
-    fx_scale: int = KMEANS_FX_SCALE,
 ) -> list[list[float]]:
     """DISTRIBUTED Lloyd's k-means with exactly-reproducible arithmetic
-    — the in-cluster alternative to :func:`ivf_train`'s MLlib call
-    when the training corpus itself is lake-scale (MLlib's k-means||
-    init samples fine, but its float centroid sums are
-    partitioning-dependent; an exactness gate can't hash them).
+    — the one k-means every index trains through (IVF lists, PQ and
+    IVF-PQ codebooks, SemDeDup clusters). Float centroid sums depend on
+    how the data is partitioned; these do not, so every artifact
+    hashes the same at any core count.
 
     - **Init**: the ``n_clusters`` rows with the smallest
       ``(md5(id), id)`` — a deterministic scatter (md5 is a uniform
       hash, so seeds are corpus-spread), one TakeOrdered, k vectors
       collected (model-scale).
-    - **Assignment**: centroids ride as plan constants; the argmin is
-      the per-row ``(distance, cid)``-lexicographic expression of
-      :func:`nearest_centroids` — pure map, zero shuffle.
-    - **Update**: per (cluster, coordinate) sums on the
-      :data:`KMEANS_FX_SCALE` integer lattice — ``posexplode`` +
-      partial agg, k x d longs + counts to the driver per iteration
-      (model state, not data; the ``ivf_train`` convention). Integer
-      sums are associative, so the new centroids are bit-identical
-      under any partitioning, which is what lets the DuckDB oracle
-      replay the ENTIRE training fixpoint (plans/ml_ops.py
-      ``ORACLE_EMB_KMEANS_TRAIN``). Empty clusters keep their previous
-      centroid.
+    - **Iteration**: one ``mapInPandas`` pass + ``collect`` — one job,
+      no exchange, so AQE has nothing to re-plan. Each partition's
+      numpy kernel assigns every row to its nearest centroid (the
+      :func:`nearest_centroids` arithmetic: a left fold of
+      ``(a-b)*(a-b)`` over doubles from ``0.0``, ties to the lowest
+      cid) and sums its coordinates per cluster on the
+      :data:`KMEANS_FX_SCALE` integer lattice (HALF_UP
+      ``round(x * fx)`` as int64). k x d longs + counts per partition
+      reach the driver (model state, not data), which adds them and
+      sets ``c = s / (fx * n)``. Integer sums are associative, so the
+      new centroids are bit-identical under any partitioning, which is
+      what lets the DuckDB oracle replay the ENTIRE training fixpoint
+      (plans/ml_ops.py ``ORACLE_EMB_KMEANS_TRAIN``). Empty clusters
+      keep their previous centroid.
 
-    At 100 TB: per iteration one corpus scan, one (k x d)-bounded
-    partial-agg shuffle; int64 headroom is ``|x| * fx_scale * rows``
-    per (cluster, coordinate) — at |x| <= 8, fx 1e6, that allows ~1e12
+    At 100 TB: per iteration one corpus scan and a partition-count x
+    (k x d) collect; int64 headroom is ``|x| * fx * rows`` per
+    (cluster, coordinate) — at |x| <= 8, fx 1e6, that allows ~1e12
     member rows per cluster before overflow; raise the grid coarser or
     split the sum hierarchically beyond that.
     """
-    if n_clusters < 1:
-        raise ValueError(f"n_clusters must be >= 1, got {n_clusters}")
+    return _lloyd_fx(corpus, n_clusters, 1, vec_col, id_col, iters)[0]
+
+
+def _lloyd_fx(
+    corpus: DataFrame, k: int, m: int, vec_col: str, id_col: str, iters: int
+) -> list[list[list[float]]]:
+    """The Lloyd's loop of :func:`kmeans_train_fx`, run independently
+    over the ``m`` contiguous subspaces of ``vec_col`` in the same
+    passes (``m = 1`` is plain k-means; :func:`pq_train` passes its
+    subspace count). Every subspace seeds from the same md5-smallest
+    ``k`` rows. Returns ``books[j]`` = the ``k`` centroids of subspace
+    ``j``."""
+    if k < 1:
+        raise ValueError(f"n_clusters must be >= 1, got {k}")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
     seeds = (
         corpus.select(F.col(id_col), F.col(vec_col))
         .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_clusters)
+        .limit(k)
         .collect()
     )
-    if len(seeds) < n_clusters:
-        raise ValueError(
-            f"kmeans_train_fx: corpus has {len(seeds)} rows < k={n_clusters}"
-        )
-    cents = [[float(x) for x in r[vec_col]] for r in seeds]
-    d = len(cents[0])
-    v = F.col(vec_col)
-    # AQE off for the update loop only (the train_logreg convention,
-    # r17): the per-iteration aggregate lands on k x d bounded rows —
-    # nothing for AQE to re-plan — but under AQE every iteration
-    # schedules TWO jobs (shuffle materialization + final stage)
-    # instead of one. The integer-lattice sums are associative, so the
-    # collected model state is bit-identical under any post-shuffle
-    # partitioning. Restored in ``finally``.
-    spark = corpus.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        for _ in range(iters):
-            scored = scored_centroids(v, cents)
-            best = F.element_at(F.array_sort(scored), 1)["cid"].cast("int")
-            xfx = F.round(
-                F.col("_x").cast("double") * F.lit(float(fx_scale)), 0
-            ).cast("long")
-            sums = (
-                # two-step projection: a lambda-bearing struct
-                # expression and a generator in ONE select trips the
-                # analyzer (struct field names degrade to col1/col2);
-                # assigning the cluster first keeps the plan identical
-                # after collapse
-                corpus.select(best.alias("_cid"), v.alias("_v"))
-                .select("_cid", F.posexplode("_v").alias("_pos", "_x"))
-                .groupBy("_cid", "_pos")
-                .agg(F.sum(xfx).alias("_s"), F.count(F.lit(1)).alias("_n"))
-                .collect()
+    if len(seeds) < k:
+        raise ValueError(f"k-means: corpus has {len(seeds)} rows < k={k}")
+    dim = len(seeds[0][vec_col])
+    if dim % m != 0:
+        raise ValueError(f"m={m} must divide dim={dim}")
+    sub = dim // m
+    books = [
+        [[float(x) for x in r[vec_col][j * sub:(j + 1) * sub]] for r in seeds]
+        for j in range(m)
+    ]
+    train = corpus.select(vec_col)
+    for _ in range(iters):
+        parts = train.mapInPandas(
+            _fx_partial_sums(books, vec_col),
+            "_j int, _c int, _n long, _s array<long>",
+        ).collect()
+        totals: dict = {}
+        for r in parts:
+            n, s = totals.get((r["_j"], r["_c"]), (0, [0] * sub))
+            totals[(r["_j"], r["_c"])] = (
+                n + r["_n"], [a + b for a, b in zip(s, r["_s"])]
             )
-            new = [c[:] for c in cents]
-            for r in sums:
-                new[r["_cid"]][r["_pos"]] = float(r["_s"]) / (
-                    float(fx_scale) * float(r["_n"])
-                )
-            cents = new
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    return cents
+        for (j, c), (n, s) in totals.items():
+            books[j][c] = [
+                float(x) / (float(KMEANS_FX_SCALE) * float(n)) for x in s
+            ]
+    return books
+
+
+def _fx_partial_sums(books: "list[list[list[float]]]", vec_col: str):
+    """The per-partition kernel of :func:`_lloyd_fx`: for every subspace
+    ``j``, assign each row to its nearest centroid of ``books[j]`` and
+    sum the member coordinates on the :data:`KMEANS_FX_SCALE` lattice.
+    Yields one ``(_j, _c, _n, _s)`` row per non-empty (subspace,
+    cluster) of the partition. Vectorized Arrow batches, never per-row
+    Python (the :func:`cluster_assign_arrow` exception)."""
+    import numpy as np
+    import pandas as pd
+
+    C = np.asarray(books, dtype=np.float64)  # (m, k, sub)
+    m, k, sub = C.shape
+
+    def _sums(batches):
+        S = np.zeros((m, k, sub), dtype=np.int64)
+        N = np.zeros((m, k), dtype=np.int64)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = X.reshape(len(X), m, sub)
+            # the expression path's fold: no BLAS, no pairwise sum
+            d = np.zeros((len(X), m, k))
+            for t in range(sub):
+                diff = X[:, :, None, t] - C[None, :, :, t]
+                d += diff * diff
+            lab = np.argmin(d, axis=2)  # first minimum = lowest cid
+            # HALF_UP (away from zero), like Spark's round(); numpy's
+            # round is half-to-even. floor/frac split keeps it exact.
+            y = X * float(KMEANS_FX_SCALE)
+            a = np.abs(y)
+            fl = np.floor(a)
+            q = np.copysign(fl + (a - fl >= 0.5), y).astype(np.int64)
+            jj = np.broadcast_to(np.arange(m), lab.shape)
+            np.add.at(S, (jj, lab), q)
+            np.add.at(N, (jj, lab), 1)
+        j, c = np.nonzero(N)
+        if len(j) == 0:  # empty partition: nothing to add
+            return
+        yield pd.DataFrame({
+            "_j": j.astype("int32"),
+            "_c": c.astype("int32"),
+            "_n": N[j, c],
+            "_s": list(S[j, c]),
+        })
+
+    return _sums
 
 
 def top_pc_fx(
     corpus: DataFrame,
     iters: int = 3,
-    fx_scale: int = KMEANS_FX_SCALE,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     salt: str = "pc",
@@ -1636,16 +1630,15 @@ def top_pc_fx(
 
     At 100 TB: per iteration one corpus scan + one d-bounded partial
     agg; state to the driver is d longs per round (model-scale).
-    int64 headroom per coordinate is ``|d_i (x_ij − μ_j)| * fx_scale *
+    int64 headroom per coordinate is ``|d_i (x_ij − μ_j)| * fx *
     rows`` — at unit-scale embeddings and fx 1e6 that allows ~1e9
     rows per partial sum; coarsen the grid or sum hierarchically past
     that."""
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
     v = F.col(vec_col)
-    xfx = F.round(
-        F.col("_x").cast("double") * F.lit(float(fx_scale)), 0
-    ).cast("long")
+    fx = float(KMEANS_FX_SCALE)
+    xfx = F.round(F.col("_x").cast("double") * F.lit(fx), 0).cast("long")
     msum = (
         corpus.select(F.posexplode(v).alias("_p", "_x"))
         .groupBy("_p")
@@ -1657,7 +1650,7 @@ def top_pc_fx(
     n = int(msum[0]["_n"])
     mu = [0.0] * len(msum)
     for r in msum:
-        mu[r["_p"]] = float(r["_s"]) / (float(fx_scale) * float(r["_n"]))
+        mu[r["_p"]] = float(r["_s"]) / (fx * float(r["_n"]))
     mu_arr = F.array(*[F.lit(m) for m in mu])
     cen = F.zip_with(v, mu_arr, lambda a, b: a.cast("double") - b)
     base = corpus.select(
@@ -1693,16 +1686,15 @@ def top_pc_fx(
             .groupBy("_p")
             .agg(
                 F.sum(
-                    F.round(
-                        F.col("_d") * F.col("_x") * F.lit(float(fx_scale)), 0
-                    ).cast("long")
+                    F.round(F.col("_d") * F.col("_x") * F.lit(fx), 0)
+                    .cast("long")
                 ).alias("_s")
             )
             .collect()
         )
         raw = [0.0] * len(cur)
         for r in sums:
-            raw[r["_p"]] = float(r["_s"]) / float(fx_scale)
+            raw[r["_p"]] = float(r["_s"]) / fx
         nrm = _host_l2(raw)
         if nrm == 0.0:  # centered corpus annihilated the iterate
             break

@@ -53,7 +53,7 @@ deterministic tie-breaks; the Viterbi DP breaks score ties by fewer
 pieces, then lexicographic piece sequence — a total order, so
 segmentation is rerun- and repartition-stable and the learned
 word→n_sub table can be embedded in a DuckDB oracle as plan constants
-(the ``bpe``/``ivf_train`` convention).
+(the ``bpe`` convention).
 
 The reference has no tokenizer (its pipeline stops at scraped text);
 this is north-star surface for the LLM-data pipeline, same charter as

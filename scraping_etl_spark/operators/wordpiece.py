@@ -36,7 +36,7 @@ documents through the same broadcast word→segmentation join
 
 Determinism: merge selection breaks score ties by ``(a, b)``
 lexicographically; the learned segmentation table therefore embeds in
-a DuckDB oracle as plan constants (the ``ivf_train`` convention).
+a DuckDB oracle as plan constants (the train-once convention).
 """
 
 from __future__ import annotations

@@ -1029,7 +1029,7 @@ def _bpe_artifacts(sf_dir: str) -> tuple:
     """Train-once BPE artifacts per scale dir: the ordered merge table
     AND the word→n_sub segmentation (vocabulary-scale — ~31 rows on
     the synthetic corpus — a table of the model, not the data; the
-    ``ivf_train`` plan-constants convention)."""
+    train-once plan-constants convention)."""
     merges, seg_tbl = _bpe_trained(sf_dir)
     return merges, tuple((w, len(sym)) for w, sym in seg_tbl)
 
@@ -1189,7 +1189,7 @@ _UNI_VOCAB, _UNI_SEED, _UNI_ITERS, _UNI_MAXLEN = 48, 300, 2, 6
 def _uni_artifacts(sf_dir: str) -> tuple:
     """Train-once unigram artifacts per scale dir: the piece-count
     model and the word→n_sub segmentation :func:`unigram.train_unigram`
-    returns with it (both model-scale; the ``ivf_train`` plan-constants
+    returns with it (both model-scale; the train-once plan-constants
     convention)."""
     from scraping_etl_spark.operators import unigram as UNI
     from scraping_etl_spark.session import get_spark
@@ -1349,7 +1349,7 @@ def _wp_artifacts(sf_dir: str) -> tuple:
     """Train-once WordPiece artifacts per scale dir: the merge list,
     the encoder vocabulary, and the word→n_sub segmentation, all three
     returned by :func:`wordpiece.wordpiece_train` (model-scale; the
-    ``ivf_train`` plan-constants convention)."""
+    train-once plan-constants convention)."""
     from scraping_etl_spark.operators import wordpiece as WP
     from scraping_etl_spark.session import get_spark
 
@@ -2157,8 +2157,8 @@ FROM top
 def _bpe_encode_artifacts(sf_dir: str) -> tuple:
     """Train-once encode artifacts per scale dir: the word→subwords
     segmentation (subwords space-joined) and the lexicographic dense-id
-    vocabulary — both model-scale collects under the ``ivf_train``
-    convention, and the vocabulary derivation (sorted distinct
+    vocabulary — both model-scale collects under the train-once
+    plan-constants convention, and the vocabulary derivation (sorted distinct
     subwords) is exactly :func:`bpe.bpe_vocab`'s rank."""
     _, seg_tbl = _bpe_trained(sf_dir)
     seg_rows = tuple((w, " ".join(sym)) for w, sym in seg_tbl)

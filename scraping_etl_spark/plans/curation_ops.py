@@ -178,16 +178,20 @@ _SEM_CLUSTERS = 8
 @functools.lru_cache(maxsize=4)
 def _sem_centroids(sf_dir: str) -> tuple:
     """Train-once SemDeDup centroids per scale dir: k-means over the
-    UNIT-NORMALIZED base embeddings (the paper clusters the sphere)."""
+    UNIT-NORMALIZED base embeddings (the paper clusters the sphere),
+    seeded by ``vec_id``."""
     from scraping_etl_spark.session import get_spark
 
     spark = SparkSession.getActiveSession() or get_spark()
     e = load_table(spark, sf_dir, "embeddings")
     unit = e.select(
-        SIM.normalize_embedding(F.col("embedding")).alias("embedding")
+        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
     )
     return tuple(
-        tuple(c) for c in SIM.ivf_train(unit, n_clusters=_SEM_CLUSTERS)
+        tuple(c)
+        for c in SIM.kmeans_train_fx(
+            unit, n_clusters=_SEM_CLUSTERS, iters=SIM.INDEX_ITERS
+        )
     )
 
 
@@ -1036,7 +1040,7 @@ def _fclf_model(sf_dir: str) -> tuple:
         labeled_txt, n_features=_FCLF_FEATURES, return_idf=True,
         materialize_tf=True, n_docs=n_docs,
     )
-    # model-scale collect: <= n_features rows (the ivf_train convention)
+    # model-scale collect: <= n_features rows (the train-once convention)
     idf_rows = {r["slot"]: float(r["_idf"]) for r in idf_df.collect()}
     empty_slot_idf = math.log(float(n_docs + 1)) + 1.0
     idf = [idf_rows.get(s, empty_slot_idf) for s in range(_FCLF_FEATURES)]

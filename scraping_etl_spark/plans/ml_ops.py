@@ -823,7 +823,10 @@ def _ivf_index(sf_dir: str) -> tuple:
 
     spark = SparkSession.getActiveSession() or get_spark()
     e = load_table(spark, sf_dir, "embeddings")
-    return tuple(tuple(c) for c in SIM.ivf_train(e, n_clusters=16))
+    return tuple(
+        tuple(c)
+        for c in SIM.kmeans_train_fx(e, n_clusters=16, iters=SIM.INDEX_ITERS)
+    )
 
 
 def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -837,15 +840,13 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     centroids = [list(c) for c in _ivf_index(sf_dir)]
-    return SIM.ivf_topk(
-        e, probes, k=_TOPK, n_clusters=16, n_probe=4, centroids=centroids
-    )
+    return SIM.ivf_topk(e, probes, centroids, k=_TOPK, n_probe=4)
 
 
 def oracle_emb_ivf_topk(sf_dir: str) -> str:
     """DuckDB twin of :func:`q_emb_ivf_topk`, built *lazily* (the
     registry's callable-oracle support exists for exactly this case)
-    because the centroids are run-time plan constants: ``ivf_train``
+    because the centroids are run-time plan constants: ``kmeans_train_fx``
     runs once per sf_dir (``_ivf_index`` cache, shared with the Spark
     query), and the trained centroids are embedded as DOUBLE literals —
     the same constants-in-the-plan pattern ``_ann_oracle`` uses for its
@@ -1758,12 +1759,12 @@ FROM ranked WHERE rk = 1
 # Distributed fixed-point k-means — training replayed by the oracle
 # ---------------------------------------------------------------------------
 
-_KM_K, _KM_ITERS, _KM_FX = 8, 4, 10**6
+_KM_K, _KM_ITERS = 8, 4
 
 
 @functools.lru_cache(maxsize=4)
 def _km_centroids(sf_dir: str) -> tuple:
-    """Train-once per scale dir (the ``ivf_train`` convention): the
+    """Train-once per scale dir (the ``_ivf_index`` convention): the
     scale tables are immutable, the trainer is bit-deterministic, so
     re-runs (bench pass 2, repeated driver calls) pay scoring only."""
     from scraping_etl_spark.session import get_spark
@@ -1772,9 +1773,7 @@ def _km_centroids(sf_dir: str) -> tuple:
     e = load_table(spark, sf_dir, "embeddings")
     return tuple(
         tuple(c)
-        for c in SIM.kmeans_train_fx(
-            e, n_clusters=_KM_K, iters=_KM_ITERS, fx_scale=_KM_FX
-        )
+        for c in SIM.kmeans_train_fx(e, n_clusters=_KM_K, iters=_KM_ITERS)
     )
 
 
@@ -1849,7 +1848,9 @@ FROM fw"""
     return "".join(parts)
 
 
-ORACLE_EMB_KMEANS_TRAIN = _kmeans_oracle_sql(_KM_K, _KM_ITERS, _DIM, _KM_FX)
+ORACLE_EMB_KMEANS_TRAIN = _kmeans_oracle_sql(
+    _KM_K, _KM_ITERS, _DIM, SIM.KMEANS_FX_SCALE
+)
 
 
 # ---------------------------------------------------------------------------
@@ -2212,7 +2213,7 @@ FROM scored
     return "".join(parts)
 
 
-ORACLE_EMB_TOP_PC = _top_pc_oracle_sql(_PC_ITERS, _DIM, _KM_FX)
+ORACLE_EMB_TOP_PC = _top_pc_oracle_sql(_PC_ITERS, _DIM, SIM.KMEANS_FX_SCALE)
 
 
 # ---------------------------------------------------------------------------

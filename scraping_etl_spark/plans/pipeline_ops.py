@@ -119,7 +119,10 @@ FROM toks
 
 
 def _sw_list(lang: str) -> str:
-    return ", ".join(f"'{w}'" for w in TS.STOPWORDS[lang])
+    """The ``lang`` stopwords as a DuckDB list of quoted literals."""
+    return ", ".join(
+        "'{}'".format(w.replace("'", "''")) for w in TS.STOPWORDS[lang]
+    )
 
 
 _CT_N, _CT_TOP_M, _CT_DOC_M = 3, 200, 20
@@ -848,12 +851,6 @@ def q_doc_lang_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     return TS.lang_segments(
         corpus, langs=_SEG_LANGS, chunk_tokens=_SEG_CHUNK
     )
-
-
-def _sw_list(lang: str) -> str:
-    from scraping_etl_spark.operators.textstats import STOPWORDS
-
-    return ", ".join("'{}'".format(w.replace("'", "''")) for w in STOPWORDS[lang])
 
 
 def _oracle_doc_lang_segments() -> str:

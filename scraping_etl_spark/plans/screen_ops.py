@@ -574,8 +574,8 @@ _PQ_M, _PQ_K, _PQ_TOPK, _PQ_N_PROBES = 8, 16, 3, 3
 @functools.lru_cache(maxsize=4)
 def _pq_index(sf_dir: str) -> tuple:
     """Train-once PQ artifacts per scale dir: the m codebooks and the
-    probe vectors (model-scale collects, the ``ivf_train``
-    convention)."""
+    probe vectors (model-scale collects, the train-once
+    plan-constants convention)."""
     from pyspark.sql import SparkSession as _SS
 
     from scraping_etl_spark.operators import similarity as SIM
@@ -998,7 +998,7 @@ _IVFPQ_DIM = 64
 def _ivfpq_index(sf_dir: str) -> tuple:
     """Train-once IVFADC artifacts per scale dir (coarse centroids +
     residual codebooks + probe vectors — model-scale collects, the
-    ``ivf_train`` convention)."""
+    train-once plan-constants convention)."""
     from pyspark.sql import SparkSession as _SS
 
     from scraping_etl_spark.operators import similarity as SIM

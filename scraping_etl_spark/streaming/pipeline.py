@@ -70,6 +70,26 @@ def _write_batch_partition(df: DataFrame, batch_id: int, path: str) -> None:
     )
 
 
+def _earlier_batches(
+    spark: SparkSession,
+    path: str | None,
+    batch_id: int,
+    merge_schema: bool = False,
+) -> DataFrame | None:
+    """The ``batch_id`` partitions of ``path`` landed before ``batch_id``
+    (the lake a micro-batch screens against), or None while none has
+    landed. ``merge_schema`` reads partitions whose columns differ (a
+    column that later batches added)."""
+    import os
+
+    if path is None or not os.path.isdir(path) or not any(
+        e.startswith("batch_id=") for e in os.listdir(path)
+    ):
+        return None
+    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+    return reader.parquet(path).filter(F.col("batch_id") < batch_id)
+
+
 def _start(
     writer: DataStreamWriter, checkpoint_dir: str, available_now: bool
 ) -> StreamingQuery:
@@ -989,8 +1009,6 @@ def line_dedup_stream(
     stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         lines = batch_df.select(
             F.col(id_col),
             F.posexplode(split_lines(text_col, sep)).alias("pos", "line"),
@@ -999,15 +1017,9 @@ def line_dedup_stream(
         firsts = lines.withColumn("_rk", F.row_number().over(w)).filter(
             F.col("_rk") == 1
         )
-        if os.path.isdir(seen_dir) and any(
-            e.startswith("batch_id=") for e in os.listdir(seen_dir)
-        ):
-            seen = (
-                spark.read.parquet(seen_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .select("_h")
-            )
-            kept = firsts.join(seen, "_h", "left_anti")
+        seen = _earlier_batches(spark, seen_dir, batch_id)
+        if seen is not None:
+            kept = firsts.join(seen.select("_h"), "_h", "left_anti")
         else:
             kept = firsts
         kept = kept.localCheckpoint()  # one compute, three consumers
@@ -1087,8 +1099,6 @@ def neardup_screen_stream(
     shard-ordered ingest reproduces the batch screen of each shard
     against the union of its predecessors bit-for-bit — the twin
     test's pinned setting."""
-    import os
-
     from scraping_etl_spark.operators.dedup import minhash_banded
 
     stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
@@ -1099,15 +1109,9 @@ def neardup_screen_stream(
         )
         new_docs = new_docs.localCheckpoint()      # lake write + verify
         new_banded = new_banded.localCheckpoint()  # lake write + screen
-        has_lake = os.path.isdir(bands_dir) and any(
-            e.startswith("batch_id=") for e in os.listdir(bands_dir)
-        )
-        if has_lake:
-            ref_banded = (
-                spark.read.parquet(bands_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .select("_id", "_band_idx", "_band_hash")
-            )
+        ref_banded = _earlier_batches(spark, bands_dir, batch_id)
+        if ref_banded is not None:
+            ref_banded = ref_banded.select("_id", "_band_idx", "_band_hash")
             ref_docs = (
                 spark.read.parquet(docs_dir)
                 .filter(F.col("batch_id") < batch_id)
@@ -1269,22 +1273,12 @@ def cdc_chunk_screen_stream(
     stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         refs = []
         if ref_static is not None:
             refs.append(ref_static.select("_h"))
-        has_lake = (
-            seen_dir is not None
-            and os.path.isdir(seen_dir)
-            and any(e.startswith("batch_id=") for e in os.listdir(seen_dir))
-        )
-        if has_lake:
-            refs.append(
-                spark.read.parquet(seen_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .select("_h")
-            )
+        seen = _earlier_batches(spark, seen_dir, batch_id)
+        if seen is not None:
+            refs.append(seen.select("_h"))
         if len(refs) == 2:
             ref = refs[0].unionByName(refs[1])
         elif refs:
@@ -1369,8 +1363,6 @@ def edit_screen_stream(
     against the union of its predecessors (the twin test's pinned
     setting). Within-batch pairs are deliberately NOT emitted (that is
     the batch operator's job at rest)."""
-    import os
-
     from scraping_etl_spark.operators.dedup import (
         ed_gram_occurrences,
         ed_gram_prefix,
@@ -1390,14 +1382,10 @@ def edit_screen_stream(
             .localCheckpoint()
         )
         occ_all = ed_gram_occurrences(s, q)
-        has_lake = os.path.isdir(grams_dir) and any(
-            e.startswith("batch_id=") for e in os.listdir(grams_dir)
-        )
-        if has_lake:
+        ref_pre = _earlier_batches(spark, grams_dir, batch_id)
+        if ref_pre is not None:
             ref_pre = (
-                spark.read.parquet(grams_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .select(
+                ref_pre.select(
                     F.col("_id").alias("ref_id"),
                     F.col("_len").alias("_lr"),
                     "_g",
@@ -1527,21 +1515,13 @@ def emb_screen_stream(
     stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def screen(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        has_lake = os.path.isdir(lake_dir) and any(
-            e.startswith("batch_id=") for e in os.listdir(lake_dir)
+        # mergeSchema picks up ivf_cell even when early partitions
+        # landed without it (pre-IVF lake); nulls fall back below
+        lake_all = _earlier_batches(
+            spark, lake_dir, batch_id, merge_schema=ivf_centroids is not None
         )
         b = batch_df.select(id_col, vec_col).localCheckpoint()
-        if has_lake:
-            lake_reader = spark.read
-            if ivf_centroids is not None:
-                # pick up ivf_cell even when early partitions landed
-                # without it (pre-IVF lake); nulls fall back below
-                lake_reader = lake_reader.option("mergeSchema", "true")
-            lake_all = lake_reader.parquet(lake_dir).filter(
-                F.col("batch_id") < batch_id
-            )
+        if lake_all is not None:
             lake_cols = [F.col(id_col).alias("_lid"),
                          F.col(vec_col).alias("_lvec")]
             has_cells = (

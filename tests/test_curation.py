@@ -205,8 +205,10 @@ def _planted_embeddings(spark):
 
 def test_semantic_dedup_drops_planted_copies(spark):
     e = _planted_embeddings(spark)
-    unit = e.select(SIM.normalize_embedding(F.col("embedding")).alias("embedding"))
-    cents = SIM.ivf_train(unit, n_clusters=4)
+    unit = e.select(
+        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
+    )
+    cents = SIM.kmeans_train_fx(unit, n_clusters=4, iters=SIM.INDEX_ITERS)
     pairs = SIM.semantic_dedup_pairs(e, cents, threshold=0.99).collect()
     planted = {(a, b) for a, b, _, _ in [tuple(r) for r in pairs]}
     for i in range(5):
@@ -221,8 +223,10 @@ def test_semantic_dedup_scale_invariant_assignment(spark):
     """A 2x-scaled vector must land in the same cluster as its
     original (the normalization contract)."""
     e = _planted_embeddings(spark)
-    unit = e.select(SIM.normalize_embedding(F.col("embedding")).alias("embedding"))
-    cents = SIM.ivf_train(unit, n_clusters=4)
+    unit = e.select(
+        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
+    )
+    cents = SIM.kmeans_train_fx(unit, n_clusters=4, iters=SIM.INDEX_ITERS)
     surv = SIM.semantic_dedup_survivors(e, cents, threshold=2.0)  # no drops
     cl = {r.vec_id: r.cluster for r in surv.collect()}
     for i in range(5):
@@ -339,8 +343,10 @@ def test_dsir_weight_is_logp_difference(spark):
 
 def test_arrow_assign_matches_expression_path(spark):
     e = _planted_embeddings(spark)
-    unit = e.select(SIM.normalize_embedding(F.col("embedding")).alias("embedding"))
-    cents = SIM.ivf_train(unit, n_clusters=4)
+    unit = e.select(
+        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
+    )
+    cents = SIM.kmeans_train_fx(unit, n_clusters=4, iters=SIM.INDEX_ITERS)
     expr_side = {
         (r.vec_id, r.cluster)
         for r in SIM.semantic_dedup_survivors(e, cents, threshold=2.0).collect()
@@ -354,8 +360,10 @@ def test_arrow_assign_matches_expression_path(spark):
 
 def test_arrow_assign_survivors_equivalent(spark):
     e = _planted_embeddings(spark)
-    unit = e.select(SIM.normalize_embedding(F.col("embedding")).alias("embedding"))
-    cents = SIM.ivf_train(unit, n_clusters=4)
+    unit = e.select(
+        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
+    )
+    cents = SIM.kmeans_train_fx(unit, n_clusters=4, iters=SIM.INDEX_ITERS)
     a = sorted(map(tuple, SIM.semantic_dedup_survivors(e, cents, 0.99).collect()))
     b = sorted(map(tuple, SIM.semantic_dedup_survivors(
         e, cents, 0.99, arrow_assign=True).collect()))

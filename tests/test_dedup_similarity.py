@@ -592,7 +592,9 @@ def test_emb_decontaminate_ivf_full_probe_equals_expression_tier(spark):
     ]
     corpus = _vecs(spark, vecs[:30])
     bench = _vecs(spark, [(i + 20, v) for i, v in vecs[30:]])  # ids overlap
-    cents = SIM.ivf_train(corpus.unionByName(bench), n_clusters=4, seed=7)
+    cents = SIM.kmeans_train_fx(
+        corpus.unionByName(bench), n_clusters=4, iters=SIM.INDEX_ITERS
+    )
     for excl in (True, False):
         brute = sorted(map(tuple, SIM.embedding_decontaminate(
             corpus, bench, threshold=0.8, exclude_same_id=excl
@@ -618,7 +620,7 @@ def test_emb_decontaminate_ivf_catches_exact_dups_at_one_probe(spark):
     ]
     bench = _vecs(spark, base)
     corpus = _vecs(spark, [(i + 1000, v) for i, v in base])  # exact copies
-    cents = SIM.ivf_train(bench, n_clusters=8, seed=5)
+    cents = SIM.kmeans_train_fx(bench, n_clusters=8, iters=SIM.INDEX_ITERS)
     out = {r.vec_id: r for r in SIM.embedding_decontaminate_ivf(
         corpus, bench, cents, threshold=0.95, n_probe=1
     ).collect()}
@@ -1116,7 +1118,7 @@ def test_ivfpq_residual_reconstructs_vector(spark):
     from scraping_etl_spark.operators import similarity as SIM
 
     e = _clustered_vecs(spark).localCheckpoint()
-    cents = SIM.ivf_train(e, n_clusters=3)
+    cents = SIM.kmeans_train_fx(e, n_clusters=3, iters=SIM.INDEX_ITERS)
     res = SIM.with_residual(e, cents).collect()
     vecs = {r.vec_id: list(r.embedding) for r in e.collect()}
     for r in res:
@@ -1214,12 +1216,74 @@ def _km_corpus(spark, n=40, d=4):
 
 
 def test_kmeans_fx_bit_identical_under_repartition(spark):
-    from scraping_etl_spark.operators.similarity import kmeans_train_fx
+    """Every index trainer goes through the integer-lattice loop, so each
+    artifact is the same bits under any partitioning: plain k-means, PQ
+    codebooks, IVF-PQ centroids + residual codebooks, and SemDeDup's
+    k-means over unit vectors."""
 
+    def unit(df):
+        return df.select(
+            "vec_id",
+            SIM.normalize_embedding(F.col("embedding")).alias("embedding"),
+        )
+
+    trainers = {
+        "kmeans": lambda df: SIM.kmeans_train_fx(df, n_clusters=3, iters=3),
+        "pq": lambda df: SIM.pq_train(df, m=2, k=4),
+        "ivfpq": lambda df: SIM.ivfpq_train(df, n_clusters=3, m=2, k=4),
+        "semdedup": lambda df: SIM.kmeans_train_fx(
+            unit(df), n_clusters=3, iters=SIM.INDEX_ITERS
+        ),
+    }
     c = _km_corpus(spark)
-    a = kmeans_train_fx(c, n_clusters=3, iters=3)
-    b = kmeans_train_fx(c.repartition(13), n_clusters=3, iters=3)
-    assert a == b  # integer-lattice updates: exact, order-free
+    for name, train in trainers.items():
+        a = train(c)
+        for n in (1, 4, 13):
+            # integer-lattice updates: exact, order-free
+            assert train(c.repartition(n)) == a, (name, n)
+
+
+def test_pq_train_equals_kmeans_per_subspace(spark):
+    """PQ trains its m subspaces in one loop; each codebook is exactly
+    kmeans_train_fx over that subspace's slice (same md5 seed rows)."""
+    e = _pq_vecs(spark).localCheckpoint()
+    books = SIM.pq_train(e, m=4, k=8)
+    for j in range(4):
+        sliced = e.select(
+            "vec_id", F.slice("embedding", 4 * j + 1, 4).alias("embedding")
+        )
+        assert books[j] == SIM.kmeans_train_fx(
+            sliced, n_clusters=8, iters=SIM.INDEX_ITERS
+        ), j
+
+
+def test_one_kmeans_no_mllib_no_thread_pool():
+    """Every index trains through kmeans_train_fx: no MLlib import and no
+    second k-means entry point in the package, tools or tests; no thread
+    pool in similarity.py; and only the two loops not yet on the exact
+    skeleton (classifier, linkage) toggle AQE on the shared session."""
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mllib = re.compile(r"^\s*(?:from|import)\s+pyspark\.ml\b", re.M)
+    retired = "ivf" + "_train"  # split so this file does not match itself
+    toggle = 'conf.set("spark.sql.adaptive.enabled"'
+    toggling = set()
+    for top in ("scraping_etl_spark", "tools", "tests"):
+        for dirpath, _, files in os.walk(os.path.join(root, top)):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                with open(os.path.join(dirpath, fname), encoding="utf-8") as fh:
+                    src = fh.read()
+                assert not mllib.search(src), fname
+                assert retired not in src, fname
+                if top == "scraping_etl_spark" and toggle in src:
+                    toggling.add(fname)
+    with open(SIM.__file__, encoding="utf-8") as fh:
+        assert "ThreadPoolExecutor" not in fh.read()
+    assert toggling == {"classifier.py", "linkage.py"}
 
 
 def test_kmeans_fx_separates_two_blobs(spark):
@@ -1784,7 +1848,7 @@ def test_hard_negatives_ivf_full_probe_equals_brute(spark):
         F.col("vec_id").alias("anchor_id"),
         F.col("embedding").alias("anchor_vec"),
     )
-    cents = SIM.ivf_train(emb, n_clusters=4, seed=3)
+    cents = SIM.kmeans_train_fx(emb, n_clusters=4, iters=SIM.INDEX_ITERS)
     brute = {
         (r.anchor_id, r.rank): (r.neighbor_id, r.cos_sim)
         for r in SIM.hard_negatives(emb, anchors, k=3, lo=0.2, hi=0.95).collect()

@@ -65,7 +65,12 @@ def test_ann_recall_floor(spark):
 def test_ivf_recall_floor(spark):
     """IVF cluster pruning must beat the LSH path's recall at a similar
     scan fraction (n_probe/n_clusters = 1/4 of the corpus here)."""
-    from scraping_etl_spark.operators.similarity import cosine_topk, ivf_topk
+    from scraping_etl_spark.operators.similarity import (
+        INDEX_ITERS,
+        cosine_topk,
+        ivf_topk,
+        kmeans_train_fx,
+    )
     from scraping_etl_spark.sources.readers import load_table
 
     e = load_table(spark, SF_SMOKE, "embeddings")
@@ -73,9 +78,10 @@ def test_ivf_recall_floor(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(e, probes, k=3).collect()}
+    cents = kmeans_train_fx(e, n_clusters=16, iters=INDEX_ITERS)
     approx = {
         (r.query_id, r.neighbor_id)
-        for r in ivf_topk(e, probes, k=3, n_clusters=16, n_probe=4).collect()
+        for r in ivf_topk(e, probes, cents, k=3, n_probe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.4, f"IVF recall collapsed: {recall:.2f}"
@@ -97,8 +103,9 @@ def test_hard_negatives_plans(spark):
     no cartesian — because it exists precisely for anchor sets too
     large to broadcast."""
     from scraping_etl_spark.operators.similarity import (
+        INDEX_ITERS,
         hard_negatives_ivf,
-        ivf_train,
+        kmeans_train_fx,
     )
     from scraping_etl_spark.sources.readers import load_table
 
@@ -110,7 +117,7 @@ def test_hard_negatives_plans(spark):
         F.col("vec_id").alias("anchor_id"),
         F.col("embedding").alias("anchor_vec"),
     )
-    cents = ivf_train(e, n_clusters=4, seed=3)
+    cents = kmeans_train_fx(e, n_clusters=4, iters=INDEX_ITERS)
     ivf_plan = _plan(
         hard_negatives_ivf(e, anchors, cents, k=3, n_probe=2)
     )
@@ -125,9 +132,10 @@ def test_hard_negatives_ivf_partial_probe_recall_floor(spark):
     import math
 
     from scraping_etl_spark.operators.similarity import (
+        INDEX_ITERS,
         hard_negatives,
         hard_negatives_ivf,
-        ivf_train,
+        kmeans_train_fx,
     )
 
     vecs = [
@@ -139,7 +147,7 @@ def test_hard_negatives_ivf_partial_probe_recall_floor(spark):
         F.col("vec_id").alias("anchor_id"),
         F.col("embedding").alias("anchor_vec"),
     )
-    cents = ivf_train(e, n_clusters=4, seed=3)
+    cents = kmeans_train_fx(e, n_clusters=4, iters=INDEX_ITERS)
     exact = {
         (r.anchor_id, r.neighbor_id)
         for r in hard_negatives(e, anchors, k=3, lo=0.2, hi=0.95).collect()
@@ -188,9 +196,10 @@ def test_decontaminate_over_cap_regimes(spark):
     true; callers in this regime belong on embedding_decontaminate_ivf,
     whose plan stays an equi-join (asserted here too)."""
     from scraping_etl_spark.operators.similarity import (
+        INDEX_ITERS,
         embedding_decontaminate,
         embedding_decontaminate_ivf,
-        ivf_train,
+        kmeans_train_fx,
     )
     from scraping_etl_spark.sources.readers import load_table
 
@@ -209,7 +218,7 @@ def test_decontaminate_over_cap_regimes(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "CartesianProduct" in over_cap  # the documented fallback node
-    cents = ivf_train(bench, n_clusters=4, seed=7)
+    cents = kmeans_train_fx(bench, n_clusters=4, iters=INDEX_ITERS)
     ivf = _plan(
         embedding_decontaminate_ivf(e, bench, cents, exclude_same_id=False)
     )
@@ -222,15 +231,16 @@ def test_ivf_decontaminate_stored_cell_equivalence(spark):
     byte-identical output to the on-the-fly assignment — including the
     null-cell mergeSchema fallback path."""
     from scraping_etl_spark.operators.similarity import (
+        INDEX_ITERS,
         embedding_decontaminate_ivf,
-        ivf_train,
+        kmeans_train_fx,
         nearest_centroids,
     )
     from scraping_etl_spark.sources.readers import load_table
 
     e = load_table(spark, SF_SMOKE, "embeddings").limit(200).localCheckpoint()
     bench = e.filter(F.col("vec_id") % 5 == 0)
-    cents = ivf_train(bench, n_clusters=4, seed=7)
+    cents = kmeans_train_fx(bench, n_clusters=4, iters=INDEX_ITERS)
     stored = bench.withColumn(
         "cell",
         F.when(

@@ -169,6 +169,16 @@ def test_surrogate_keys_deterministic_under_repartition(raw):
     assert ids1 == ids2
 
 
+def test_build_star_emits_no_future_warning(raw):
+    # the country-alias lookup spells map access amap[x]: the
+    # getItem(<Column>) form warns on every build and is going away
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        S.build_star(raw)
+
+
 def test_mojibake_repair(spark):
     # F6: classic latin1-as-utf8 mojibake repaired; clean + non-latin1
     # strings pass through unchanged (Q6 root cause, ScienceDirect.py:150).

@@ -313,10 +313,11 @@ def test_incremental_star_stream_equals_build_star_perfbench(spark, tmp_path):
 
 
 def test_streams_share_one_read_write_and_start():
-    """Every stream reads, lands its batch partitions and starts through
-    one helper each, and the star stream builds through ``build_star``:
-    no second copy of the write discipline and no surrogate keys of its
-    own in the streaming module."""
+    """Every stream reads, lands its batch partitions, finds its earlier
+    batches and starts through one helper each, and the star stream
+    builds through ``build_star``: no second copy of the write
+    discipline and no surrogate keys of its own in the streaming
+    module."""
     import os
 
     import scraping_etl_spark.streaming.pipeline as P
@@ -326,6 +327,7 @@ def test_streams_share_one_read_write_and_start():
     assert src.count('.partitionBy("batch_id")') == 1
     assert src.count("availableNow=True") == 1
     assert src.count('option("maxFilesPerTrigger"') == 1
+    assert src.count('startswith("batch_id=")') == 1
     streaming = os.path.dirname(P.__file__)
     for fname in os.listdir(streaming):
         if fname.endswith(".py"):
@@ -1888,7 +1890,10 @@ def test_emb_screen_stream_ivf_tier_refuses_exact_dups(spark, tmp_path):
     an identical vector shares its copy's nearest cell."""
     import os
 
-    from scraping_etl_spark.operators.similarity import ivf_train
+    from scraping_etl_spark.operators.similarity import (
+        INDEX_ITERS,
+        kmeans_train_fx,
+    )
     from scraping_etl_spark.streaming.pipeline import emb_screen_stream
 
     src, out, lake, ckpt = (
@@ -1900,7 +1905,7 @@ def test_emb_screen_stream_ivf_tier_refuses_exact_dups(spark, tmp_path):
         .limit(12)
         .localCheckpoint()
     )
-    cents = ivf_train(base, n_clusters=4, seed=11)
+    cents = kmeans_train_fx(base, n_clusters=4, iters=INDEX_ITERS)
     mirrors = base.selectExpr("vec_id + 1000 AS vec_id", "embedding", "label")
     base.coalesce(1).write.parquet(f"{src}/f1")
     mirrors.coalesce(1).write.parquet(f"{src}/f2")
@@ -1930,7 +1935,8 @@ def test_emb_screen_stream_ivf_lake_stores_cells_and_mixed_lake(spark, tmp_path)
     import os
 
     from scraping_etl_spark.operators.similarity import (
-        ivf_train,
+        INDEX_ITERS,
+        kmeans_train_fx,
         nearest_centroids,
     )
     from scraping_etl_spark.streaming.pipeline import emb_screen_stream
@@ -1944,7 +1950,7 @@ def test_emb_screen_stream_ivf_lake_stores_cells_and_mixed_lake(spark, tmp_path)
         .limit(10)
         .localCheckpoint()
     )
-    cents = ivf_train(base, n_clusters=3, seed=5)
+    cents = kmeans_train_fx(base, n_clusters=3, iters=INDEX_ITERS)
 
     # phase 1: land WITHOUT IVF mode — lake partitions have no ivf_cell
     base.coalesce(1).write.parquet(f"{src}/f1")

@@ -5,7 +5,8 @@ scale (sf0.1, 2k vectors) and at a 10x synthetic scale-up (20k), with
 parameter sensitivity for the knobs each tier documents:
 
 - ``emb_ann_topk``  — hyperplane-LSH: planes in {4, 6, 8} x multiprobe {0, 1}
-- ``emb_ivf_topk``  — IVF: n_probe in {1, 2, 4, 8} over 16 trained lists
+- ``emb_ivf_topk``  — IVF: n_probe in {1, 2, 4, 8} over 16 lists trained by
+  ``kmeans_train_fx``
 - ``emb_quantized_topk`` — int8 quantization (no knob; error is rounding only)
 
 The 10x corpus is 10 id-shifted replicas with a deterministic per-
@@ -105,11 +106,11 @@ def main() -> None:
                 )
                 results.setdefault(f"ANN LSH | planes={planes} mp={mp}", {})[label] = r
 
-        cents = SIM.ivf_train(corpus, n_clusters=16)
+        cents = SIM.kmeans_train_fx(corpus, n_clusters=16, iters=SIM.INDEX_ITERS)
         for n_probe in (1, 2, 4, 8):
             r = recall(
                 topk_sets(
-                    SIM.ivf_topk(corpus, probes, k=K, n_probe=n_probe, centroids=cents)
+                    SIM.ivf_topk(corpus, probes, cents, k=K, n_probe=n_probe)
                 ),
                 exact,
             )
