@@ -8,12 +8,13 @@ CCNet: a fastText linear model). This module is that shape on Spark:
 - :func:`quality_features` — per-document feature vector from pure
   built-ins (zero shuffle, zero UDFs).
 - :func:`train_logreg` — full-batch gradient-descent logistic
-  regression as DataFrame aggregations: each iteration is ONE job
-  computing the d+1 gradient sums map-side (d is the feature count, a
-  handful — the per-iteration collect is O(d) scalars of the MODEL,
-  not data; the ``kmeans_train_fx`` convention). Train on a curated+bounded
-  labeled set — classifier training data is small by construction; at
-  100 TB you train on a sample and SCORE the lake.
+  regression whose gradient is an integer-lattice sum
+  (:data:`GRAD_FX_SCALE`) through :func:`fixpoint.exact_sums`: under
+  the driver cap the labeled set is collected once and the whole fit
+  is one job; past it each iteration is one ``mapInPandas`` job whose
+  collect is O(d) longs of MODEL state, not data. Train on a
+  curated+bounded labeled set — classifier training data is small by
+  construction; at 100 TB you train on a sample and SCORE the lake.
 - :func:`score_logreg` — sigmoid(w·x) with the learned weights as
   plan constants: pure map, zero shuffle at any scale, and exactly
   mirrorable in the DuckDB oracle (same left-to-right dot fold).
@@ -24,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scraping_etl_spark.operators.fixpoint import exact_sums, half_up
 from scraping_etl_spark.operators.textstats import (
     stopword_ratio,
     tokens,
@@ -75,6 +77,14 @@ def _dot_const(weights: list[float], vec: Column) -> Column:
     return acc
 
 
+#: Fixed-point grid of the logistic-regression gradient: each row's
+#: ``(sigmoid(w·x) − y)·x_j`` rounds HALF_UP to a multiple of 1e-9, so
+#: the gradient is an exact integer sum. As ``|(p − y)·x_j| <= |x_j|``,
+#: int64 holds while ``rows * max|x_j| < 9.2e9``: at sf0.1 the quality
+#: features peak at 8 and the 32 hashed ones at ~55 (~1e9, ~1.7e8 rows).
+GRAD_FX_SCALE = 10**9
+
+
 def train_logreg(
     labeled: DataFrame,
     dim: int,
@@ -82,79 +92,45 @@ def train_logreg(
     label_col: str = "label",
     lr: float = 0.5,
     iters: int = 40,
-    l2: float = 0.0,
 ) -> list[float]:
     """Batch-GD logistic regression; returns the learned weights.
 
-    Each iteration computes ``grad_j = avg((sigmoid(w·x) - y)·x_j)``
-    for all j in ONE aggregation (d static sum columns + a count —
-    map-side partial agg, no explode, no shuffle beyond the final
-    1-row combine) and updates driver-side: the per-iteration driver
-    traffic is d+1 scalars of model state. ``iters`` is bounded; the
-    labeled set should be the bounded curated sample, not the lake."""
+    Each iteration sums the :data:`GRAD_FX_SCALE` lattice gradient
+    ``g_j = Σ round((sigmoid(w·x) − y)·x_j · fx)`` with one
+    :func:`fixpoint.exact_sums` pass of a numpy kernel (``w·x`` is the
+    left-to-right fold of :func:`_dot_const`) and updates
+    ``w_j -= lr · g_j / (fx · n)`` on the driver. Under the driver cap
+    the labeled set is collected once and the whole fit is one job;
+    the labeled set should be the bounded curated sample, not the
+    lake."""
     if dim < 1:
         raise ValueError(f"dim must be >= 1, got {dim}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
-    base = labeled.select(
+    import numpy as np
+
+    cols = [
         F.col(features_col).alias("_x"),
         F.col(label_col).cast("double").alias("_y"),
-    ).localCheckpoint()
-    # The gradient expressions are built ONCE, against a `_w` weight
-    # column attached per iteration as a single array literal: complex
-    # literals ride the generated code as reference objects, so every
-    # iteration reuses one compiled plan instead of re-deriving (and
-    # re-compiling) a fresh d-term expression tree — measured 382 ->
-    # 125 ms fixed cost per iteration at d=6 (r16 optimization round).
-    # Arithmetic is unchanged: the dot is the same left-to-right
-    # `acc + w_j * x_j` double fold (`_dot_const`'s order) with w_j
-    # read from the array instead of inlined, so the learned weights
-    # are bit-identical (pinned by tests/test_classifier.py).
-    z = F.lit(0.0)
-    for i in range(dim):
-        z = z + F.element_at(F.col("_w"), i + 1) * F.element_at(
-            F.col("_x"), i + 1
-        )
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    # err is PROJECTED once per row and the d gradient sums multiply
-    # the materialized value — inlining it into every sum would hand
-    # the analyzer/optimizer a d²-node tree per iteration (measured
-    # ~0.6 s/iteration of pure driver time at d=33). Same doubles:
-    # one evaluation of the same expression feeds the same products.
-    err = (p - F.col("_y")).alias("_e")
-    aggs = [F.count(F.lit(1)).alias("_n")] + [
-        F.sum(F.col("_e") * F.element_at(F.col("_x"), j + 1)).alias(f"_g{j}")
-        for j in range(dim)
     ]
+    fx = float(GRAD_FX_SCALE)
     w = [0.0] * dim
-    # AQE off for the loop only: a keyless aggregation to ONE row has
-    # nothing for AQE to re-plan, but under AQE every iteration costs
-    # TWO scheduled jobs (shuffle-stage materialization + final stage)
-    # instead of one — 40 iterations = 40 extra scheduling barriers at
-    # any scale (measured r17: 80 -> 40 jobs, weights bit-identical;
-    # the physical aggregation, its partitioning and its combine order
-    # are unchanged, so this is a pure job-count cut, not a plan
-    # change). Restored in ``finally`` so serve paths keep AQE.
-    spark = base.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+
+    def grad_sums(cols):  # the row count, then Σ round((p − y)·x_j · fx)
+        X = cols["_x"][:, :dim]
+        z = np.zeros(len(X))
+        for j, wj in enumerate(w):
+            z = z + wj * X[:, j]
+        e = 1.0 / (1.0 + np.exp(-z)) - cols["_y"]
+        g = half_up(e[:, None] * X * fx).sum(axis=0)
+        return np.concatenate([[len(X)], g])
+
+    with exact_sums(labeled, cols) as total:
         for _ in range(iters):
-            sums = (
-                base.withColumn("_w", F.lit([float(v) for v in w]))
-                .select(err, "_x")
-                .agg(*aggs)
-                .first()
-            )
-            n = float(sums["_n"])
-            if n == 0:
+            tot = total(grad_sums)
+            if not tot:
                 raise ValueError("train_logreg: empty labeled set")
-            w = [
-                w[j] - lr * (float(sums[f"_g{j}"]) / n + l2 * w[j])
-                for j in range(dim)
-            ]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+            w = [w[j] - lr * (tot[j + 1] / (fx * tot[0])) for j in range(dim)]
     return w
 
 

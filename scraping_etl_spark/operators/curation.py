@@ -358,7 +358,7 @@ def token_budget_mix(
     # the md5(seed|id) order key must drive BOTH stages identically;
     # per_key_cap ranks ascending on a plain column when descending=False
     keyed = (
-        df.filter(bmap.getItem(F.col(source_col)).isNotNull())
+        df.filter(bmap[F.col(source_col)].isNotNull())
         .withColumn(
             "_ord",
             F.md5(F.concat(F.lit(seed), F.lit("|"), F.col(id_col).cast("string"))),
@@ -381,7 +381,7 @@ def token_budget_mix(
         "cum_before", F.coalesce(F.sum("n_doc_tokens").over(w), F.lit(0))
     )
     return (
-        out.filter(F.col("cum_before") < bmap.getItem(F.col(source_col)))
+        out.filter(F.col("cum_before") < bmap[F.col(source_col)])
         .drop("_ord", "cap_rank")
     )
 

@@ -18,9 +18,8 @@ and score every pair with the log-likelihood-ratio sum
 link, low → non-link, the middle band → clerical review. With labeled
 data the m/u estimates are closed-form count ratios — no EM — which
 keeps the whole computation deterministic and oracle-checkable; the
-classic unlabeled-EM variant fits the same relational shape (iterate
-the count aggregation against soft assignments) but is out of scope
-here.
+classic unlabeled-EM variant is :func:`fs_em_weights`, an exact
+integer-grid fixpoint.
 
 Scale: the weight estimation is ONE partial aggregation over the
 labeled pairs producing a single row of plan-constant-sized state; the
@@ -40,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from scraping_etl_spark.operators.fixpoint import exact_sums
 
 
 def fs_weights(
@@ -85,122 +86,92 @@ def fs_weights(
 
 
 #: Fixed-point grid for the EM responsibility sums: each pair's
-#: posterior match probability is rounded to an integer grid before
-#: the M-step aggregation, so the sums are INTEGER additions —
-#: associative, hence bit-identical under any partial-aggregation
-#: order on any engine (the ``token_divergence`` trick). Resolution
-#: 1e-9 per pair; BIGINT overflow needs > ~9e9 pairs per aggregation.
+#: posterior match probability is rounded to an integer grid, so the
+#: M-step sums are associative integer additions (the
+#: ``token_divergence`` trick). Resolution 1e-9 per pair; int64
+#: overflow needs > ~9e9 pairs.
 EM_SCALE = 1_000_000_000
+
+#: EM start: every field's m and u, and the match share p.
+EM_INIT_M, EM_INIT_U, EM_INIT_P = 0.9, 0.1, 0.5
 
 
 def fs_em_weights(
     pairs: DataFrame,
     agree_cols: list[str],
     n_iters: int = 5,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    init_p: float = 0.5,
 ) -> dict:
     """UNSUPERVISED Fellegi–Sunter parameter estimation via EM (Winkler
     1988; the deployment case where no labeled pairs exist): treat
     match/non-match as a latent two-class mixture over the per-field
     agreement patterns (conditional independence, the classic FS
-    assumption) and iterate
+    assumption) and iterate from :data:`EM_INIT_M` /
+    :data:`EM_INIT_U` / :data:`EM_INIT_P`
 
     - E-step: per pair, the posterior match responsibility
       ``w = p·Π_i m-term / (p·Π_i m-term + (1-p)·Π_i u-term)`` with
       the products folded in FIXED field order;
     - M-step: ``m_i = E[w·a_i]/E[w]``, ``u_i`` likewise over ``1-w``,
       ``p = E[w]/N`` — each expectation an integer sum of grid-rounded
-      responsibilities (:data:`EM_SCALE`), with m, u AND p all
-      add-half-smoothed on the same grid so no probability hits 0/1
-      (an unsmoothed p would make sw=0 / sw=N·S absorbing states:
-      the E-step numerator or denominator term would collapse to 0
-      and freeze EM there).
+      responsibilities ``floor(w·S + 0.5)`` (:data:`EM_SCALE`), with
+      m, u AND p all add-half-smoothed on the same grid so no
+      probability hits 0/1 (an unsmoothed p would make sw=0 / sw=N·S
+      absorbing states: the E-step numerator or denominator term would
+      collapse to 0 and freeze EM there).
 
     Returns ``{"p": float, "m": {field: float}, "u": {field: float},
-    "n_pairs": int}`` — plan-constant-sized state, collected once per
-    iteration (the train-loop pattern of ``kmeans_train_fx`` /
-    WordPiece: k driver-side O(1)-row actions over a one-pass
-    aggregation, never a driver loop over data rows). Every arithmetic
-    step is deterministic (exact-double E-step from the previous
-    constants, integer-grid M-step), so the fixpoint is reproducible
-    across engines and partitionings — the property that makes a
-    future driver gate oracle-able by unrolled CTEs.
-
-    Scale: each iteration is ONE map-side partial aggregation over the
-    pair relation (no shuffle beyond the final combine); state is
-    ``2·|fields| + 1`` doubles. 100 TB: the pair relation is the
-    candidate output of the blocking join (``fuzzy_string_pairs`` /
-    ``edit_distance_pairs``), already data-scale-reduced."""
+    "n_pairs": int}``. Each iteration is one :func:`fixpoint.exact_sums`
+    pass (under the driver cap the whole fixpoint is one job), so the
+    fixpoint is the same bits on every engine, tier and partitioning —
+    the DuckDB oracle unrolls it as CTEs (plans/ml_ops.py
+    ``_fs_em_oracle``). The pair relation is the blocking join's
+    candidate output, already data-scale-reduced."""
     if not agree_cols:
         raise ValueError("agree_cols must name at least one field")
     if n_iters < 1:
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
-    if not (0.0 < init_p < 1.0):
-        raise ValueError(f"init_p must be in (0, 1), got {init_p}")
-    flags = pairs.select(
-        *[F.col(c).cast("boolean").alias(c) for c in agree_cols]
-    )
-    m = {c: float(init_m) for c in agree_cols}
-    u = {c: float(init_u) for c in agree_cols}
-    p = float(init_p)
+    # a null flag disagrees, as in the oracle's CASE WHEN
+    flags = [
+        F.coalesce(F.col(c).cast("boolean"), F.lit(False)).alias(c)
+        for c in agree_cols
+    ]
+    import numpy as np
+
+    m = {c: EM_INIT_M for c in agree_cols}
+    u = {c: EM_INIT_U for c in agree_cols}
+    p = EM_INIT_P
     half, one = EM_SCALE // 2, EM_SCALE
-    n_pairs = None
-    # AQE off for the loop only (the train_logreg convention, r17): a
-    # keyless aggregation to ONE row has nothing for AQE to re-plan,
-    # and under AQE every EM iteration schedules TWO jobs instead of
-    # one. The aggregation, its partitioning and its integer-grid
-    # combine are unchanged. Restored in ``finally``.
-    spark = pairs.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+
+    def em_sums(cols):  # n, Σ wq, then Σ wq and Σ (S − wq) where each field agrees
+        num = np.full(len(cols[agree_cols[0]]), p)
+        den_u = np.full(len(num), 1.0 - p)
+        for c in agree_cols:  # fixed fold order — mirrors in SQL
+            num = num * np.where(cols[c], m[c], 1.0 - m[c])
+            den_u = den_u * np.where(cols[c], u[c], 1.0 - u[c])
+        # floor(x + 0.5) rather than HALF_UP: identical IEEE mul/add/
+        # floor on every engine, so the unrolled-CTE SQL oracle
+        # reproduces the grid bit-for-bit
+        wq = np.floor(num / (num + den_u) * float(EM_SCALE) + 0.5).astype(np.int64)
+        out = [len(wq), wq.sum()]
+        for c in agree_cols:
+            out += [wq[cols[c]].sum(), (EM_SCALE - wq[cols[c]]).sum()]
+        return np.asarray(out, dtype=np.int64)
+
+    with exact_sums(pairs, flags) as total:
         for _ in range(n_iters):
-            num: Column = F.lit(p)
-            den_u: Column = F.lit(1.0 - p)
-            for c in agree_cols:  # fixed fold order — mirrors in SQL
-                a = F.col(c)
-                num = num * F.when(a, F.lit(m[c])).otherwise(F.lit(1.0 - m[c]))
-                den_u = den_u * F.when(a, F.lit(u[c])).otherwise(
-                    F.lit(1.0 - u[c])
-                )
-            w = num / (num + den_u)
-            # floor(x + 0.5) rather than F.round: identical IEEE mul/add/
-            # floor on every engine (HALF_UP on the decimal expansion is
-            # JVM-BigDecimal-specific at representability corners), so an
-            # unrolled-CTE SQL oracle reproduces the grid bit-for-bit
-            wq = F.floor(w * F.lit(float(EM_SCALE)) + F.lit(0.5)).cast("long")
-            aggs = [
-                F.count(F.lit(1)).alias("_n"),
-                F.sum(wq).alias("_sw"),
-            ]
-            for c in agree_cols:
-                aggs.append(
-                    F.sum(F.when(F.col(c), wq).otherwise(F.lit(0))).alias(f"_swa_{c}")
-                )
-                aggs.append(
-                    F.sum(
-                        F.when(F.col(c), F.lit(EM_SCALE).cast("long") - wq)
-                        .otherwise(F.lit(0))
-                    ).alias(f"_sua_{c}")
-                )
-            row = flags.agg(*aggs).first()
-            n_pairs = int(row["_n"])
-            if n_pairs == 0:
+            tot = total(em_sums)
+            if not tot:
                 raise ValueError("fs_em_weights: empty pair relation")
-            sw = int(row["_sw"])
+            n_pairs, sw = tot[0], tot[1]
             su = n_pairs * one - sw
             # add-half smoothing on p too: if responsibilities collapse
             # (sw == 0 or sw == n·S) an unsmoothed p would hit exactly
             # 0/1 and the next E-step would be frozen at that absorbing
             # state — the same rationale as the m/u smoothing below
             p = (sw + half) / float(n_pairs * one + one)
-            for c in agree_cols:
-                m[c] = (int(row[f"_swa_{c}"]) + half) / float(sw + one)
-                u[c] = (int(row[f"_sua_{c}"]) + half) / float(su + one)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+            for i, c in enumerate(agree_cols):
+                m[c] = (tot[2 + 2 * i] + half) / float(sw + one)
+                u[c] = (tot[3 + 2 * i] + half) / float(su + one)
     return {"p": p, "m": m, "u": u, "n_pairs": n_pairs}
 
 

@@ -30,6 +30,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scraping_etl_spark.operators.fixpoint import exact_sums, half_up
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product of two float arrays in double
@@ -1468,36 +1470,32 @@ def kmeans_train_fx(
     id_col: str = "vec_id",
     iters: int = 4,
 ) -> list[list[float]]:
-    """DISTRIBUTED Lloyd's k-means with exactly-reproducible arithmetic
-    — the one k-means every index trains through (IVF lists, PQ and
-    IVF-PQ codebooks, SemDeDup clusters). Float centroid sums depend on
-    how the data is partitioned; these do not, so every artifact
-    hashes the same at any core count.
+    """Lloyd's k-means with exactly-reproducible arithmetic — the one
+    k-means every index trains through (IVF lists, PQ and IVF-PQ
+    codebooks, SemDeDup clusters). Float centroid sums depend on how
+    the data is partitioned; these do not, so every artifact hashes the
+    same at any core count.
 
     - **Init**: the ``n_clusters`` rows with the smallest
       ``(md5(id), id)`` — a deterministic scatter (md5 is a uniform
       hash, so seeds are corpus-spread), one TakeOrdered, k vectors
       collected (model-scale).
-    - **Iteration**: one ``mapInPandas`` pass + ``collect`` — one job,
-      no exchange, so AQE has nothing to re-plan. Each partition's
-      numpy kernel assigns every row to its nearest centroid (the
-      :func:`nearest_centroids` arithmetic: a left fold of
-      ``(a-b)*(a-b)`` over doubles from ``0.0``, ties to the lowest
+    - **Iteration**: one :func:`fixpoint.exact_sums` pass of
+      :func:`_fx_partial_sums`, which assigns every row to its nearest
+      centroid (the :func:`nearest_centroids` arithmetic: a left fold
+      of ``(a-b)*(a-b)`` over doubles from ``0.0``, ties to the lowest
       cid) and sums its coordinates per cluster on the
-      :data:`KMEANS_FX_SCALE` integer lattice (HALF_UP
-      ``round(x * fx)`` as int64). k x d longs + counts per partition
-      reach the driver (model state, not data), which adds them and
-      sets ``c = s / (fx * n)``. Integer sums are associative, so the
-      new centroids are bit-identical under any partitioning, which is
-      what lets the DuckDB oracle replay the ENTIRE training fixpoint
-      (plans/ml_ops.py ``ORACLE_EMB_KMEANS_TRAIN``). Empty clusters
-      keep their previous centroid.
+      :data:`KMEANS_FX_SCALE` integer lattice (HALF_UP ``round(x *
+      fx)``); the driver sets ``c = s / (fx * n)``. The centroids are
+      therefore bit-identical in either tier and under any
+      partitioning, which lets the DuckDB oracle replay the ENTIRE
+      training fixpoint (plans/ml_ops.py ``ORACLE_EMB_KMEANS_TRAIN``).
+      Empty clusters keep their previous centroid.
 
-    At 100 TB: per iteration one corpus scan and a partition-count x
-    (k x d) collect; int64 headroom is ``|x| * fx * rows`` per
-    (cluster, coordinate) — at |x| <= 8, fx 1e6, that allows ~1e12
-    member rows per cluster before overflow; raise the grid coarser or
-    split the sum hierarchically beyond that.
+    int64 headroom is ``|x| * fx * rows`` per (cluster, coordinate) —
+    at |x| <= 8, fx 1e6, that allows ~1e12 member rows per cluster
+    before overflow; raise the grid coarser or split the sum
+    hierarchically beyond that.
     """
     return _lloyd_fx(corpus, n_clusters, 1, vec_col, id_col, iters)[0]
 
@@ -1531,70 +1529,49 @@ def _lloyd_fx(
         [[float(x) for x in r[vec_col][j * sub:(j + 1) * sub]] for r in seeds]
         for j in range(m)
     ]
-    train = corpus.select(vec_col)
-    for _ in range(iters):
-        parts = train.mapInPandas(
-            _fx_partial_sums(books, vec_col),
-            "_j int, _c int, _n long, _s array<long>",
-        ).collect()
-        totals: dict = {}
-        for r in parts:
-            n, s = totals.get((r["_j"], r["_c"]), (0, [0] * sub))
-            totals[(r["_j"], r["_c"])] = (
-                n + r["_n"], [a + b for a, b in zip(s, r["_s"])]
-            )
-        for (j, c), (n, s) in totals.items():
-            books[j][c] = [
-                float(x) / (float(KMEANS_FX_SCALE) * float(n)) for x in s
-            ]
+    fx = float(KMEANS_FX_SCALE)
+    with exact_sums(corpus, [vec_col]) as total:
+        for _ in range(iters):
+            tot = total(_fx_partial_sums(books, vec_col))
+            counts, sums = tot[:m * k], tot[m * k:]
+            for i, n in enumerate(counts):
+                if n:
+                    books[i // k][i % k] = [
+                        float(x) / (fx * float(n))
+                        for x in sums[i * sub:(i + 1) * sub]
+                    ]
     return books
 
 
 def _fx_partial_sums(books: "list[list[list[float]]]", vec_col: str):
-    """The per-partition kernel of :func:`_lloyd_fx`: for every subspace
-    ``j``, assign each row to its nearest centroid of ``books[j]`` and
-    sum the member coordinates on the :data:`KMEANS_FX_SCALE` lattice.
-    Yields one ``(_j, _c, _n, _s)`` row per non-empty (subspace,
-    cluster) of the partition. Vectorized Arrow batches, never per-row
-    Python (the :func:`cluster_assign_arrow` exception)."""
+    """The :func:`_lloyd_fx` kernel: for every subspace ``j``, assign
+    each row to its nearest centroid of ``books[j]`` and sum the member
+    coordinates on the :data:`KMEANS_FX_SCALE` lattice. Returns the
+    ``m*k`` member counts, then the ``m*k*sub`` coordinate sums."""
     import numpy as np
-    import pandas as pd
 
     C = np.asarray(books, dtype=np.float64)  # (m, k, sub)
     m, k, sub = C.shape
+    Ct = np.ascontiguousarray(C.transpose(2, 0, 1))  # (sub, m, k)
 
-    def _sums(batches):
+    def _sums(cols):
+        X = cols[vec_col].reshape(-1, m, sub)
+        Xt = np.ascontiguousarray(X.transpose(2, 1, 0))  # (sub, m, rows)
+        # the expression path's fold over coordinates: no BLAS, no
+        # pairwise sum; rows on the contiguous axis
+        d = np.zeros((m, k, len(X)))
+        diff = np.empty_like(d)
+        for t in range(sub):
+            np.subtract(Xt[t][:, None, :], Ct[t][:, :, None], out=diff)
+            d += np.multiply(diff, diff, out=diff)
+        lab = np.argmin(d, axis=1).T  # first minimum = lowest cid
+        q = half_up(X * float(KMEANS_FX_SCALE))
         S = np.zeros((m, k, sub), dtype=np.int64)
         N = np.zeros((m, k), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            X = X.reshape(len(X), m, sub)
-            # the expression path's fold: no BLAS, no pairwise sum
-            d = np.zeros((len(X), m, k))
-            for t in range(sub):
-                diff = X[:, :, None, t] - C[None, :, :, t]
-                d += diff * diff
-            lab = np.argmin(d, axis=2)  # first minimum = lowest cid
-            # HALF_UP (away from zero), like Spark's round(); numpy's
-            # round is half-to-even. floor/frac split keeps it exact.
-            y = X * float(KMEANS_FX_SCALE)
-            a = np.abs(y)
-            fl = np.floor(a)
-            q = np.copysign(fl + (a - fl >= 0.5), y).astype(np.int64)
-            jj = np.broadcast_to(np.arange(m), lab.shape)
-            np.add.at(S, (jj, lab), q)
-            np.add.at(N, (jj, lab), 1)
-        j, c = np.nonzero(N)
-        if len(j) == 0:  # empty partition: nothing to add
-            return
-        yield pd.DataFrame({
-            "_j": j.astype("int32"),
-            "_c": c.astype("int32"),
-            "_n": N[j, c],
-            "_s": list(S[j, c]),
-        })
+        jj = np.broadcast_to(np.arange(m), lab.shape)
+        np.add.at(S, (jj, lab), q)
+        np.add.at(N, (jj, lab), 1)
+        return np.concatenate([N.ravel(), S.ravel()])
 
     return _sums
 
@@ -1606,99 +1583,76 @@ def top_pc_fx(
     vec_col: str = "embedding",
     salt: str = "pc",
 ) -> "tuple[list[float], list[float], int]":
-    """Top principal component of the embedding corpus by DISTRIBUTED
-    fixed-point power iteration (von Mises iteration over the centered
-    second moment) — the model behind all-but-the-top embedding
+    """Top principal component of the embedding corpus by fixed-point
+    power iteration (von Mises iteration over the centered second
+    moment) — the model behind all-but-the-top embedding
     postprocessing (Mu & Viswanath, ICLR 2018: isotropy improves after
     removing the common mean + dominant direction), anisotropy
     diagnostics, and spectral corpus profiling. Returns ``(mu, v, n)``
     — the per-coordinate mean, the unit top-PC direction, and the row
     count — as plan constants for map-side serving.
 
-    Never materializes the d×d covariance: each iteration computes the
-    per-row projection ``d_i = (x_i − μ)·v_t`` (one double fold) and
-    accumulates ``Σ_i d_i (x_i − μ)`` per coordinate on the
-    :data:`KMEANS_FX_SCALE` integer lattice (``posexplode`` + partial
-    agg — associative, so bit-identical under any partitioning, the
-    :func:`kmeans_train_fx` recipe), then renormalizes driver-side in
-    fixed coordinate order. Init is the centered vector of the
-    ``(md5(salt:id), id)``-smallest row, unit-normalized — fully
-    deterministic, so the DuckDB oracle replays the ENTIRE run
-    (plans/ml_ops.py ``ORACLE_EMB_TOP_PC``); the sign of ``v`` is the
-    deterministic sign the init's projection fixes (power iteration
-    never flips it).
+    Never materializes the d×d covariance. Every pass is one
+    :func:`fixpoint.exact_sums` sum on the :data:`KMEANS_FX_SCALE`
+    lattice (the :func:`kmeans_train_fx` recipe): first the mean, then
+    per iteration ``Σ_i round(d_i (x_ij − μ_j) * fx)`` with ``d_i =
+    (x_i − μ)·v_t`` folded left from ``0.0``; the driver renormalizes
+    in fixed coordinate order. Init
+    is the centered vector of the ``(md5(salt:id), id)``-smallest row,
+    unit-normalized — fully deterministic, so the DuckDB oracle replays
+    the ENTIRE run (plans/ml_ops.py ``ORACLE_EMB_TOP_PC``); the sign of
+    ``v`` is the deterministic sign the init's projection fixes (power
+    iteration never flips it).
 
-    At 100 TB: per iteration one corpus scan + one d-bounded partial
-    agg; state to the driver is d longs per round (model-scale).
     int64 headroom per coordinate is ``|d_i (x_ij − μ_j)| * fx *
     rows`` — at unit-scale embeddings and fx 1e6 that allows ~1e9
-    rows per partial sum; coarsen the grid or sum hierarchically past
-    that."""
+    rows; coarsen the grid or sum hierarchically past that."""
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    v = F.col(vec_col)
-    fx = float(KMEANS_FX_SCALE)
-    xfx = F.round(F.col("_x").cast("double") * F.lit(fx), 0).cast("long")
-    msum = (
-        corpus.select(F.posexplode(v).alias("_p", "_x"))
-        .groupBy("_p")
-        .agg(F.sum(xfx).alias("_s"), F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    if not msum:
-        raise ValueError("top_pc_fx: empty corpus")
-    n = int(msum[0]["_n"])
-    mu = [0.0] * len(msum)
-    for r in msum:
-        mu[r["_p"]] = float(r["_s"]) / (fx * float(r["_n"]))
-    mu_arr = F.array(*[F.lit(m) for m in mu])
-    cen = F.zip_with(v, mu_arr, lambda a, b: a.cast("double") - b)
-    base = corpus.select(
-        F.col(id_col).alias("_id"), cen.alias("_c")
-    ).localCheckpoint()  # consumed once per iteration + the seed pick
+    import numpy as np
 
-    seed = (
-        base.orderBy(
-            F.md5(F.concat(F.lit(salt + ":"), F.col("_id").cast("string"))),
-            F.col("_id"),
-        )
-        .limit(1)
-        .collect()[0]
-    )
-    cur = [float(x) for x in seed["_c"]]
-    nrm = _host_l2(cur)
-    if nrm == 0.0:
-        raise ValueError(
-            "top_pc_fx: the md5-seed row equals the corpus mean — "
-            "degenerate init (pass a different salt)"
-        )
-    cur = [x / nrm for x in cur]
-    for _ in range(iters):
-        vlit = F.array(*[F.lit(x) for x in cur])
-        proj = F.aggregate(
-            F.zip_with(F.col("_c"), vlit, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        sums = (
-            base.select(proj.alias("_d"), F.col("_c"))
-            .select("_d", F.posexplode("_c").alias("_p", "_x"))
-            .groupBy("_p")
-            .agg(
-                F.sum(
-                    F.round(F.col("_d") * F.col("_x") * F.lit(fx), 0)
-                    .cast("long")
-                ).alias("_s")
+    fx = float(KMEANS_FX_SCALE)
+
+    def mean_sums(cols):  # the row count, then Σ round(x_j * fx)
+        X = cols[vec_col]
+        return np.concatenate([[len(X)], half_up(X * fx).sum(axis=0)])
+
+    def fold_sums(cols):  # Σ round(d * (x_j − μ_j) * fx), d folded left
+        c = cols[vec_col] - np.asarray(mu)
+        d = np.zeros(len(c))
+        for j, vj in enumerate(cur):
+            d = d + c[:, j] * vj
+        return half_up(d[:, None] * c * fx).sum(axis=0)
+
+    with exact_sums(corpus, [vec_col]) as total:
+        tot = total(mean_sums)
+        if not tot:
+            raise ValueError("top_pc_fx: empty corpus")
+        n = tot[0]
+        mu = [float(s) / (fx * float(n)) for s in tot[1:]]
+        seed = (
+            corpus.select(F.col(id_col), F.col(vec_col))
+            .orderBy(
+                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
+                F.col(id_col),
             )
-            .collect()
+            .limit(1)
+            .collect()[0]
         )
-        raw = [0.0] * len(cur)
-        for r in sums:
-            raw[r["_p"]] = float(r["_s"]) / fx
-        nrm = _host_l2(raw)
-        if nrm == 0.0:  # centered corpus annihilated the iterate
-            break
-        cur = [x / nrm for x in raw]
+        cur = [float(x) - m for x, m in zip(seed[vec_col], mu)]
+        nrm = _host_l2(cur)
+        if nrm == 0.0:
+            raise ValueError(
+                "top_pc_fx: the md5-seed row equals the corpus mean — "
+                "degenerate init (pass a different salt)"
+            )
+        cur = [x / nrm for x in cur]
+        for _ in range(iters):
+            raw = [float(s) / fx for s in total(fold_sums)]
+            nrm = _host_l2(raw)
+            if nrm == 0.0:  # centered corpus annihilated the iterate
+                break
+            cur = [x / nrm for x in raw]
     return mu, cur, n
 
 

@@ -2890,11 +2890,10 @@ FROM flagged CROSS JOIN weights
 ORACLE_ER_FS_SCORES = _fs_oracle()
 
 
-#: EM gate knobs: iteration count (the fixpoint the hash pins) and the
-#: shared init constants — kept small so the k-times-unrolled oracle
-#: stays tractable while the estimates already separate.
+#: EM gate iteration count (the fixpoint the hash pins) — kept small
+#: so the k-times-unrolled oracle stays tractable while the estimates
+#: already separate.
 _FS_EM_ITERS = 3
-_FS_EM_INIT_M, _FS_EM_INIT_U, _FS_EM_INIT_P = 0.9, 0.1, 0.5
 
 
 def q_er_fs_em_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2909,13 +2908,10 @@ def q_er_fs_em_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs (the ``host_hits`` convention)."""
     # localCheckpoint once: the pair derivation (edit-join entities,
     # md5 windows, three-way union, agreement flags) would otherwise
-    # re-execute per EM iteration plus twice more for the weight
-    # reshape and the scoring pass — the weighted-cosine convention
+    # execute for the EM collect and again for the scoring pass — the
+    # weighted-cosine convention
     flagged = _fs_flagged_pairs(spark, sf_dir).localCheckpoint()
-    weights = LK.fs_em_weights_df(
-        flagged, _FS_FIELDS, n_iters=_FS_EM_ITERS,
-        init_m=_FS_EM_INIT_M, init_u=_FS_EM_INIT_U, init_p=_FS_EM_INIT_P,
-    )
+    weights = LK.fs_em_weights_df(flagged, _FS_FIELDS, n_iters=_FS_EM_ITERS)
     return LK.fs_score(
         flagged.select("id_a", "id_b", "is_match", *_FS_FIELDS),
         weights, _FS_FIELDS,
@@ -2930,14 +2926,12 @@ def _fs_em_oracle(n_iters: int = _FS_EM_ITERS) -> str:
     both engines), and the final score uses iteration ``k``'s
     constants. Every CTE is MATERIALIZED (DuckDB inlines plain CTEs
     per reference — the host_hits lesson)."""
-    from scraping_etl_spark.operators.linkage import EM_SCALE
-
-    half, one = EM_SCALE // 2, EM_SCALE
+    half, one = LK.EM_SCALE // 2, LK.EM_SCALE
     fields = _FS_FIELDS
-    em0_cols = [f"CAST({_FS_EM_INIT_P!r} AS DOUBLE) AS p"]
+    em0_cols = [f"CAST({LK.EM_INIT_P!r} AS DOUBLE) AS p"]
     for c in fields:
-        em0_cols.append(f"CAST({_FS_EM_INIT_M!r} AS DOUBLE) AS m_{c}")
-        em0_cols.append(f"CAST({_FS_EM_INIT_U!r} AS DOUBLE) AS u_{c}")
+        em0_cols.append(f"CAST({LK.EM_INIT_M!r} AS DOUBLE) AS m_{c}")
+        em0_cols.append(f"CAST({LK.EM_INIT_U!r} AS DOUBLE) AS u_{c}")
     parts = [f"""
 WITH {_fs_pair_ctes()},
 em0 AS MATERIALIZED (SELECT {', '.join(em0_cols)})"""]

@@ -281,25 +281,6 @@ def test_classifier_score_matches_manual_sigmoid(spark):
     assert got == round(1.0 / (1.0 + math.exp(-z)), 6)
 
 
-def test_classifier_loop_scoped_aqe_off_is_value_identical(spark):
-    """r17: train_logreg disables AQE around its keyless-agg loop (a
-    1-row aggregation has nothing for AQE to re-plan; under AQE each
-    iteration costs TWO scheduled jobs). The learned weights must be
-    bit-identical whichever setting the loop runs under, and the
-    session's AQE value must be restored afterwards from either
-    initial state."""
-    labeled = CLF.quality_features(_labeled_quality(spark)).localCheckpoint()
-    key = "spark.sql.adaptive.enabled"
-    spark.conf.set(key, "true")
-    w_from_on = CLF.train_logreg(labeled, dim=len(CLF.FEATURE_NAMES), iters=12)
-    assert spark.conf.get(key) == "true"
-    spark.conf.set(key, "false")
-    w_from_off = CLF.train_logreg(labeled, dim=len(CLF.FEATURE_NAMES), iters=12)
-    assert spark.conf.get(key) == "false"
-    spark.conf.set(key, "true")
-    assert w_from_on == w_from_off
-
-
 def test_classifier_validation(spark):
     df = CLF.quality_features(
         spark.createDataFrame([(0, "a", 1)], "doc_id LONG, text STRING, label INT")

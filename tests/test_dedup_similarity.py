@@ -1215,16 +1215,26 @@ def _km_corpus(spark, n=40, d=4):
     return spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
 
 
-def test_kmeans_fx_bit_identical_under_repartition(spark):
-    """Every index trainer goes through the integer-lattice loop, so each
-    artifact is the same bits under any partitioning: plain k-means, PQ
-    codebooks, IVF-PQ centroids + residual codebooks, and SemDeDup's
-    k-means over unit vectors."""
+def test_kmeans_fx_bit_identical_under_repartition(spark, monkeypatch):
+    """Every fixed-point trainer sums on an integer lattice, so each
+    artifact is the same bits in either exact_sums tier and under any
+    partitioning: plain k-means, PQ codebooks, IVF-PQ centroids +
+    residual codebooks, SemDeDup's k-means over unit vectors, the top
+    PC and the logistic-regression weights. No trainer touches the
+    session's AQE setting."""
+    from scraping_etl_spark.operators import classifier as CLF
+    from scraping_etl_spark.operators import fixpoint as FP
 
     def unit(df):
         return df.select(
             "vec_id",
             SIM.normalize_embedding(F.col("embedding")).alias("embedding"),
+        )
+
+    def labeled(df):
+        return df.select(
+            F.concat(F.array(F.lit(1.0)), "embedding").alias("features"),
+            (F.col("vec_id") % 2).alias("label"),
         )
 
     trainers = {
@@ -1234,13 +1244,55 @@ def test_kmeans_fx_bit_identical_under_repartition(spark):
         "semdedup": lambda df: SIM.kmeans_train_fx(
             unit(df), n_clusters=3, iters=SIM.INDEX_ITERS
         ),
+        "top_pc": lambda df: SIM.top_pc_fx(df, iters=3),
+        "logreg": lambda df: CLF.train_logreg(labeled(df), dim=5, iters=3),
     }
     c = _km_corpus(spark)
-    for name, train in trainers.items():
-        a = train(c)
-        for n in (1, 4, 13):
-            # integer-lattice updates: exact, order-free
-            assert train(c.repartition(n)) == a, (name, n)
+    parts = {n: c.repartition(n).localCheckpoint() for n in (1, 4, 13)}
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    want = {name: train(c) for name, train in trainers.items()}
+    # driver tier, then forced past the cap with one trainer per kernel
+    # (pq runs the k-means kernel over two subspaces at once)
+    for cap, names in (
+        (FP.FIT_DRIVER_ROWS, list(trainers)),
+        (0, ["pq", "top_pc", "logreg"]),
+    ):
+        monkeypatch.setattr(FP, "FIT_DRIVER_ROWS", cap)
+        for name in names:
+            for n, df in parts.items():
+                # integer-lattice updates: exact, order-free
+                assert trainers[name](df) == want[name], (name, cap, n)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
+
+
+def test_fixed_point_trainers_job_counts(spark):
+    """Under the driver cap every trainer collects its input once: the
+    logistic-regression and EM fits are one job each, k-means and the
+    top PC add only their md5 seed query."""
+    from scraping_etl_spark.operators import classifier as CLF
+    from scraping_etl_spark.operators import linkage as LK
+
+    def jobs():
+        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+
+    c = _km_corpus(spark).repartition(4).localCheckpoint()
+    lab = c.select(
+        F.concat(F.array(F.lit(1.0)), "embedding").alias("features"),
+        (F.col("vec_id") % 2).alias("label"),
+    )
+    flags = c.select(
+        (F.col("vec_id") % 2 == 0).alias("f1"),
+        (F.col("vec_id") % 3 == 0).alias("f2"),
+    )
+    for fit, bound in (
+        (lambda: CLF.train_logreg(lab, dim=5, iters=40), 1),
+        (lambda: LK.fs_em_weights(flags, ["f1", "f2"], n_iters=20), 1),
+        (lambda: SIM.kmeans_train_fx(c, n_clusters=3, iters=5), 2),
+        (lambda: SIM.top_pc_fx(c, iters=3), 2),
+    ):
+        j0 = jobs()
+        fit()
+        assert jobs() - j0 <= bound, bound
 
 
 def test_pq_train_equals_kmeans_per_subspace(spark):
@@ -1260,8 +1312,8 @@ def test_pq_train_equals_kmeans_per_subspace(spark):
 def test_one_kmeans_no_mllib_no_thread_pool():
     """Every index trains through kmeans_train_fx: no MLlib import and no
     second k-means entry point in the package, tools or tests; no thread
-    pool in similarity.py; and only the two loops not yet on the exact
-    skeleton (classifier, linkage) toggle AQE on the shared session."""
+    pool in similarity.py; and no package module toggles AQE on the
+    shared session."""
     import os
     import re
 
@@ -1283,7 +1335,7 @@ def test_one_kmeans_no_mllib_no_thread_pool():
                     toggling.add(fname)
     with open(SIM.__file__, encoding="utf-8") as fh:
         assert "ThreadPoolExecutor" not in fh.read()
-    assert toggling == {"classifier.py", "linkage.py"}
+    assert toggling == set()
 
 
 def test_kmeans_fx_separates_two_blobs(spark):

@@ -221,6 +221,19 @@ def test_token_budget_mix_unlisted_sources_excluded_and_deterministic(spark):
     assert len(ids3) == 3 and ids3 != ids1
 
 
+def test_token_budget_mix_emits_no_future_warning(spark):
+    # the budget lookup spells map access bmap[x]: the getItem(<Column>)
+    # form warns on every plan build and is going away
+    import warnings
+
+    from scraping_etl_spark.operators.curation import token_budget_mix
+
+    df = _hdocs(spark, [(i, "x y", "a") for i in range(4)])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        assert token_budget_mix(df, {"a": 3}).count() == 2
+
+
 def test_token_budget_mix_prune_equals_unpruned(spark):
     """The tournament prune is a pure optimization: tiny prune_cap
     (but >= the selectable bound) must not change the selection."""

@@ -172,9 +172,10 @@ def test_fs_em_weights_recovers_separation(spark):
     assert 0.25 < est["p"] < 0.55
 
 
-def test_fs_em_weights_repartition_invariant(spark):
+def test_fs_em_weights_repartition_invariant(spark, monkeypatch):
     """Integer-grid M-step sums are associative, so the fixpoint is
-    identical under any partitioning."""
+    identical in either exact_sums tier and under any partitioning."""
+    from scraping_etl_spark.operators import fixpoint as FP
     from scraping_etl_spark.operators.linkage import fs_em_weights
 
     rows = _em_rows()
@@ -182,8 +183,11 @@ def test_fs_em_weights_repartition_invariant(spark):
         [(r["f1"], r["f2"]) for r in rows], "f1 boolean, f2 boolean"
     )
     a = fs_em_weights(df, ["f1", "f2"], n_iters=3)
-    b = fs_em_weights(df.repartition(13), ["f1", "f2"], n_iters=3)
-    assert a == b
+    parts = {n: df.repartition(n).localCheckpoint() for n in (1, 4, 13)}
+    for cap in (FP.FIT_DRIVER_ROWS, 0):  # driver tier, then forced past it
+        monkeypatch.setattr(FP, "FIT_DRIVER_ROWS", cap)
+        for n, part in parts.items():
+            assert fs_em_weights(part, ["f1", "f2"], n_iters=3) == a, (cap, n)
 
 
 def test_fs_em_weights_df_serves_through_fs_score(spark):
@@ -214,7 +218,5 @@ def test_fs_em_weights_validation(spark):
         fs_em_weights(df, [])
     with _pt.raises(ValueError, match="n_iters"):
         fs_em_weights(df, ["f1"], n_iters=0)
-    with _pt.raises(ValueError, match="init_p"):
-        fs_em_weights(df, ["f1"], init_p=1.0)
     with _pt.raises(ValueError, match="empty pair relation"):
         fs_em_weights(df.filter("f1 = false"), ["f1"])
