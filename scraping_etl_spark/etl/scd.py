@@ -12,9 +12,10 @@ this operator keeps the full version history).
 
 Plan shape at 100 TB: one equi-join dim×updates on the natural key —
 update batches are small relative to the dimension (a day's changes vs
-years of history), so the update side BROADCASTS behind the same
-measured ``limit(n+1).count()`` guard as the other small-side joins in
-this repo; past the cap the hint drops and the same plan is a shuffle
+years of history), so the update side BROADCASTS under
+``materialize.BROADCAST_ROWS`` rows, behind the same measured
+``materialize.fits`` guard as the other small-side joins in this repo;
+past the cap the hint drops and the same plan is a shuffle
 hash join on the key. Unchanged rows never move: the merge is a
 left join + map-side column selection, not a rewrite of history rows
 (closed versions pass through untouched). No windows, no global order.
@@ -25,10 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: Broadcast the update batch only below this many rows — measured with
-#: a bounded probe, never assumed (same pattern as
-#: corpus_prep.MAX_BROADCAST_GRAMS).
-MAX_BROADCAST_UPDATES = 2_000_000
+from scraping_etl_spark import materialize as M
 
 
 def scd2_merge(
@@ -40,7 +38,6 @@ def scd2_merge(
     from_col: str = "effective_from",
     to_col: str = "effective_to",
     current_col: str = "is_current",
-    max_broadcast_updates: int = MAX_BROADCAST_UPDATES,
 ) -> DataFrame:
     """Merge an update batch into an SCD2 dimension.
 
@@ -73,11 +70,7 @@ def scd2_merge(
         [F.col(key_col).alias("_u_key")]
         + [F.col(c).alias(f"_u_{c}") for c in attr_cols if c != key_col]
     )
-    fits = (
-        max_broadcast_updates > 0
-        and u.limit(max_broadcast_updates + 1).count() <= max_broadcast_updates
-    )
-    u_side = F.broadcast(u) if fits else u
+    u_side = F.broadcast(u) if M.fits(u, M.BROADCAST_ROWS) else u
 
     eff = F.lit(effective_date).cast("date")
 

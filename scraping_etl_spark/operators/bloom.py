@@ -23,7 +23,7 @@ Spark-first design, mirroring the CMS tier (operators/sketches.py):
 - Probes ``stack`` the same k hashes per distinct key and count
   matched seeds against the filter relation; ``hits == k`` ⇒ maybe
   member. The filter side joins broadcast behind a MEASURED
-  ``limit(n+1).count()`` probe (the ``decontaminate`` convention) —
+  :func:`materialize.fits` probe (the ``decontaminate`` convention) —
   at the default geometry it always fits, but a caller-supplied
   ``m_bits`` in the billions must fall back to the un-hinted
   equi-join rather than OOM the driver.
@@ -43,6 +43,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from scraping_etl_spark import materialize as M
 
 BLOOM_BITS = 1 << 20
 BLOOM_HASHES = 5
@@ -88,7 +90,6 @@ def bloom_screen(
     m_bits: int = BLOOM_BITS,
     k_hashes: int = BLOOM_HASHES,
     out_col: str = "bloom_hit",
-    max_broadcast_bits: int = MAX_BROADCAST_BITS,
 ) -> DataFrame:
     """Screen every row of ``df``: gains ``out_col`` — true iff all
     ``k_hashes`` probe bits are set (maybe-member; false ⇒ definitely
@@ -106,10 +107,7 @@ def bloom_screen(
         "_bk", F.expr(_probe_cells("_bk", m_bits, k_hashes))
     )
     bits = bloom.select(F.col("bit"), F.lit(True).alias("_set"))
-    fits = (
-        max_broadcast_bits > 0
-        and bits.limit(max_broadcast_bits + 1).count() <= max_broadcast_bits
-    )
+    fits = M.fits(bits, MAX_BROADCAST_BITS)
     flags = (
         probes.join(F.broadcast(bits) if fits else bits, "bit", "left")
         .groupBy("_bk")

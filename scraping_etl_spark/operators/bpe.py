@@ -13,7 +13,7 @@ FREQUENCY table):
 
 - :func:`word_table_tier` is the ONE corpus-scale step every trainer
   here shares (BPE, ``wordpiece``, ``unigram``): explode → groupBy
-  word → ``localCheckpoint`` → a ``limit(cap+1).count()`` probe → the
+  word → ``localCheckpoint`` → a :func:`materialize.fits` probe → the
   collected ``(word, cnt)`` table when it fits under the cap. It picks
   the training tier: in-process (driver) under the cap, Spark jobs at
   vocabulary scale past it.
@@ -40,7 +40,8 @@ FREQUENCY table):
 - :func:`bpe_token_counts` tokenizes the corpus by joining that
   table: explode tokens → left join → partial-agg groupBy. The
   segmentation side is broadcast only behind a MEASURED cardinality
-  probe (the ``decontaminate`` convention, corpus_prep.py:328) — a
+  probe (:func:`materialize.fits` under
+  :data:`materialize.BROADCAST_ROWS`) — a
   100 TB web corpus's distinct-word "vocabulary" (typos, URLs,
   numbers) is 1e8–1e9 rows, where an unconditional broadcast hint is
   a driver OOM; past the cap the join falls back to an un-hinted
@@ -61,6 +62,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scraping_etl_spark import materialize as M
 from scraping_etl_spark.operators.textstats import tokens
 
 #: Split a word into single characters: the regex matches every
@@ -69,11 +71,13 @@ from scraping_etl_spark.operators.textstats import tokens
 #: segmentation as plan constants).
 _CHAR_SPLIT = "(?!^)"
 
-#: Broadcast (or driver-collect, for training) the word table only
-#: below this many distinct words (~tens of MB at avg 8 chars + n_sub).
-#: A web-scale vocabulary is orders of magnitude past this — see
-#: module docstring.
-MAX_BROADCAST_WORDS = 2_000_000
+#: Driver-tier cap of :func:`bpe_train` and ``wordpiece_train``: below
+#: this many distinct words the word table is collected and the merge
+#: loop runs in-process. Unlike ``unigram.MAX_DRIVER_WORDS`` (250k, a
+#: measured crossover) this value is NOT measured: it is the broadcast
+#: cap's 2M, carried over. A web-scale vocabulary is orders of
+#: magnitude past it — see module docstring.
+MERGE_DRIVER_WORDS = 2_000_000
 
 #: The distributed merge loop and :func:`word_segment_table`'s fold
 #: chain ``localCheckpoint`` every this many merges, so plans never
@@ -152,29 +156,22 @@ def corpus_words(df: DataFrame, text_col: str) -> DataFrame:
 
 
 def word_table_tier(
-    df: DataFrame, text_col: str, max_driver_words: int
+    df: DataFrame, text_col: str, cap: int
 ) -> tuple[DataFrame, "list[tuple[str, int]] | None"]:
     """The ONE corpus-scale pass of every trainer: the distinct-word
     frequency table ``(word, cnt)``, ``localCheckpoint``-ed because the
     cap probe and whichever tier runs all consume it. Returns ``(wc,
-    head)``: ``head`` is the collected ``[(word, cnt)]`` table when a
-    ``limit(cap+1).count()`` probe says it holds at most
-    ``max_driver_words`` rows (the driver tier), else ``None`` (the
-    distributed tier trains over ``wc``). The probe is a count, never a
-    collect: the over-cap (100 TB) path must not ship the word table to
-    the driver just to learn it is over the cap.
-    ``max_driver_words=0`` skips the probe and forces the distributed
-    tier."""
+    head)``: ``head`` is the collected ``[(word, cnt)]`` table when
+    :func:`materialize.fits` says it holds at most ``cap`` rows (the
+    driver tier), else ``None`` (the distributed tier trains over
+    ``wc``)."""
     wc = (
         corpus_words(df, text_col)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
-    if (
-        max_driver_words > 0
-        and wc.limit(max_driver_words + 1).count() <= max_driver_words
-    ):
+    if M.fits(wc, cap):
         return wc, [(r["word"], int(r["cnt"])) for r in wc.collect()]
     return wc, None
 
@@ -307,7 +304,6 @@ def bpe_train(
     text_col: str = "text",
     n_merges: int = 16,
     min_pair_count: int = 2,
-    max_driver_words: int = MAX_BROADCAST_WORDS,
 ) -> tuple[list[tuple[str, str]], SegTable]:
     """Learn an ordered BPE merge table from the corpus. Returns
     ``(merges, table)``: ``table`` is the word→symbols segmentation of
@@ -320,7 +316,7 @@ def bpe_train(
     (:func:`word_table_tier`); the merge loop then runs at VOCABULARY
     scale in one of two tiers:
 
-    - **driver tier** (≤ ``max_driver_words`` distinct words): the
+    - **driver tier** (≤ :data:`MERGE_DRIVER_WORDS` distinct words): the
       collected table runs :func:`merge_loop_driver` in-process — the
       table is model-scale by the module's own convention (the serving
       artifacts collect the equally-sized segmentation table), and n
@@ -333,10 +329,9 @@ def bpe_train(
 
     Both tiers share integer pair-count arithmetic and the
     ``(count DESC, a, b)`` tie-break, so the merges and the table are
-    bit-identical (pinned by tests/test_bpe.py); pass
-    ``max_driver_words=0`` to force the distributed tier."""
+    bit-identical (pinned by tests/test_bpe.py)."""
     check_merge_args(n_merges, min_pair_count)
-    wc, head = word_table_tier(df, text_col, max_driver_words)
+    wc, head = word_table_tier(df, text_col, MERGE_DRIVER_WORDS)
     if head is None:
         merges, syms = merge_loop_dist(
             wc.withColumn("sym", char_symbols("word")),
@@ -470,19 +465,29 @@ def word_segment(
     return word_segment_arrow(df, merges, text_col=text_col)
 
 
+def _seg_side(s: DataFrame, seg_rows: int | None) -> DataFrame:
+    """``s`` hinted for broadcast when it fits under
+    :data:`materialize.BROADCAST_ROWS`: a caller-known ``seg_rows``
+    decides with no job, else :func:`materialize.fits` probes."""
+    fits = (
+        seg_rows <= M.BROADCAST_ROWS
+        if seg_rows is not None
+        else M.fits(s, M.BROADCAST_ROWS)
+    )
+    return F.broadcast(s) if fits else s
+
+
 def bpe_token_counts(
     df: DataFrame,
     seg: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_broadcast_words: int = MAX_BROADCAST_WORDS,
     seg_rows: int | None = None,
 ) -> DataFrame:
     """Tokenize the corpus against a word-segmentation table: explode
     lowercased tokens, left-join ``seg``, one partial-agg groupBy back
-    to the document. The segmentation side broadcasts only if a
-    measured ``limit(n+1).count()`` probe says it fits under
-    ``max_broadcast_words`` (pass 0 to force the shuffle join) —
+    to the document. The segmentation side broadcasts only if it fits
+    under :data:`materialize.BROADCAST_ROWS` (:func:`_seg_side`) —
     vocabulary tables are NOT small at web scale, and an unconditional
     hint there is a driver OOM. A caller that already KNOWS the
     segmentation cardinality (the trained artifacts collect the full
@@ -496,13 +501,8 @@ def bpe_token_counts(
         F.col(id_col), F.explode_outer(tokens(text_col, lowercase=True)).alias("_w")
     )
     s = seg.select(F.col("word").alias("_w"), "n_sub")
-    fits = max_broadcast_words > 0 and (
-        seg_rows <= max_broadcast_words
-        if seg_rows is not None
-        else s.limit(max_broadcast_words + 1).count() <= max_broadcast_words
-    )
     return (
-        toks.join(F.broadcast(s) if fits else s, "_w", "left")
+        toks.join(_seg_side(s, seg_rows), "_w", "left")
         .groupBy(id_col)
         .agg(
             F.count("_w").alias("n_tokens"),
@@ -554,7 +554,6 @@ def encode_token_ids(
     vocab: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_broadcast_words: int = MAX_BROADCAST_WORDS,
     append_eow: bool = False,
     seg_rows: int | None = None,
 ) -> DataFrame:
@@ -578,11 +577,6 @@ def encode_token_ids(
         F.posexplode(tokens(text_col, lowercase=True)).alias("_pos", "_w"),
     )
     s = seg.select(F.col("word").alias("_w"), F.col("sym").alias("_sym"))
-    fits = max_broadcast_words > 0 and (
-        seg_rows <= max_broadcast_words
-        if seg_rows is not None
-        else s.limit(max_broadcast_words + 1).count() <= max_broadcast_words
-    )
     syms = F.coalesce(F.col("_sym"), char_symbols(F.col("_w")))
     if append_eow:
         # word-boundary sentinel: makes the id sequence decodable
@@ -597,7 +591,7 @@ def encode_token_ids(
     # break; string matching here would silently break the decode
     # round trip for exactly those documents.
     segmented = (
-        toks.join(F.broadcast(s) if fits else s, "_w", "left")
+        toks.join(_seg_side(s, seg_rows), "_w", "left")
         .select(id_col, "_pos", syms.alias("_syms"))
         .select(
             id_col,
@@ -646,7 +640,6 @@ def tokenizer_fertility(
     seg: DataFrame,
     text_col: str = "text",
     strata_col: str = "lang",
-    max_broadcast_words: int = MAX_BROADCAST_WORDS,
     seg_rows: int | None = None,
 ) -> DataFrame:
     """Per-stratum tokenizer fertility and compression — the standard
@@ -677,14 +670,9 @@ def tokenizer_fertility(
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     s = seg.select(F.col("word").alias("_w"), "n_sub")
-    fits = max_broadcast_words > 0 and (
-        seg_rows <= max_broadcast_words
-        if seg_rows is not None
-        else s.limit(max_broadcast_words + 1).count() <= max_broadcast_words
-    )
     ns = F.coalesce(F.col("n_sub"), F.length("_w").cast("long"))
     return (
-        wc.join(F.broadcast(s) if fits else s, "_w", "left")
+        wc.join(_seg_side(s, seg_rows), "_w", "left")
         .groupBy("_g")
         .agg(
             F.sum("_c").cast("long").alias("n_words"),

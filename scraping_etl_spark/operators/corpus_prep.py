@@ -49,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from scraping_etl_spark import materialize as M
 from scraping_etl_spark.operators.dedup import _bind, word_shingles
 from scraping_etl_spark.operators.textstats import tokens
 
@@ -270,13 +271,6 @@ def cdc_chunks(
     return _bind(tokens(text_col), _cdc)
 
 
-#: Broadcast the reference CDC-chunk store only below this many hashes
-#: (~50 B/row serialized) — a 100 TB lake's chunk store is billions of
-#: rows, far past any sane broadcast; over the cap the membership join
-#: runs as a shuffle equi-join on the chunk hash.
-MAX_BROADCAST_CHUNKS = 2_000_000
-
-
 def prepare_cdc_ref(
     lake: DataFrame,
     text_col: str = "text",
@@ -305,7 +299,6 @@ def cdc_seen_fraction(
     text_col: str = "text",
     window: int = 4,
     divisor: int = 8,
-    max_broadcast_chunks: int = MAX_BROADCAST_CHUNKS,
     ref_fits_broadcast: bool | None = None,
 ) -> DataFrame:
     """Per-document fraction of CDC chunks already present in a
@@ -318,8 +311,10 @@ def cdc_seen_fraction(
 
     Plan: per-doc chunking (zero shuffle) → distinct (doc, chunk-hash)
     partial agg → membership left join against ``ref_prepared``
-    (broadcast only under a measured cardinality probe, the
-    ``bpe_token_counts`` convention) → per-doc partial-agg rollup.
+    (broadcast only under :data:`materialize.BROADCAST_ROWS` hashes — a
+    100 TB lake's chunk store is billions of rows; past the cap the
+    join runs as a shuffle equi-join on the chunk hash) → per-doc
+    partial-agg rollup.
     Returns ``(id, n_chunks, n_seen, seen_frac)``; chunkless docs
     (empty text) carry ``seen_frac`` 0.0.
 
@@ -340,11 +335,7 @@ def cdc_seen_fraction(
     if ref_fits_broadcast is not None:
         fits = ref_fits_broadcast
     else:
-        fits = (
-            max_broadcast_chunks > 0
-            and ref.limit(max_broadcast_chunks + 1).count()
-            <= max_broadcast_chunks
-        )
+        fits = M.fits(ref, M.BROADCAST_ROWS)
     return (
         chunks.join(F.broadcast(ref) if fits else ref, "_h", "left")
         .groupBy(id_col)
@@ -453,19 +444,10 @@ def chunk_dedup_stats(
 # Benchmark decontamination
 # ---------------------------------------------------------------------------
 
-#: Broadcast the deduped benchmark gram set only below this many grams.
-#: ~40 B/gram puts 2M grams near 80 MB serialized — comfortably inside
-#: a default driver/executor heap, far above any real eval benchmark
-#: (GPT-3's full decontamination list is orders of magnitude smaller),
-#: and safely below the point where a broadcast build OOMs.
-MAX_BROADCAST_GRAMS = 2_000_000
-
-
 def prepare_bench_grams(
     bench: DataFrame,
     text_col: str = "text",
     k: int = 5,
-    max_broadcast_grams: int = MAX_BROADCAST_GRAMS,
 ) -> DataFrame:
     """Precompute the deduped benchmark gram relation for
     :func:`decontaminate` — MATERIALIZED (``localCheckpoint``) with the
@@ -478,11 +460,7 @@ def prepare_bench_grams(
         .distinct()
         .localCheckpoint()
     )
-    fits = (
-        max_broadcast_grams > 0
-        and grams.limit(max_broadcast_grams + 1).count() <= max_broadcast_grams
-    )
-    return F.broadcast(grams) if fits else grams
+    return F.broadcast(grams) if M.fits(grams, M.BROADCAST_ROWS) else grams
 
 
 def decontaminate(
@@ -491,7 +469,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 5,
-    max_broadcast_grams: int = MAX_BROADCAST_GRAMS,
     bench_prepared: DataFrame | None = None,
 ) -> DataFrame:
     """Flag training docs that share ≥1 word ``k``-gram with the
@@ -501,15 +478,15 @@ def decontaminate(
 
     The benchmark gram set is deduped and — when it is small enough —
     broadcast, so the join never shuffles the training-side grams.
-    "Small enough" is measured, not assumed: a bounded probe
-    (``limit(threshold+1).count()``, short-circuiting — never a full
-    gram count) checks the deduped gram cardinality against
-    ``max_broadcast_grams``; past the threshold the hint is dropped
-    and the same plan becomes a shuffle hash join on the gram, which
-    scales to arbitrarily large benchmark sets instead of OOMing the
-    broadcast build. ``max_broadcast_grams=0`` forces the shuffle
-    path. The probe scans only the (small) benchmark side — the
-    training corpus is untouched until the real join.
+    "Small enough" is measured, not assumed: :func:`materialize.fits`
+    (short-circuiting — never a full gram count) checks the deduped
+    gram cardinality against :data:`materialize.BROADCAST_ROWS` (GPT-3's
+    full decontamination list is orders of magnitude smaller); past
+    the cap the hint is dropped and the same plan becomes a shuffle
+    hash join on the gram, which scales to arbitrarily large benchmark
+    sets instead of OOMing the broadcast build. The probe scans only
+    the (small) benchmark side — the training corpus is untouched
+    until the real join.
 
     Pass ``bench_prepared=`` (:func:`prepare_bench_grams`) to reuse a
     materialized gram relation across many calls (the streaming-gate
@@ -527,12 +504,11 @@ def decontaminate(
         bench_grams = bench.select(
             F.explode(word_shingles(F.col(text_col), k)).alias("_g")
         ).distinct()
-        fits_broadcast = (
-            max_broadcast_grams > 0
-            and bench_grams.limit(max_broadcast_grams + 1).count()
-            <= max_broadcast_grams
+        bench_side = (
+            F.broadcast(bench_grams)
+            if M.fits(bench_grams, M.BROADCAST_ROWS)
+            else bench_grams
         )
-        bench_side = F.broadcast(bench_grams) if fits_broadcast else bench_grams
     train_grams = train.select(
         F.col(id_col), F.explode(word_shingles(F.col(text_col), k)).alias("_g")
     )
@@ -563,11 +539,6 @@ def decontaminate(
 HOT_GRAM_OCCS = 1_000_000
 
 
-#: Broadcast the reference LM's unigram table only below this many
-#: distinct words (vocabulary-scale; same measured-guard pattern as
-#: :data:`MAX_BROADCAST_GRAMS`).
-MAX_BROADCAST_VOCAB = 2_000_000
-
 #: Cap on the broadcast hot-gram set. The hot set is bounded by
 #: construction at ≤ total_occurrences / hot_threshold distinct grams,
 #: but at 10^13 bigram occurrences with the default threshold that is
@@ -576,6 +547,17 @@ MAX_BROADCAST_VOCAB = 2_000_000
 #: not top-n) rides the cold shuffle join. Correctness never depends on
 #: which side a gram scores on; the cap only bounds broadcast memory.
 MAX_BROADCAST_HOT_GRAMS = 2_000_000
+
+
+def _cap_hot(hot: DataFrame) -> DataFrame:
+    """The broadcast side of the hot/cold split: ``hot`` itself when it
+    fits under :data:`MAX_BROADCAST_HOT_GRAMS`, else only its hottest
+    n grams; the overflow (cooler by construction) rides the cold
+    shuffle join."""
+    cap = MAX_BROADCAST_HOT_GRAMS
+    if M.fits(hot, cap):
+        return hot
+    return hot.orderBy(F.col("_cbi").desc(), "_g").limit(cap)
 
 
 class PreparedLM(NamedTuple):
@@ -594,7 +576,6 @@ def prepare_lm(
     lm: DataFrame,
     text_col: str = "text",
     hot_threshold: int = HOT_GRAM_OCCS,
-    max_broadcast_hot: int = MAX_BROADCAST_HOT_GRAMS,
 ) -> PreparedLM:
     """Train the reference bigram LM once: count tables are
     ``localCheckpoint``-ed, the vocabulary-broadcast and hot-set-cap
@@ -618,7 +599,7 @@ def prepare_lm(
         .agg(F.count(F.lit(1)).alias("_cw"))
         .localCheckpoint()
     )
-    n_vocab = uni_counts.limit(MAX_BROADCAST_VOCAB + 1).count()
+    n_vocab = M.bounded_count(uni_counts, M.BROADCAST_ROWS)
     if n_vocab == 0:
         # V = 0 would send every smoothed logp to ln(1/0) = +inf and
         # trivially pass any fluency gate — fail loudly instead.
@@ -637,14 +618,9 @@ def prepare_lm(
         .select("_g", "_cbi", "_cw", "_v")
         .localCheckpoint()
     )
-    hot = stats.filter(F.col("_cbi") > hot_threshold)
-    if max_broadcast_hot > 0:
-        if hot.limit(max_broadcast_hot + 1).count() > max_broadcast_hot:
-            hot = hot.orderBy(F.col("_cbi").desc(), "_g").limit(max_broadcast_hot)
-    else:
-        hot = hot.limit(0)  # caller forced the all-shuffle path
+    hot = _cap_hot(stats.filter(F.col("_cbi") > hot_threshold))
     return PreparedLM(
-        bi_counts, uni_counts, n_vocab <= MAX_BROADCAST_VOCAB, vsize, hot
+        bi_counts, uni_counts, n_vocab <= M.BROADCAST_ROWS, vsize, hot
     )
 
 
@@ -671,7 +647,6 @@ def with_lm_score(
     text_col: str = "text",
     hot_threshold: int = HOT_GRAM_OCCS,
     lm: DataFrame | None = None,
-    max_broadcast_hot: int = MAX_BROADCAST_HOT_GRAMS,
     lm_prepared: PreparedLM | None = None,
     pairs: DataFrame | None = None,
 ) -> DataFrame:
@@ -696,8 +671,8 @@ def with_lm_score(
     more than ``hot_threshold`` occurrences score through a broadcast
     join map-side; only sub-threshold grams ride the shuffle join. The
     hot set's broadcast is guarded by a MEASURED bounded probe
-    (``limit(n+1).count()``, the :func:`decontaminate` pattern): past
-    ``max_broadcast_hot`` distinct hot grams, only the top-n by
+    (:func:`materialize.fits`, the :func:`decontaminate` pattern): past
+    :data:`MAX_BROADCAST_HOT_GRAMS` distinct hot grams, only the top-n by
     occurrence count stay broadcast and the overflow spills to the
     cold shuffle join (where AQE's skew split still applies — the
     overflow keys are colder than the broadcast ones by construction).
@@ -712,7 +687,7 @@ def with_lm_score(
     unseen grams smooth to ``(0+1)/(C(w1)+V)`` (unseen ``w1`` → 1/V).
     In that mode the reference unigram table is vocabulary-scale, so it
     broadcasts under a measured-cardinality guard
-    (:data:`MAX_BROADCAST_VOCAB`, same bounded probe as
+    (:data:`materialize.BROADCAST_ROWS`, same bounded probe as
     :func:`decontaminate`). For REPEATED reference-mode scoring (the
     streaming fluency gate), pass ``lm_prepared=`` from
     :func:`prepare_lm` — the model trains once and every call skips
@@ -722,7 +697,7 @@ def with_lm_score(
     if hot_threshold < 1:
         raise ValueError(f"hot_threshold must be >= 1, got {hot_threshold}")
     if lm is not None:
-        lm_prepared = prepare_lm(lm, text_col, hot_threshold, max_broadcast_hot)
+        lm_prepared = prepare_lm(lm, text_col, hot_threshold)
     # per-(doc, gram) occurrence counts FIRST: every downstream branch
     # (bigram totals, hot probe, cold probe) hangs off this one
     # exchange, so ReuseExchange runs the explode exactly once — the
@@ -777,16 +752,7 @@ def with_lm_score(
             # scale so every consumer reads materialized rows.
             .localCheckpoint()
         )
-        hot = stats.filter(F.col("_cbi") > hot_threshold)
-        if max_broadcast_hot > 0:
-            if hot.limit(max_broadcast_hot + 1).count() > max_broadcast_hot:
-                # keep the hottest n on the broadcast path; the
-                # overflow (cooler by construction) rides the cold join
-                hot = hot.orderBy(
-                    F.col("_cbi").desc(), "_g"
-                ).limit(max_broadcast_hot)
-        else:
-            hot = hot.limit(0)  # caller forced the all-shuffle path
+        hot = _cap_hot(stats.filter(F.col("_cbi") > hot_threshold))
         hot_scored = pairs.join(F.broadcast(hot), "_g").select(scored_cols)
         cold_base = pairs.join(F.broadcast(hot.select("_g")), "_g", "left_anti")
         # every doc bigram is in stats — inner join
@@ -1847,7 +1813,6 @@ def with_kn_score(
     id_col: str = "doc_id",
     text_col: str = "text",
     hot_threshold: int = HOT_GRAM_OCCS,
-    max_broadcast_hot: int = MAX_BROADCAST_HOT_GRAMS,
     discount: float = KN_DISCOUNT,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram score per document — the smoothing
@@ -1930,12 +1895,7 @@ def with_kn_score(
         F.col("_n"),
         (F.col("_n") * F.col("_logp")).alias("_nlp"),
     ]
-    hot = stats.filter(F.col("_cbi") > hot_threshold)
-    if max_broadcast_hot > 0:
-        if hot.limit(max_broadcast_hot + 1).count() > max_broadcast_hot:
-            hot = hot.orderBy(F.col("_cbi").desc(), "_g").limit(max_broadcast_hot)
-    else:
-        hot = hot.limit(0)
+    hot = _cap_hot(stats.filter(F.col("_cbi") > hot_threshold))
     hot_scored = pairs.join(F.broadcast(hot), "_g").select(scored_cols)
     cold_base = pairs.join(F.broadcast(hot.select("_g")), "_g", "left_anti")
     cold_scored = cold_base.join(stats, "_g").select(scored_cols)

@@ -33,17 +33,20 @@ def exact_sums(df: DataFrame, cols: list):
     numpy columns, array columns as float64 matrices, and returns a
     flat int64 vector.
 
-    ``limit(cap + 1).toPandas()`` is both the tier probe and the
-    driver-tier collect (one job under Arrow). Within the cap every
-    ``total`` runs on the driver; past it the projection is persisted
-    ``DISK_ONLY`` and every ``total`` is one ``mapInPandas`` job over
-    the Arrow batches, whose partial vectors the driver adds."""
+    ``limit(cap + 1).toArrow()`` is both the tier probe and the
+    driver-tier collect: one job whatever the partitioning and the
+    session's Arrow conf (``toPandas`` without Arrow falls back to
+    ``collect``, whose scale-up launches a job per partition batch
+    tried). Within the cap every ``total`` runs on the driver; past it
+    the projection is persisted ``DISK_ONLY`` and every ``total`` is one
+    ``mapInPandas`` job over the Arrow batches, whose partial vectors
+    the driver adds."""
     import numpy as np
     import pandas as pd
     from pyspark import StorageLevel
 
     proj = df.select(*cols)
-    local = proj.limit(FIT_DRIVER_ROWS + 1).toPandas()
+    local = proj.limit(FIT_DRIVER_ROWS + 1).toArrow().to_pandas()
     if len(local) <= FIT_DRIVER_ROWS:
         n, arrays = len(local), _arrays(local)
         del local

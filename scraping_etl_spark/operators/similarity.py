@@ -30,6 +30,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from scraping_etl_spark import materialize as M
 from scraping_etl_spark.operators.fixpoint import exact_sums, half_up
 
 
@@ -772,13 +773,12 @@ def hard_negatives_ivf(
     )
 
 
-#: Broadcast the benchmark embedding set only below this many vectors —
-#: same measured-guard pattern as corpus_prep.MAX_BROADCAST_GRAMS.
-#: Benchmark suites are small by construction (10^4-10^6 items even for
-#: a large eval battery), so the broadcast path is the expected one;
-#: past the cap the hint is dropped and Spark falls back to a
-#: shuffle-backed nested-loop — still correct, just no longer the
-#: map-side screen.
+#: Broadcast the benchmark embedding set only below this many vectors
+#: (:func:`materialize.fits`). Benchmark suites are small by
+#: construction (10^4-10^6 items even for a large eval battery), so the
+#: broadcast path is the expected one; past the cap the hint is dropped
+#: and Spark falls back to a shuffle-backed nested-loop — still
+#: correct, just no longer the map-side screen.
 MAX_BROADCAST_BENCH_VECS = 500_000
 
 
@@ -790,7 +790,6 @@ def embedding_decontaminate(
     vec_col: str = "embedding",
     bench_id_col: str = "vec_id",
     bench_vec_col: str = "embedding",
-    max_broadcast_vecs: int = MAX_BROADCAST_BENCH_VECS,
     exclude_same_id: bool = True,
 ) -> DataFrame:
     """Embedding-space benchmark decontamination — the semantic sibling
@@ -805,8 +804,8 @@ def embedding_decontaminate(
     counts benchmark items at/above the threshold.
 
     Plan shape at 100 TB: the benchmark side is SMALL by definition, so
-    it broadcasts (measured, not assumed — a bounded ``limit(n+1)
-    .count()`` probe, the same guard as the k-gram screen) and the scan
+    it broadcasts (measured, not assumed — :func:`materialize.fits`,
+    the same guard as the k-gram screen) and the scan
     over the 100 TB corpus is one map-side pass: cosine against the
     broadcast set, filter, then a rank window over the FLAGGED rows
     only (contamination rates are ~1e-3, so the window input is tiny).
@@ -821,10 +820,10 @@ def embedding_decontaminate(
     re-delivered under its original id in a later batch must still be
     screened against its own lake copy (r14 ADVICE).
 
-    Past ``max_broadcast_vecs`` the broadcast hint is dropped and the
-    all-pairs comparison plans as a shuffle-backed nested loop — with
-    ``exclude_same_id=False`` the join condition is literal-true, so
-    Spark plans a CartesianProduct rather than a BNLJ-with-predicate
+    Past :data:`MAX_BROADCAST_BENCH_VECS` the broadcast hint is dropped
+    and the all-pairs comparison plans as a shuffle-backed nested loop
+    — with ``exclude_same_id=False`` the join condition is literal-true,
+    so Spark plans a CartesianProduct rather than a BNLJ-with-predicate
     (same asymptotics, different node). Either way the over-cap regime
     is the documented scale cliff: callers whose reference side
     outgrows the cap should move to
@@ -837,11 +836,7 @@ def embedding_decontaminate(
         F.col(bench_vec_col).alias("_bvec"),
         l2_norm(F.col(bench_vec_col)).alias("_bnrm"),
     )
-    fits = (
-        max_broadcast_vecs > 0
-        and b.limit(max_broadcast_vecs + 1).count() <= max_broadcast_vecs
-    )
-    b_side = F.broadcast(b) if fits else b
+    b_side = F.broadcast(b) if M.fits(b, MAX_BROADCAST_BENCH_VECS) else b
     # norms hoisted to the per-row projections (the SemDeDup lesson —
     # _sem_side): each corpus vector sits in |bench| pairs, so the
     # per-pair work must be the dot fold alone. Identical sqrt(dot)
@@ -1046,16 +1041,16 @@ def prepare_bench_matrix(
     bench: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_vecs: int = MAX_BROADCAST_BENCH_VECS,
 ) -> "list[tuple[int, list[float]]]":
     """Collect the benchmark side once for
     :func:`embedding_decontaminate_arrow` — bounded by the same cap as
     the expression tier's broadcast (raises past it: a benchmark that
     large should ride the shuffle path of the expression tier)."""
-    rows = bench.select(id_col, vec_col).limit(max_vecs + 1).collect()
-    if len(rows) > max_vecs:
+    cap = MAX_BROADCAST_BENCH_VECS
+    rows = bench.select(id_col, vec_col).limit(cap + 1).collect()
+    if len(rows) > cap:
         raise ValueError(
-            f"benchmark exceeds {max_vecs} vectors; use the expression "
+            f"benchmark exceeds {cap} vectors; use the expression "
             "tier's shuffle fallback instead"
         )
     return [(r[0], list(r[1])) for r in rows]

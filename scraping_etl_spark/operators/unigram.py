@@ -316,7 +316,6 @@ def train_unigram(
     n_iters: int = 2,
     max_piece_len: int = 6,
     min_seed_count: int = 2,
-    max_driver_words: int = MAX_DRIVER_WORDS,
 ) -> tuple[dict[str, int], SegTable]:
     """Learn a unigram-LM piece vocabulary from the corpus (module
     docstring has the full design). Returns ``(model, table)``: the
@@ -328,27 +327,26 @@ def train_unigram(
     tests/test_unigram.py).
 
     Tiering (:func:`bpe.word_table_tier`): the corpus collapses to its
-    checkpointed word-frequency table once; a ``limit(n+1).count()``
+    checkpointed word-frequency table once; a :func:`materialize.fits`
     probe over it (never a collect — the over-cap path must not ship
     rows to the driver) routes to
 
-    - **driver tier** (≤ ``max_driver_words`` distinct words): collect
-      the frequency table once and run seeding + EM + pruning and the
-      final segmentation in-process — the table is model-scale by the
-      module's own convention, and at this cardinality every Spark
-      round is pure scheduling cost (measured r17: 12 jobs → 4, and
-      the first ``mapInPandas`` round no longer pays the Python-worker
-      warm-up);
+    - **driver tier** (≤ :data:`MAX_DRIVER_WORDS` distinct words):
+      collect the frequency table once and run seeding + EM + pruning
+      and the final segmentation in-process — the table is model-scale
+      by the module's own convention, and at this cardinality every
+      Spark round is pure scheduling cost (measured r17: 12 jobs → 4,
+      and the first ``mapInPandas`` round no longer pays the
+      Python-worker warm-up);
     - **distributed tier** (past the cap): the vocabulary-scale
       seeding + EM and the Arrow Viterbi pass over the same
       checkpointed table.
 
     Both tiers share integer counts, :func:`_model_logp`,
     :func:`_viterbi` and :func:`_prune_counts`, so the model and the
-    table are bit-identical (pinned by tests/test_unigram.py);
-    ``max_driver_words=0`` forces the distributed tier."""
+    table are bit-identical (pinned by tests/test_unigram.py)."""
     _validate_train_args(vocab_size, seed_size, max_piece_len)
-    wc, head = word_table_tier(df, text_col, max_driver_words)
+    wc, head = word_table_tier(df, text_col, MAX_DRIVER_WORDS)
     if head is None:
         model = _train_unigram_dist(
             wc, vocab_size, seed_size, n_iters, max_piece_len, min_seed_count

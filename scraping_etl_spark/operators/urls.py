@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scraping_etl_spark import materialize as M
+
 #: Query parameters that never change resource identity.
 TRACKING_PREFIXES = ("utm_", "fbclid=", "gclid=", "msclkid=", "ref=")
 
@@ -91,13 +93,6 @@ def url_dedup(
 # Domain blocklist screening (UT1-style)
 # ---------------------------------------------------------------------------
 
-#: Measured-probe cap for broadcasting the blocklist (the
-#: corpus_prep.decontaminate convention). The UT1 blacklists RefinedWeb
-#: filters with (Penedo et al. 2023 §3.1) hold ~4.6M domains — a list
-#: that size broadcasts fine; past the cap the match join degrades to
-#: an un-hinted shuffle join instead of an OOM.
-MAX_BROADCAST_BLOCKLIST = 2_000_000
-
 #: Suffix-chain depth cap: a host contributes its last ``n`` label
 #: suffixes as match candidates. Registered blocklist entries are
 #: shallow (rarely > 5 labels); the cap bounds per-row fan-out on
@@ -143,7 +138,6 @@ def blocklist_matches(
     id_col: str = "doc_id",
     domain_col: str = "domain",
     max_labels: int = MAX_SUFFIX_LABELS,
-    max_broadcast: int = MAX_BROADCAST_BLOCKLIST,
 ) -> DataFrame:
     """Match every row's URL host against a domain blocklist (exact
     host OR subdomain of a listed domain — the UT1/RefinedWeb
@@ -155,16 +149,15 @@ def blocklist_matches(
     :func:`blocklist_filter`).
 
     Plan: explode the bounded suffix chain (≤ ``max_labels`` rows per
-    input), equi-join the blocklist on the suffix — broadcast behind a
-    measured ``limit(n+1).count()`` probe, un-hinted shuffle join past
-    the cap — then one partial-agg ``groupBy(id)`` picks the
-    attribution. Lowercase-trim normalization is applied to the
-    blocklist side; no UDFs anywhere."""
+    input), equi-join the blocklist on the suffix — broadcast under
+    :data:`materialize.BROADCAST_ROWS` domains (:func:`materialize.fits`),
+    un-hinted shuffle join past the cap — then one partial-agg
+    ``groupBy(id)`` picks the attribution. Lowercase-trim normalization
+    is applied to the blocklist side; no UDFs anywhere."""
     bl = blocklist.select(
         F.lower(F.trim(F.col(domain_col))).alias("_bldom")
     ).distinct()
-    small = bl.limit(max_broadcast + 1).count() <= max_broadcast
-    bl_side = F.broadcast(bl) if small else bl
+    bl_side = F.broadcast(bl) if M.fits(bl, M.BROADCAST_ROWS) else bl
     host = host_of(url_col)
     exploded = df.select(
         F.col(id_col).alias("_id"),

@@ -46,8 +46,8 @@ from typing import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from scraping_etl_spark.operators import bpe
 from scraping_etl_spark.operators.bpe import (
-    MAX_BROADCAST_WORDS,
     SegTable,
     char_symbols,
     check_merge_args,
@@ -120,7 +120,6 @@ def wordpiece_train(
     text_col: str = "text",
     n_merges: int = 16,
     min_pair_count: int = 2,
-    max_driver_words: int = MAX_BROADCAST_WORDS,
     max_piece_len: int = 32,
 ) -> tuple[list[tuple[str, str]], list[str], SegTable]:
     """Learn an ordered WordPiece merge list from the corpus. Returns
@@ -136,17 +135,16 @@ def wordpiece_train(
     at VOCABULARY scale: occurrence-weighted pair counts AND symbol
     counts, winner = argmax of ``n_ab / (n_a * n_b)`` with ``(score
     DESC, a, b)`` tie-break, stop when the best pair's raw count falls
-    below ``min_pair_count``. Under ``max_driver_words`` distinct words
-    the loop, the vocabulary and the table are in-process over the
-    collected table (character iteration by code point, mirroring
+    below ``min_pair_count``. Under ``bpe.MERGE_DRIVER_WORDS``
+    distinct words the loop, the vocabulary and the table are
+    in-process over the collected table (character iteration by code point, mirroring
     ``wp_char_symbols``' ``substr``); past the cap they are Spark jobs
     over the checkpointed word table (one-row alphabet aggregate, Arrow
     greedy segmentation). Both tiers share BIGINT counts and one double
     division per score, so all three artifacts are bit-identical
-    (pinned by tests/test_wordpiece.py); ``max_driver_words=0`` forces
-    the distributed tier."""
+    (pinned by tests/test_wordpiece.py)."""
     check_merge_args(n_merges, min_pair_count)
-    wc, head = word_table_tier(df, text_col, max_driver_words)
+    wc, head = word_table_tier(df, text_col, bpe.MERGE_DRIVER_WORDS)
     if head is None:
         merges, _ = merge_loop_dist(
             wc.withColumn("sym", wp_char_symbols(F.col("word"))),

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from scraping_etl_spark import materialize as M
 from scraping_etl_spark import schemas
 
 
@@ -1261,10 +1262,8 @@ def cdc_chunk_screen_stream(
     ref_static = (
         ref_prepared.localCheckpoint() if ref_prepared is not None else None
     )
-    cap = CP.MAX_BROADCAST_CHUNKS
-    static_fits = (
-        ref_static is not None
-        and ref_static.limit(cap + 1).count() <= cap
+    static_fits = ref_static is not None and M.fits(
+        ref_static, M.BROADCAST_ROWS
     )
     # growing mode: the combined relation only ever grows, so one
     # over-cap probe verdict holds forever
@@ -1289,7 +1288,7 @@ def cdc_chunk_screen_stream(
             fits = static_fits  # hoisted: static store never changes
         else:
             if state["fits"]:
-                state["fits"] = ref.limit(cap + 1).count() <= cap
+                state["fits"] = M.fits(ref, M.BROADCAST_ROWS)
             fits = state["fits"]
         stats = CP.cdc_seen_fraction(
             batch_df, ref, window=window, divisor=divisor,

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from scraping_etl_spark import materialize as M
 from scraping_etl_spark.operators import bpe
 
 
@@ -97,14 +98,17 @@ def test_token_counts_uses_broadcast_join_no_shuffle_of_seg(spark, classic):
     assert "SortMergeJoin" not in plan
 
 
-def test_token_counts_shuffle_fallback_past_broadcast_cap(spark, classic):
+def test_token_counts_shuffle_fallback_past_broadcast_cap(
+    spark, classic, monkeypatch
+):
     """The measured probe: a cap smaller than the vocabulary must
     drop the broadcast hint (un-hinted equi-join — no driver-side
     vocabulary materialization), with identical counts."""
     merges, _ = bpe.bpe_train(classic, n_merges=3)
     seg = bpe.word_segment_table(classic, merges).localCheckpoint()
     hinted = bpe.bpe_token_counts(classic, seg)
-    capped = bpe.bpe_token_counts(classic, seg, max_broadcast_words=2)
+    monkeypatch.setattr(M, "BROADCAST_ROWS", 2)
+    capped = bpe.bpe_token_counts(classic, seg)
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in plan
     assert sorted(map(tuple, hinted.collect())) == sorted(
@@ -250,7 +254,7 @@ def test_fertility_hand_computed_with_oov_fallback(spark):
     assert (got["y"].n_words, got["y"].n_subwords) == (1, 2)
 
 
-def test_fertility_shuffle_fallback_matches_broadcast(spark):
+def test_fertility_shuffle_fallback_matches_broadcast(spark, monkeypatch):
     from scraping_etl_spark.operators.bpe import (
         bpe_train, tokenizer_fertility, word_segment_table,
     )
@@ -262,8 +266,8 @@ def test_fertility_shuffle_fallback_matches_broadcast(spark):
     )
     seg = word_segment_table(docs, bpe_train(docs, n_merges=6)[0])
     a = sorted(map(tuple, tokenizer_fertility(docs, seg).collect()))
-    b = sorted(map(tuple, tokenizer_fertility(
-        docs, seg, max_broadcast_words=0).collect()))
+    monkeypatch.setattr(M, "BROADCAST_ROWS", 0)
+    b = sorted(map(tuple, tokenizer_fertility(docs, seg).collect()))
     assert a == b
 
 
@@ -322,18 +326,20 @@ def test_encode_sentinel_collision_token_round_trips(spark):
     assert dec == f"{evil} {evil} plain"
 
 
-def test_bpe_train_driver_tier_equals_distributed_tier(spark, classic):
+def test_bpe_train_driver_tier_equals_distributed_tier(
+    spark, classic, monkeypatch
+):
     """r16 optimization: under the measured word cap the merge loop
     runs in-process over the collected frequency table; the merge list
     AND the word→symbols table must be bit-identical to the
-    distributed per-round-aggregation tier — probe skipped (cap 0) or
-    probed over the cap (cap 3) — including occurrence-weighted
-    OVERLAPPING pair counts ('aaa' counts (a,a) twice), the
-    (count DESC, a, b) tie-break and checkpoint boundaries (9
-    merges)."""
-    assert bpe.bpe_train(classic, n_merges=5) == bpe.bpe_train(
-        classic, n_merges=5, max_driver_words=0
-    )
+    distributed per-round-aggregation tier — cap 0 or probed over the
+    cap (cap 3) — including occurrence-weighted OVERLAPPING pair counts
+    ('aaa' counts (a,a) twice), the (count DESC, a, b) tie-break and
+    checkpoint boundaries (9 merges)."""
+    driver = bpe.bpe_train(classic, n_merges=5)
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "MERGE_DRIVER_WORDS", 0)
+        assert bpe.bpe_train(classic, n_merges=5) == driver
     edge = _docs(
         spark, [(1, "aaa bb aaa aaa cab cab bcab"), (2, "aaaa ab ab caa")]
     )
@@ -341,12 +347,14 @@ def test_bpe_train_driver_tier_equals_distributed_tier(spark, classic):
         _, table = driver = bpe.bpe_train(edge, n_merges=nm, min_pair_count=1)
         assert len(table) > 3  # more distinct words than the cap below
         for cap in (0, 3):
-            assert bpe.bpe_train(
-                edge, n_merges=nm, min_pair_count=1, max_driver_words=cap
-            ) == driver
+            with monkeypatch.context() as m:
+                m.setattr(bpe, "MERGE_DRIVER_WORDS", cap)
+                assert bpe.bpe_train(
+                    edge, n_merges=nm, min_pair_count=1
+                ) == driver
 
 
-def test_bpe_train_table_matches_segment_table(spark, classic):
+def test_bpe_train_table_matches_segment_table(spark, classic, monkeypatch):
     """The trainer's final merged vocabulary must be exactly the
     (word, sym) table word_segment_table rebuilds from the same merges
     — the artifacts builder relies on this identity — in both tiers."""
@@ -358,9 +366,8 @@ def test_bpe_train_table_matches_segment_table(spark, classic):
     )
     assert table == expected
     # distributed tier: same merges, same table
-    assert bpe.bpe_train(classic, n_merges=5, max_driver_words=0) == (
-        merges, table
-    )
+    monkeypatch.setattr(bpe, "MERGE_DRIVER_WORDS", 0)
+    assert bpe.bpe_train(classic, n_merges=5) == (merges, table)
 
 
 def test_bpe_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
@@ -372,9 +379,8 @@ def test_bpe_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
     docs = _docs(
         spark, [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta")]
     )
-    expected = bpe.bpe_train(
-        docs, n_merges=3, min_pair_count=1, max_driver_words=0
-    )
+    monkeypatch.setattr(bpe, "MERGE_DRIVER_WORDS", 0)
+    expected = bpe.bpe_train(docs, n_merges=3, min_pair_count=1)
     cls = type(docs)
     orig = cls.collect
     sizes: list[int] = []
@@ -385,9 +391,8 @@ def test_bpe_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(cls, "collect", spy)
-    got = bpe.bpe_train(
-        docs, n_merges=3, min_pair_count=1, max_driver_words=3
-    )
+    monkeypatch.setattr(bpe, "MERGE_DRIVER_WORDS", 3)
+    got = bpe.bpe_train(docs, n_merges=3, min_pair_count=1)
     assert got == expected
     assert sizes and max(sizes) <= 1  # argmax probes only
 
@@ -416,3 +421,36 @@ def test_one_trainer_entry_point_per_tokenizer():
     for fn in (bpe.bpe_train, wordpiece.wordpiece_train, unigram.train_unigram):
         assert "checkpoint_every" not in inspect.signature(fn).parameters
     assert bpe.CHECKPOINT_EVERY >= 1
+
+
+def test_one_tier_decision_no_cap_parameters():
+    """Spark-free guard: every broadcast or driver-tier size decision
+    goes through ``materialize.fits``. No function in the package takes
+    a cap parameter (``max_broadcast*``, ``max_driver_words``,
+    ``max_vecs``): a cap is a module constant read at call time, which
+    tests monkeypatch. No file outside materialize.py hand-rolls a
+    ``limit(<cap> + 1).count()`` probe."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(bpe.__file__).resolve().parents[1]
+    banned = re.compile(r"max_broadcast\w*|max_driver_words|max_vecs")
+    probe = re.compile(r"\.limit\([^()]*\+\s*1\s*\)\s*\.count\(\)")
+    params, probes = [], []
+    for p in sorted(pkg.rglob("*.py")):
+        src = p.read_text(encoding="utf-8")
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                params += [
+                    f"{p.relative_to(pkg)}: {node.name}({arg.arg})"
+                    for arg in a.posonlyargs + a.args + a.kwonlyargs
+                    if banned.fullmatch(arg.arg)
+                ]
+        if p.name != "materialize.py":
+            probes += [
+                f"{p.relative_to(pkg)}: {m.group(0)}" for m in probe.finditer(src)
+            ]
+    assert params == []
+    assert probes == []

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from scraping_etl_spark import materialize as M
 from scraping_etl_spark.operators import corpus_prep as CP
 from scraping_etl_spark.operators.interval import interval_join
 from scraping_etl_spark.operators.textstats import vocab_topk
@@ -178,8 +179,8 @@ def test_cdc_seen_fraction_catches_shifted_lake_copy(spark):
     assert got[12].n_chunks == 0 and got[12].seen_frac == 0.0
 
 
-def test_cdc_seen_fraction_shuffle_join_equals_broadcast(spark):
-    """Forcing the over-cap shuffle path (max_broadcast_chunks=0)
+def test_cdc_seen_fraction_shuffle_join_equals_broadcast(spark, monkeypatch):
+    """Forcing the over-cap shuffle path (BROADCAST_ROWS = 0)
     must not change a single row — the guard is a strategy choice,
     never a semantics choice."""
     lake = _docs(spark, [(1, " ".join(f"w{i}" for i in range(80)))])
@@ -187,8 +188,8 @@ def test_cdc_seen_fraction_shuffle_join_equals_broadcast(spark):
     inc = _docs(spark, [(10, " ".join(f"w{i}" for i in range(40))),
                         (11, "unrelated words only here")])
     a = {tuple(r) for r in CP.cdc_seen_fraction(inc, ref).collect()}
-    b = {tuple(r) for r in CP.cdc_seen_fraction(
-        inc, ref, max_broadcast_chunks=0).collect()}
+    monkeypatch.setattr(M, "BROADCAST_ROWS", 0)
+    b = {tuple(r) for r in CP.cdc_seen_fraction(inc, ref).collect()}
     assert a == b
 
 
@@ -209,9 +210,11 @@ def test_decontaminate_flags_only_gram_sharers(spark):
     assert got[3].contaminated is True and got[3].n_hits == 1
 
 
-def test_decontaminate_size_guard_falls_back_to_shuffle_join(spark):
+def test_decontaminate_size_guard_falls_back_to_shuffle_join(
+    spark, monkeypatch
+):
     """The broadcast hint is conditional on measured bench-gram
-    cardinality: with max_broadcast_grams=0 (bench 'outgrows' any
+    cardinality: with BROADCAST_ROWS = 0 (bench 'outgrows' any
     broadcast) the gram join must plan as a shuffle join — no
     BroadcastExchange anywhere once auto-broadcast is disabled — and
     the flags must match the broadcast path exactly."""
@@ -223,7 +226,9 @@ def test_decontaminate_size_guard_falls_back_to_shuffle_join(spark):
     saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        out = CP.decontaminate(train, bench, k=5, max_broadcast_grams=0)
+        with monkeypatch.context() as m:
+            m.setattr(M, "BROADCAST_ROWS", 0)
+            out = CP.decontaminate(train, bench, k=5)
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" not in plan
         got = {r.doc_id: (r.n_hits, r.contaminated) for r in out.collect()}
@@ -236,12 +241,15 @@ def test_decontaminate_size_guard_falls_back_to_shuffle_join(spark):
     assert got == ref == {1: (1, True), 2: (0, False)}
 
 
-def test_decontaminate_probe_keeps_broadcast_below_threshold(spark):
+def test_decontaminate_probe_keeps_broadcast_below_threshold(
+    spark, monkeypatch
+):
     """A bench whose gram set fits under the threshold keeps the
     broadcast hint (the probe measures, it doesn't pessimize)."""
     bench = _docs(spark, [(100, "the quick brown fox jumps over lazy dogs")])
     train = _docs(spark, [(1, "prefix the quick brown fox jumps suffix")])
-    out = CP.decontaminate(train, bench, k=5, max_broadcast_grams=1000)
+    monkeypatch.setattr(M, "BROADCAST_ROWS", 1000)
+    out = CP.decontaminate(train, bench, k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
@@ -832,9 +840,9 @@ def test_lm_score_self_equals_lm_of_itself(spark):
     assert a == b
 
 
-def test_lm_score_hot_cap_spills_overflow_to_cold(spark):
+def test_lm_score_hot_cap_spills_overflow_to_cold(spark, monkeypatch):
     """Broadcast-hot guard: with hot_threshold=1 several grams qualify
-    as hot, but max_broadcast_hot=1 keeps only the hottest on the
+    as hot, but a hot cap of 1 keeps only the hottest on the
     broadcast path — scores must be identical to the uncapped run
     (which side a gram scores on is a plan choice, not semantics)."""
     docs = _docs(
@@ -842,23 +850,22 @@ def test_lm_score_hot_cap_spills_overflow_to_cold(spark):
     )
     ref = {(r.doc_id, r.n_bigrams, r.avg_logp)
            for r in CP.with_lm_score(docs, hot_threshold=1).collect()}
+    monkeypatch.setattr(CP, "MAX_BROADCAST_HOT_GRAMS", 1)
     capped = {(r.doc_id, r.n_bigrams, r.avg_logp)
-              for r in CP.with_lm_score(
-                  docs, hot_threshold=1, max_broadcast_hot=1
-              ).collect()}
+              for r in CP.with_lm_score(docs, hot_threshold=1).collect()}
     assert capped == ref
 
 
-def test_lm_score_zero_cap_forces_all_cold(spark):
-    """max_broadcast_hot=0 is the explicit all-shuffle escape hatch
-    (the decontaminate convention): same scores, empty hot side."""
+def test_lm_score_zero_cap_forces_all_cold(spark, monkeypatch):
+    """A hot cap of 0 empties the hot side through the ordinary cap
+    path (every hot gram is overflow): all grams score on the cold
+    shuffle join, with the same scores."""
     docs = _docs(spark, [(1, "a b a b a b"), (2, "a b c")])
     ref = {(r.doc_id, r.n_bigrams, r.avg_logp)
            for r in CP.with_lm_score(docs, hot_threshold=1).collect()}
+    monkeypatch.setattr(CP, "MAX_BROADCAST_HOT_GRAMS", 0)
     cold = {(r.doc_id, r.n_bigrams, r.avg_logp)
-            for r in CP.with_lm_score(
-                docs, hot_threshold=1, max_broadcast_hot=0
-            ).collect()}
+            for r in CP.with_lm_score(docs, hot_threshold=1).collect()}
     assert cold == ref
 
 

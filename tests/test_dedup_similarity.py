@@ -656,15 +656,15 @@ def test_emb_decontaminate_ivf_validation(spark):
 
 
 @pytest.mark.slow
-def test_emb_decontaminate_broadcast_guard_falls_back(spark):
+def test_emb_decontaminate_broadcast_guard_falls_back(spark, monkeypatch):
     """Above the measured cap the broadcast hint is dropped — the plan
     still returns identical rows (correctness never depends on the
     join strategy)."""
     bench = _vecs(spark, [(100 + i, [1.0, float(i)]) for i in range(10)])
     corpus = _vecs(spark, [(1, [1.0, 0.0]), (2, [0.0, 1.0])])
     fast = SIM.embedding_decontaminate(corpus, bench, threshold=0.9)
-    slow = SIM.embedding_decontaminate(corpus, bench, threshold=0.9,
-                                       max_broadcast_vecs=3)
+    monkeypatch.setattr(SIM, "MAX_BROADCAST_BENCH_VECS", 3)
+    slow = SIM.embedding_decontaminate(corpus, bench, threshold=0.9)
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
     plan = fast._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan
@@ -694,10 +694,11 @@ def test_emb_decontaminate_arrow_excludes_self_and_counts(spark):
     assert out[2].bench_id == 100 and out[2].n_bench_hits == 1
 
 
-def test_prepare_bench_matrix_cap_raises(spark):
+def test_prepare_bench_matrix_cap_raises(spark, monkeypatch):
     bench = _vecs(spark, [(i, [1.0, 0.0]) for i in range(5)])
+    monkeypatch.setattr(SIM, "MAX_BROADCAST_BENCH_VECS", 3)
     with pytest.raises(ValueError, match="exceeds"):
-        SIM.prepare_bench_matrix(bench, max_vecs=3)
+        SIM.prepare_bench_matrix(bench)
 
 
 # ---------------------------------------------------------------------------
@@ -1268,31 +1269,37 @@ def test_kmeans_fx_bit_identical_under_repartition(spark, monkeypatch):
 def test_fixed_point_trainers_job_counts(spark):
     """Under the driver cap every trainer collects its input once: the
     logistic-regression and EM fits are one job each, k-means and the
-    top PC add only their md5 seed query."""
+    top PC add only their md5 seed query. The same bounds hold in a
+    plain session (Arrow off, the driver contract's session) over 13
+    partitions, where a ``toPandas`` probe would fall back to
+    ``collect`` and launch a job per partition batch it tries."""
     from scraping_etl_spark.operators import classifier as CLF
     from scraping_etl_spark.operators import linkage as LK
 
     def jobs():
         return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
 
-    c = _km_corpus(spark).repartition(4).localCheckpoint()
-    lab = c.select(
-        F.concat(F.array(F.lit(1.0)), "embedding").alias("features"),
-        (F.col("vec_id") % 2).alias("label"),
-    )
-    flags = c.select(
-        (F.col("vec_id") % 2 == 0).alias("f1"),
-        (F.col("vec_id") % 3 == 0).alias("f2"),
-    )
-    for fit, bound in (
-        (lambda: CLF.train_logreg(lab, dim=5, iters=40), 1),
-        (lambda: LK.fs_em_weights(flags, ["f1", "f2"], n_iters=20), 1),
-        (lambda: SIM.kmeans_train_fx(c, n_clusters=3, iters=5), 2),
-        (lambda: SIM.top_pc_fx(c, iters=3), 2),
-    ):
-        j0 = jobs()
-        fit()
-        assert jobs() - j0 <= bound, bound
+    plain = spark.newSession()
+    plain.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    for sess, parts in ((spark, 4), (plain, 13)):
+        c = _km_corpus(sess).repartition(parts).localCheckpoint()
+        lab = c.select(
+            F.concat(F.array(F.lit(1.0)), "embedding").alias("features"),
+            (F.col("vec_id") % 2).alias("label"),
+        )
+        flags = c.select(
+            (F.col("vec_id") % 2 == 0).alias("f1"),
+            (F.col("vec_id") % 3 == 0).alias("f2"),
+        )
+        for fit, bound in (
+            (lambda: CLF.train_logreg(lab, dim=5, iters=40), 1),
+            (lambda: LK.fs_em_weights(flags, ["f1", "f2"], n_iters=20), 1),
+            (lambda: SIM.kmeans_train_fx(c, n_clusters=3, iters=5), 2),
+            (lambda: SIM.top_pc_fx(c, iters=3), 2),
+        ):
+            j0 = jobs()
+            fit()
+            assert jobs() - j0 <= bound, (parts, bound)
 
 
 def test_pq_train_equals_kmeans_per_subspace(spark):

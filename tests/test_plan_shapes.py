@@ -187,7 +187,7 @@ def test_lm_score_plan_no_bnlj(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_decontaminate_over_cap_regimes(spark):
+def test_decontaminate_over_cap_regimes(spark, monkeypatch):
     """The expression tier's documented over-cap fallback (broadcast
     hint dropped): with exclude_same_id=True the non-equi predicate
     keeps it a shuffle-backed nested loop, while exclude_same_id=False
@@ -195,6 +195,7 @@ def test_decontaminate_over_cap_regimes(spark):
     asymptotics, different node. Pinned so the docstring's claim stays
     true; callers in this regime belong on embedding_decontaminate_ivf,
     whose plan stays an equi-join (asserted here too)."""
+    from scraping_etl_spark.operators import similarity as SIM
     from scraping_etl_spark.operators.similarity import (
         INDEX_ITERS,
         embedding_decontaminate,
@@ -211,10 +212,11 @@ def test_decontaminate_over_cap_regimes(spark):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        over_cap = _plan(
-            embedding_decontaminate(e, bench, max_broadcast_vecs=10,
-                                    exclude_same_id=False)
-        )
+        with monkeypatch.context() as m:
+            m.setattr(SIM, "MAX_BROADCAST_BENCH_VECS", 10)
+            over_cap = _plan(
+                embedding_decontaminate(e, bench, exclude_same_id=False)
+            )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "CartesianProduct" in over_cap  # the documented fallback node

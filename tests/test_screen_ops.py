@@ -74,16 +74,15 @@ def test_bloom_size_bounded_and_validates(spark):
 
 
 @pytest.mark.slow
-def test_bloom_screen_shuffle_fallback_past_cap(spark):
+def test_bloom_screen_shuffle_fallback_past_cap(spark, monkeypatch):
     """A bit relation past the measured cap must lose the broadcast
     hint and still screen identically."""
     members = [f"m{i}" for i in range(100)]
     filt = BL.bloom_build(_keys(spark, members), m_bits=1 << 10, k_hashes=3)
     probes = _keys(spark, members + ["absent1", "absent2"])
     hinted = BL.bloom_screen(probes, filt, m_bits=1 << 10, k_hashes=3)
-    capped = BL.bloom_screen(
-        probes, filt, m_bits=1 << 10, k_hashes=3, max_broadcast_bits=5
-    )
+    monkeypatch.setattr(BL, "MAX_BROADCAST_BITS", 5)
+    capped = BL.bloom_screen(probes, filt, m_bits=1 << 10, k_hashes=3)
     assert sorted(map(tuple, hinted.collect())) == sorted(
         map(tuple, capped.collect())
     )

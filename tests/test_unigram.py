@@ -192,11 +192,11 @@ def test_fertility_gate_compares_both_tokenizers(spark):
 # Training tiers (r17 optimization round)
 # ---------------------------------------------------------------------------
 
-def test_train_driver_tier_equals_distributed_tier(spark):
+def test_train_driver_tier_equals_distributed_tier(spark, monkeypatch):
     """r17: under the measured word cap, seeding + EM + pruning run
     in-process over the collected frequency table; the model and the
     word→pieces table must be bit-identical to the distributed tier —
-    probe skipped (cap 0) or probed over the cap (cap 3) — (integer
+    cap 0 or probed over the cap (cap 3) — (integer
     counts, shared _viterbi/_model_logp/_prune_counts arithmetic,
     (count DESC, piece) seed/prune order)."""
     texts = [
@@ -212,14 +212,16 @@ def test_train_driver_tier_equals_distributed_tier(spark):
         )
         assert model and len(table) > 3  # more words than the cap below
         for cap in (0, 3):
-            dist = U.train_unigram(
-                df, vocab_size=vs, seed_size=ss, n_iters=it, max_piece_len=ml,
-                max_driver_words=cap,
-            )
+            with monkeypatch.context() as m:
+                m.setattr(U, "MAX_DRIVER_WORDS", cap)
+                dist = U.train_unigram(
+                    df, vocab_size=vs, seed_size=ss, n_iters=it,
+                    max_piece_len=ml,
+                )
             assert dist == driver
 
 
-def test_train_table_matches_word_segment_unigram(spark):
+def test_train_table_matches_word_segment_unigram(spark, monkeypatch):
     """r17: the trainer's segmentation table must be exactly the
     (word, sym) set word_segment_unigram recomputes under the same
     model — the artifacts builder relies on this identity — and the
@@ -234,8 +236,9 @@ def test_train_table_matches_word_segment_unigram(spark):
         for r in seg.select("word", "sym").collect()
     )
     assert table == expected
+    monkeypatch.setattr(U, "MAX_DRIVER_WORDS", 0)
     assert U.train_unigram(
-        df, vocab_size=20, seed_size=60, n_iters=2, max_driver_words=0
+        df, vocab_size=20, seed_size=60, n_iters=2
     ) == (model, table)
 
 
@@ -247,9 +250,9 @@ def test_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
     path is model-scale (seed candidates / per-round used counts)."""
     texts = ["alpha beta gamma delta epsilon", "zeta eta theta iota kappa"]
     df = _docs(spark, list(enumerate(texts)))
+    monkeypatch.setattr(U, "MAX_DRIVER_WORDS", 0)
     expected = U.train_unigram(
-        df, vocab_size=10, seed_size=40, n_iters=1, max_piece_len=3,
-        max_driver_words=0,
+        df, vocab_size=10, seed_size=40, n_iters=1, max_piece_len=3
     )
     cls = type(df)  # the concrete (classic) DataFrame class
     orig = cls.collect
@@ -261,9 +264,10 @@ def test_train_over_cap_probe_never_ships_word_table(spark, monkeypatch):
         return rows
 
     monkeypatch.setattr(cls, "collect", spy)
+    # 10 distinct words -> forced over-cap
+    monkeypatch.setattr(U, "MAX_DRIVER_WORDS", 3)
     got = U.train_unigram(
-        df, vocab_size=10, seed_size=40, n_iters=1, max_piece_len=3,
-        max_driver_words=3,  # 10 distinct words -> forced over-cap
+        df, vocab_size=10, seed_size=40, n_iters=1, max_piece_len=3
     )
     assert got == expected
     # over-cap collects are the seed-candidate and used-count tables

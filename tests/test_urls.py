@@ -143,13 +143,15 @@ def test_blocklist_attribution_is_shallowest_match(spark):
     assert r.blocked_by == "bad.com"
 
 
-def test_blocklist_shuffle_fallback_matches_broadcast(spark):
+def test_blocklist_shuffle_fallback_matches_broadcast(spark, monkeypatch):
+    from scraping_etl_spark import materialize as M
     from scraping_etl_spark.operators.urls import blocklist_matches
 
     df = _urls(spark, [(i, f"http://h{i % 5}.bad{i % 3}.com/") for i in range(60)])
     bl = _bl(spark, ["bad0.com", "bad2.com"])
     a = {(r.doc_id, r.blocked_by)
          for r in blocklist_matches(df, bl).collect()}
+    monkeypatch.setattr(M, "BROADCAST_ROWS", 0)
     b = {(r.doc_id, r.blocked_by)
-         for r in blocklist_matches(df, bl, max_broadcast=0).collect()}
+         for r in blocklist_matches(df, bl).collect()}
     assert a == b and len(a) == 40

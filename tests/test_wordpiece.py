@@ -9,6 +9,7 @@ from collections import Counter
 import pyspark.sql.functions as F
 import pytest
 
+from scraping_etl_spark.operators import bpe
 from scraping_etl_spark.operators import wordpiece as WP
 
 
@@ -146,11 +147,13 @@ def test_gate_runs_and_every_doc_appears(spark):
     assert out.filter(F.col("n_wp_tokens") > 0).count() > 0
 
 
-def test_wordpiece_train_driver_tier_equals_distributed_tier(spark):
+def test_wordpiece_train_driver_tier_equals_distributed_tier(
+    spark, monkeypatch
+):
     """r16 optimization: the in-process merge loop (collected
     frequency table under the measured cap) must learn the exact
     merge list, vocabulary and word→pieces table of the distributed
-    tier — probe skipped (cap 0) or probed over the cap (cap 3) — same
+    tier — cap 0 or probed over the cap (cap 3) — same
     BIGINT pair/symbol counts over all adjacent positions, same
     single-double-division likelihood score, same (score DESC, a, b)
     tie-break."""
@@ -166,9 +169,11 @@ def test_wordpiece_train_driver_tier_equals_distributed_tier(spark):
         )
         assert len(table) > 3  # more distinct words than the cap below
         for cap in (0, 3):
-            assert WP.wordpiece_train(
-                df, n_merges=nm, min_pair_count=1, max_driver_words=cap
-            ) == driver
+            with monkeypatch.context() as m:
+                m.setattr(bpe, "MERGE_DRIVER_WORDS", cap)
+                assert WP.wordpiece_train(
+                    df, n_merges=nm, min_pair_count=1
+                ) == driver
 
 
 def test_wordpiece_train_over_cap_probe_never_ships_word_table(
@@ -181,9 +186,8 @@ def test_wordpiece_train_over_cap_probe_never_ships_word_table(
     docs = _docs(
         spark, [(1, "alpha beta gamma delta epsilon"), (2, "zeta eta theta")]
     )
-    expected = WP.wordpiece_train(
-        docs, n_merges=3, min_pair_count=1, max_driver_words=0
-    )
+    monkeypatch.setattr(bpe, "MERGE_DRIVER_WORDS", 0)
+    expected = WP.wordpiece_train(docs, n_merges=3, min_pair_count=1)
     cls = type(docs)
     orig = cls.collect
     sizes: list[int] = []
@@ -194,14 +198,13 @@ def test_wordpiece_train_over_cap_probe_never_ships_word_table(
         return rows
 
     monkeypatch.setattr(cls, "collect", spy)
-    got = WP.wordpiece_train(
-        docs, n_merges=3, min_pair_count=1, max_driver_words=3
-    )
+    monkeypatch.setattr(bpe, "MERGE_DRIVER_WORDS", 3)
+    got = WP.wordpiece_train(docs, n_merges=3, min_pair_count=1)
     assert got == expected
     assert sizes and max(sizes) <= 1  # argmax probes only
 
 
-def test_wordpiece_train_artifacts_match_separate_builders(spark):
+def test_wordpiece_train_artifacts_match_separate_builders(spark, monkeypatch):
     """r17: the trainer's vocabulary and greedy segmentation table must
     be exactly what wordpiece_vocab + word_segment_wordpiece recompute
     from the same merges — the artifacts builder relies on this
@@ -218,6 +221,5 @@ def test_wordpiece_train_artifacts_match_separate_builders(spark):
         for r in seg.select("word", "sym").collect()
     )
     assert table == expected
-    assert WP.wordpiece_train(docs, n_merges=5, max_driver_words=0) == (
-        merges, vocab, table
-    )
+    monkeypatch.setattr(bpe, "MERGE_DRIVER_WORDS", 0)
+    assert WP.wordpiece_train(docs, n_merges=5) == (merges, vocab, table)
