@@ -39,6 +39,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for each query (omitted → rows-only check),
-    built for ``CORRECTNESS_SF_DIR`` — the one scale the driver compares at."""
+    """DuckDB-equivalent SQL for every query, built for
+    ``CORRECTNESS_SF_DIR`` — the one scale the driver compares at."""
     return oracle_sql_map(CORRECTNESS_SF_DIR)

@@ -692,8 +692,8 @@ ORACLE_DOC_SPLIT_CORPUS = _split_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Fill-in-the-middle transform (corpus_prep.fim_transform gate,
-# STAGED toward r18 — Bavarian et al. 2022, arXiv:2207.14255)
+# Fill-in-the-middle transform (corpus_prep.fim_transform gate —
+# Bavarian et al. 2022, arXiv:2207.14255)
 # ---------------------------------------------------------------------------
 
 #: Paper defaults: FIM applied to half the corpus, split evenly
@@ -1034,62 +1034,6 @@ def _bpe_artifacts(sf_dir: str) -> tuple:
     return merges, tuple((w, len(sym)) for w, sym in seg_tbl)
 
 
-def q_doc_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained-BPE tokenization gate: learn the merge table over the
-    corpus (once per sf_dir, cached), segment the distinct-word
-    vocabulary with it, then tokenize every document through the
-    broadcast word→segmentation join (operators/bpe.py). Emits
-    whitespace vs learned-subword counts per doc — the real token
-    budget ``pack_sequences`` and ``doc_token_counts`` want.
-
-    RETIRED as a standalone driver gate at r14 (window-saturation
-    fold): ``doc_bpe_roundtrip`` pins the per-doc encode path
-    strictly harder (full encode→decode losslessness) and
-    ``doc_bpe_fertility`` pins the same subword-count arithmetic per
-    language over the same trained artifacts. Kept as the library
-    query (pytest + local DuckDB suite)."""
-    merges, table = _bpe_artifacts(sf_dir)
-    d = load_table(spark, sf_dir, "documents")
-    seg = BPE.word_segment_table(d, list(merges))
-    # seg's cardinality is known exactly (the collected artifacts hold
-    # one row per distinct word of this corpus) -> skip the probe job
-    return BPE.bpe_token_counts(d, seg, seg_rows=len(table)).select(
-        "doc_id", "n_tokens", "n_bpe_tokens"
-    )
-
-
-def oracle_doc_bpe_tokens(sf_dir: str) -> str:
-    """Lazy DuckDB twin of :func:`q_doc_bpe_tokens`: the learned
-    word→subword-count table is embedded as VALUES plan constants
-    (training is deterministic — lexicographic tie-breaks — so both
-    engines share one model); tokenization is then an exact relational
-    mirror: explode lowercased tokens, left join the table, char-count
-    fallback, per-doc sum."""
-    _, table = _bpe_artifacts(sf_dir)
-    values = ",\n    ".join(
-        "('{}', {})".format(w.replace("'", "''"), n) for w, n in table
-    )
-    return f"""
-WITH seg(word, n_sub) AS (VALUES
-    {values}
-),
-tok AS (
-  SELECT doc_id, unnest({_LTOKS}) AS w FROM documents
-),
-agg AS (
-  SELECT tok.doc_id,
-         CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(coalesce(seg.n_sub, len(tok.w))) AS BIGINT) AS n_bpe_tokens
-  FROM tok LEFT JOIN seg ON tok.w = seg.word
-  GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(n_bpe_tokens, 0) AS BIGINT) AS n_bpe_tokens
-FROM documents d LEFT JOIN agg USING (doc_id)
-"""
-
-
 def q_doc_cdc_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC ingest-screen gate (corpus_prep.prepare_cdc_ref +
     cdc_seen_fraction — the batch face of the streaming
@@ -1205,7 +1149,7 @@ def _uni_artifacts(sf_dir: str) -> tuple:
 
 def q_doc_unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained unigram-LM tokenization gate (operators/unigram.py —
-    the SentencePiece-style counterpart of ``doc_bpe_tokens``): learn
+    the SentencePiece-style counterpart of the BPE trainer): learn
     the piece vocabulary by Viterbi-EM over the corpus (once per
     sf_dir, cached), Viterbi-segment the distinct-word vocabulary,
     then tokenize every document through the same broadcast
@@ -1224,9 +1168,8 @@ def q_doc_unigram_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_doc_unigram_tokens(sf_dir: str) -> str:
-    """Lazy DuckDB twin of :func:`q_doc_unigram_tokens` — identical
-    shape to :func:`oracle_doc_bpe_tokens`: the learned word→piece-
-    count table rides in as VALUES plan constants (training is
+    """Lazy DuckDB twin of :func:`q_doc_unigram_tokens`: the learned
+    word→piece-count table rides in as VALUES plan constants (training is
     deterministic — integer counts, total-order tie-breaks — so both
     engines share one model); tokenization is the exact relational
     mirror."""
@@ -1261,7 +1204,7 @@ def q_doc_unigram_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     the BPE merges vs the unigram-LM pieces, side by side — the report
     a multilingual vocabulary decision actually reads (which trainer
     serves which language slice better, Ács 2019). Same train-once
-    artifacts as ``doc_bpe_tokens`` / ``doc_unigram_tokens``; the
+    artifacts as ``doc_bpe_fertility`` / ``doc_unigram_tokens``; the
     corpus collapses to (lang, word) counts once per branch and both
     rollups are language-count rows, so the join is trivially
     broadcast-able."""
@@ -1361,7 +1304,7 @@ def _wp_artifacts(sf_dir: str) -> tuple:
 
 def q_doc_wordpiece_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained WordPiece tokenization gate (operators/wordpiece.py —
-    the BERT-style counterpart of ``doc_bpe_tokens`` /
+    the BERT-style counterpart of the BPE trainer and
     ``doc_unigram_tokens``, completing the tokenizer family): learn
     the merge list by LIKELIHOOD score (count(ab)/(count(a)·count(b)),
     once per sf_dir, cached), greedy-longest-match-segment the
@@ -1417,17 +1360,15 @@ FROM documents d LEFT JOIN agg USING (doc_id)
 # ---------------------------------------------------------------------------
 
 _ZIPF_R = 200
-_HEAPS_B = 10  # shared with the folded Heaps'-law companion below
+_HEAPS_B = 10  # Heaps'-law buckets (ORACLE_DOC_HEAPS_FIT below)
 
 
 def q_doc_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus-law profile: Zipf head fit
     (textstats.zipf_fit — least-squares ln(freq) ~ ln(rank) over the
     top-200 vocabulary head plus type/token counts, the corpus-drift
-    alarm a datasheet carries) JOINED with — the folded
-    ``doc_heaps_fit`` surface since r16 staging (window-saturation
-    fold: the two gates are the documented companion ln-ln LS fits,
-    both routed through ``textstats._ls_fit``) — the bucketed Heaps'
+    alarm a datasheet carries) JOINED with its companion ln-ln fit
+    (both routed through ``textstats._ls_fit``), the bucketed Heaps'
     vocabulary-growth curve (cumulative tokens/types over md5-bucket
     corpus prefixes + the closed-form fit). One row per (lang,
     bucket); both fits are aggregate arithmetic, exactly mirrored."""
@@ -1479,10 +1420,8 @@ SELECT t.lang, t.n_tokens, t.n_types,
 FROM totals t JOIN fit USING (lang)
 """
 
-#: The folded gate (doc_heaps_fit -> doc_zipf_fit, staged-r16 fold A):
-#: both companion ln-ln fits joined per language, one row per (lang,
-#: bucket). The component SQLs stay verbatim so each fit's arithmetic
-#: is unchanged from its previously-green standalone form; the final
+#: Both companion ln-ln fits joined per language, one row per (lang,
+#: bucket); each component SQL is embedded verbatim. The final
 #: ORACLE_DOC_ZIPF_FIT is composed below ORACLE_DOC_HEAPS_FIT.
 _CORPUS_LAWS_TEMPLATE = """
 WITH zipf AS ({zipf}),
@@ -1494,27 +1433,9 @@ FROM zipf JOIN heaps USING (lang)
 
 
 # ---------------------------------------------------------------------------
-# Heaps'-law corpus profile (textstats.heaps_fit gate)
-# _HEAPS_B is defined next to _ZIPF_R above (the zipf superset uses both).
+# Heaps'-law corpus profile (textstats.heaps_fit, the doc_zipf_fit
+# component). _HEAPS_B is defined next to _ZIPF_R above.
 # ---------------------------------------------------------------------------
-
-
-def q_doc_heaps_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language Heaps'-law fit (textstats.heaps_fit): cumulative
-    (tokens, types) points over md5-bucket corpus prefixes — no global
-    document sort — plus the closed-form ln-ln fit, the vocabulary-
-    growth companion of ``doc_zipf_fit``. One row per (lang, bucket);
-    the oracle is the exact bucket/window/fit mirror.
-
-    RETIRED as a standalone driver gate at r15 (window-saturation
-    fold, paying for an r16 seat): ``doc_zipf_fit`` now joins this
-    surface per language and carries every column. Kept as the
-    library query."""
-    from scraping_etl_spark.operators.textstats import heaps_fit
-
-    d = load_table(spark, sf_dir, "documents")
-    return heaps_fit(d, n_buckets=_HEAPS_B)
-
 
 ORACLE_DOC_HEAPS_FIT = f"""
 WITH tok AS (
@@ -1587,11 +1508,8 @@ def q_doc_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (md5(doc_id), doc_id) per stratum via the two-stage salt
     tournament — the oracle reproduces the selection with a single
     row_number (exactness of the tournament IS the tested claim).
-
-    RETIRED as a standalone driver gate at r16 (window-saturation
-    fold): ``doc_gumbel_sample`` now carries this query verbatim under
-    ``method='stratified'``. Kept as the library query, oracle-pinned
-    directly by tests/test_retired_library_queries.py."""
+    ``doc_gumbel_sample`` serves it as its ``method='stratified'``
+    slice."""
     d = load_table(spark, sf_dir, "documents")
     return CP.stratified_sample_n(d, _SAMPLE_N).select(
         "doc_id", "lang", "sample_rank"
@@ -1723,8 +1641,7 @@ FROM rates r LEFT JOIN kept k USING (source)
 
 
 # ---------------------------------------------------------------------------
-# UniMax language-budget allocation (corpus_prep.unimax_quotas) —
-# STAGED for r15 (oracle-ready; see plans/registry.py staging note).
+# UniMax language-budget allocation (corpus_prep.unimax_quotas)
 # ---------------------------------------------------------------------------
 
 #: Gate knobs: 2-epoch repeat ceiling at a budget of 120% of the
@@ -2524,8 +2441,8 @@ FROM scored s JOIN cutw c USING (lang)
 
 def q_doc_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language fertility/compression of the trained BPE
-    vocabulary (bpe.tokenizer_fertility) — same train-once artifacts
-    as ``doc_bpe_tokens``, rolled up per language instead of per doc."""
+    vocabulary (bpe.tokenizer_fertility), from the train-once BPE
+    artifacts."""
     merges, table = _bpe_artifacts(sf_dir)
     d = load_table(spark, sf_dir, "documents")
     seg = BPE.word_segment_table(d, list(merges))
@@ -2533,9 +2450,9 @@ def q_doc_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_doc_bpe_fertility(sf_dir: str) -> str:
-    """Lazy DuckDB twin: the learned word→n_sub table rides in as plan
-    constants (the ``oracle_doc_bpe_tokens`` convention); the report
-    is then an exact relational mirror."""
+    """Lazy DuckDB twin: the learned word→n_sub table rides in as
+    VALUES plan constants (training is deterministic, so both engines
+    share one model); the report is then an exact relational mirror."""
     _, table = _bpe_artifacts(sf_dir)
     values = ",\n    ".join(
         "('{}', {})".format(w.replace("'", "''"), n) for w, n in table

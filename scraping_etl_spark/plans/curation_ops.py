@@ -648,17 +648,16 @@ _GUM_SEED = "r8"
 
 
 def q_doc_gumbel_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic document samplers, method-tagged — FOLD SUPERSET
-    since r16 (window saturation, the doc_zipf_fit convention), one
-    row per sampled document across BOTH of the engine's deterministic
+    """Deterministic document samplers, method-tagged: one row per
+    sampled document across BOTH of the engine's deterministic
     md5-derived samplers:
 
     - ``method='gumbel'``: 100 documents drawn with probability
       ∝ (1 + n_chars) via Gumbel-top-k over md5 noise
-      (curation.weighted_sample_gumbel) — this gate's pre-fold body,
-      columns ``(doc_id, lang, n_chars, gumbel_key)``.
-    - ``method='stratified'``: the retired ``doc_stratified_sample``
-      gate VERBATIM — per-language uniform N smallest
+      (curation.weighted_sample_gumbel), columns
+      ``(doc_id, lang, n_chars, gumbel_key)``.
+    - ``method='stratified'``: ``corpus_ops.q_doc_stratified_sample``
+      verbatim — per-language uniform N smallest
       (md5(doc_id), doc_id) via the two-stage salt tournament
       (corpus_prep.stratified_sample_n), columns
       ``(doc_id, lang, sample_rank)``.
@@ -689,9 +688,8 @@ def q_doc_gumbel_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gumbel.unionByName(strat)
 
 
-#: The gumbel component alone (the pre-fold gate's SQL) — embedded
-#: verbatim in the superset oracle and pinned by the retired-library
-#: suite's superset-honesty check.
+#: The gumbel component alone, embedded verbatim in the superset
+#: oracle.
 ORACLE_DOC_GUMBEL_COMPONENT = f"""
 WITH keyed AS (
   SELECT doc_id, lang, n_chars,
@@ -1327,8 +1325,7 @@ ORACLE_RAG_PIPELINE = _rag_pipeline_oracle()
 
 
 # ---------------------------------------------------------------------------
-# HITS hubs/authorities gate (operators/graph.hits) — STAGED for r14
-# (see plans/registry.py staging note).
+# HITS hubs/authorities gate (operators/graph.hits)
 # ---------------------------------------------------------------------------
 
 _HITS_ITER = 4

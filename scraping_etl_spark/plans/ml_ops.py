@@ -450,24 +450,6 @@ def double_list_sql(xs) -> str:
     return ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in xs)
 
 
-def q_emb_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact brute-force cosine top-3 for the first 20 vectors against
-    the whole corpus (operators/similarity.py — broadcast probes,
-    partitioned rank window).
-
-    RETIRED as a standalone driver gate at r16 (window-saturation
-    fold): ``emb_quantized_topk`` now carries this tier verbatim under
-    ``tier='float32'`` (same probes, same k, same ranking — the
-    exact-vs-quantized rank agreement is the comparison a user of the
-    quantized tier actually inspects). Kept as the library query,
-    oracle-pinned directly by tests/test_retired_library_queries.py."""
-    e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < _N_PROBES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    return SIM.cosine_topk(e, probes, k=_TOPK)
-
-
 def _cosine_oracle() -> str:
     dot_pq = _DOT.format(a="p.q", b="e.embedding")
     n_p = _DOT.format(a="p.q", b="p.q")
@@ -499,8 +481,7 @@ ORACLE_EMB_COSINE_TOPK = _cosine_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Hard-negative mining gate (similarity.hard_negatives) — STAGED for
-# r15 (oracle-ready; see plans/registry.py staging note).
+# Hard-negative mining gate (similarity.hard_negatives)
 # ---------------------------------------------------------------------------
 
 #: Band + k of the hard-negative gate. The embeddings table's random
@@ -575,13 +556,12 @@ ORACLE_EMB_HARD_NEGATIVES = _hard_negatives_oracle()
 
 def q_emb_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-3 over BOTH corpus representations, tier-tagged: the
-    float32 corpus (``tier='float32'`` — the retired ``emb_cosine_topk``
-    gate verbatim) and the int8-QUANTIZED corpus (``tier='int8'``, the
-    memory-bandwidth tier, similarity.quantize_embedding: 4× fewer
-    bytes streamed with near-identical ranking since the per-vector
-    scale cancels in cosine). FOLD SUPERSET since r16 (window
-    saturation, the doc_zipf_fit convention): same probe set, same k,
-    same ranking both tiers — the per-tier rank columns side-by-side
+    float32 corpus (``tier='float32'``, the exact brute-force cosine
+    top-k: broadcast probes, partitioned rank window) and the
+    int8-QUANTIZED corpus (``tier='int8'``, the memory-bandwidth tier,
+    similarity.quantize_embedding: 4× fewer bytes streamed with
+    near-identical ranking since the per-vector scale cancels in
+    cosine). Same probe set, same k, same ranking both tiers — the per-tier rank columns side-by-side
     are the exact-vs-quantized agreement a user of the quantized tier
     inspects. Quantization is deterministic integer arithmetic, so the
     whole union keeps a full value-level oracle (both component
@@ -607,9 +587,7 @@ def q_emb_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quantized_component_oracle() -> str:
-    """The int8 tier alone — the pre-fold gate's SQL, embedded verbatim
-    in the superset oracle and pinned directly by the retired-library
-    suite's superset-honesty check."""
+    """The int8 tier alone, embedded verbatim in the superset oracle."""
     dot_pq = _DOT.format(a="p.q", b="e.q")
     n_p = _DOT.format(a="p.q", b="p.q")
     n_e = _DOT.format(a="e.q", b="e.q")
@@ -647,11 +625,7 @@ FROM ranked WHERE rk <= {_TOPK}
 """
 
 
-#: int8 tier alone (the pre-fold gate) — superset-honesty pin target.
-ORACLE_EMB_QUANTIZED_TOPK_INT8 = _quantized_component_oracle()
-
-#: Fold-superset oracle: BOTH component oracles verbatim as CTEs, each
-#: tagged with its tier (the doc_zipf_fit convention).
+#: Both component oracles verbatim as CTEs, each tagged with its tier.
 ORACLE_EMB_QUANTIZED_TOPK = f"""
 WITH float_tier AS (
 {ORACLE_EMB_COSINE_TOPK}
@@ -666,7 +640,7 @@ SELECT 'int8' AS tier, * FROM int8_tier
 
 # ---------------------------------------------------------------------------
 # Matryoshka prefix-dimension retrieval (similarity.matryoshka_topk) —
-# STAGED toward r20; static oracle, per-tier replay + agreement flag.
+# static oracle, per-tier replay + agreement flag.
 # ---------------------------------------------------------------------------
 
 _MAT_PROBES, _MAT_K, _MAT_DIMS = 16, 3, (16, 32, 64)
@@ -833,8 +807,9 @@ def q_emb_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means inverted-list) approximate top-3 — the
     cluster-pruned scale path beside the LSH one; probes search their 4
     nearest of 16 lists (operators/similarity.ivf_topk). The index is
-    built once per sf_dir and reused. Approximate by design + iterative
-    training → rows-only driver check."""
+    built once per sf_dir and reused; the lazy oracle embeds the
+    trained centroids as plan constants, so the gate is a full hash
+    compare."""
     e = load_table(spark, sf_dir, "embeddings")
     probes = e.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
@@ -1238,49 +1213,6 @@ FROM documents
 ORACLE_DOC_ROLLING_HASH = _rolling_oracle()
 
 
-def q_doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting both ways (north-star text analysis): whitespace
-    tokens vs the GPT-2-style BPE-ish pre-tokenizer
-    (operators/textstats.bpe_ish_tokens) — the ratio approximates
-    tokens-per-word, the number a training-data budget actually uses.
-
-    RETIRED as a standalone driver gate at r15 (window-saturation
-    fold): ``doc_text_stats`` now carries the BPE-ish count and the
-    tokens-per-word ratio (its ``n_tokens`` is this gate's
-    ``n_ws_tokens``). Kept as the library query, oracle-pinned
-    directly by tests/test_retired_library_queries.py (the registry
-    sweep covers registered gates only); the bpe_ish_tokens operator
-    stays pinned by its own unit tests."""
-    from scraping_etl_spark.operators.textstats import bpe_ish_tokens
-
-    d = load_table(spark, sf_dir, "documents")
-    ws = F.size(tokens(F.col("text"))).cast("long")
-    bpe = F.size(bpe_ish_tokens("text")).cast("long")
-    return d.select(
-        "doc_id",
-        ws.alias("n_ws_tokens"),
-        bpe.alias("n_bpe_tokens"),
-        F.round(bpe / F.greatest(ws, F.lit(1)), 4).alias("tokens_per_word"),
-    )
-
-
-# \p classes work in both Java regex and RE2; the pattern is
-# lookahead-free for exactly that reason (textstats.BPE_ISH_PATTERN).
-ORACLE_DOC_TOKEN_COUNTS = rf"""
-SELECT doc_id,
-       CAST(len({_TOKS}) AS BIGINT) AS n_ws_tokens,
-       CAST(len(bpe) AS BIGINT)     AS n_bpe_tokens,
-       round(len(bpe) / greatest(len({_TOKS}), 1), 4) AS tokens_per_word
-FROM (
-  SELECT doc_id, text,
-         list_filter(
-           regexp_extract_all(text, '''(?:s|t|re|ve|m|ll|d)| ?\p{{L}}+| ?\p{{N}}+| ?[^\s\p{{L}}\p{{N}}]+|\s+', 0),
-           x -> regexp_matches(x, '\S')) AS bpe
-  FROM documents
-)
-"""
-
-
 def q_doc_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical training-data composition: quality-filter →
     normalize → exact-dedup → keep one canonical survivor per content
@@ -1392,14 +1324,10 @@ GROUP BY n_name
 def q_doc_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analysis-surface rollup (SURVEY §2.4 extension): per-language
     corpus profile with *exact* distinct counts — deterministic, so it
-    carries a full DuckDB hash gate.
-
-    RETIRED as a standalone driver gate at r14 (window-saturation fold,
-    r13 verdict item 2): :func:`q_doc_corpus_profile_hll` now emits
-    every column of this profile (n_docs, n_sources, n_distinct_texts,
-    avg_chars) PLUS the sketch-tolerance verdicts, so the seated gate
-    strictly subsumes this one. Kept as the library query
-    (pytest-covered); the driver seat belongs to the superset."""
+    carries a full DuckDB hash gate. The registered
+    :func:`q_doc_corpus_profile_hll` emits every column of this profile
+    plus the sketch-tolerance verdicts; ``tools/dump_plans.py`` dumps
+    this plan."""
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1441,12 +1369,9 @@ def q_doc_corpus_profile_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     this a full value-checked row: the sketch must land within its own
     documented error bound at every scale, not merely return 5 rows.
     (The exact columns here are the verification harness; the
-    production query is the approx-only projection.)
-
-    Since r14 this gate also carries the full exact profile (n_docs,
-    avg_chars — the ``q_doc_corpus_profile`` columns), folding the
-    retired standalone exact gate into this one seat (r13 verdict
-    item 2: window-saturation fold)."""
+    production query is the approx-only projection.) It also carries
+    the full exact profile (n_docs, avg_chars — the
+    ``q_doc_corpus_profile`` columns)."""
     d = load_table(spark, sf_dir, "documents")
     tol = lambda exact: F.greatest(  # noqa: E731 — local alias
         F.ceil(3 * _HLL_RSD * F.col(exact)), F.lit(1)
@@ -1656,7 +1581,7 @@ ORACLE_EMB_DECONTAMINATE = _emb_decontaminate_oracle()
 #: production recall trade (4 of 16, the ``emb_ivf_topk`` setting), NOT
 #: full probe: at full probe the tier compares every (corpus, bench)
 #: pair, i.e. costs exactly what the expression tier costs plus a
-#: shuffle, so driver-checking it would certify nothing the seated
+#: shuffle, so checking it would certify nothing the
 #: ``emb_decontaminate`` row doesn't already certify — and would add a
 #: second ~15 s row to the sf1 floor.
 _DIVF_PROBE = 4
@@ -1664,10 +1589,9 @@ _DIVF_PROBE = 4
 
 def q_emb_decontaminate_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-tier face of the semantic decontamination screen
-    (operators/similarity.embedding_decontaminate_ivf) — STAGED r16
-    for an r17 seat (r15 verdict item 4): the scale escalation the
-    expression tier documents for reference sides past the broadcast
-    cap, driver-checked in its PRODUCTION setting. Same corpus/bench
+    (operators/similarity.embedding_decontaminate_ivf): the scale
+    escalation the expression tier documents for reference sides past
+    the broadcast cap, oracle-checked in its PRODUCTION setting. Same corpus/bench
     slices as ``emb_decontaminate``; the lake/bench side lives in the
     per-sf trained 16-cell inverted lists (``_ivf_index``, plan
     constants) and each corpus vector probes its ``_DIVF_PROBE``
@@ -1679,7 +1603,7 @@ def q_emb_decontaminate_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``oracle_emb_ivf_topk`` pattern). Full probe ≡ expression tier
     stays the operator-suite contract; the subset-honesty pin
     (partial flags ⊆ exact flags, hit counts never higher) lives in
-    the staged-gate test."""
+    ``tests/test_dedup_similarity.py`` beside this gate's oracle test."""
     e = load_table(spark, sf_dir, "embeddings")
     bench = e.filter(F.col("vec_id") % _DECON_MOD == 0).select(
         "vec_id", "embedding"
@@ -1855,7 +1779,7 @@ ORACLE_EMB_KMEANS_TRAIN = _kmeans_oracle_sql(
 
 # ---------------------------------------------------------------------------
 # k-center / farthest-point diversity selection (similarity.
-# kcenter_select) — STAGED r16 for an r17 seat; the greedy run AND the
+# kcenter_select) — the greedy run AND the
 # cover assignment are both replayed by the oracle (host_pagerank
 # iterative-fixpoint convention).
 # ---------------------------------------------------------------------------
@@ -1971,7 +1895,7 @@ ORACLE_EMB_KCENTER_SELECT = _kcenter_oracle_sql(_KC_K, _DIM)
 
 # ---------------------------------------------------------------------------
 # Maximal Marginal Relevance re-ranking (similarity.mmr_rerank) —
-# STAGED toward r19; the oracle unrolls the per-query greedy
+# the oracle unrolls the per-query greedy
 # round-for-round (the kcenter/unimax unrolled-CTE convention).
 # ---------------------------------------------------------------------------
 
@@ -2086,7 +2010,7 @@ ORACLE_EMB_MMR_RERANK = _mmr_oracle_sql(_MMR_K, _MMR_LAM)
 
 # ---------------------------------------------------------------------------
 # Top principal component by fixed-point power iteration
-# (similarity.top_pc_fx) — STAGED r16 toward an r18 seat; the whole
+# (similarity.top_pc_fx) — the whole
 # training run (mean, md5 init, every iteration) is replayed by the
 # oracle, the ORACLE_EMB_KMEANS_TRAIN fixpoint convention.
 # ---------------------------------------------------------------------------
@@ -2647,8 +2571,8 @@ def _edit_join_entities(d: DataFrame) -> DataFrame:
 
 def q_doc_edit_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-side edit-distance screen gate (dedup.edit_screen_pairs —
-    the batch face of ``streaming.edit_screen_stream``, seated so the
-    streaming screen has a driver-checkable twin; r13 verdict item 5).
+    the batch face of ``streaming.edit_screen_stream``, so the
+    streaming screen has an oracle-checked twin).
     Corpus: the :func:`q_doc_edit_join` entities split by role — the
     LAKE holds the base titles (``_eid ≡ 0 mod 4``), the INCOMING
     batch holds both planted variants (``1``/``2`` mod 4) — so every
@@ -2712,8 +2636,7 @@ WHERE levenshtein(a.s, b.s) <= {_EJ_K}
 """
 
 # ---------------------------------------------------------------------------
-# Fellegi–Sunter match scoring gate (operators/linkage.py) — STAGED
-# for r15 (oracle-ready; see plans/registry.py staging note).
+# Fellegi–Sunter match scoring gate (operators/linkage.py)
 # ---------------------------------------------------------------------------
 
 #: Agreement fields of the FS gate: three positional 8-char windows
@@ -3016,10 +2939,9 @@ WHERE levenshtein(n.s, r.s) <= {_EJ_K}
 
 # ---------------------------------------------------------------------------
 # Semantic ingest-screen batch face (similarity.embedding_decontaminate
-# cross-side) — STAGED for r16 (oracle-ready; see the plans/registry.py
-# staging note). The doc_edit_screen pattern applied to the third
-# streaming twin, so streaming.emb_screen_stream stops being
-# pytest-only (r14 verdict item 5).
+# cross-side). The doc_edit_screen pattern applied to the third
+# streaming twin, so streaming.emb_screen_stream has an oracle-checked
+# batch face.
 # ---------------------------------------------------------------------------
 
 #: Ingest-screen threshold: the testdata embeddings are near-uniform
@@ -3149,9 +3071,7 @@ FROM pairs WHERE jacc >= {_FM_T}
 
 
 # ---------------------------------------------------------------------------
-# Weighted-cosine all-pairs gate (dedup.allpairs_cosine_weighted) —
-# STAGED for r14: built and pytest-pinned this round, QuerySpec next
-# round (the r13 window is full). See plans/registry.py staging note.
+# Weighted-cosine all-pairs gate (dedup.allpairs_cosine_weighted)
 # ---------------------------------------------------------------------------
 
 _WC_T = 0.9
@@ -3321,8 +3241,7 @@ FROM dots WHERE cos_sim >= {_WC_T}
 """
 
 
-# Payload containment gate (multimodal.payload_containment_pairs) —
-# STAGED for r14 (see plans/registry.py staging note).
+# Payload containment gate (multimodal.payload_containment_pairs)
 # ---------------------------------------------------------------------------
 
 _PC_TAU = 0.9

@@ -76,10 +76,7 @@ ASOF LEFT JOIN clicks c ON p.user_id = c.user_id AND p.ts >= c.ts
 # ---------------------------------------------------------------------------
 
 def q_doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc text stats, carrying the folded ``doc_token_counts``
-    surface since r15 (window-saturation fold — both gates are per-doc
-    token-count profiles and ``n_tokens`` IS the retired gate's
-    ``n_ws_tokens``): whitespace token/char counts + diversity PLUS
+    """Per-doc text stats: whitespace token/char counts + diversity PLUS
     the BPE-ish pre-tokenizer count and the tokens-per-word ratio a
     training-data budget actually uses (textstats.bpe_ish_tokens)."""
     from scraping_etl_spark.operators.textstats import bpe_ish_tokens
@@ -570,8 +567,8 @@ _KA_CHARS_SQL = [
 
 
 def q_doc_k_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-anonymous metadata release gate (privacy.k_anonymize, STAGED
-    toward r20; Samarati TKDE'01 / Sweeney IJUFKS'02): the documents
+    """K-anonymous metadata release gate (privacy.k_anonymize;
+    Samarati TKDE'01 / Sweeney IJUFKS'02): the documents
     table's quasi-identifiers (lang, source, n_chars) generalized up
     fixed ladders by the MINIMAL full-domain level vector whose
     under-k records fit the 2% suppression budget, stragglers
@@ -680,7 +677,7 @@ ORACLE_DOC_K_ANONYMIZE = _ka_oracle_sql()
 
 def q_doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading ease + Flesch–Kincaid grade profile
-    (textstats.with_readability, STAGED toward r19): the canonical
+    (textstats.with_readability): the canonical
     readability pair (Flesch 1948; Kincaid et al. 1975) as a corpus
     difficulty/curriculum signal — letter-run words, vowel-group
     syllables with the silent-e adjustment, terminator-run sentences,
@@ -808,9 +805,7 @@ FROM base, dups
 
 
 # ---------------------------------------------------------------------------
-# Language segmentation gate (textstats.lang_segments) — STAGED for
-# r14: built and pytest-pinned this round, QuerySpec next round (the
-# r13 window is full). See plans/registry.py staging note.
+# Language segmentation gate (textstats.lang_segments)
 # ---------------------------------------------------------------------------
 
 _SEG_CHUNK = 16

@@ -411,11 +411,9 @@ GROUP BY event_type
 
 def q_event_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user ordered-window features (SURVEY §2.5): lag value delta
-    vs the previous event PLUS — the folded ``event_moving_avg``
-    surface since r16 staging (window-saturation fold: both gates
-    window on the identical (user_id; ts, event_id) spec, so one sort
-    carries both) — the 7-row trailing moving average
-    (``rowsBetween(-6, 0)`` frame). One shuffle, two window functions
+    vs the previous event PLUS the 7-row trailing moving average
+    (``rowsBetween(-6, 0)`` frame). Both window on the identical
+    (user_id; ts, event_id) spec: one shuffle, two window functions
     over the same sorted run."""
     e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -529,37 +527,6 @@ SELECT user_id,
        CAST(count(*) FILTER (WHERE event_type = 'error')    AS BIGINT) AS n_error
 FROM events
 GROUP BY user_id
-"""
-
-
-def q_event_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window frame spec (SURVEY §2.5 surface): 7-row trailing moving
-    average of event value per user — ``rowsBetween(-6, 0)``. One
-    shuffle on the partition key; frame state is bounded (7 rows).
-
-    RETIRED as a standalone driver gate at r15 (window-saturation
-    fold, paying for an r16 seat): ``event_lag_delta`` windows on the
-    identical (user_id; ts, event_id) spec and now carries ``mavg_7``.
-    Kept as the library query."""
-    e = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    return e.select(
-        "user_id",
-        "event_id",
-        F.round(F.avg("value").over(w), 6).alias("mavg_7"),
-    )
-
-
-ORACLE_EVENT_MOVING_AVG = """
-SELECT user_id, event_id,
-       round(avg(value) OVER (
-         PARTITION BY user_id ORDER BY ts, event_id
-         ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS mavg_7
-FROM events
 """
 
 
@@ -785,12 +752,11 @@ SELECT c_custkey + 10000000, 'added' FROM customer WHERE c_custkey % 11 = 0
 
 def q_doc_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingest data-quality gate (snapshot.dq_profile +
-    snapshot.snapshot_diff, one seat since r14 — the r13 verdict's
-    window-saturation fold): four ingest rules over documents
+    snapshot.snapshot_diff): four ingest rules over documents
     evaluated in one map-side partial-agg pass — two structurally-true
     rules (exercising the zero-violation path) and two with real
     violation mass at every sf — UNIONED with the keyed snapshot-diff
-    rollup (the retired ``snapshot_diff`` gate's corpus: yesterday =
+    rollup (the :func:`q_snapshot_diff` corpus: yesterday =
     customer as-is; today = customers sans every 13th, every 7th
     rebalanced, every 11th re-keyed +10M) folded to the same
     (rule, n_rows, n_violations, violation_frac) shape: one

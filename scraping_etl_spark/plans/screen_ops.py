@@ -275,9 +275,7 @@ ORDER BY s.id_a, s.id_b
 
 
 # ---------------------------------------------------------------------------
-# r10-queued gates: line-level surgery + shuffled shards
-# (registered at the tail head with r10 window priority — the round-9
-# cadence cap of 5 seated gates is already spent)
+# Line-level surgery + shuffled shards
 # ---------------------------------------------------------------------------
 
 _LINE_BOILER_A = "subscribe to our newsletter today"

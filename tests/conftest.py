@@ -54,6 +54,19 @@ def pytest_terminal_summary(terminalreporter):
         )
 
 
+def jobs_launched(spark) -> int:
+    """Jobs the session's context has launched so far (works with the UI
+    off). The listener bus is drained first, so a job still queued in
+    the bus is counted. The status store evicts old jobs past
+    ``spark.ui.retainedJobs``, so the count is the newest job id + 1
+    (ids are sequential from 0; the list is newest first), not the
+    list's size."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(app_name="scraping-etl-spark-tests", shuffle_partitions=8)

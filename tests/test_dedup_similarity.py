@@ -1275,9 +1275,7 @@ def test_fixed_point_trainers_job_counts(spark):
     ``collect`` and launch a job per partition batch it tries."""
     from scraping_etl_spark.operators import classifier as CLF
     from scraping_etl_spark.operators import linkage as LK
-
-    def jobs():
-        return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
+    from tests.conftest import jobs_launched
 
     plain = spark.newSession()
     plain.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
@@ -1297,9 +1295,9 @@ def test_fixed_point_trainers_job_counts(spark):
             (lambda: SIM.kmeans_train_fx(c, n_clusters=3, iters=5), 2),
             (lambda: SIM.top_pc_fx(c, iters=3), 2),
         ):
-            j0 = jobs()
+            j0 = jobs_launched(spark)
             fit()
-            assert jobs() - j0 <= bound, (parts, bound)
+            assert jobs_launched(spark) - j0 <= bound, (parts, bound)
 
 
 def test_pq_train_equals_kmeans_per_subspace(spark):

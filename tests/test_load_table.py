@@ -21,15 +21,10 @@ from pyspark.sql import types as T
 
 from scraping_etl_spark.schemas import TESTDATA_TABLES
 from scraping_etl_spark.sources.readers import footer_schema, load_table
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, jobs_launched
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCALES = [SF_SMOKE, SF_CORRECT, os.path.join(os.path.dirname(SF_SMOKE), "sf0.1")]
-
-
-def _jobs(spark) -> int:
-    """Jobs the session has launched so far (works with the UI off)."""
-    return spark.sparkContext._jsc.sc().statusStore().jobsList(None).size()
 
 
 def _fingerprint(df) -> tuple:
@@ -135,13 +130,13 @@ def test_spark_written_int96_timestamps_use_the_stored_spark_schema(spark, tmp_p
 
 
 def test_load_table_launches_no_job(spark):
-    before = _jobs(spark)
+    before = jobs_launched(spark)
     spark.range(1).count()
-    assert _jobs(spark) > before  # the counter sees jobs
-    before = _jobs(spark)
+    assert jobs_launched(spark) > before  # the counter sees jobs
+    before = jobs_launched(spark)
     for name in TESTDATA_TABLES:
         load_table(spark, SF_CORRECT, name).schema
-    assert _jobs(spark) == before
+    assert jobs_launched(spark) == before
 
 
 @pytest.mark.parametrize(
@@ -151,9 +146,9 @@ def test_building_relational_plans_launches_no_job(spark, query):
     from scraping_etl_spark.plans.registry import QUERIES
 
     [spec] = [q for q in QUERIES if q.name == query]
-    before = _jobs(spark)
+    before = jobs_launched(spark)
     spec.fn(spark, SF_CORRECT)
-    assert _jobs(spark) == before
+    assert jobs_launched(spark) == before
 
 
 @pytest.mark.parametrize("drift", ["missing", "extra"])
@@ -164,10 +159,10 @@ def test_column_drift_fails_before_spark(spark, tmp_path, drift):
     else:
         cols["r_comment"] = ["x"]
     pq.write_table(pa.table(cols), str(tmp_path / "region.parquet"))
-    before = _jobs(spark)
+    before = jobs_launched(spark)
     with pytest.raises(ValueError, match="table region: columns"):
         load_table(spark, str(tmp_path), "region")
-    assert _jobs(spark) == before
+    assert jobs_launched(spark) == before
 
 
 @pytest.mark.parametrize("at", [pa.time64("us"), pa.duration("us"), pa.uint32()])

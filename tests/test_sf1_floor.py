@@ -4,8 +4,8 @@ The full check re-runs all 139 registry queries against the 10× probe
 corpus (~7-10 min on local[32]), so it only runs when explicitly asked
 for: ``RUN_SF1_FLOOR=1 python -m pytest tests/test_sf1_floor.py``.
 Unset, this module contributes one cheap structural test: the floor
-artifact exists, parses, and covers the whole registry (a new gate
-seated without regenerating the floor shows up here immediately, not
+artifact exists, parses, and covers the whole registry (a new query
+registered without regenerating the floor shows up here immediately, not
 ten minutes into the slow path).
 """
 
@@ -20,14 +20,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_floor_artifact_covers_the_registry():
-    from scraping_etl_spark.plans.registry import ORDER
+    from scraping_etl_spark.plans.registry import queries_map
 
     with open(os.path.join(REPO, "BENCH_SF1_LOCAL.json")) as f:
         floor = json.load(f)["queries"]
-    missing = sorted(set(ORDER) - set(floor))
+    missing = sorted(set(queries_map()) - set(floor))
     assert not missing, (
         "registry entries without an sf1 floor (regenerate "
-        f"BENCH_SF1_LOCAL.json after seating new gates): {missing}"
+        f"BENCH_SF1_LOCAL.json after registering new queries): {missing}"
     )
 
 

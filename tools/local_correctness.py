@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Full-registry local correctness artifact (README "Cadence plan").
+"""Full-registry local correctness artifact (README "Correctness").
 
-Runs EVERY registry entry — driver window and tail alike — against its
-DuckDB oracle under a driver-parity session (plain SparkSession, no
-engine confs) at sf0.01, and writes ``CORRECTNESS_LOCAL_r{N}.json``
-with the same row shape the driver records: per query
-``{rows, schema, hash, err}`` booleans. Tail entries thereby carry
-machine-readable per-round evidence between their driver windows.
+Runs every registry entry against its DuckDB oracle under a plain
+SparkSession (no engine confs) at sf0.01, and writes
+``CORRECTNESS_LOCAL_r{N}.json`` with the row shape of the
+``CORRECTNESS_r*.json`` sheets: per query ``{rows, schema, hash, err}``
+booleans.
 
 Usage: ``python tools/local_correctness.py <round>`` (writes
-``CORRECTNESS_LOCAL_r0<round>.json`` at the repo root).
+``CORRECTNESS_LOCAL_r<round, two digits>.json`` at the repo root).
 """
 
 from __future__ import annotations
@@ -24,20 +23,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_LOCAL_SF", "/root/testdata/sf0.01")
 def main() -> int:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    if len(sys.argv) > 1:
-        rnd = int(sys.argv[1])
-    else:
-        # same derivation as make_rotation: the round being verified is
-        # max committed driver round + 1, never a silent 0
-        import glob
-        import re as _re
-
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-            if (m := _re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-        ]
-        rnd = (max(rounds) + 1) if rounds else 1
+    if len(sys.argv) != 2:
+        print(__doc__, file=sys.stderr)
+        return 2
+    rnd = int(sys.argv[1])
 
     from pyspark.sql import SparkSession
 
@@ -57,12 +46,9 @@ def main() -> int:
         row = {"rows": None, "schema": None, "hash": None, "err": None}
         try:
             out = spec.fn(spark, SF_DIR)
-            if spec.oracle is None:
-                row.update(rows=out.count() >= 0, schema=True, hash=None)
-            else:
-                sql = spec.oracle(SF_DIR) if callable(spec.oracle) else spec.oracle
-                assert_matches_oracle(out, sql, SF_DIR)
-                row.update(rows=True, schema=True, hash=True)
+            sql = spec.oracle(SF_DIR) if callable(spec.oracle) else spec.oracle
+            assert_matches_oracle(out, sql, SF_DIR)
+            row.update(rows=True, schema=True, hash=True)
             n_ok += 1
         except Exception as e:  # noqa: BLE001 — recorded, not fatal
             row["err"] = f"{type(e).__name__}: {e}"[:300]
