@@ -34,9 +34,8 @@ FREQUENCY table):
   :func:`word_segment_arrow` is the PRODUCTION tier for real merge
   budgets: the learned table becomes a rank dict and each Arrow batch
   encodes its words with the standard min-rank BPE encoder —
-  per-batch Python (the ``cluster_assign_arrow`` convention,
-  operators/similarity.py), never per-row, cost independent of
-  ``n_merges``. :func:`word_segment` dispatches between them.
+  per-batch Python in ``mapInPandas``, never per-row, cost independent
+  of ``n_merges``. :func:`word_segment` dispatches between them.
 - :func:`bpe_token_counts` tokenizes the corpus by joining that
   table: explode tokens → left join → partial-agg groupBy. The
   segmentation side is broadcast only behind a MEASURED cardinality

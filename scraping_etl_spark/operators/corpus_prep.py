@@ -877,92 +877,6 @@ def split_corpus(
     return df.withColumn(out_col, expr.otherwise(F.lit(names[-1])))
 
 
-def fim_transform(
-    df: DataFrame,
-    rate: float = 0.5,
-    spm_frac: float = 0.5,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    pre_tok: str = "<fim_pre>",
-    mid_tok: str = "<fim_mid>",
-    suf_tok: str = "<fim_suf>",
-) -> DataFrame:
-    """Fill-in-the-middle pretraining transform (Bavarian et al. 2022,
-    "Efficient Training of Language Models to Fill in the Middle",
-    arXiv:2207.14255): with probability ``rate`` a document is split at
-    two character positions into (prefix, middle, suffix) and re-linearized
-    with sentinel tokens so the model learns to infill; the rest pass
-    through untouched (the paper's FIM-rate knob). Two sentinel layouts
-    ship, chosen per doc with probability ``spm_frac``:
-
-    - ``psm``:  pre_tok · prefix · suf_tok · suffix · mid_tok · middle
-    - ``spm``:  suf_tok · suffix · pre_tok · prefix · mid_tok · middle
-      (the suffix-first reordering of the same three fields; sentinel
-      layouts vary across published implementations, so the exact
-      linearization here is THE pinned contract, not an import).
-
-    Determinism is the whole design: the apply decision, both cut
-    points, and the mode are salted :func:`md5_bucket` draws off the
-    row key — no RNG state, so a 100 TB rerun (and the DuckDB oracle)
-    reproduces every byte. Cut points are uniform over ``[0, len]``
-    independently and then ordered (the paper's character-level
-    uniform splits), so empty prefix/middle/suffix are all legal.
-
-    Scale shape: a pure map-side projection — zero shuffle, zero
-    joins, pushdown-transparent — exactly like :func:`split_corpus`.
-    Rows with NULL text are never transformed (``mode='none'``).
-    """
-    if not 0.0 <= rate <= 1.0:
-        raise ValueError(f"rate must be in [0, 1], got {rate}")
-    if not 0.0 <= spm_frac <= 1.0:
-        raise ValueError(f"spm_frac must be in [0, 1], got {spm_frac}")
-    key = F.col(key_col).cast("string")
-    text = F.col(text_col)
-    n = F.length(text)
-
-    def draw(salt: str) -> Column:
-        return F.conv(
-            F.substring(F.md5(F.concat(key, F.lit(salt))), 1, 15), 16, 10
-        ).cast("long")
-
-    applied = text.isNotNull() & (
-        F.pmod(draw(":fim:apply"), F.lit(MIX_BUCKETS))
-        < F.lit(int(round(rate * MIX_BUCKETS)))
-    )
-    a = F.pmod(draw(":fim:a"), n + F.lit(1))
-    b = F.pmod(draw(":fim:b"), n + F.lit(1))
-    c1, c2 = F.least(a, b), F.greatest(a, b)
-    prefix = text.substr(F.lit(1), c1)
-    middle = text.substr(c1 + F.lit(1), c2 - c1)
-    suffix = text.substr(c2 + F.lit(1), n - c2)
-    spm = (
-        F.pmod(draw(":fim:mode"), F.lit(MIX_BUCKETS))
-        < F.lit(int(round(spm_frac * MIX_BUCKETS)))
-    )
-    mode = (
-        F.when(~applied, F.lit("none"))
-        .when(spm, F.lit("spm"))
-        .otherwise(F.lit("psm"))
-    )
-    psm_text = F.concat(
-        F.lit(pre_tok), prefix, F.lit(suf_tok), suffix, F.lit(mid_tok), middle
-    )
-    spm_text = F.concat(
-        F.lit(suf_tok), suffix, F.lit(pre_tok), prefix, F.lit(mid_tok), middle
-    )
-    return df.select(
-        "*",
-        mode.alias("fim_mode"),
-        F.when(applied, prefix).alias("fim_prefix"),
-        F.when(applied, middle).alias("fim_middle"),
-        F.when(applied, suffix).alias("fim_suffix"),
-        F.when(~applied, text)
-        .when(spm, spm_text)
-        .otherwise(psm_text)
-        .alias("fim_text"),
-    )
-
-
 def with_oov_ratio(
     df: DataFrame,
     vocab: DataFrame,

@@ -1,6 +1,6 @@
 """One exact summing loop for the fixed-point trainers: k-means (and
-through it PQ, IVF-PQ and SemDeDup), the top principal component,
-logistic regression and Fellegi–Sunter EM. Each of their iterations
+through it PQ, IVF-PQ and SemDeDup), logistic regression and
+Fellegi–Sunter EM. Each of their iterations
 sums an int64 vector over all rows, then updates model-sized state on
 the driver; integer addition is associative, so :func:`exact_sums`
 gives the same bits in both tiers and under every partitioning.

@@ -354,15 +354,6 @@ def embedding_dup_pairs(
     )
 
 
-def centroid_sq_dist(center: list[float], vec: Column) -> Column:
-    """Squared L2 distance to one centroid — identical fold order on
-    every engine: ``(a-b)*(a-b)`` left-summed, mirrored by the DuckDB
-    oracles (plans/ml_ops.py)."""
-    w = F.array(*[F.lit(x) for x in center])
-    diffs = F.zip_with(vec, w, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def _scored_centroids_mat(vec: Column, mat: Column, k: int) -> Column:
     """``(sq_dist, cid)`` structs over a centroid MATRIX column of
     ``k`` rows — the shared arithmetic core of :func:`scored_centroids`
@@ -459,74 +450,12 @@ def normalize_embedding(vec: Column) -> Column:
     return _bind(_bind(vec, _with_norm), _divide)
 
 
-def cluster_assign_arrow(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_vec: bool = False,
-    normalize: bool = True,
-) -> DataFrame:
-    """Large-k nearest-centroid assignment via an Arrow-batched
-    ``mapInPandas`` (numpy matrix product per batch) — the scale path
-    when the cluster count makes the plan-constant expression of
-    :func:`cluster_assign` impractical: that expression is O(k·dim)
-    literals per row and falls out of whole-stage codegen around
-    k ≈ 50-100 (measured: at 20k vectors, dim 64, the k=64 expression
-    assignment is SLOWER than k=8 despite 8× fewer downstream pairs —
-    PLANS.md round-8 audit), whereas SemDeDup at web scale wants
-    thousands of clusters. Here each Arrow batch computes all
-    distances as one BLAS ``X @ C.T`` — per-row cost O(k·dim) flops at
-    matrix-multiply throughput, still zero shuffle.
-
-    Ties break to the lowest centroid id (numpy argmin = first
-    minimum), matching the expression path's (d, cid) order; float
-    summation order differs from the sequential fold, so assignments
-    can differ on exact-tie boundaries — measure-zero for real
-    embeddings (the equivalence test asserts full agreement on the
-    driver corpus). This is the documented Python-on-the-hot-path
-    exception: vectorized Arrow batches, never per-row Python."""
-    import numpy as np
-    import pandas as pd
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cn = (C * C).sum(axis=1)
-    out_schema = f"{id_col} long, cluster int"
-    if keep_vec:
-        out_schema = f"{id_col} long, {vec_col} array<float>, cluster int, _nrm double"
-
-    def _assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            nrm = np.sqrt((X * X).sum(axis=1))
-            if normalize:
-                safe = np.where(nrm > 0, nrm, 1.0)
-                U = X / safe[:, None]
-            else:
-                U = X
-            # argmin_k ||u - c_k||² = argmin_k (||c_k||² - 2 u·c_k)
-            d = cn[None, :] - 2.0 * (U @ C.T)
-            cl = np.argmin(d, axis=1).astype("int32")
-            cols = {id_col: pdf[id_col].to_numpy(), "cluster": cl}
-            if keep_vec:
-                cols[vec_col] = pdf[vec_col]
-                cols["_nrm"] = nrm
-            yield pd.DataFrame(cols)
-
-    return corpus.select(id_col, vec_col).mapInPandas(_assign, out_schema)
-
-
 def semantic_dedup_pairs(
     corpus: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow_assign: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -551,12 +480,8 @@ def semantic_dedup_pairs(
 
     Returns ``(id_a, id_b, cluster, cos_sim)`` with ``id_a < id_b``;
     cosine rounded to 6 before the threshold compare so engines agree
-    at the boundary. ``arrow_assign=True`` swaps the plan-constant
-    assignment expression for :func:`cluster_assign_arrow` — use it
-    when the cluster count is production-sized (see that function's
-    codegen-ceiling note); the exact-oracle gate keeps the expression
-    path."""
-    side = _sem_side(corpus, centroids, id_col, vec_col, arrow_assign)
+    at the boundary."""
+    side = _sem_side(corpus, centroids, id_col, vec_col)
     return _sem_pairs_from_side(side, threshold, id_col)
 
 
@@ -565,7 +490,6 @@ def _sem_side(
     centroids: list[list[float]],
     id_col: str,
     vec_col: str,
-    arrow_assign: bool = False,
 ) -> DataFrame:
     """Materialized SemDeDup working set ``(id, vec, cluster, ‖v‖)``.
 
@@ -579,10 +503,6 @@ def _sem_side(
     counts — is evaluated ONCE per vector instead of once per join
     side per consumer. The hoisted norm is the identical sqrt(dot)
     fold, so pair cosines stay bit-identical to the oracle."""
-    if arrow_assign:
-        return cluster_assign_arrow(
-            corpus, centroids, id_col=id_col, vec_col=vec_col, keep_vec=True
-        ).localCheckpoint()
     unit = normalize_embedding(F.col(vec_col))
     cl = F.element_at(nearest_centroids(unit, centroids, 1), 1)
     return corpus.select(
@@ -624,7 +544,6 @@ def semantic_dedup_survivors(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow_assign: bool = False,
 ) -> DataFrame:
     """Greedy SemDeDup keep-set: within each cluster, drop any vector
     that has a near-duplicate (cosine ≥ ``threshold``) with a SMALLER
@@ -633,7 +552,7 @@ def semantic_dedup_survivors(
     exactly like the published method). One left-anti join of the
     corpus against the pair list's ``id_b`` side. Returns the
     surviving ``(id, cluster)`` rows."""
-    side = _sem_side(corpus, centroids, id_col, vec_col, arrow_assign)
+    side = _sem_side(corpus, centroids, id_col, vec_col)
     pairs = _sem_pairs_from_side(side, threshold, id_col)
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
     assigned = side.select(F.col(id_col), F.col("cluster").cast("int").alias("cluster"))
@@ -699,73 +618,6 @@ def ivf_topk(
         .filter(F.col("rank") <= k)
         .select(
             F.col("_pid").alias(probe_id_col),
-            F.col("rank").cast("int").alias("rank"),
-            F.col("_cid").alias("neighbor_id"),
-            F.round("_cos", 6).alias("cos_sim"),
-        )
-    )
-
-def hard_negatives_ivf(
-    corpus: DataFrame,
-    anchors: DataFrame,
-    centroids: list[list[float]],
-    k: int = 5,
-    lo: float = 0.3,
-    hi: float = 0.8,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    anchor_id_col: str = "anchor_id",
-    anchor_vec_col: str = "anchor_vec",
-) -> DataFrame:
-    """IVF scale tier of :func:`hard_negatives` — the variant for
-    LARGE anchor sets, where broadcasting anchors against the full
-    corpus (the brute tier's plan) stops being one cheap map-side
-    pass: corpus vectors live in their nearest-centroid inverted list
-    (:func:`ivf_topk`'s layout, trained once via :func:`kmeans_train_fx`),
-    each anchor probes only its ``n_probe`` nearest cells, and the
-    band + rank run inside the probed lists. The candidate join is a
-    hash equi-join on cluster id — never a cross join — and the band
-    filter commutes with cell pruning (it only removes rows ranked
-    downstream), so at ``n_probe = n_clusters`` the output EQUALS the
-    brute tier exactly (the recall contract the unit suite pins);
-    below that it is the standard IVF recall trade."""
-    if not (0.0 <= lo < hi <= 1.0 + 1e-12):
-        raise ValueError(f"need 0 <= lo < hi <= 1, got [{lo}, {hi})")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-
-    c = corpus.select(
-        F.col(id_col).alias("_cid"),
-        F.col(vec_col).alias("_cvec"),
-        F.element_at(nearest_centroids(F.col(vec_col), centroids, 1), 1)
-        .alias("_cluster"),
-        l2_norm(F.col(vec_col)).alias("_cnrm"),
-    )
-    a = anchors.select(
-        F.col(anchor_id_col).alias("_pid"),
-        F.col(anchor_vec_col).alias("_pvec"),
-        F.explode(
-            nearest_centroids(F.col(anchor_vec_col), centroids, n_probe)
-        ).alias("_cluster"),
-        l2_norm(F.col(anchor_vec_col)).alias("_pnrm"),
-    )
-    den = F.col("_pnrm") * F.col("_cnrm")
-    cos = F.when(den > 0, dot(F.col("_pvec"), F.col("_cvec")) / den).otherwise(
-        F.lit(0.0)
-    )
-    scored = (
-        c.join(a, "_cluster")
-        .filter(F.col("_pid") != F.col("_cid"))
-        .withColumn("_cos", cos)
-        .filter((F.col("_cos") >= lo) & (F.col("_cos") < hi))
-    )
-    w = Window.partitionBy("_pid").orderBy(F.desc("_cos"), F.asc("_cid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_pid").alias(anchor_id_col),
             F.col("rank").cast("int").alias("rank"),
             F.col("_cid").alias("neighbor_id"),
             F.round("_cos", 6).alias("cos_sim"),
@@ -970,92 +822,6 @@ def embedding_decontaminate_ivf(
     )
 
 
-def embedding_decontaminate_arrow(
-    corpus: DataFrame,
-    bench_matrix: "list[tuple[int, list[float]]]",
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/BLAS tier of :func:`embedding_decontaminate` — the same
-    production-scale escape hatch as :func:`cluster_assign_arrow`: the
-    expression tier pays an interpreted dot-fold per (corpus, bench)
-    pair (measured 12 s for 19k x 1k at dim 64 — PLANS.md round-8
-    audit), where one BLAS ``X @ B.T`` per Arrow batch does the same
-    flops at matmul throughput. Use when the benchmark set is
-    thousands+ of vectors; the expression tier remains the
-    oracle-exact gate.
-
-    ``bench_matrix`` is the collected benchmark as ``[(bench_id,
-    vector), ...]`` — benchmarks are small by definition (the same
-    rationale as the broadcast in the expression tier); collect once
-    via ``prepare_bench_matrix`` and reuse across corpora/batches.
-
-    Output schema matches the expression tier: ``(id, bench_id,
-    cos_sim, n_bench_hits)`` for flagged rows, cos rounded to 6,
-    threshold applied to the rounded value, argmax ties to the
-    smallest bench id. BLAS summation order differs from the
-    sequential fold by ulps, so rows at the exact rounding boundary
-    can differ — the documented Arrow-tier trade (equivalence asserted
-    on the driver corpus by the unit suite)."""
-    import numpy as np
-    import pandas as pd
-
-    ids = np.asarray([i for i, _ in bench_matrix], dtype=np.int64)
-    B = np.asarray([v for _, v in bench_matrix], dtype=np.float64)
-    order = np.argsort(ids, kind="stable")
-    ids, B = ids[order], B[order]  # argmax ties -> smallest bench id
-    bn = np.sqrt((B * B).sum(axis=1))
-    out_schema = f"{id_col} long, bench_id long, cos_sim double, n_bench_hits long"
-
-    def _screen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            xn = np.sqrt((X * X).sum(axis=1))
-            den = xn[:, None] * bn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, (X @ B.T) / den, 0.0)
-            # self-pairs excluded like the expression tier
-            cid = pdf[id_col].to_numpy()
-            cos[cid[:, None] == ids[None, :]] = -np.inf
-            cos = np.round(cos, 6)
-            hits = cos >= threshold
-            n_hits = hits.sum(axis=1)
-            flagged = n_hits > 0
-            if not flagged.any():
-                continue
-            best = np.argmax(cos[flagged], axis=1)
-            yield pd.DataFrame({
-                id_col: cid[flagged],
-                "bench_id": ids[best],
-                "cos_sim": cos[flagged, best],
-                "n_bench_hits": n_hits[flagged].astype(np.int64),
-            })
-
-    return corpus.select(id_col, vec_col).mapInPandas(_screen, out_schema)
-
-
-def prepare_bench_matrix(
-    bench: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> "list[tuple[int, list[float]]]":
-    """Collect the benchmark side once for
-    :func:`embedding_decontaminate_arrow` — bounded by the same cap as
-    the expression tier's broadcast (raises past it: a benchmark that
-    large should ride the shuffle path of the expression tier)."""
-    cap = MAX_BROADCAST_BENCH_VECS
-    rows = bench.select(id_col, vec_col).limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"benchmark exceeds {cap} vectors; use the expression "
-            "tier's shuffle fallback instead"
-        )
-    return [(r[0], list(r[1])) for r in rows]
-
-
 # ---------------------------------------------------------------------------
 # Product quantization (Jégou, Douze & Schmid 2011, "Product
 # quantization for nearest neighbor search")
@@ -1134,10 +900,10 @@ def pq_encode(
     """Encode every vector to its ``m`` nearest-subcentroid codes —
     pure map-side expressions over codebook plan constants (the
     ``cluster_assign`` argmin per subspace; ties (d, cid)-lexicographic
-    so both engines agree). Zero shuffle. For codebook budgets beyond
-    expression reach (m*k in the thousands) the ``cluster_assign_arrow``
-    convention applies per subspace — this expression tier is the
-    oracle-mirrorable gate path. Returns ``(id, pq_code array<int>)``.
+    so both engines agree). Zero shuffle. The expression carries m*k
+    centroid literals per row, so codebook budgets stay below the
+    thousands where whole-stage codegen gives out; this expression
+    tier is the oracle-mirrorable path. Returns ``(id, pq_code array<int>)``.
 
     Raises ``ValueError`` unless ``codebooks`` is non-empty, every
     codebook holds the same number ``k >= 1`` of centroids and every
@@ -1569,382 +1335,6 @@ def _fx_partial_sums(books: "list[list[list[float]]]", vec_col: str):
         return np.concatenate([N.ravel(), S.ravel()])
 
     return _sums
-
-
-def top_pc_fx(
-    corpus: DataFrame,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "pc",
-) -> "tuple[list[float], list[float], int]":
-    """Top principal component of the embedding corpus by fixed-point
-    power iteration (von Mises iteration over the centered second
-    moment) — the model behind all-but-the-top embedding
-    postprocessing (Mu & Viswanath, ICLR 2018: isotropy improves after
-    removing the common mean + dominant direction), anisotropy
-    diagnostics, and spectral corpus profiling. Returns ``(mu, v, n)``
-    — the per-coordinate mean, the unit top-PC direction, and the row
-    count — as plan constants for map-side serving.
-
-    Never materializes the d×d covariance. Every pass is one
-    :func:`fixpoint.exact_sums` sum on the :data:`KMEANS_FX_SCALE`
-    lattice (the :func:`kmeans_train_fx` recipe): first the mean, then
-    per iteration ``Σ_i round(d_i (x_ij − μ_j) * fx)`` with ``d_i =
-    (x_i − μ)·v_t`` folded left from ``0.0``; the driver renormalizes
-    in fixed coordinate order. Init
-    is the centered vector of the ``(md5(salt:id), id)``-smallest row,
-    unit-normalized — fully deterministic, so the DuckDB oracle replays
-    the ENTIRE run (plans/ml_ops.py ``ORACLE_EMB_TOP_PC``); the sign of
-    ``v`` is the deterministic sign the init's projection fixes (power
-    iteration never flips it).
-
-    int64 headroom per coordinate is ``|d_i (x_ij − μ_j)| * fx *
-    rows`` — at unit-scale embeddings and fx 1e6 that allows ~1e9
-    rows; coarsen the grid or sum hierarchically past that."""
-    if iters < 0:
-        raise ValueError(f"iters must be >= 0, got {iters}")
-    import numpy as np
-
-    fx = float(KMEANS_FX_SCALE)
-
-    def mean_sums(cols):  # the row count, then Σ round(x_j * fx)
-        X = cols[vec_col]
-        return np.concatenate([[len(X)], half_up(X * fx).sum(axis=0)])
-
-    def fold_sums(cols):  # Σ round(d * (x_j − μ_j) * fx), d folded left
-        c = cols[vec_col] - np.asarray(mu)
-        d = np.zeros(len(c))
-        for j, vj in enumerate(cur):
-            d = d + c[:, j] * vj
-        return half_up(d[:, None] * c * fx).sum(axis=0)
-
-    with exact_sums(corpus, [vec_col]) as total:
-        tot = total(mean_sums)
-        if not tot:
-            raise ValueError("top_pc_fx: empty corpus")
-        n = tot[0]
-        mu = [float(s) / (fx * float(n)) for s in tot[1:]]
-        seed = (
-            corpus.select(F.col(id_col), F.col(vec_col))
-            .orderBy(
-                F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string"))),
-                F.col(id_col),
-            )
-            .limit(1)
-            .collect()[0]
-        )
-        cur = [float(x) - m for x, m in zip(seed[vec_col], mu)]
-        nrm = _host_l2(cur)
-        if nrm == 0.0:
-            raise ValueError(
-                "top_pc_fx: the md5-seed row equals the corpus mean — "
-                "degenerate init (pass a different salt)"
-            )
-        cur = [x / nrm for x in cur]
-        for _ in range(iters):
-            raw = [float(s) / fx for s in total(fold_sums)]
-            nrm = _host_l2(raw)
-            if nrm == 0.0:  # centered corpus annihilated the iterate
-                break
-            cur = [x / nrm for x in raw]
-    return mu, cur, n
-
-
-def _host_l2(xs: "list[float]") -> float:
-    """Driver-side L2 norm in FIXED ascending-coordinate order — the
-    exact left fold the DuckDB oracles replay with ``list_reduce``
-    (``0.0 + a ≡ a`` under IEEE, so the init-vs-first-element
-    difference is exact)."""
-    import math
-
-    s = 0.0
-    for x in xs:
-        s += x * x
-    return math.sqrt(s)
-
-
-def kcenter_select(
-    corpus: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "kc",
-) -> "list[tuple[int, int, float | None, list[float]]]":
-    """Greedy k-center / farthest-point DIVERSITY selection (Gonzalez,
-    TCS 1985 — the 2-approximation for minimax-radius cover; the
-    core-set data-selection recipe of Sener & Savarese, ICLR 2018):
-    pick a deterministic md5-seeded start, then ``k - 1`` times the
-    point FARTHEST (max-min squared L2) from everything selected so
-    far — the maximally diverse training-data subset, the opposite
-    knob from SemDeDup's redundancy removal.
-
-    Returns ``[(sel_rank, id, radius, vector), ...]`` where ``radius``
-    is the selected point's min squared distance to all earlier picks
-    at selection time (round-6, the engine-parity convention; ``None``
-    for the seed) — a non-increasing sequence, and the cover radius of
-    the first ``r`` picks is row ``r + 1``'s value. Feed the vectors
-    to :func:`cluster_assign` to materialize the cover assignment.
-
-    Determinism: the seed is the smallest ``(md5(salt:id), id)``; each
-    round's argmax breaks ties on the smallest id; every pairwise
-    distance goes through :func:`centroid_sq_dist`'s left fold and is
-    rounded to 6 before the min/argmax, so the DuckDB oracle replays
-    the whole greedy run CTE-for-CTE (plans/ml_ops.py
-    ``ORACLE_EMB_KCENTER_SELECT``). Selected ids leave the pool, so
-    exact-duplicate vectors can never re-select a center.
-
-    At 100 TB: per round one map (update the single running ``_mind``
-    column against the new center, a plan constant) + one TakeOrdered
-    — k scans total, k model-scale collects, state is one double per
-    row localCheckpointed per round (the ``neardup_clusters``
-    convention, keeping the plan linear instead of k-deep)."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    pool = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    seed_rows = (
-        pool.orderBy(
-            F.md5(F.concat(F.lit(salt + ":"), F.col("_id").cast("string"))),
-            F.col("_id"),
-        )
-        .limit(1)
-        .collect()
-    )
-    if not seed_rows:
-        raise ValueError("kcenter_select: empty corpus")
-    seed = seed_rows[0]
-    seed_vec = [float(x) for x in seed["_v"]]
-    selected: list[tuple[int, int, float | None, list[float]]] = [
-        (1, seed["_id"], None, seed_vec)
-    ]
-    cur = (
-        pool.filter(F.col("_id") != seed["_id"])
-        .withColumn(
-            "_mind", F.round(centroid_sq_dist(seed_vec, F.col("_v")), 6)
-        )
-        .localCheckpoint()
-    )
-    for rank in range(2, k + 1):
-        top_rows = (
-            cur.orderBy(F.desc("_mind"), F.asc("_id")).limit(1).collect()
-        )
-        if not top_rows:  # pool exhausted (k > |corpus|)
-            break
-        top = top_rows[0]
-        vec = [float(x) for x in top["_v"]]
-        selected.append((rank, top["_id"], float(top["_mind"]), vec))
-        cur = (
-            cur.filter(F.col("_id") != top["_id"])
-            .withColumn(
-                "_mind",
-                F.least(
-                    F.col("_mind"),
-                    F.round(centroid_sq_dist(vec, F.col("_v")), 6),
-                ),
-            )
-            .localCheckpoint()
-        )
-    return selected
-
-
-def matryoshka_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    dims: "tuple[int, ...]" = (16, 32, 64),
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "query_id",
-    probe_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Matryoshka prefix-dimension retrieval (Kusupati et al.,
-    "Matryoshka Representation Learning", NeurIPS 2022): serve exact
-    cosine top-k at each PREFIX truncation of the embedding — the
-    adaptive-deployment trade MRL-trained encoders exist for (coarse
-    dims for cheap shortlist, full dims for final ranking), quantified
-    the same way :func:`quantize_embedding`'s int8 tier is: per-tier
-    ranks side by side plus an ``in_full_topk`` agreement flag against
-    the largest-dim tier.
-
-    Output: ``(tier, probe_id, rank, neighbor_id, cos_sim,
-    in_full_topk)`` with ``tier = 'd<dim>'`` — one :func:`cosine_topk`
-    run per dim over ``slice(vec, 1, d)``; the flag marks whether the
-    row's neighbor also appears in the reference (largest-dim) top-k
-    for its query.
-
-    Scale shape: truncation is a map-side ``slice`` (at 100 TB the
-    real win is scanning d/D of the vector bytes — with a columnar
-    layout storing prefix blocks separately, the narrow tiers read
-    proportionally less); each tier is the brute generator's
-    broadcast-probes shape; the agreement join broadcasts the
-    (|probes|·k)-row reference relation. Every tier is rounded-6 /
-    smallest-id deterministic, so the whole union hashes against one
-    static oracle."""
-    ds = sorted({int(d) for d in dims})
-    if not ds or ds[0] < 1:
-        raise ValueError(f"dims must be positive, got {dims!r}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    out = None
-    for d in ds:
-        c = corpus.select(
-            F.col(id_col), F.slice(F.col(vec_col), 1, d).alias(vec_col)
-        )
-        p = probes.select(
-            F.col(probe_id_col),
-            F.slice(F.col(probe_vec_col), 1, d).alias(probe_vec_col),
-        )
-        t = cosine_topk(
-            c, p, k=k, id_col=id_col, vec_col=vec_col,
-            probe_id_col=probe_id_col, probe_vec_col=probe_vec_col,
-        ).select(F.lit(f"d{d}").alias("tier"), "*")
-        out = t if out is None else out.unionByName(t)
-    ref = (
-        out.filter(F.col("tier") == f"d{ds[-1]}")
-        .select(
-            F.col(probe_id_col),
-            "neighbor_id",
-            F.lit(True).alias("in_full_topk"),
-        )
-    )
-    return (
-        out.join(F.broadcast(ref), [probe_id_col, "neighbor_id"], "left")
-        .select(
-            "tier", probe_id_col, "rank", "neighbor_id", "cos_sim",
-            F.coalesce(F.col("in_full_topk"), F.lit(False)).alias(
-                "in_full_topk"
-            ),
-        )
-    )
-
-
-def mmr_rerank(
-    cands: DataFrame,
-    k: int = 5,
-    lam: float = 0.5,
-    query_col: str = "query_id",
-    id_col: str = "cand_id",
-    rel_col: str = "rel",
-    vec_col: str = "cand_vec",
-) -> DataFrame:
-    """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
-    SIGIR 1998) — the retrieval-DIVERSITY pass downstream of any of
-    the ANN/topk generators: per query, greedily select ``k``
-    candidates maximizing ``lam·rel(d) − (1−lam)·max_{s∈S} sim(d, s)``
-    so the result list trades relevance against redundancy (the
-    per-query sibling of :func:`kcenter_select`'s corpus-global
-    diversity pick; with an empty selected set the second term is 0,
-    so round one is the pure-relevance argmax and one formula covers
-    every round).
-
-    Input: one row per (query, candidate) — a BOUNDED candidate list
-    per query (top-c from a prior retrieval stage; c is a constant,
-    never corpus-scale) with a relevance score and the candidate's
-    embedding. Output: ``(query, mmr_rank, candidate, mmr_score)``,
-    ranks 1..k per query (fewer when the list exhausts).
-
-    Determinism: relevances and every pairwise candidate cosine are
-    rounded to 6 before any comparison; each round's argmax breaks
-    ties on the smallest candidate id — so the DuckDB oracle replays
-    the greedy round-for-round (plans/ml_ops.py
-    ``ORACLE_EMB_MMR_RERANK`` unrolls it CTE-for-CTE).
-
-    Scale shape: unlike :func:`kcenter_select` (k global picks,
-    model-scale collects), MMR picks one candidate PER QUERY per
-    round, so picks stay a DataFrame — NOTHING is collected. The
-    pairwise-sim relation is one query-keyed equi-self-join (|Q|·c²
-    rows, quadratic only in the bounded c), built ONCE with hoisted
-    norms and localCheckpointed; each of the k rounds is one window
-    argmax + two query-keyed equi-joins on checkpointed state (the
-    ``neardup_clusters`` linear-lineage convention). Every shuffle
-    key is the query id — the natural partitioning a 100 TB query
-    log already has."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1], got {lam}")
-    base = cands.select(
-        F.col(query_col).alias("_q"),
-        F.col(id_col).alias("_id"),
-        F.round(F.col(rel_col).cast("double"), 6).alias("_rel"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-    )
-    a = base.select(
-        "_q",
-        F.col("_id").alias("_a"),
-        F.col("_v").alias("_av"),
-        F.col("_n").alias("_an"),
-    )
-    b = base.select(
-        "_q",
-        F.col("_id").alias("_b"),
-        F.col("_v").alias("_bv"),
-        F.col("_n").alias("_bn"),
-    )
-    den = F.col("_an") * F.col("_bn")
-    sim = F.round(
-        F.when(den > 0, dot(F.col("_av"), F.col("_bv")) / den).otherwise(
-            F.lit(0.0)
-        ),
-        6,
-    )
-    sims = (
-        a.join(b, "_q")
-        .filter(F.col("_a") != F.col("_b"))
-        .select(
-            F.col("_q").alias("_sq"), "_a", "_b", sim.alias("_sim")
-        )
-        .localCheckpoint()
-    )
-    pool = base.select(
-        "_q", "_id", "_rel", F.lit(0.0).alias("_ms")
-    ).localCheckpoint()
-    w = Window.partitionBy("_q").orderBy(F.desc("_score"), F.asc("_id"))
-    out = None
-    for r in range(1, k + 1):
-        scored = pool.withColumn(
-            "_score",
-            F.lit(lam) * F.col("_rel") - F.lit(1.0 - lam) * F.col("_ms"),
-        )
-        picks = (
-            scored.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select(
-                "_q",
-                F.col("_id").alias("_pid"),
-                F.round(F.col("_score"), 6).alias("_pscore"),
-            )
-        )
-        out_r = picks.select(
-            F.col("_q").alias(query_col),
-            F.lit(r).cast("int").alias("mmr_rank"),
-            F.col("_pid").alias(id_col),
-            F.col("_pscore").alias("mmr_score"),
-        )
-        out = out_r if out is None else out.unionByName(out_r)
-        if r < k:
-            pool = (
-                pool.join(picks.select("_q", "_pid"), "_q")
-                .filter(F.col("_id") != F.col("_pid"))
-                .join(
-                    sims,
-                    (F.col("_sq") == F.col("_q"))
-                    & (F.col("_a") == F.col("_id"))
-                    & (F.col("_b") == F.col("_pid")),
-                    "left",
-                )
-                .select(
-                    "_q",
-                    "_id",
-                    "_rel",
-                    F.greatest(
-                        F.col("_ms"), F.coalesce(F.col("_sim"), F.lit(0.0))
-                    ).alias("_ms"),
-                )
-                .localCheckpoint()
-            )
-    return out
 
 
 def jl_matrix(k: int, dim: int) -> list[list[float]]:

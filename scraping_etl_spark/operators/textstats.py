@@ -10,8 +10,9 @@ which stops at regex scrubbing — DB/ETL.ipynb cell 25, raw 846-868):
 - :func:`tokens` — whitespace tokenization.
 - :func:`with_text_stats` — token/char counts, distinct-token ratio,
   mean token length (quality-scoring signals).
-- :func:`with_stopword_ratio` / :func:`with_lang_id` — n-gram-free
-  language-ID heuristic via per-language stopword hit ratios.
+- :func:`stopword_ratio` — per-language stopword hit ratio (a
+  classifier feature); :func:`lang_segments` votes with the same
+  stopword hit counts per token window.
 - :func:`char_ngram_profiles` / :func:`lang_id_ngram` — the canonical
   N-GRAM language ID (Cavnar & Trenkle 1994 rank profiles +
   out-of-place measure), the trainable tier above the stopword
@@ -90,28 +91,6 @@ def stopword_ratio(text_col: str, lang: str = "en") -> Column:
     toks = tokens(text_col, lowercase=True)
     hits = F.size(F.filter(toks, _stopword_member(STOPWORDS[lang])))
     return F.round(hits / F.greatest(F.size(toks), F.lit(1)), 6)
-
-
-def with_lang_id(df: DataFrame, text_col: str = "text", langs: tuple[str, ...] = ("en", "de", "es", "fr")) -> DataFrame:
-    """Heuristic language ID: argmax of per-language stopword hit counts,
-    ties broken by ``langs`` order, 'unknown' when nothing hits."""
-    toks = tokens(text_col, lowercase=True)
-    scores = {
-        lang: F.size(F.filter(toks, _stopword_member(STOPWORDS[lang])))
-        for lang in langs
-    }
-    best = F.lit("unknown")
-    best_score = F.lit(0)
-    # fold right-to-left so earlier langs win ties (>= comparison)
-    for lang in reversed(langs):
-        take = scores[lang] >= best_score
-        gate = scores[lang] > 0
-        best = F.when(gate & take, F.lit(lang)).otherwise(best)
-        best_score = F.when(gate & take, scores[lang]).otherwise(best_score)
-    out = df.withColumn("lang_pred", best)
-    for lang in langs:
-        out = out.withColumn(f"score_{lang}", scores[lang].cast("long"))
-    return out
 
 
 def type_profile(df: DataFrame) -> DataFrame:
@@ -793,90 +772,6 @@ def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-#: Rounded-ease band edges for :func:`with_readability` — the standard
-#: Flesch score interpretation table, compared on the ROUNDED score so
-#: the banding is engine-portable.
-READABILITY_BANDS = ((90.0, "very_easy"), (70.0, "easy"),
-                     (50.0, "medium"), (30.0, "hard"))
-
-
-def with_readability(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Flesch reading ease + Flesch–Kincaid grade level (Flesch 1948;
-    Kincaid et al. 1975, the canonical readability pair corpus quality
-    pipelines bucket documents by — a curriculum/difficulty signal
-    orthogonal to the rule and classifier tiers).
-
-    Deterministic, engine-portable text model (every piece mirrored in
-    the DuckDB oracle):
-
-    - words   = the ``[a-z]+`` letter runs of the lowercased text;
-    - syllables per word = count of ``[aeiouy]+`` vowel groups, minus
-      one for a trailing silent e (``[^aeiouy]e$``) when more than one
-      group, floored at one (the standard heuristic — no dictionary);
-    - sentences = ``[.!?]+`` terminator runs over the raw text,
-      floored at one whenever the document has words.
-
-    Scores (fixed left-assoc order, rounded 6):
-
-    - ``flesch_reading_ease`` = 206.835 − 1.015·(W/S) − 84.6·(Syl/W)
-    - ``fk_grade``            = 0.39·(W/S) + 11.8·(Syl/W) − 15.59
-
-    plus ``readability_band`` from :data:`READABILITY_BANDS` on the
-    rounded ease (``empty`` for wordless/NULL docs, whose scores are
-    NULL).
-
-    Scale shape: pure map-side per-row array expressions — no explode
-    to word rows, no join, no shuffle; whole-stage codegen at any
-    corpus size (the :func:`with_char_entropy` discipline)."""
-    words = F.expr(
-        f"regexp_extract_all(lower({text_col}), '[a-z]+', 0)"
-    )
-    out = df.withColumn("_w", words)
-    n_words = F.when(
-        F.col(text_col).isNull(), F.lit(0)
-    ).otherwise(F.size(F.col("_w"))).cast("long")
-    out = out.withColumn("n_words", n_words)
-
-    def syl(w: Column) -> Column:
-        vg = F.regexp_count(w, F.lit("[aeiouy]+"))
-        return F.when(
-            (vg > 1) & w.rlike("[^aeiouy]e$"), vg - 1
-        ).otherwise(F.greatest(vg, F.lit(1))).cast("long")
-
-    n_syl = F.when(F.col("n_words") > 0, F.aggregate(
-        F.transform(F.col("_w"), syl),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )).otherwise(F.lit(0)).cast("long")
-    out = out.withColumn("n_syllables", n_syl)
-    n_sent = F.when(
-        F.col("n_words") > 0,
-        F.greatest(
-            F.regexp_count(F.col(text_col), F.lit("[.!?]+")), F.lit(1)
-        ),
-    ).otherwise(F.lit(0)).cast("long")
-    out = out.withColumn("n_sentences", n_sent)
-    wps = F.col("n_words").cast("double") / F.col("n_sentences").cast("double")
-    spw = F.col("n_syllables").cast("double") / F.col("n_words").cast("double")
-    ease = F.round(
-        F.lit(206.835) - F.lit(1.015) * wps - F.lit(84.6) * spw, 6
-    )
-    grade = F.round(
-        F.lit(0.39) * wps + F.lit(11.8) * spw - F.lit(15.59), 6
-    )
-    has = F.col("n_words") > 0
-    out = out.withColumn(
-        "flesch_reading_ease", F.when(has, ease)
-    ).withColumn("fk_grade", F.when(has, grade))
-    band = F.when(~has, F.lit("empty"))
-    for edge, name in READABILITY_BANDS:
-        band = band.when(
-            F.col("flesch_reading_ease") >= edge, F.lit(name)
-        )
-    band = band.otherwise(F.lit("very_hard"))
-    return out.withColumn("readability_band", band).drop("_w")
-
-
 def keyword_extract(
     df: DataFrame,
     top_k: int = 3,
@@ -1163,9 +1058,9 @@ def lang_segments(
     English boilerplate frame around native content; a doc-level label
     mislabels every such page and a doc-level filter throws away the
     good half). Fixed windows of ``chunk_tokens`` tokens get the
-    stopword-hit language vote (:func:`with_lang_id`'s argmax, same
-    tie-break, 'unknown' when nothing hits), and consecutive same-label
-    windows collapse into segments.
+    stopword-hit language vote (argmax of per-language hit counts,
+    ties to the earlier language in ``langs``, 'unknown' when nothing
+    hits), and consecutive same-label windows collapse into segments.
 
     Plan: per-row token posexplode → one (doc, chunk) partial-agg
     shuffle carrying a hit-count column per language (plan constants,

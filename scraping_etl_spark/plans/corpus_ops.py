@@ -692,71 +692,6 @@ ORACLE_DOC_SPLIT_CORPUS = _split_oracle()
 
 
 # ---------------------------------------------------------------------------
-# Fill-in-the-middle transform (corpus_prep.fim_transform gate —
-# Bavarian et al. 2022, arXiv:2207.14255)
-# ---------------------------------------------------------------------------
-
-#: Paper defaults: FIM applied to half the corpus, split evenly
-#: between the PSM and SPM sentinel layouts.
-_FIM_RATE, _FIM_SPM_FRAC = 0.5, 0.5
-
-
-def q_doc_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FIM pretraining-transform gate: deterministic md5-drawn apply
-    decision, character cut points, and PSM/SPM mode per doc — a
-    zero-shuffle map-side projection (the split_corpus scale shape)
-    whose every output byte the oracle replays."""
-    d = load_table(spark, sf_dir, "documents")
-    return CP.fim_transform(d, rate=_FIM_RATE, spm_frac=_FIM_SPM_FRAC).select(
-        "doc_id", "fim_mode", "fim_prefix", "fim_middle", "fim_suffix", "fim_text"
-    )
-
-
-def _fim_oracle() -> str:
-    key = "CAST(doc_id AS VARCHAR)"
-
-    def draw(salt: str) -> str:
-        return f"(('0x' || substr(md5({key} || '{salt}'), 1, 15))::BIGINT)"
-
-    thr_rate = int(round(_FIM_RATE * CP.MIX_BUCKETS))
-    thr_spm = int(round(_FIM_SPM_FRAC * CP.MIX_BUCKETS))
-    return f"""
-WITH cuts AS (
-  SELECT doc_id, text,
-         (text IS NOT NULL AND
-          {draw(':fim:apply')} % {CP.MIX_BUCKETS} < {thr_rate}) AS applied,
-         least({draw(':fim:a')} % (length(text) + 1),
-               {draw(':fim:b')} % (length(text) + 1)) AS c1,
-         greatest({draw(':fim:a')} % (length(text) + 1),
-                  {draw(':fim:b')} % (length(text) + 1)) AS c2,
-         {draw(':fim:mode')} % {CP.MIX_BUCKETS} < {thr_spm} AS spm
-  FROM documents
-),
-parts AS (
-  SELECT doc_id, text, applied, spm,
-         substr(text, 1, c1) AS p,
-         substr(text, c1 + 1, c2 - c1) AS m,
-         substr(text, c2 + 1, length(text) - c2) AS s
-  FROM cuts
-)
-SELECT doc_id,
-       CASE WHEN NOT applied THEN 'none'
-            WHEN spm THEN 'spm' ELSE 'psm' END AS fim_mode,
-       CASE WHEN applied THEN p END AS fim_prefix,
-       CASE WHEN applied THEN m END AS fim_middle,
-       CASE WHEN applied THEN s END AS fim_suffix,
-       CASE WHEN NOT applied THEN text
-            WHEN spm THEN '<fim_suf>' || s || '<fim_pre>' || p || '<fim_mid>' || m
-            ELSE '<fim_pre>' || p || '<fim_suf>' || s || '<fim_mid>' || m
-       END AS fim_text
-FROM parts
-"""
-
-
-ORACLE_DOC_FIM_TRANSFORM = _fim_oracle()
-
-
-# ---------------------------------------------------------------------------
 # OOV ratio (corpus_prep.with_oov_ratio gate)
 # ---------------------------------------------------------------------------
 

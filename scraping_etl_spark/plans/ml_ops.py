@@ -638,78 +638,6 @@ SELECT 'int8' AS tier, * FROM int8_tier
 """
 
 
-# ---------------------------------------------------------------------------
-# Matryoshka prefix-dimension retrieval (similarity.matryoshka_topk) —
-# static oracle, per-tier replay + agreement flag.
-# ---------------------------------------------------------------------------
-
-_MAT_PROBES, _MAT_K, _MAT_DIMS = 16, 3, (16, 32, 64)
-
-
-def q_emb_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-truncation retrieval gate (Kusupati et al. NeurIPS'22):
-    exact cosine top-``_MAT_K`` at dims 16/32/64 for the first
-    ``_MAT_PROBES`` probes, tier-tagged with an ``in_full_topk``
-    agreement flag vs the full-dim tier — the dimension-reduction
-    serving trade beside ``emb_quantized_topk``'s int8 one. Each tier
-    is the brute generator over ``slice(embedding, 1, d)``; the
-    STATIC oracle folds the first d coordinates per tier and replays
-    ranks, ties and the agreement join."""
-    e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < _MAT_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    return SIM.matryoshka_topk(e, probes, dims=_MAT_DIMS, k=_MAT_K)
-
-
-def _matryoshka_oracle_sql() -> str:
-    def dotd(a: str, b: str, d: int) -> str:
-        return (
-            f"list_reduce(list_transform(generate_series(1, {d}), "
-            f"i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE), (x, y) -> x + y)"
-        )
-
-    tiers = []
-    for d in _MAT_DIMS:
-        dp = dotd("p.embedding", "e.embedding", d)
-        np_ = dotd("p.embedding", "p.embedding", d)
-        nc = dotd("e.embedding", "e.embedding", d)
-        tiers.append(f"""  SELECT 'd{d}' AS tier, query_id,
-         CAST(rk AS INTEGER) AS rank, neighbor_id, round(c, 6) AS cos_sim
-  FROM (
-    SELECT query_id, neighbor_id,
-           CASE WHEN den > 0 THEN dp / den ELSE 0.0 END AS c,
-           row_number() OVER (
-             PARTITION BY query_id
-             ORDER BY (CASE WHEN den > 0 THEN dp / den ELSE 0.0 END) DESC,
-                      neighbor_id) AS rk
-    FROM (
-      SELECT p.vec_id AS query_id, e.vec_id AS neighbor_id,
-             {dp} AS dp, sqrt({np_}) * sqrt({nc}) AS den
-      FROM probes p JOIN embeddings e ON p.vec_id <> e.vec_id
-    ) AS s
-  ) AS r WHERE rk <= {_MAT_K}""")
-    union = "\nUNION ALL\n".join(tiers)
-    return f"""
-WITH probes AS (
-  SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_MAT_PROBES}
-), all_tiers AS (
-{union}
-), ref AS (
-  SELECT query_id, neighbor_id
-  FROM all_tiers WHERE tier = 'd{max(_MAT_DIMS)}'
-)
-SELECT t.tier, t.query_id, t.rank, t.neighbor_id, t.cos_sim,
-       (r.neighbor_id IS NOT NULL) AS in_full_topk
-FROM all_tiers t LEFT JOIN ref r
-  ON r.query_id = t.query_id AND r.neighbor_id = t.neighbor_id
-"""
-
-
-ORACLE_EMB_MATRYOSHKA_TOPK = _matryoshka_oracle_sql()
-
-
 _ANN_PLANES, _ANN_PROBES = 6, 50
 
 
@@ -1775,369 +1703,6 @@ FROM fw"""
 ORACLE_EMB_KMEANS_TRAIN = _kmeans_oracle_sql(
     _KM_K, _KM_ITERS, _DIM, SIM.KMEANS_FX_SCALE
 )
-
-
-# ---------------------------------------------------------------------------
-# k-center / farthest-point diversity selection (similarity.
-# kcenter_select) — the greedy run AND the
-# cover assignment are both replayed by the oracle (host_pagerank
-# iterative-fixpoint convention).
-# ---------------------------------------------------------------------------
-
-_KC_K = 6
-
-
-@functools.lru_cache(maxsize=4)
-def _kcenter_selection(sf_dir: str) -> tuple:
-    """Select-once per scale dir (the ``_ivf_index`` convention): the
-    greedy run is bit-deterministic, so re-runs pay assignment only."""
-    from scraping_etl_spark.session import get_spark
-
-    spark = SparkSession.getActiveSession() or get_spark()
-    e = load_table(spark, sf_dir, "embeddings")
-    return tuple(
-        (rank, int(vid), rad, tuple(vec))
-        for rank, vid, rad, vec in SIM.kcenter_select(e, _KC_K)
-    )
-
-
-def q_emb_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diversity core-set gate (similarity.kcenter_select — Gonzalez
-    1985 greedy k-center, the Sener & Savarese ICLR'18 core-set
-    selection): run the deterministic farthest-point greedy for
-    ``_KC_K`` centers, then assign every corpus vector to its nearest
-    selected center. One row per vector: the assigned center's
-    selection rank and id, the squared distance (round-6), and the
-    center's selection radius (its max-min distance when picked; null
-    for the seed). The STATIC oracle replays the ENTIRE greedy run as
-    unrolled MATERIALIZED CTEs plus the same (distance, rank)-
-    lexicographic argmin — no selected constants cross over, so the
-    hash certifies both the selection fixpoint and the cover."""
-    e = load_table(spark, sf_dir, "embeddings")
-    sel = _kcenter_selection(sf_dir)
-    cents = [list(vec) for (_, _, _, vec) in sel]
-    ids = [vid for (_, vid, _, _) in sel]
-    radii = [rad for (_, _, rad, _) in sel]
-    id_arr = F.array(*[F.lit(int(i)).cast("long") for i in ids])
-    # radii[0] is None (the seed has no predecessors) — element_at over
-    # the rank>=2 slice keeps the null without a nullable array literal
-    rad_arr = F.array(*[F.lit(float(r)) for r in radii[1:]])
-    assigned = SIM.cluster_assign(e, cents)
-    return assigned.select(
-        "vec_id",
-        (F.col("cluster") + 1).cast("int").alias("center_rank"),
-        F.element_at(id_arr, F.col("cluster") + 1).alias("center_id"),
-        "sq_dist",
-        F.when(
-            F.col("cluster") > 0, F.element_at(rad_arr, F.col("cluster"))
-        ).alias("radius"),
-    )
-
-
-def _kcenter_oracle_sql(k: int, d: int) -> str:
-    """Unrolled DuckDB twin of the greedy run + cover assignment: the
-    same md5 seed pick, the same round-6 min-distance updates with the
-    picked row leaving the pool, the same (mind DESC, vec_id) argmax
-    per round, then the same (distance, rank)-lexicographic argmin
-    assignment ``cluster_assign`` computes (unrounded distance for the
-    argmin, round-6 in the output)."""
-    fold = (
-        "list_reduce(list_transform(generate_series(1, {d}), "
-        "i -> (p.embedding[i]::DOUBLE - c.embedding[i]::DOUBLE) "
-        "* (p.embedding[i]::DOUBLE - c.embedding[i]::DOUBLE)), "
-        "(x, y) -> x + y)"
-    ).format(d=d)
-    parts = [f"""WITH c1 AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings
-  ORDER BY md5('kc:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 1
-), d1 AS MATERIALIZED (
-  SELECT p.vec_id, p.embedding, round({fold}, 6) AS mind
-  FROM embeddings p CROSS JOIN c1 c WHERE p.vec_id <> c.vec_id
-)"""]
-    for r in range(2, k + 1):
-        parts.append(f""", c{r} AS MATERIALIZED (
-  SELECT vec_id, embedding, mind FROM d{r - 1}
-  ORDER BY mind DESC, vec_id LIMIT 1
-)""")
-        if r < k:
-            parts.append(f""", d{r} AS MATERIALIZED (
-  SELECT p.vec_id, p.embedding,
-         least(p.mind, round({fold}, 6)) AS mind
-  FROM d{r - 1} p CROSS JOIN c{r} c WHERE p.vec_id <> c.vec_id
-)""")
-    centers = "\n  UNION ALL\n".join(
-        ["  SELECT 1 AS rnk, vec_id, embedding, "
-         "CAST(NULL AS DOUBLE) AS radius FROM c1"]
-        + [
-            f"  SELECT {r} AS rnk, vec_id, embedding, mind AS radius FROM c{r}"
-            for r in range(2, k + 1)
-        ]
-    )
-    parts.append(f""", centers AS MATERIALIZED (
-{centers}
-), dist AS (
-  SELECT p.vec_id, c.rnk, c.vec_id AS center_id, c.radius, {fold} AS dd
-  FROM embeddings p CROSS JOIN centers c
-), best AS (
-  SELECT vec_id, rnk, center_id, radius, dd,
-         row_number() OVER (PARTITION BY vec_id ORDER BY dd, rnk) AS rk
-  FROM dist
-)
-SELECT vec_id, CAST(rnk AS INTEGER) AS center_rank, center_id,
-       round(dd, 6) AS sq_dist, radius
-FROM best WHERE rk = 1
-""")
-    return "".join(parts)
-
-
-ORACLE_EMB_KCENTER_SELECT = _kcenter_oracle_sql(_KC_K, _DIM)
-
-
-# ---------------------------------------------------------------------------
-# Maximal Marginal Relevance re-ranking (similarity.mmr_rerank) —
-# the oracle unrolls the per-query greedy
-# round-for-round (the kcenter/unimax unrolled-CTE convention).
-# ---------------------------------------------------------------------------
-
-_MMR_PROBES, _MMR_C, _MMR_K, _MMR_LAM = 10, 15, 5, 0.5
-
-
-def q_emb_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diversity re-ranking gate: each of the first ``_MMR_PROBES``
-    vectors retrieves its exact cosine top-``_MMR_C`` candidates
-    (the brute generator any ANN tier substitutes for), then
-    :func:`similarity.mmr_rerank` greedily selects ``_MMR_K`` of them
-    by ``λ·rel − (1−λ)·max-sim-to-selected`` (Carbonell & Goldstein,
-    SIGIR 1998) — the redundancy-suppressing result list a RAG stack
-    serves. Everything is rounded-6 deterministic; picks stay a
-    DataFrame (one per query per round, never collected); the oracle
-    replays candidate generation, the full pairwise-sim relation, and
-    every greedy round as unrolled CTEs."""
-    e = load_table(spark, sf_dir, "embeddings")
-    probes = e.filter(F.col("vec_id") < _MMR_PROBES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    cands = SIM.cosine_topk(e, probes, k=_MMR_C)
-    with_vec = F.broadcast(cands).join(
-        e.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("cand_vec"),
-        ),
-        "neighbor_id",
-    )
-    return SIM.mmr_rerank(
-        with_vec.select(
-            "query_id",
-            F.col("neighbor_id").alias("cand_id"),
-            F.col("cos_sim").alias("rel"),
-            "cand_vec",
-        ),
-        k=_MMR_K,
-        lam=_MMR_LAM,
-    )
-
-
-def _mmr_oracle_sql(k: int, lam: float) -> str:
-    dot_pe = _DOT.format(a="p.embedding", b="e.embedding")
-    n_p = _DOT.format(a="p.embedding", b="p.embedding")
-    n_e = _DOT.format(a="e.embedding", b="e.embedding")
-    dot_xy = _DOT.format(a="xe.embedding", b="ye.embedding")
-    n_x = _DOT.format(a="xe.embedding", b="xe.embedding")
-    n_y = _DOT.format(a="ye.embedding", b="ye.embedding")
-    l, ml = repr(float(lam)), repr(1.0 - float(lam))
-    score = f"({l} * rel - {ml} * ms)"
-    parts = [f"""WITH probes AS (
-  SELECT vec_id AS query_id, embedding FROM embeddings
-  WHERE vec_id < {_MMR_PROBES}
-), scored AS (
-  SELECT p.query_id, e.vec_id AS cand_id,
-         {dot_pe} AS dp, sqrt({n_p}) * sqrt({n_e}) AS den
-  FROM probes p JOIN embeddings e ON p.query_id <> e.vec_id
-), rankedc AS (
-  SELECT query_id, cand_id,
-         CASE WHEN den > 0 THEN dp / den ELSE 0.0 END AS c,
-         row_number() OVER (
-           PARTITION BY query_id
-           ORDER BY (CASE WHEN den > 0 THEN dp / den ELSE 0.0 END) DESC,
-                    cand_id) AS rk
-  FROM scored
-), cands AS (
-  SELECT query_id, cand_id, round(c, 6) AS rel
-  FROM rankedc WHERE rk <= {_MMR_C}
-), sims AS (
-  SELECT x.query_id, x.cand_id AS a, y.cand_id AS b,
-         round(CASE WHEN sqrt({n_x}) * sqrt({n_y}) > 0
-                    THEN {dot_xy} / (sqrt({n_x}) * sqrt({n_y}))
-                    ELSE 0.0 END, 6) AS sim
-  FROM cands x
-  JOIN embeddings xe ON xe.vec_id = x.cand_id
-  JOIN cands y ON y.query_id = x.query_id AND y.cand_id <> x.cand_id
-  JOIN embeddings ye ON ye.vec_id = y.cand_id
-), pool0 AS (
-  SELECT query_id, cand_id, rel, 0.0 AS ms FROM cands
-)"""]
-    for r in range(1, k + 1):
-        parts.append(f""", sel{r} AS (
-  SELECT query_id, cand_id, round({score}, 6) AS mmr_score
-  FROM (
-    SELECT query_id, cand_id, rel, ms,
-           row_number() OVER (
-             PARTITION BY query_id ORDER BY {score} DESC, cand_id) AS rk
-    FROM pool{r - 1}
-  ) AS t WHERE rk = 1
-)""")
-        if r < k:
-            parts.append(f""", pool{r} AS (
-  SELECT p.query_id, p.cand_id, p.rel,
-         greatest(p.ms, coalesce(s.sim, 0.0)) AS ms
-  FROM pool{r - 1} p
-  JOIN sel{r} t ON t.query_id = p.query_id AND p.cand_id <> t.cand_id
-  LEFT JOIN sims s ON s.query_id = p.query_id
-   AND s.a = p.cand_id AND s.b = t.cand_id
-)""")
-    union = "\nUNION ALL\n".join(
-        f"SELECT query_id, CAST({r} AS INTEGER) AS mmr_rank, "
-        f"cand_id, mmr_score FROM sel{r}"
-        for r in range(1, k + 1)
-    )
-    parts.append("\n" + union + "\n")
-    return "".join(parts)
-
-
-ORACLE_EMB_MMR_RERANK = _mmr_oracle_sql(_MMR_K, _MMR_LAM)
-
-
-# ---------------------------------------------------------------------------
-# Top principal component by fixed-point power iteration
-# (similarity.top_pc_fx) — the whole
-# training run (mean, md5 init, every iteration) is replayed by the
-# oracle, the ORACLE_EMB_KMEANS_TRAIN fixpoint convention.
-# ---------------------------------------------------------------------------
-
-_PC_ITERS = 3
-
-
-@functools.lru_cache(maxsize=4)
-def _top_pc(sf_dir: str) -> tuple:
-    """Train-once per scale dir (the ``_ivf_index`` convention)."""
-    from scraping_etl_spark.session import get_spark
-
-    spark = SparkSession.getActiveSession() or get_spark()
-    e = load_table(spark, sf_dir, "embeddings")
-    mu, v, n = SIM.top_pc_fx(e, iters=_PC_ITERS)
-    return tuple(mu), tuple(v), n
-
-
-def q_emb_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All-but-the-top spectral profile gate (similarity.top_pc_fx —
-    power iteration over the centered second moment; Mu & Viswanath
-    ICLR'18 postprocessing model): per corpus vector, its projection
-    on the trained dominant direction (``pc_score``) and the L2 norm
-    of the all-but-the-top residual ``x − μ − pc_score·v``
-    (``resid_norm``), both round-6. Serving is pure map-side — mean
-    and direction ride as plan constants, zero joins, zero shuffle
-    (plan pinned) — and the STATIC oracle replays the ENTIRE training
-    fixpoint from the raw table (integer-lattice sums, md5-seeded
-    init, every renormalization), so the hash certifies training and
-    serving together."""
-    e = load_table(spark, sf_dir, "embeddings")
-    mu, v, _n = _top_pc(sf_dir)
-    mu_arr = F.array(*[F.lit(float(m)) for m in mu])
-    v_arr = F.array(*[F.lit(float(x)) for x in v])
-    cen = F.zip_with(
-        F.col("embedding"), mu_arr, lambda a, b: a.cast("double") - b
-    )
-    proj = F.aggregate(
-        F.zip_with(F.col("_c"), v_arr, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    resid = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("_c"),
-                v_arr,
-                lambda a, b: (a - F.col("_d") * b) * (a - F.col("_d") * b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return (
-        e.select("vec_id", cen.alias("_c"))
-        .select("vec_id", "_c", proj.alias("_d"))
-        .select(
-            "vec_id",
-            F.round("_d", 6).alias("pc_score"),
-            F.round(resid, 6).alias("resid_norm"),
-        )
-    )
-
-
-def _top_pc_oracle_sql(iters: int, d: int, fx: int) -> str:
-    """Unrolled DuckDB twin of the power-iteration run + scoring: the
-    same integer-lattice mean, the same md5-seeded unit init, per
-    iteration the same per-row projection fold and round-to-lattice
-    coordinate sums, the same fixed-order renormalization, then the
-    same round-6 projection / residual-norm scoring."""
-    dotv = (
-        "list_reduce(list_transform(generate_series(1, {d}), "
-        "i -> p.c[i] * v.v[i]), (x, y) -> x + y)"
-    ).format(d=d)
-    l2 = "sqrt(list_reduce(list_transform({xs}, x -> x * x), (a, b) -> a + b))"
-    parts = [f"""WITH msum AS MATERIALIZED (
-  SELECT g.j AS pos,
-         sum(CAST(round(embedding[g.j]::DOUBLE * {fx}.0) AS BIGINT)) AS sfx,
-         count(*) AS n
-  FROM embeddings, generate_series(1, {d}) AS g(j)
-  GROUP BY 1
-), mu AS MATERIALIZED (
-  SELECT list(CAST(sfx AS DOUBLE) / ({fx}.0 * n) ORDER BY pos) AS m FROM msum
-), cen AS MATERIALIZED (
-  SELECT e.vec_id,
-         list_transform(generate_series(1, {d}),
-                        i -> e.embedding[i]::DOUBLE - mu.m[i]) AS c
-  FROM embeddings e CROSS JOIN mu
-), v0 AS MATERIALIZED (
-  SELECT list_transform(c, x -> x / nrm) AS v
-  FROM (
-    SELECT c, {l2.format(xs="c")} AS nrm
-    FROM (SELECT c FROM cen
-          ORDER BY md5('pc:' || CAST(vec_id AS VARCHAR)), vec_id LIMIT 1)
-  )
-)"""]
-    for t in range(1, iters + 1):
-        parts.append(f""", s{t} AS MATERIALIZED (
-  SELECT g.j AS pos,
-         sum(CAST(round(q.d * q.c[g.j] * {fx}.0) AS BIGINT)) AS sfx
-  FROM (
-    SELECT p.c, {dotv} AS d
-    FROM cen p CROSS JOIN v{t - 1} v
-  ) q, generate_series(1, {d}) AS g(j)
-  GROUP BY 1
-), v{t} AS MATERIALIZED (
-  SELECT list_transform(r, x -> x / nrm) AS v
-  FROM (
-    SELECT r, {l2.format(xs="r")} AS nrm
-    FROM (SELECT list(CAST(sfx AS DOUBLE) / {fx}.0 ORDER BY pos) AS r
-          FROM s{t})
-  )
-)""")
-    parts.append(f""", scored AS (
-  SELECT p.vec_id, p.c, v.v, {dotv} AS d
-  FROM cen p CROSS JOIN v{iters} v
-)
-SELECT vec_id, round(d, 6) AS pc_score,
-       round(sqrt(list_reduce(list_transform(generate_series(1, {d}),
-             j -> (c[j] - d * v[j]) * (c[j] - d * v[j])),
-             (x, y) -> x + y)), 6) AS resid_norm
-FROM scored
-""")
-    return "".join(parts)
-
-
-ORACLE_EMB_TOP_PC = _top_pc_oracle_sql(_PC_ITERS, _DIM, SIM.KMEANS_FX_SCALE)
 
 
 # ---------------------------------------------------------------------------

@@ -8,10 +8,9 @@ the driver's tables so the correctness gate covers it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scraping_etl_spark.operators import privacy as PRV
 from scraping_etl_spark.operators import textstats as TS
 from scraping_etl_spark.operators.asof import asof_join
 from scraping_etl_spark.sources.readers import load_table, spread_narrow_scan
@@ -549,201 +548,6 @@ SELECT doc_id,
        CASE WHEN L > 0 THEN round(alpha / L, 6) ELSE 0.0 END AS alpha_frac
 FROM agg
 """
-
-
-_KA_K, _KA_SUP_FRAC = 5, 0.02
-
-#: DuckDB forms of the three generalization ladders, level by level —
-#: kept literally beside the Spark ladders in q_doc_k_anonymize so a
-#: reviewer can diff them line for line.
-_KA_LANG_SQL = ["coalesce(lang, '*')", "'*'"]
-_KA_SRC_SQL = ["coalesce(source, '*')", "'*'"]
-_KA_CHARS_SQL = [
-    "coalesce(CAST(n_chars AS VARCHAR), '*')",
-    "coalesce(CAST((n_chars // 10) * 10 AS VARCHAR) || '+', '*')",
-    "coalesce(CAST((n_chars // 100) * 100 AS VARCHAR) || '+', '*')",
-    "'*'",
-]
-
-
-def q_doc_k_anonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K-anonymous metadata release gate (privacy.k_anonymize;
-    Samarati TKDE'01 / Sweeney IJUFKS'02): the documents
-    table's quasi-identifiers (lang, source, n_chars) generalized up
-    fixed ladders by the MINIMAL full-domain level vector whose
-    under-k records fit the 2% suppression budget, stragglers
-    suppressed. The whole 16-vector lattice is costed in ONE
-    grouping-sets pass; the oracle recomputes every candidate's
-    under-k total, replays the (total, lex) choice, and re-derives
-    the released projection — so the hash pins the lattice SEARCH,
-    the suppression arithmetic and the release columns at once."""
-    d = load_table(spark, sf_dir, "documents")
-    budget = int(_KA_SUP_FRAC * d.count())
-    ladders = [
-        ("lang_g", [F.coalesce(F.col("lang"), F.lit("*")), F.lit("*")]),
-        ("source_g", [F.coalesce(F.col("source"), F.lit("*")), F.lit("*")]),
-        (
-            "chars_g",
-            [
-                F.coalesce(F.col("n_chars").cast("string"), F.lit("*")),
-                F.coalesce(
-                    F.concat(
-                        (F.floor(F.col("n_chars") / 10) * 10)
-                        .cast("long")
-                        .cast("string"),
-                        F.lit("+"),
-                    ),
-                    F.lit("*"),
-                ),
-                F.coalesce(
-                    F.concat(
-                        (F.floor(F.col("n_chars") / 100) * 100)
-                        .cast("long")
-                        .cast("string"),
-                        F.lit("+"),
-                    ),
-                    F.lit("*"),
-                ),
-                F.lit("*"),
-            ],
-        ),
-    ]
-    return PRV.k_anonymize(
-        d, k=_KA_K, ladders=ladders, max_suppressed=budget,
-        id_cols=["doc_id"],
-    )
-
-
-def _ka_oracle_sql() -> str:
-    import itertools
-
-    vectors = sorted(
-        itertools.product(range(2), range(2), range(4)),
-        key=lambda v: (sum(v), v),
-    )
-    cands = []
-    for a, b, c in vectors:
-        cands.append(
-            f"""  SELECT {a} AS ll, {b} AS ls, {c} AS lc,
-         (SELECT coalesce(sum(CASE WHEN cnt < {_KA_K} THEN cnt ELSE 0 END), 0)
-          FROM (SELECT count(*) AS cnt FROM documents
-                GROUP BY {_KA_LANG_SQL[a]}, {_KA_SRC_SQL[b]},
-                         {_KA_CHARS_SQL[c]}) AS g) AS sup"""
-        )
-    cand_sql = "\nUNION ALL\n".join(cands)
-    chars_case = (
-        f"CASE (SELECT lc FROM winner)"
-        f" WHEN 0 THEN {_KA_CHARS_SQL[0]}"
-        f" WHEN 1 THEN {_KA_CHARS_SQL[1]}"
-        f" WHEN 2 THEN {_KA_CHARS_SQL[2]}"
-        f" ELSE '*' END"
-    )
-    return f"""
-WITH cand AS (
-{cand_sql}
-), winner AS (
-  SELECT ll, ls, lc FROM cand
-  WHERE sup <= (SELECT CAST(floor({_KA_SUP_FRAC} * count(*)) AS BIGINT)
-                FROM documents)
-  ORDER BY ll + ls + lc, ll, ls, lc
-  LIMIT 1
-), gen AS (
-  SELECT doc_id,
-         CASE (SELECT ll FROM winner)
-           WHEN 0 THEN {_KA_LANG_SQL[0]} ELSE '*' END AS lang_g,
-         CASE (SELECT ls FROM winner)
-           WHEN 0 THEN {_KA_SRC_SQL[0]} ELSE '*' END AS source_g,
-         {chars_case} AS chars_g
-  FROM documents
-), sized AS (
-  SELECT doc_id, lang_g, source_g, chars_g,
-         count(*) OVER (PARTITION BY lang_g, source_g, chars_g) AS gsz
-  FROM gen
-)
-SELECT doc_id, (gsz < {_KA_K}) AS suppressed,
-       CASE WHEN gsz >= {_KA_K} THEN lang_g END AS lang_g,
-       CASE WHEN gsz >= {_KA_K} THEN source_g END AS source_g,
-       CASE WHEN gsz >= {_KA_K} THEN chars_g END AS chars_g,
-       CASE WHEN gsz >= {_KA_K} THEN gsz END AS group_size,
-       CAST((SELECT ll FROM winner) AS INTEGER) AS lvl_lang_g,
-       CAST((SELECT ls FROM winner) AS INTEGER) AS lvl_source_g,
-       CAST((SELECT lc FROM winner) AS INTEGER) AS lvl_chars_g
-FROM sized
-"""
-
-
-ORACLE_DOC_K_ANONYMIZE = _ka_oracle_sql()
-
-
-def q_doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading ease + Flesch–Kincaid grade profile
-    (textstats.with_readability): the canonical
-    readability pair (Flesch 1948; Kincaid et al. 1975) as a corpus
-    difficulty/curriculum signal — letter-run words, vowel-group
-    syllables with the silent-e adjustment, terminator-run sentences,
-    both scores in the fixed left-assoc order the oracle mirrors, and
-    the standard band on the rounded ease. Pure map-side per-row array
-    expressions — zero shuffle at any corpus size."""
-    d = load_table(spark, sf_dir, "documents")
-    return TS.with_readability(d).select(
-        "doc_id", "n_words", "n_sentences", "n_syllables",
-        "flesch_reading_ease", "fk_grade", "readability_band",
-    )
-
-
-def _readability_oracle() -> str:
-    band = "CASE WHEN n_words = 0 THEN 'empty'\n"
-    for edge, name in TS.READABILITY_BANDS:
-        band += (
-            f"            WHEN flesch_reading_ease >= {edge} "
-            f"THEN '{name}'\n"
-        )
-    band += "            ELSE 'very_hard' END"
-    syl_word = (
-        "CASE WHEN len(regexp_extract_all(x, '[aeiouy]+')) > 1"
-        " AND regexp_matches(x, '[^aeiouy]e$')"
-        " THEN len(regexp_extract_all(x, '[aeiouy]+')) - 1"
-        " ELSE greatest(len(regexp_extract_all(x, '[aeiouy]+')), 1) END"
-    )
-    return f"""
-WITH base AS (
-  SELECT doc_id, text,
-         regexp_extract_all(lower(text), '[a-z]+') AS w
-  FROM documents
-), counted AS (
-  SELECT doc_id,
-         CAST(coalesce(len(w), 0) AS BIGINT) AS n_words,
-         CAST(CASE WHEN coalesce(len(w), 0) > 0 THEN
-                greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-              ELSE 0 END AS BIGINT) AS n_sentences,
-         CAST(CASE WHEN coalesce(len(w), 0) > 0 THEN
-                list_sum(list_transform(w, x -> ({syl_word})))
-              ELSE 0 END AS BIGINT) AS n_syllables
-  FROM base
-), scored AS (
-  SELECT doc_id, n_words, n_sentences, n_syllables,
-         CASE WHEN n_words > 0 THEN
-           round(206.835 - 1.015 * (CAST(n_words AS DOUBLE)
-                                    / CAST(n_sentences AS DOUBLE))
-                 - 84.6 * (CAST(n_syllables AS DOUBLE)
-                           / CAST(n_words AS DOUBLE)), 6)
-         END AS flesch_reading_ease,
-         CASE WHEN n_words > 0 THEN
-           round(0.39 * (CAST(n_words AS DOUBLE)
-                         / CAST(n_sentences AS DOUBLE))
-                 + 11.8 * (CAST(n_syllables AS DOUBLE)
-                           / CAST(n_words AS DOUBLE)) - 15.59, 6)
-         END AS fk_grade
-  FROM counted
-)
-SELECT doc_id, n_words, n_sentences, n_syllables,
-       flesch_reading_ease, fk_grade,
-       {band} AS readability_band
-FROM scored
-"""
-
-
-ORACLE_DOC_READABILITY = _readability_oracle()
 
 
 def q_doc_datasheet(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -842,8 +842,8 @@ _REGISTERED: list[QuerySpec] = [
         "contrastive hard-negative mining: per-anchor cosine top-k "
         "inside the [lo, hi) band that EXCLUDES planted near-dups "
         "above the ceiling (Karpukhin EMNLP'20 / ANCE ICLR'21; "
-        "similarity.hard_negatives; IVF scale tier hard_negatives_ivf "
-        "equals brute at full probe, pytest-pinned)",
+        "similarity.hard_negatives: broadcast anchors, one map-side "
+        "pass, plan shape pytest-pinned)",
     ),
     QuerySpec(
         "er_fs_scores", M.q_er_fs_scores, M.ORACLE_ER_FS_SCORES,

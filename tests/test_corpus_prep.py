@@ -1277,7 +1277,7 @@ def test_unimax_quotas_validation(spark):
 
 
 def test_unimax_gate_matches_oracle_staged_for_r15(spark):
-    """The staged doc_unimax_quotas gate hashes against its DuckDB
+    """The registered doc_unimax_quotas gate hashes against its DuckDB
     oracle end-to-end, and the planted skew produces BOTH allocation
     outcomes: tail languages saturated at the epoch cap, English on
     the shared waterline below it."""
@@ -1302,98 +1302,3 @@ def test_unimax_gate_matches_oracle_staged_for_r15(spark):
     assert got == want
     assert any(e == C._UMX_EPOCHS for (_, _, _, e) in got.values())
     assert any(e < C._UMX_EPOCHS for (_, _, _, e) in got.values())
-
-
-# ---------------------------------------------------------------------------
-# Fill-in-the-middle transform (fim_transform)
-# ---------------------------------------------------------------------------
-
-def _fim_replay(doc_id, text, rate=0.5, spm_frac=0.5):
-    """Pure-Python replay of fim_transform's md5 arithmetic."""
-    import hashlib
-
-    def draw(salt, n):
-        h = hashlib.md5(f"{doc_id}{salt}".encode()).hexdigest()
-        return int(h[:15], 16) % n
-
-    if text is None or draw(":fim:apply", CP.MIX_BUCKETS) >= int(
-        round(rate * CP.MIX_BUCKETS)
-    ):
-        return ("none", None, None, None, text)
-    n = len(text)
-    a, b = draw(":fim:a", n + 1), draw(":fim:b", n + 1)
-    c1, c2 = min(a, b), max(a, b)
-    p, m, s = text[:c1], text[c1:c2], text[c2:]
-    if draw(":fim:mode", CP.MIX_BUCKETS) < int(round(spm_frac * CP.MIX_BUCKETS)):
-        return ("spm", p, m, s, f"<fim_suf>{s}<fim_pre>{p}<fim_mid>{m}")
-    return ("psm", p, m, s, f"<fim_pre>{p}<fim_suf>{s}<fim_mid>{m}")
-
-
-def test_fim_matches_pure_python_replay(spark):
-    """Row-for-row byte equality with the hashlib replay across empty,
-    one-char, and long texts — pins the md5/conv/pmod/substr arithmetic
-    the DuckDB oracle relies on."""
-    rows = [(i, t) for i, t in enumerate(
-        ["", "x", "ab", "hello world", "a" * 97, "the quick brown fox " * 9]
-    )] + [(99, None)]
-    df = _docs(spark, rows)
-    got = {
-        r.doc_id: (r.fim_mode, r.fim_prefix, r.fim_middle, r.fim_suffix,
-                   r.fim_text)
-        for r in CP.fim_transform(df).collect()
-    }
-    for doc_id, text in rows:
-        assert got[doc_id] == _fim_replay(doc_id, text), (doc_id, text)
-
-
-def test_fim_reassembly_invariant(spark):
-    """For every applied row prefix·middle·suffix == text; 'none' rows
-    carry the text verbatim with NULL parts."""
-    df = _docs(spark, [(i, f"document number {i} body text") for i in range(200)])
-    out = CP.fim_transform(df).collect()
-    n_applied = 0
-    for r in out:
-        if r.fim_mode == "none":
-            assert r.fim_text == r.text
-            assert r.fim_prefix is None and r.fim_middle is None
-            assert r.fim_suffix is None
-        else:
-            n_applied += 1
-            assert r.fim_prefix + r.fim_middle + r.fim_suffix == r.text
-    # rate=0.5 over 200 independent md5 draws: very loose band
-    assert 60 <= n_applied <= 140, n_applied
-
-
-def test_fim_rate_and_mode_extremes(spark):
-    df = _docs(spark, [(i, f"text {i}") for i in range(50)])
-    assert all(
-        r.fim_mode == "none" and r.fim_text == r.text
-        for r in CP.fim_transform(df, rate=0.0).collect()
-    )
-    all_spm = CP.fim_transform(df, rate=1.0, spm_frac=1.0).collect()
-    assert all(r.fim_mode == "spm" for r in all_spm)
-    assert all(r.fim_text.startswith("<fim_suf>") for r in all_spm)
-    all_psm = CP.fim_transform(df, rate=1.0, spm_frac=0.0).collect()
-    assert all(r.fim_mode == "psm" for r in all_psm)
-    assert all(r.fim_text.startswith("<fim_pre>") for r in all_psm)
-    with pytest.raises(ValueError):
-        CP.fim_transform(df, rate=1.5)
-    with pytest.raises(ValueError):
-        CP.fim_transform(df, spm_frac=-0.1)
-
-
-def test_fim_gate_matches_oracle_staged_for_r18(spark):
-    """The staged doc_fim_transform gate hashes against its DuckDB
-    oracle and serves as a pure map-side projection (no join, no
-    exchange) — the split_corpus 100 TB shape."""
-    from scraping_etl_spark.plans import corpus_ops as C
-    from tests.oracle import assert_matches_oracle
-
-    sf = "/root/testdata/sf0.001"
-    df = C.q_doc_fim_transform(spark, sf)
-    assert_matches_oracle(df, C.ORACLE_DOC_FIM_TRANSFORM, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for node in ("Join", "CartesianProduct", "Exchange"):
-        assert node not in plan, node
-    modes = {r.fim_mode for r in df.collect()}
-    assert modes == {"none", "psm", "spm"}, modes

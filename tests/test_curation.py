@@ -319,51 +319,6 @@ def test_dsir_weight_is_logp_difference(spark):
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched large-k assignment
-# ---------------------------------------------------------------------------
-
-def test_arrow_assign_matches_expression_path(spark):
-    e = _planted_embeddings(spark)
-    unit = e.select(
-        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
-    )
-    cents = SIM.kmeans_train_fx(unit, n_clusters=4, iters=SIM.INDEX_ITERS)
-    expr_side = {
-        (r.vec_id, r.cluster)
-        for r in SIM.semantic_dedup_survivors(e, cents, threshold=2.0).collect()
-    }
-    arrow_side = {
-        (r.vec_id, r.cluster)
-        for r in SIM.cluster_assign_arrow(e, cents).collect()
-    }
-    assert expr_side == arrow_side
-
-
-def test_arrow_assign_survivors_equivalent(spark):
-    e = _planted_embeddings(spark)
-    unit = e.select(
-        "vec_id", SIM.normalize_embedding(F.col("embedding")).alias("embedding")
-    )
-    cents = SIM.kmeans_train_fx(unit, n_clusters=4, iters=SIM.INDEX_ITERS)
-    a = sorted(map(tuple, SIM.semantic_dedup_survivors(e, cents, 0.99).collect()))
-    b = sorted(map(tuple, SIM.semantic_dedup_survivors(
-        e, cents, 0.99, arrow_assign=True).collect()))
-    assert a == b
-
-
-def test_arrow_assign_zero_vector_and_norms(spark):
-    e = spark.createDataFrame(
-        [(0, [0.0] * 8), (1, [1.0] * 8)], "vec_id LONG, embedding ARRAY<FLOAT>"
-    )
-    cents = [[0.5] * 8, [-0.5] * 8]
-    rows = {r.vec_id: r for r in SIM.cluster_assign_arrow(
-        e, cents, keep_vec=True).collect()}
-    assert rows[1].cluster == 0
-    assert abs(rows[1]._nrm - math.sqrt(8)) < 1e-12
-    assert rows[0]._nrm == 0.0  # zero vector passes through un-normalized
-
-
-# ---------------------------------------------------------------------------
 # winnowing fingerprints (operators/dedup.py — registered r8)
 # ---------------------------------------------------------------------------
 

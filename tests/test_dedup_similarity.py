@@ -670,37 +670,6 @@ def test_emb_decontaminate_broadcast_guard_falls_back(spark, monkeypatch):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_emb_decontaminate_arrow_matches_expression_tier(spark):
-    """The BLAS tier must reproduce the expression tier row-for-row on
-    the driver corpus (ulp-boundary divergence is measure-zero here)."""
-    from scraping_etl_spark.sources.readers import load_table
-
-    e = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    bench = e.filter(F.col("vec_id") % 20 == 0).select("vec_id", "embedding")
-    corp = e.filter(F.col("vec_id") % 20 != 0).select("vec_id", "embedding")
-    expr = SIM.embedding_decontaminate(corp, bench, threshold=0.42)
-    bm = SIM.prepare_bench_matrix(bench)
-    arrow = SIM.embedding_decontaminate_arrow(corp, bm, threshold=0.42)
-    assert sorted(map(tuple, expr.collect())) == sorted(map(tuple, arrow.collect()))
-
-
-def test_emb_decontaminate_arrow_excludes_self_and_counts(spark):
-    bench = [(100, [1.0, 0.0]), (1, [0.0, 1.0])]   # id 1 collides with corpus
-    corp = _vecs(spark, [(1, [0.0, 1.0]), (2, [1.0, 0.0])])
-    out = {r.vec_id: r for r in
-           SIM.embedding_decontaminate_arrow(corp, bench, threshold=0.9).collect()}
-    # corpus vec 1 == bench vec 1 (self) -> its only hit is excluded
-    assert 1 not in out
-    assert out[2].bench_id == 100 and out[2].n_bench_hits == 1
-
-
-def test_prepare_bench_matrix_cap_raises(spark, monkeypatch):
-    bench = _vecs(spark, [(i, [1.0, 0.0]) for i in range(5)])
-    monkeypatch.setattr(SIM, "MAX_BROADCAST_BENCH_VECS", 3)
-    with pytest.raises(ValueError, match="exceeds"):
-        SIM.prepare_bench_matrix(bench)
-
-
 # ---------------------------------------------------------------------------
 # payload coarse signature + byte-level near-dup families (round 9)
 # ---------------------------------------------------------------------------
@@ -1220,9 +1189,9 @@ def test_kmeans_fx_bit_identical_under_repartition(spark, monkeypatch):
     """Every fixed-point trainer sums on an integer lattice, so each
     artifact is the same bits in either exact_sums tier and under any
     partitioning: plain k-means, PQ codebooks, IVF-PQ centroids +
-    residual codebooks, SemDeDup's k-means over unit vectors, the top
-    PC and the logistic-regression weights. No trainer touches the
-    session's AQE setting."""
+    residual codebooks, SemDeDup's k-means over unit vectors and the
+    logistic-regression weights. No trainer touches the session's AQE
+    setting."""
     from scraping_etl_spark.operators import classifier as CLF
     from scraping_etl_spark.operators import fixpoint as FP
 
@@ -1245,7 +1214,6 @@ def test_kmeans_fx_bit_identical_under_repartition(spark, monkeypatch):
         "semdedup": lambda df: SIM.kmeans_train_fx(
             unit(df), n_clusters=3, iters=SIM.INDEX_ITERS
         ),
-        "top_pc": lambda df: SIM.top_pc_fx(df, iters=3),
         "logreg": lambda df: CLF.train_logreg(labeled(df), dim=5, iters=3),
     }
     c = _km_corpus(spark)
@@ -1256,7 +1224,7 @@ def test_kmeans_fx_bit_identical_under_repartition(spark, monkeypatch):
     # (pq runs the k-means kernel over two subspaces at once)
     for cap, names in (
         (FP.FIT_DRIVER_ROWS, list(trainers)),
-        (0, ["pq", "top_pc", "logreg"]),
+        (0, ["pq", "logreg"]),
     ):
         monkeypatch.setattr(FP, "FIT_DRIVER_ROWS", cap)
         for name in names:
@@ -1268,8 +1236,8 @@ def test_kmeans_fx_bit_identical_under_repartition(spark, monkeypatch):
 
 def test_fixed_point_trainers_job_counts(spark):
     """Under the driver cap every trainer collects its input once: the
-    logistic-regression and EM fits are one job each, k-means and the
-    top PC add only their md5 seed query. The same bounds hold in a
+    logistic-regression and EM fits are one job each, k-means adds only
+    its md5 seed query. The same bounds hold in a
     plain session (Arrow off, the driver contract's session) over 13
     partitions, where a ``toPandas`` probe would fall back to
     ``collect`` and launch a job per partition batch it tries."""
@@ -1293,7 +1261,6 @@ def test_fixed_point_trainers_job_counts(spark):
             (lambda: CLF.train_logreg(lab, dim=5, iters=40), 1),
             (lambda: LK.fs_em_weights(flags, ["f1", "f2"], n_iters=20), 1),
             (lambda: SIM.kmeans_train_fx(c, n_clusters=3, iters=5), 2),
-            (lambda: SIM.top_pc_fx(c, iters=3), 2),
         ):
             j0 = jobs_launched(spark)
             fit()
@@ -1810,7 +1777,7 @@ def test_payload_containment_loop_oracle_fuzz(spark):
 
 
 def test_payload_containment_gate_matches_oracle_staged_for_r14(spark):
-    """The staged doc_payload_containment gate hashes against its
+    """The registered doc_payload_containment gate hashes against its
     DuckDB oracle end-to-end (hex/md5/set/skew-filter mirror), and the
     planted chunk-aligned containers are found."""
     import duckdb
@@ -1835,7 +1802,7 @@ def test_payload_containment_gate_matches_oracle_staged_for_r14(spark):
 
 
 def test_hard_negatives_gate_matches_oracle_staged_for_r15(spark):
-    """The staged emb_hard_negatives gate hashes against its DuckDB
+    """The registered emb_hard_negatives gate hashes against its DuckDB
     oracle end-to-end; the planted near-dup copies (each anchor's
     exact vector re-keyed +1e6, cosine 1 >= hi) never reach the
     output — the ceiling that keeps false negatives out of a
@@ -1865,7 +1832,7 @@ def test_hard_negatives_gate_matches_oracle_staged_for_r15(spark):
 
 
 def test_fs_scores_gate_matches_oracle_staged_for_r15(spark):
-    """The staged er_fs_scores gate hashes against its DuckDB oracle
+    """The registered er_fs_scores gate hashes against its DuckDB oracle
     end-to-end, and the trained log-LR weights separate: every true
     match outscores every planted non-match (including the
     prefix-collision non-matches whose agr_pre8 agrees)."""
@@ -1891,49 +1858,8 @@ def test_fs_scores_gate_matches_oracle_staged_for_r15(spark):
     assert min(match_scores) > max(non_scores)
 
 
-def test_hard_negatives_ivf_full_probe_equals_brute(spark):
-    """At n_probe = n_clusters the IVF tier is EXACTLY the brute band
-    top-k; at lower n_probe it returns a subset of cells' results."""
-    import math
-
-    vecs = [
-        (i, [math.cos(0.23 * i + 0.4 * j) for j in range(6)])
-        for i in range(60)
-    ]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    anchors = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("embedding").alias("anchor_vec"),
-    )
-    cents = SIM.kmeans_train_fx(emb, n_clusters=4, iters=SIM.INDEX_ITERS)
-    brute = {
-        (r.anchor_id, r.rank): (r.neighbor_id, r.cos_sim)
-        for r in SIM.hard_negatives(emb, anchors, k=3, lo=0.2, hi=0.95).collect()
-    }
-    full = {
-        (r.anchor_id, r.rank): (r.neighbor_id, r.cos_sim)
-        for r in SIM.hard_negatives_ivf(
-            emb, anchors, cents, k=3, lo=0.2, hi=0.95, n_probe=4
-        ).collect()
-    }
-    assert full == brute
-    pruned = SIM.hard_negatives_ivf(
-        emb, anchors, cents, k=3, lo=0.2, hi=0.95, n_probe=1
-    ).collect()
-    assert pruned  # cell pruning still surfaces in-band negatives
-    # pruned results respect the band and never self-pair; their ranks
-    # are dense per anchor (1..n)
-    by_anchor = {}
-    for r in pruned:
-        assert 0.2 <= r.cos_sim < 0.95
-        assert r.anchor_id != r.neighbor_id
-        by_anchor.setdefault(r.anchor_id, []).append(r.rank)
-    for ranks in by_anchor.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-
-
 def test_emb_ingest_screen_gate_matches_oracle_staged(spark):
-    """The staged emb_ingest_screen gate (batch face of the streaming
+    """The registered emb_ingest_screen gate (batch face of the streaming
     semantic ingest screen) hashes against its brute-force cross-join
     oracle, and the planted semantics hold: fresh rows survive, +1e6
     mirrors refuse against their source, and rows RE-DELIVERED under
@@ -1974,7 +1900,7 @@ def test_emb_ingest_screen_gate_matches_oracle_staged(spark):
 
 
 def test_fs_em_gate_matches_unrolled_oracle_staged(spark):
-    """The staged er_fs_em_scores gate (UNSUPERVISED weights) hashes
+    """The registered er_fs_em_scores gate (UNSUPERVISED weights) hashes
     against its k-times-unrolled MATERIALIZED-CTE oracle, and EM
     recovers the separation without ever seeing a label: every true
     match outscores every planted non-match."""
@@ -2000,8 +1926,9 @@ def test_fs_em_gate_matches_unrolled_oracle_staged(spark):
 
 
 def test_emb_decontaminate_ivf_gate_matches_oracle_staged_for_r17(spark):
-    """The staged emb_decontaminate_ivf gate (IVF-tier face of the
-    semantic decontamination screen, r15 verdict item 4) runs at its
+    """The unregistered emb_decontaminate_ivf face (IVF-tier face of
+    the semantic decontamination screen, the only DuckDB check of the
+    tier ``streaming.emb_screen_stream`` runs) runs at its
     PRODUCTION setting — 4 of 16 cells probed — and still hashes
     exactly, because the lazy oracle replays the whole index: centroid
     literals, (d, cid) cell assignment, the probe fan-out, then the
@@ -2030,327 +1957,3 @@ def test_emb_decontaminate_ivf_gate_matches_oracle_staged_for_r17(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_matryoshka_full_dim_tier_equals_brute(spark):
-    """The largest-dim tier is cosine_topk on the raw vectors, row for
-    row, and carries in_full_topk=True everywhere (it IS the
-    reference)."""
-    from scraping_etl_spark.operators.similarity import (
-        cosine_topk,
-        matryoshka_topk,
-    )
-
-    rows = [
-        (i, [float((i * 7 + j * 5) % 13) - 6.0 for j in range(8)])
-        for i in range(20)
-    ]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    probes = e.filter("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    out = matryoshka_topk(e, probes, dims=(2, 8), k=3).collect()
-    full = sorted(
-        (r.query_id, r.rank, r.neighbor_id, r.cos_sim)
-        for r in cosine_topk(e, probes, k=3).collect()
-    )
-    d8 = [r for r in out if r.tier == "d8"]
-    assert sorted(
-        (r.query_id, r.rank, r.neighbor_id, r.cos_sim) for r in d8
-    ) == full
-    assert all(r.in_full_topk for r in d8)
-
-
-def test_matryoshka_truncation_changes_ranking_and_flags(spark):
-    """Vectors built so the 2-dim prefix inverts the full-dim order:
-    the coarse tier must rank by the PREFIX cosine alone, and its
-    disagreeing neighbors carry in_full_topk=False."""
-    from scraping_etl_spark.operators.similarity import matryoshka_topk
-
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),          # probe
-        (1, [1.0, 0.0, 0.0, 0.0]),          # prefix-perfect, full-perfect
-        (2, [1.0, 0.0, 9.0, 0.0]),          # prefix-perfect, full-poor
-        (3, [0.9, 0.1, 0.0, 0.0]),          # prefix-good, full-good
-    ]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    probes = e.filter("vec_id = 0").select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    out = {
-        (r.tier, r.rank): (r.neighbor_id, r.in_full_topk)
-        for r in matryoshka_topk(e, probes, dims=(2, 4), k=2).collect()
-    }
-    # full dim: 1 (cos 1.0) then 3; coarse dim-2: 1 and 2 tie at cos
-    # 1.0 -> smallest id first, and 2 is NOT in the full top-k
-    assert out[("d4", 1)] == (1, True)
-    assert out[("d4", 2)] == (3, True)
-    assert out[("d2", 1)] == (1, True)
-    assert out[("d2", 2)] == (2, False)
-    import pytest
-
-    with pytest.raises(ValueError):
-        matryoshka_topk(e, probes, dims=())
-    with pytest.raises(ValueError):
-        matryoshka_topk(e, probes, dims=(0, 4))
-    with pytest.raises(ValueError):
-        matryoshka_topk(e, probes, k=0)
-
-
-def test_emb_matryoshka_topk_gate_matches_oracle_staged_for_r20(spark):
-    """The staged emb_matryoshka_topk gate hashes against its static
-    per-tier-fold oracle; every tier serves every probe at exactly k
-    ranks, the reference tier agrees with itself, and coarse tiers'
-    agreement is a genuine measurement (flag present both ways)."""
-    from scraping_etl_spark.plans import ml_ops as M
-    from tests.oracle import assert_matches_oracle
-
-    sf = "/root/testdata/sf0.001"
-    df = M.q_emb_matryoshka_topk(spark, sf)
-    assert_matches_oracle(df, M.ORACLE_EMB_MATRYOSHKA_TOPK, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    rows = df.collect()
-    tiers = {r.tier for r in rows}
-    assert tiers == {f"d{d}" for d in M._MAT_DIMS}
-    ref = f"d{max(M._MAT_DIMS)}"
-    assert all(r.in_full_topk for r in rows if r.tier == ref)
-    per = {(r.tier, r.query_id) for r in rows}
-    assert len(per) == len(M._MAT_DIMS) * M._MAT_PROBES
-
-
-def test_mmr_rerank_matches_loop_oracle(spark):
-    """mmr_rerank replays a pure-Python per-query greedy exactly:
-    same rounded-6 rel/sims, same λ·rel − (1−λ)·max-sim criterion
-    (empty set → second term 0), same smallest-id tie-break — at a λ
-    whose (1−λ) is NOT exactly representable, pinning that both sides
-    use the identical Python-derived double."""
-    import math
-    import struct
-
-    from scraping_etl_spark.operators.similarity import mmr_rerank
-
-    def f32(v):
-        return [struct.unpack("f", struct.pack("f", x))[0] for x in v]
-
-    rows = []
-    for q in range(3):
-        for i in range(8):
-            vec = [((q * 13 + i * 7 + j * 3) % 17) / 4.0 - 2.0
-                   for j in range(6)]
-            rows.append((q, q * 100 + i, round(1.0 - i / 10.0, 6), vec))
-    df = spark.createDataFrame(
-        rows, "query_id long, cand_id long, rel double, cand_vec array<float>"
-    )
-    lam, k = 0.7, 4
-    got = sorted(
-        (r.query_id, r.mmr_rank, r.cand_id, r.mmr_score)
-        for r in mmr_rerank(df, k=k, lam=lam).collect()
-    )
-    vecs = {(q, c): f32(v) for q, c, _, v in rows}
-    rels = {(q, c): r for q, c, r, _ in rows}
-
-    def cos(a, b):
-        d = na = nb = 0.0
-        for x, y in zip(a, b):
-            d += x * y
-        for x in a:
-            na += x * x
-        for y in b:
-            nb += y * y
-        den = math.sqrt(na) * math.sqrt(nb)
-        return round(d / den, 6) if den > 0 else 0.0
-
-    want = []
-    for q in range(3):
-        ids = [c for (qq, c) in rels if qq == q]
-        ms = {c: 0.0 for c in ids}
-        sel = []
-        for rank in range(1, k + 1):
-            rem = [c for c in ids if c not in sel]
-            if not rem:
-                break
-            crit = lambda c: (lam * rels[(q, c)] - (1 - lam) * ms[c], -c)
-            best = max(rem, key=crit)
-            want.append((q, rank, best, round(crit(best)[0], 6)))
-            sel.append(best)
-            for c in rem:
-                if c != best:
-                    ms[c] = max(ms[c], cos(vecs[(q, c)], vecs[(q, best)]))
-    assert got == sorted(want)
-
-
-def test_mmr_rerank_suppresses_redundancy(spark):
-    """Planted duplicate: pure relevance would return both copies of
-    the top result; MMR's second pick jumps to the orthogonal
-    candidate instead."""
-    from scraping_etl_spark.operators.similarity import mmr_rerank
-
-    df = spark.createDataFrame(
-        [
-            (1, 10, 0.99, [1.0, 0.0, 0.0, 0.0]),
-            (1, 11, 0.98, [1.0, 0.0, 0.0, 0.0]),
-            (1, 12, 0.50, [0.0, 1.0, 0.0, 0.0]),
-        ],
-        "query_id long, cand_id long, rel double, cand_vec array<float>",
-    )
-    out = {r.mmr_rank: r.cand_id for r in mmr_rerank(df, k=2).collect()}
-    assert out == {1: 10, 2: 12}
-
-
-def test_mmr_rerank_validation_and_exhaustion(spark):
-    import pytest
-
-    from scraping_etl_spark.operators.similarity import mmr_rerank
-
-    df = spark.createDataFrame(
-        [(1, 10, 0.9, [1.0, 0.0]), (1, 11, 0.8, [0.0, 1.0])],
-        "query_id long, cand_id long, rel double, cand_vec array<float>",
-    )
-    with pytest.raises(ValueError):
-        mmr_rerank(df, k=0)
-    with pytest.raises(ValueError):
-        mmr_rerank(df, lam=1.5)
-    # k beyond the candidate list: every candidate ranked, then stop
-    rows = mmr_rerank(df, k=5).collect()
-    assert sorted((r.mmr_rank, r.cand_id) for r in rows) == [(1, 10), (2, 11)]
-
-
-def test_emb_mmr_rerank_gate_matches_oracle_staged_for_r19(spark):
-    """The staged emb_mmr_rerank gate hashes against the fully
-    unrolled greedy oracle (candidate generation, pairwise sims, every
-    round as CTEs); each query returns exactly k distinct candidates
-    and rank 1 is the pure-relevance argmax (the empty-set case of the
-    one MMR formula)."""
-    from collections import Counter
-
-    from scraping_etl_spark.plans import ml_ops as M
-    from tests.oracle import assert_matches_oracle
-
-    sf = "/root/testdata/sf0.001"
-    df = M.q_emb_mmr_rerank(spark, sf)
-    assert_matches_oracle(df, M.ORACLE_EMB_MMR_RERANK, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    rows = df.collect()
-    assert rows
-    per_q = Counter(r.query_id for r in rows)
-    assert all(v == M._MMR_K for v in per_q.values())
-    for r in rows:
-        ranks = sorted(x.mmr_rank for x in rows if x.query_id == r.query_id)
-        assert ranks == list(range(1, M._MMR_K + 1))
-
-
-def test_kcenter_select_matches_loop_oracle(spark):
-    """kcenter_select replays a pure-Python Gonzalez greedy exactly:
-    same md5 seed, same round-6 min-distance updates, same
-    (mind DESC, id ASC) argmax with picked rows leaving the pool."""
-    import hashlib
-
-    from scraping_etl_spark.operators.similarity import kcenter_select
-
-    rows = [
-        (i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(4)])
-        for i in range(30)
-    ]
-    rows.append((100, rows[3][1]))  # exact duplicate vector
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    def sq(a, b):
-        s = 0.0
-        for x, y in zip(a, b):
-            s += (float(x) - float(y)) * (float(x) - float(y))
-        return round(s, 6)
-
-    # float32 storage: quantize the python side the way parquet/Spark
-    # will hand the vectors back
-    import struct
-
-    def f32(v):
-        return [struct.unpack("f", struct.pack("f", x))[0] for x in v]
-
-    pool = {i: f32(v) for i, v in rows}
-    seed = min(pool, key=lambda i: (hashlib.md5(f"kc:{i}".encode()).hexdigest(), i))
-    want = [(1, seed, None)]
-    mind = {i: sq(v, pool[seed]) for i, v in pool.items() if i != seed}
-    k = 6
-    for rank in range(2, k + 1):
-        pick = min(mind, key=lambda i: (-mind[i], i))
-        want.append((rank, pick, mind[pick]))
-        pv = pool[pick]
-        del mind[pick]
-        for i in list(mind):
-            mind[i] = min(mind[i], sq(pool[i], pv))
-
-    got = [(r, i, rad) for r, i, rad, _ in kcenter_select(df, k)]
-    assert got == want
-    radii = [rad for _, _, rad in want[1:]]
-    assert radii == sorted(radii, reverse=True)  # non-increasing cover radius
-
-
-def test_kcenter_gate_matches_oracle_staged_for_r17(spark):
-    """The staged emb_kcenter_select gate hashes against the unrolled
-    greedy + cover-assignment oracle, and the assignment plan is pure
-    map-side (no join of any kind — centers are plan constants)."""
-    from scraping_etl_spark.plans import ml_ops as M
-    from tests.oracle import assert_matches_oracle
-
-    sf = "/root/testdata/sf0.001"
-    df = M.q_emb_kcenter_select(spark, sf)
-    assert_matches_oracle(df, M.ORACLE_EMB_KCENTER_SELECT, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for node in ("Join", "CartesianProduct", "Exchange"):
-        assert node not in plan, node
-
-
-def test_top_pc_fx_recovers_dominant_direction(spark):
-    """Power iteration must align with the true top PC on data with a
-    planted dominant direction (numpy eigendecomposition as the
-    semantic oracle), and the returned mean must match the integer-
-    lattice column means."""
-    import numpy as np
-
-    from scraping_etl_spark.operators.similarity import top_pc_fx
-
-    rng = np.random.RandomState(7)
-    direction = rng.randn(8)
-    direction /= np.linalg.norm(direction)
-    n = 400
-    data = (
-        rng.randn(n, 1) * 5.0 @ direction[None, :]  # dominant axis
-        + rng.randn(n, 8) * 0.3                      # isotropic noise
-        + 2.0                                        # offset (tests centering)
-    ).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in row]) for i, row in enumerate(data)],
-        "vec_id long, embedding array<float>",
-    )
-    mu, v, cnt = top_pc_fx(df, iters=6)
-    assert cnt == n
-    np.testing.assert_allclose(mu, data.astype(np.float64).mean(axis=0),
-                               atol=1e-5)
-    centered = data.astype(np.float64) - np.asarray(mu)
-    cov = centered.T @ centered
-    w, vecs = np.linalg.eigh(cov)
-    true_pc = vecs[:, -1]
-    align = abs(float(np.dot(v, true_pc)))
-    assert align > 0.999, align
-    assert abs(np.linalg.norm(v) - 1.0) < 1e-12
-
-
-def test_top_pc_gate_matches_oracle_staged_for_r18(spark):
-    """The staged emb_top_pc gate hashes against the unrolled
-    power-iteration oracle and serves pure map-side (no join, no
-    exchange — mean and direction are plan constants)."""
-    from scraping_etl_spark.plans import ml_ops as M
-    from tests.oracle import assert_matches_oracle
-
-    sf = "/root/testdata/sf0.001"
-    df = M.q_emb_top_pc(spark, sf)
-    assert_matches_oracle(df, M.ORACLE_EMB_TOP_PC, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for node in ("Join", "CartesianProduct", "Exchange"):
-        assert node not in plan, node

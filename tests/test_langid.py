@@ -235,7 +235,7 @@ def test_heaps_fit_exponent_brackets_growth(spark):
 
 
 # ---------------------------------------------------------------------------
-# Language segmentation (textstats.lang_segments) — staged r14 gate
+# Language segmentation (textstats.lang_segments) — registered gate
 # ---------------------------------------------------------------------------
 
 def test_lang_segments_splits_a_planted_code_switch(spark):
@@ -266,7 +266,7 @@ def test_lang_segments_splits_a_planted_code_switch(spark):
 
 
 def test_lang_segments_gate_matches_oracle_staged_for_r14(spark):
-    """The staged doc_lang_segments gate hashes against its DuckDB
+    """The registered doc_lang_segments gate hashes against its DuckDB
     oracle end-to-end (planted cross-language composites included)."""
     import duckdb
 

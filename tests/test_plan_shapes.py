@@ -96,70 +96,11 @@ def test_ivf_no_cross_join(spark):
 
 
 def test_hard_negatives_plans(spark):
-    """Brute tier: the anchor set broadcasts against the corpus (a
+    """The anchor set broadcasts against the corpus (a
     BroadcastNestedLoopJoin over the BOUNDED probe side is the plan,
-    like cosine_topk) — but never a CartesianProduct. IVF tier: the
-    candidate join must be a hash EQUI-join on cluster id — no BNLJ,
-    no cartesian — because it exists precisely for anchor sets too
-    large to broadcast."""
-    from scraping_etl_spark.operators.similarity import (
-        INDEX_ITERS,
-        hard_negatives_ivf,
-        kmeans_train_fx,
-    )
-    from scraping_etl_spark.sources.readers import load_table
-
+    like cosine_topk) — but never a CartesianProduct."""
     plan = _plan(M.q_emb_hard_negatives(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
-
-    e = load_table(spark, SF_SMOKE, "embeddings")
-    anchors = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("embedding").alias("anchor_vec"),
-    )
-    cents = kmeans_train_fx(e, n_clusters=4, iters=INDEX_ITERS)
-    ivf_plan = _plan(
-        hard_negatives_ivf(e, anchors, cents, k=3, n_probe=2)
-    )
-    assert "CartesianProduct" not in ivf_plan
-    assert "BroadcastNestedLoopJoin" not in ivf_plan
-
-
-def test_hard_negatives_ivf_partial_probe_recall_floor(spark):
-    """Below full probe the IVF tier is the standard recall trade —
-    pin a floor at half-probe so centroid/assignment changes can't
-    quietly collapse it."""
-    import math
-
-    from scraping_etl_spark.operators.similarity import (
-        INDEX_ITERS,
-        hard_negatives,
-        hard_negatives_ivf,
-        kmeans_train_fx,
-    )
-
-    vecs = [
-        (i, [math.cos(0.23 * i + 0.4 * j) for j in range(6)])
-        for i in range(60)
-    ]
-    e = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    anchors = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("anchor_id"),
-        F.col("embedding").alias("anchor_vec"),
-    )
-    cents = kmeans_train_fx(e, n_clusters=4, iters=INDEX_ITERS)
-    exact = {
-        (r.anchor_id, r.neighbor_id)
-        for r in hard_negatives(e, anchors, k=3, lo=0.2, hi=0.95).collect()
-    }
-    approx = {
-        (r.anchor_id, r.neighbor_id)
-        for r in hard_negatives_ivf(
-            e, anchors, cents, k=3, lo=0.2, hi=0.95, n_probe=2
-        ).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.4, f"IVF hard-negative recall collapsed: {recall:.2f}"
 
 
 def test_fs_and_ingest_screen_plans_no_cartesian(spark):

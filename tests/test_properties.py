@@ -861,97 +861,3 @@ def test_emb_decontaminate_ivf_full_probe_equals_brute_fuzz(
         corpus, bench, cents, threshold=threshold, n_probe=len(cents)
     ).collect()))
     assert ivf == brute
-
-
-# ---------------------------------------------------------------------------
-# MMR re-ranking: structural invariants on arbitrary instances
-# ---------------------------------------------------------------------------
-
-#: relevances on the 1/64 grid — exact in binary AND ≤ 6 decimal
-#: digits, so round-6 can never hit a half-up/half-even tie
-_rel64 = st.integers(min_value=0, max_value=64).map(lambda n: n / 64.0)
-
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(  # queries: each a list of (rel, vec) candidates
-        st.lists(st.tuples(_rel64, _vec3), min_size=1, max_size=6),
-        min_size=1, max_size=3,
-    ),
-    st.sampled_from([0.5, 0.75]),
-)
-@pytest.mark.slow
-def test_mmr_rerank_structural_fuzz(spark, queries, lam):
-    """On arbitrary candidate lists mmr_rerank must (a) emit exactly
-    min(k, |cands|) rows per query with ranks 1..n and distinct
-    candidates, (b) pick the λ·rel argmax (smallest-id tie-break)
-    first — the empty-set case of the one MMR formula — and (c) emit
-    a NON-INCREASING score sequence per query: each round's max is
-    over a shrunken pool whose scores only fell (ms is monotone), a
-    property that must survive rounding because rounding is
-    monotone."""
-    from scraping_etl_spark.operators.similarity import mmr_rerank
-
-    k = 4
-    rows = [
-        (q, q * 100 + i, rel, vec)
-        for q, cands in enumerate(queries)
-        for i, (rel, vec) in enumerate(cands)
-    ]
-    df = spark.createDataFrame(
-        rows, "query_id long, cand_id long, rel double, cand_vec array<float>"
-    )
-    out = mmr_rerank(df, k=k, lam=lam).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == set(range(len(queries)))
-    for q, cands in enumerate(queries):
-        got = sorted(by_q[q], key=lambda r: r.mmr_rank)
-        assert [r.mmr_rank for r in got] == list(
-            range(1, min(k, len(cands)) + 1)
-        )
-        ids = [r.cand_id for r in got]
-        assert len(set(ids)) == len(ids)
-        # rank 1 = pure-relevance argmax, smallest id on ties
-        best = max(
-            ((rel, -(q * 100 + i)) for i, (rel, _) in enumerate(cands))
-        )
-        assert ids[0] == -best[1]
-        scores = [r.mmr_score for r in got]
-        assert all(a >= b for a, b in zip(scores, scores[1:])), scores
-
-
-# ---------------------------------------------------------------------------
-# Readability: replay equality on arbitrary ASCII text
-# ---------------------------------------------------------------------------
-
-_ascii_text = st.one_of(
-    st.none(),
-    st.text(
-        alphabet="abcdefghijklmnopqrstuvwxyzAEIOUY .!?,;0123456789-'\ne",
-        max_size=80,
-    ),
-)
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.lists(_ascii_text, min_size=1, max_size=12))
-@pytest.mark.slow
-def test_readability_replay_fuzz(spark, texts):
-    """with_readability equals the pure-Python re replay on arbitrary
-    ASCII text (letters/digits/punctuation/whitespace — the regex and
-    lowercase semantics Java, Python and DuckDB share), including
-    wordless, unpunctuated, silent-e-heavy and NULL inputs."""
-    from scraping_etl_spark.operators.textstats import with_readability
-    from tests.test_sketches_and_gates import _readability_replay
-
-    rows = list(enumerate(texts))
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    got = {
-        r.doc_id: (r.n_words, r.n_sentences, r.n_syllables,
-                   r.flesch_reading_ease, r.fk_grade, r.readability_band)
-        for r in with_readability(df).collect()
-    }
-    for doc_id, text in rows:
-        assert got[doc_id] == _readability_replay(text), (doc_id, text)

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import ast
 import inspect
 from pathlib import Path
 
@@ -67,3 +68,71 @@ def test_registry_serves_registration_order_with_an_oracle_each():
         if n in path.read_text(encoding="utf-8")
     ]
     assert naming == []
+
+
+#: Query faces kept without an entry point, each with its reason.
+_UNSERVED_FACES = {
+    # the only DuckDB check of embedding_decontaminate_ivf, the tier
+    # streaming.emb_screen_stream runs
+    "q_emb_decontaminate_ivf",
+}
+
+
+def test_every_query_face_is_served():
+    """Every top-level ``q_*`` in ``plans/`` is named in code (an AST
+    name or attribute, not a string) by the registry, another face,
+    another package module or ``tools/dump_plans.py``: a face nothing
+    reaches is deleted."""
+    root = Path(scraping_etl_spark.__file__).parent
+    faces = {
+        node.name
+        for path in sorted((root / "plans").glob("*.py"))
+        for node in ast.parse(path.read_text(encoding="utf-8")).body
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("q_")
+    }
+    sources = sorted(root.rglob("*.py")) + [
+        root.parent / "tools" / "dump_plans.py"
+    ]
+    named = {
+        node.id if isinstance(node, ast.Name) else node.attr
+        for path in sources
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, (ast.Name, ast.Attribute))
+    }
+    assert sorted(faces - named) == sorted(_UNSERVED_FACES)
+
+
+def test_unselected_tiers_and_staged_operators_are_gone():
+    """The operators only the retired staged gates ran, and the scale
+    tiers no product call selected, stay deleted."""
+    from scraping_etl_spark.operators import corpus_prep, similarity, textstats
+
+    gone = {
+        similarity: (
+            "top_pc_fx", "_host_l2", "kcenter_select", "matryoshka_topk",
+            "mmr_rerank", "hard_negatives_ivf",
+            "embedding_decontaminate_arrow", "prepare_bench_matrix",
+            "cluster_assign_arrow", "centroid_sq_dist",
+        ),
+        textstats: ("with_readability", "READABILITY_BANDS", "with_lang_id"),
+        corpus_prep: ("fim_transform",),
+    }
+    present = [
+        f"{mod.__name__}.{name}"
+        for mod, names in gone.items()
+        for name in names
+        if hasattr(mod, name)
+    ]
+    assert present == []
+    pkg = Path(scraping_etl_spark.__file__).parent
+    assert not (pkg / "operators" / "privacy.py").exists()
+
+
+def test_semantic_dedup_has_one_assignment_path():
+    """SemDeDup assigns clusters by the plan-constant expression only:
+    no boolean selects another path."""
+    from scraping_etl_spark.operators import similarity
+
+    for fn in (similarity.semantic_dedup_pairs,
+               similarity.semantic_dedup_survivors):
+        assert "arrow_assign" not in inspect.signature(fn).parameters

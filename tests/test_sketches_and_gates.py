@@ -445,105 +445,6 @@ def test_char_entropy_case_insensitive_and_stable(spark):
     assert out[1].char_entropy == out[2].char_entropy
 
 
-# ---------------------------------------------------------------------------
-# Flesch / Flesch–Kincaid readability
-# ---------------------------------------------------------------------------
-
-def _readability_replay(text):
-    """Pure-Python replay of with_readability's text model."""
-    import re
-
-    if text is None:
-        return (0, 0, 0, None, None, "empty")
-    w = re.findall(r"[a-z]+", text.lower())
-    if not w:
-        return (0, 0, 0, None, None, "empty")
-
-    def syl(x):
-        vg = len(re.findall(r"[aeiouy]+", x))
-        if vg > 1 and re.search(r"[^aeiouy]e$", x):
-            return vg - 1
-        return max(vg, 1)
-
-    n_syl = sum(map(syl, w))
-    n_sent = max(1, len(re.findall(r"[.!?]+", text)))
-    wps, spw = len(w) / n_sent, n_syl / len(w)
-    ease = round(206.835 - 1.015 * wps - 84.6 * spw, 6)
-    grade = round(0.39 * wps + 11.8 * spw - 15.59, 6)
-    from scraping_etl_spark.operators.textstats import READABILITY_BANDS
-
-    band = "very_hard"
-    for edge, name in READABILITY_BANDS:
-        if ease >= edge:
-            band = name
-            break
-    return (len(w), n_sent, n_syl, ease, grade, band)
-
-
-def test_readability_matches_pure_python_replay(spark):
-    """Row-for-row equality with the re-based replay across syllable
-    edge cases: silent e (make=1), vowel-group runs (beautiful=3 under
-    the heuristic), no-vowel words (tv->1), terminator runs (?! = one
-    sentence), wordless and NULL docs."""
-    from scraping_etl_spark.operators.textstats import with_readability
-
-    rows = [
-        (1, "The cat sat on the mat."),
-        (2, "Make the cake; bake it late."),
-        (3, "Is this beautiful? Yes!! Absolutely incomprehensible."),
-        (4, "tv tv tv"),
-        (5, "no terminator here"),
-        (6, ""),
-        (7, "12345 !!!"),
-        (8, None),
-        (9, "One. Two. Three. Four? Five!"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = {
-        r.doc_id: (r.n_words, r.n_sentences, r.n_syllables,
-                   r.flesch_reading_ease, r.fk_grade, r.readability_band)
-        for r in with_readability(df).collect()
-    }
-    for doc_id, text in rows:
-        assert out[doc_id] == _readability_replay(text), (doc_id, text)
-
-
-def test_readability_known_syllables(spark):
-    """Hand-checked syllable arithmetic: 'make' loses its silent e,
-    'late' too; monosyllables stay 1; the scores follow the published
-    formulas exactly."""
-    from scraping_etl_spark.operators.textstats import with_readability
-
-    df = spark.createDataFrame(
-        [(1, "Make it.")], "doc_id LONG, text STRING"
-    )
-    r = with_readability(df).collect()[0]
-    # make -> 2 vowel groups - silent e = 1; it -> 1
-    assert (r.n_words, r.n_sentences, r.n_syllables) == (2, 1, 2)
-    assert r.flesch_reading_ease == round(
-        206.835 - 1.015 * 2.0 - 84.6 * 1.0, 6
-    )
-    assert r.fk_grade == round(0.39 * 2.0 + 11.8 * 1.0 - 15.59, 6)
-    assert r.readability_band == "very_easy"
-
-
-def test_readability_gate_matches_oracle_staged_for_r19(spark):
-    """The staged doc_readability gate hashes against its DuckDB oracle
-    and serves as a pure map-side projection — no join, no exchange
-    (the with_char_entropy 100 TB shape)."""
-    from scraping_etl_spark.plans import pipeline_ops as P
-    from tests.oracle import assert_matches_oracle
-
-    sf = "/root/testdata/sf0.001"
-    df = P.q_doc_readability(spark, sf)
-    assert_matches_oracle(df, P.ORACLE_DOC_READABILITY, sf)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    for node in ("Join", "Exchange", "CartesianProduct"):
-        assert node not in plan, node
-    bands = {r.readability_band for r in df.collect()}
-    assert bands & {"easy", "medium", "hard", "very_easy", "very_hard"}
-
-
 def test_keyword_extract_ranks_rare_terms_first(spark):
     from scraping_etl_spark.operators.textstats import keyword_extract
 
@@ -648,7 +549,7 @@ def test_hits_empty_edges_raises(spark):
 
 
 def test_hits_gate_matches_oracle_staged_for_r14(spark):
-    """The staged host_hits gate hashes against its unrolled-CTE
+    """The registered host_hits gate hashes against its unrolled-CTE
     DuckDB oracle (MATERIALIZED CTEs — DuckDB inlines plain CTEs per
     reference and the chain would re-evaluate exponentially), and the
     planted host-0 authority dominates."""
