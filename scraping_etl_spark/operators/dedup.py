@@ -348,6 +348,21 @@ def cross_corpus_neardup_pairs(
         ref_docs, ref_banded = minhash_banded(
             ref, id_col, text_col, k, num_hashes, bands
         )
+    return _neardup_screen(new_docs, new_banded, ref_docs, ref_banded, threshold)
+
+
+def _neardup_screen(
+    new_docs: DataFrame,
+    new_banded: DataFrame,
+    ref_docs: DataFrame,
+    ref_banded: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """The screen kernel of :func:`cross_corpus_neardup_pairs`, over
+    already-banded sides (:func:`minhash_banded`'s ``(docs, banded)``
+    pairs): the new×ref band equi-join, then exact shingle Jaccard
+    ≥ ``threshold``. ``streaming.pipeline.neardup_screen_stream`` calls
+    it with its lake relations as the ref side."""
     cand = (
         new_banded.alias("a")
         .join(
@@ -636,33 +651,46 @@ def winnow_candidate_pairs(
 
     Fingerprints appearing in more than ``max_docs_per_fp`` documents
     are dropped FIRST (the paper's too-common filter: boilerplate
-    phrases carry no plagiarism signal) — which is simultaneously the
-    skew guard: the pair join fans out quadratically per fingerprint,
-    so bounding docs-per-print bounds every join key's fan-out by
-    construction, the same reasoning as the banded-LSH pair cap. The
-    filtered fingerprint table is checkpointed once for its reuse
-    across the two join sides."""
+    phrases carry no plagiarism signal), which is simultaneously the
+    skew guard of the pair join (:func:`_shared_key_pairs`)."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     fps = winnow_fingerprints(df, id_col, text_col, k, w)
+    return _shared_key_pairs(fps, id_col, "fingerprint", max_docs_per_fp).filter(
+        F.col("n_shared") >= min_shared
+    )
+
+
+def _shared_key_pairs(
+    rel: DataFrame, id_col: str, key: str, max_docs: int
+) -> DataFrame:
+    """``(id_a, id_b, n_shared)`` with ``id_a < id_b`` for every id pair
+    of the distinct ``(id_col, key)`` relation ``rel`` that shares a
+    key, counting shared keys. Keys held by more than ``max_docs`` ids
+    are dropped FIRST — the too-common filter that is simultaneously
+    the skew guard (the pair join fans out quadratically per key, so
+    bounding ids-per-key bounds every join key's fan-out by
+    construction); the filtered relation is ``localCheckpoint``-ed
+    once for its two join sides. The set-overlap join of
+    :func:`winnow_candidate_pairs`, :func:`containment_pairs` and
+    ``multimodal.payload_containment_pairs``."""
     common = (
-        fps.groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("_n_docs"))
-        .filter(F.col("_n_docs") > max_docs_per_fp)
-        .select("fingerprint")
+        rel.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_nd"))
+        .filter(F.col("_nd") > max_docs)
+        .select(key)
     )
     # no forced broadcast: the too-common set is usually tiny (each
-    # member needs > max_docs_per_fp distinct docs) but is corpus-
-    # dependent — AQE picks the strategy from its measured size.
-    kept = fps.join(common, "fingerprint", "left_anti").localCheckpoint()
-    a = kept.select(F.col(id_col).alias("id_a"), "fingerprint")
-    b = kept.select(F.col(id_col).alias("id_b"), "fingerprint")
+    # member needs > max_docs distinct ids) but is corpus-dependent —
+    # AQE picks the strategy from its measured size.
+    kept = rel.join(common, key, "left_anti").localCheckpoint()
+    a = kept.select(F.col(id_col).alias("id_a"), key)
+    b = kept.select(F.col(id_col).alias("id_b"), key)
     return (
-        a.join(b, "fingerprint")
+        a.join(b, key)
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
     )
 
 
@@ -712,30 +740,27 @@ def containment_pairs(
         # kept relation) across two jobs — without this the final plan
         # re-runs the corpus scan per branch (measured r17: 8 parquet
         # scans in the final plan -> 0, all branches read the
-        # checkpoint; same trade as `kept` below)
+        # checkpoint; same trade as _shared_key_pairs' `kept`)
         .localCheckpoint()
     )
-    sizes = grams.groupBy("_id").agg(F.count(F.lit(1)).cast("long").alias("n_grams"))
-    common = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") > max_docs_per_gram)
-        .select("gram")
-    )
-    kept = grams.join(common, "gram", "left_anti").localCheckpoint()
-    a = kept.select(F.col("_id").alias("id_a"), "gram")
-    b = kept.select(F.col("_id").alias("id_b"), "gram")
-    shared = (
-        a.join(b, "gram")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
+    return _containment(grams, "gram", max_docs_per_gram, tau)
+
+
+def _containment(rel: DataFrame, key: str, max_docs: int, tau: float) -> DataFrame:
+    """Containment scoring over the distinct ``(_id, key)`` set relation
+    ``rel``: :func:`_shared_key_pairs` counts the shared keys, and
+    ``c = n_shared / min(n_a, n_b)`` divides by the UNFILTERED per-id
+    set sizes (rounded to 6), keeping ``c >= tau``. Returns ``(id_a,
+    id_b, n_shared, n_a, n_b, containment)``. Shared by
+    :func:`containment_pairs` and
+    ``multimodal.payload_containment_pairs``."""
+    sizes = rel.groupBy("_id").agg(F.count(F.lit(1)).cast("long").alias("_n"))
     return (
-        shared.join(sizes.select(F.col("_id").alias("id_a"),
-                                 F.col("n_grams").alias("n_a")), "id_a")
+        _shared_key_pairs(rel, "_id", key, max_docs)
+        .join(sizes.select(F.col("_id").alias("id_a"),
+                           F.col("_n").alias("n_a")), "id_a")
         .join(sizes.select(F.col("_id").alias("id_b"),
-                           F.col("n_grams").alias("n_b")), "id_b")
+                           F.col("_n").alias("n_b")), "id_b")
         .withColumn(
             "containment",
             F.round(F.col("n_shared") / F.least("n_a", "n_b").cast("double"), 6),
@@ -1272,7 +1297,26 @@ def edit_screen_pairs(
                 "them or lower q (the streaming twin drops them on "
                 "both sides for the same reason)."
             )
-    ref_pre = ed_gram_prefix(ed_gram_occurrences(lake_s, q), k, q).select(
+    return _edit_screen(
+        new_s, ed_gram_prefix(ed_gram_occurrences(lake_s, q), k, q), lake_s, k, q
+    )
+
+
+def _edit_screen(
+    new_s: DataFrame,
+    ref_prefix: DataFrame,
+    ref_strings: DataFrame,
+    k: int,
+    q: int,
+) -> DataFrame:
+    """The screen kernel of :func:`edit_screen_pairs`: ALL positional
+    grams of the ``(_id, _s, _len)`` new strings join the ref side's
+    :func:`ed_gram_prefix` rows on the gram under the position and
+    length band filters, and the banded-DP ``levenshtein(new, ref, k)``
+    verifies against ``ref_strings``. ``streaming.pipeline.
+    edit_screen_stream`` calls it with its lake relations as the ref
+    side."""
+    ref_pre = ref_prefix.select(
         F.col("_id").alias("ref_id"), F.col("_len").alias("_lr"),
         "_g", F.col("_p").alias("_pr"),
     )
@@ -1291,7 +1335,7 @@ def edit_screen_pairs(
         .distinct()
     )
     sn = new_s.select(F.col("_id").alias("new_id"), F.col("_s").alias("_sn"))
-    sr = lake_s.select(F.col("_id").alias("ref_id"), F.col("_s").alias("_sr"))
+    sr = ref_strings.select(F.col("_id").alias("ref_id"), F.col("_s").alias("_sr"))
     return (
         cand.join(sn, "new_id")
         .join(sr, "ref_id")

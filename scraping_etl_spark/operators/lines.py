@@ -33,7 +33,7 @@ counters, so they compose with every downstream gate.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from scraping_etl_spark.operators.dedup import _bind
@@ -62,23 +62,40 @@ def dedup_lines(
     with empty text, the honest outcome). Returns ``id_col``,
     rewritten ``text_col``, ``n_lines`` (pre-dedup), ``n_kept``.
     """
+    return _reassemble(
+        df, _first_occurrences(df, id_col, text_col, sep), id_col, text_col, sep
+    )
+
+
+def _first_occurrences(
+    df: DataFrame, id_col: str, text_col: str, sep: str
+) -> DataFrame:
+    """``(id, pos, line, _h)`` rows of every line's first occurrence,
+    first = minimum ``(id, pos)`` within the line's md5 ``_h``: the
+    window :func:`dedup_lines` and ``streaming.pipeline.line_dedup_stream``
+    share."""
     # non-outer explode: a doc with no (non-empty) lines contributes no
-    # rows here and comes back via the final left join — this keeps
+    # rows here and comes back via _reassemble's left join — this keeps
     # every window partition keyed on a REAL line hash (an outer
     # explode would funnel all empty docs into one NULL-hash partition,
     # a single-task hot spot at scale)
     lines = df.select(
         F.col(id_col),
         F.posexplode(split_lines(text_col, sep)).alias("pos", "line"),
-    )
-    hashed = lines.withColumn("_h", F.md5("line"))
-    from pyspark.sql import Window
-
+    ).withColumn("_h", F.md5("line"))
     w = Window.partitionBy("_h").orderBy(id_col, "pos")
-    kept = (
-        hashed.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") == 1)
+    return lines.withColumn("_rk", F.row_number().over(w)).filter(
+        F.col("_rk") == 1
     )
+
+
+def _reassemble(
+    df: DataFrame, kept: DataFrame, id_col: str, text_col: str, sep: str
+) -> DataFrame:
+    """Rebuild each document of ``df`` from its surviving ``kept``
+    ``(id, pos, line)`` rows in original line order (a sorted
+    collect per doc); a doc with no survivor comes back with empty
+    text. Returns ``(id, text, n_lines, n_kept)``."""
     rebuilt = kept.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -178,7 +195,7 @@ def remove_common_lines(
     per group (one partial-agg shuffle at distinct-line cardinality) →
     the boilerplate set joins back LEFT-ANTI on (group, hash). Group
     doc counts ride a broadcast (group cardinality = host count);
-    reassembly is the :func:`dedup_lines` sorted-collect. Returns
+    :func:`_reassemble` rebuilds the documents. Returns
     ``(id, text, n_lines, n_kept)``."""
     if not 0.0 < min_df_frac <= 1.0:
         raise ValueError(f"min_df_frac must be in (0, 1], got {min_df_frac}")
@@ -207,26 +224,4 @@ def remove_common_lines(
         .select("_g", "_h")
     )
     kept = lines.join(boiler, ["_g", "_h"], "left_anti")
-    rebuilt = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("line")))),
-                lambda s: s["line"],
-            ),
-            sep,
-        ).alias("_new_text"),
-        F.count(F.lit(1)).cast("long").alias("n_kept"),
-    )
-    return (
-        df.select(
-            F.col(id_col),
-            F.size(split_lines(text_col, sep)).cast("long").alias("n_lines"),
-        )
-        .join(rebuilt, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("_new_text"), F.lit("")).alias(text_col),
-            "n_lines",
-            F.coalesce(F.col("n_kept"), F.lit(0).cast("long")).alias("n_kept"),
-        )
-    )
+    return _reassemble(df, kept, id_col, text_col, sep)

@@ -16,6 +16,12 @@ real and tested.
 - :func:`decode_media` — the codec boundary: dispatches on media_type
   and raises ``NotImplementedError`` for real codecs; the ``"raw"``
   type passes bytes through, which is what the tests pin down.
+- :func:`payload_neardup_pairs` — byte-level near-dup pairs without
+  decoding: banded Hamming lookup over the byte-chunk
+  :func:`payload_simhash`.
+- :func:`payload_containment_pairs` — byte-level containment pairs
+  over the :func:`payload_chunk_hashes` sets (the text tier's
+  ``dedup.containment_pairs`` scoring).
 
 Scale notes: ``mapInPandas`` streams Arrow record batches — memory is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``, not
@@ -32,7 +38,7 @@ import hashlib
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,157 +116,6 @@ def media_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return cols.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame, width: int, height: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Resize plumbing — Arrow-batched ``mapInPandas`` with the real
-    schema/batch contract; the pixel math is a deterministic fake
-    (truncate/zero-pad the payload to width*height bytes) because no
-    image codec ships in this container. Production swaps the body for
-    PIL ``Image.resize`` keeping the exact same signature, schema and
-    batch shape."""
-    import pandas as pd
-    from typing import Iterator
-
-    target = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = [
-                bytes(p[:target]).ljust(target, b"\0") for p in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": out,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    cols = df.select(F.col(id_col), F.col("payload"))
-    return cols.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame", T.BinaryType()),
-    ]
-)
-
-
-def sample_frames(
-    df: DataFrame, every_n_bytes: int = 64, max_frames: int = 8,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Frame-sampling plumbing — the one-row-in / many-rows-out fan-out
-    shape of video frame extraction, as ``mapInPandas`` (which may emit
-    any number of output rows per input row — no explode needed).
-    Deterministic fake: every ``every_n_bytes`` slice of the payload is
-    "a frame", capped at ``max_frames``. Production swaps the body for
-    ffmpeg keyframe extraction with the same contract."""
-    import pandas as pd
-    from typing import Iterator
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, p in zip(pdf[id_col], pdf["payload"]):
-                for k in range(max_frames):
-                    lo = k * every_n_bytes
-                    if lo >= len(p):
-                        break
-                    ids.append(i)
-                    idxs.append(k)
-                    frames.append(bytes(p[lo : lo + every_n_bytes]))
-            yield pd.DataFrame(
-                {"doc_id": ids, "frame_idx": idxs, "frame": frames}
-            )
-
-    cols = df.select(F.col(id_col), F.col("payload"))
-    return cols.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-SIGNATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("coarse_sig", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
-
-def payload_coarse_signature(
-    df: DataFrame, stride: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """Perceptual-hash-SHAPED signature over the binary payload: md5 of
-    every ``stride``-th byte. The downsampling is the deterministic
-    stand-in for a real perceptual hash (pHash/chromaprint — codec
-    libraries absent here; production swaps the body, keeping the
-    signature/schema/batch contract), but the SCALE property it
-    exercises is the real one: a byte-level near-dup tier needs a
-    BUCKETABLE key computed in one Arrow pass so candidate pairs come
-    from an equi-join on the signature, never from pairwise payload
-    comparison. Returns ``(id, coarse_sig, n_bytes)``."""
-    if stride < 1:
-        raise ValueError(f"stride must be >= 1, got {stride}")
-
-    def sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [bytes(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "coarse_sig": [
-                        hashlib.md5(p[::stride]).hexdigest() for p in payloads
-                    ],
-                    "n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return df.select(F.col(id_col), F.col("payload")).mapInPandas(
-        sig, schema=SIGNATURE_SCHEMA
-    )
-
-
-def payload_dup_groups(
-    df: DataFrame, stride: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """Byte-level near-dup families via the coarse signature: one
-    partial-agg groupBy on the 32-char signature (the exact-dedup
-    shape — ``dedup.exact_dup_groups`` at the payload tier). Returns
-    per-payload rows with ``n_family`` and the min-id ``is_canonical``
-    survivor flag; families of size 1 pass through. Signature
-    collisions over-group (the documented coarse-tier trade —
-    downstream exact verification compares ``payload_md5`` from
-    :func:`media_features` within each family, a family-bounded
-    join, never corpus-pairwise)."""
-    sigs = payload_coarse_signature(df, stride=stride, id_col=id_col)
-    fams = sigs.groupBy("coarse_sig").agg(
-        F.count(F.lit(1)).cast("long").alias("n_family"),
-        F.min(id_col).alias("_min_id"),
-    )
-    return sigs.join(fams, "coarse_sig").select(
-        id_col,
-        "coarse_sig",
-        "n_bytes",
-        "n_family",
-        (F.col(id_col) == F.col("_min_id")).alias("is_canonical"),
-    )
-
-
 def payload_simhash(
     payload_col: Column | str = "payload",
     chunk_bytes: int = 32,
@@ -282,6 +137,20 @@ def payload_simhash(
     core — zero shuffle to sign a corpus."""
     from scraping_etl_spark.operators.dedup import _bind, simhash_of_hashes
 
+    return _bind(
+        _chunk_hashes(payload_col, chunk_bytes),
+        lambda hashed: simhash_of_hashes(hashed, bits),
+    )
+
+
+def _chunk_hashes(payload_col: Column | str, chunk_bytes: int) -> Column:
+    """60-bit md5-prefix hashes of the payload's fixed-stride
+    ``chunk_bytes``-byte chunks (``2·chunk_bytes`` chars of its hex
+    encoding, tail kept), in payload order; empty for an empty
+    payload. The chunker of :func:`payload_simhash` and
+    :func:`payload_chunk_hashes`."""
+    from scraping_etl_spark.operators.dedup import _bind
+
     col = F.col(payload_col) if isinstance(payload_col, str) else payload_col
     step = 2 * chunk_bytes
 
@@ -290,18 +159,14 @@ def payload_simhash(
         starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(step))).otherwise(
             F.array().cast("array<int>")
         )
-        return F.transform(starts, lambda i: hx.substr(i, F.lit(step)))
-
-    def _hashes(chunks: Column) -> Column:
         return F.transform(
-            chunks,
-            lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long"),
+            starts,
+            lambda i: F.conv(
+                F.substring(F.md5(hx.substr(i, F.lit(step))), 1, 15), 16, 10
+            ).cast("long"),
         )
 
-    return _bind(
-        _bind(F.hex(col), lambda hx: _hashes(_chunks(hx))),
-        lambda hashed: simhash_of_hashes(hashed, bits),
-    )
+    return _bind(F.hex(col), _chunks)
 
 
 def payload_neardup_pairs(
@@ -403,26 +268,7 @@ def payload_chunk_hashes(
     LONGs, not strings, so every downstream exchange is ~2.5x smaller
     (the ``doc_allpairs`` lesson); collisions (~n²/2^61) would show as
     an oracle hash mismatch, detected not silent."""
-    from scraping_etl_spark.operators.dedup import _bind
-
-    col = F.col(payload_col) if isinstance(payload_col, str) else payload_col
-    step = 2 * chunk_bytes
-
-    def _chunks(hx: Column) -> Column:
-        n = F.length(hx)
-        starts = F.when(n > 0, F.sequence(F.lit(1), n, F.lit(step))).otherwise(
-            F.array().cast("array<int>")
-        )
-        return F.array_distinct(
-            F.transform(
-                starts,
-                lambda i: F.conv(
-                    F.substring(F.md5(hx.substr(i, F.lit(step))), 1, 15), 16, 10
-                ).cast("long"),
-            )
-        )
-
-    return _bind(F.hex(col), _chunks)
+    return F.array_distinct(_chunk_hashes(payload_col, chunk_bytes))
 
 
 def payload_containment_pairs(
@@ -449,48 +295,23 @@ def payload_containment_pairs(
     embedding needs a content-defined chunker to re-sync (the
     ``corpus_prep.cdc_chunks`` tier, byte-level variant future work).
 
-    Plan mirrors :func:`dedup.containment_pairs` exactly: distinct
-    (id, chunk-long) relation, the too-common-chunk filter that is
+    Plan: the distinct (id, chunk-long) relation goes through the
+    scoring kernel of :func:`dedup.containment_pairs`
+    (``dedup._containment``): the too-common-chunk filter that is
     simultaneously the skew guard (every join key's fan-out bounded by
     ``max_docs_per_chunk`` — zero-runs and shared headers are the
     binary boilerplate), one ``localCheckpoint`` feeding both join
     sides, equi-join + partial-agg count, min()-denominator from the
-    UNFILTERED set sizes. Returns ``(id_a, id_b, n_shared, n_a, n_b,
-    containment)`` with ``id_a < id_b``, containment rounded to 6.
+    UNFILTERED set sizes. Unlike the text tier, the chunk relation is
+    not materialized upstream. Returns ``(id_a, id_b, n_shared, n_a,
+    n_b, containment)`` with ``id_a < id_b``, containment rounded to 6.
     """
     if not 0.0 < tau <= 1.0:
         raise ValueError(f"tau must be in (0, 1], got {tau}")
+    from scraping_etl_spark.operators.dedup import _containment
+
     chunks = df.select(
         F.col(id_col).alias("_id"),
         F.explode(payload_chunk_hashes(payload_col, chunk_bytes)).alias("_c"),
     )
-    sizes = chunks.groupBy("_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_chunks")
-    )
-    common = (
-        chunks.groupBy("_c")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") > max_docs_per_chunk)
-        .select("_c")
-    )
-    kept = chunks.join(common, "_c", "left_anti").localCheckpoint()
-    a = kept.select(F.col("_id").alias("id_a"), "_c")
-    b = kept.select(F.col("_id").alias("id_b"), "_c")
-    shared = (
-        a.join(b, "_c")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
-    return (
-        shared.join(sizes.select(F.col("_id").alias("id_a"),
-                                 F.col("n_chunks").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("_id").alias("id_b"),
-                           F.col("n_chunks").alias("n_b")), "id_b")
-        .withColumn(
-            "containment",
-            F.round(F.col("n_shared") / F.least("n_a", "n_b").cast("double"), 6),
-        )
-        .filter(F.col("containment") >= tau)
-        .select("id_a", "id_b", "n_shared", "n_a", "n_b", "containment")
-    )
+    return _containment(chunks, "_c", max_docs_per_chunk, tau)

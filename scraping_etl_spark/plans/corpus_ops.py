@@ -746,44 +746,11 @@ def q_doc_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-bigram-LM quality score per document: add-one-smoothed
     ``P(w2|w1)`` from the corpus's own counts, mean natural log-prob —
     deterministic arithmetic end to end (the only float op chain is
-    ln + avg, rounded to 6), so the DuckDB oracle reproduces it."""
+    ln + avg, rounded to 6). ``tools/dump_plans.py`` dumps this plan;
+    the registered ``doc_lm_score_ref`` gate checks the scorer against
+    a reference LM."""
     d = load_table(spark, sf_dir, "documents")
     return CP.with_lm_score(d).select("doc_id", "n_bigrams", "avg_logp")
-
-
-ORACLE_DOC_LM_SCORE = f"""
-WITH tok AS (
-  SELECT doc_id, {_LTOKS} AS t FROM documents
-),
-bi AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) >= 2
-                     THEN list_transform(generate_series(1, len(t) - 1),
-                                         i -> t[i] || ' ' || t[i+1])
-                     ELSE [] END) AS g
-  FROM tok
-),
-bc AS (SELECT g, count(*) AS cbi FROM bi GROUP BY 1),
-uc AS (
-  SELECT w, count(*) AS cw
-  FROM (SELECT unnest(t) AS w FROM tok) GROUP BY 1
-),
-v AS (SELECT count(*) AS v FROM uc),
-agg AS (
-  SELECT bi.doc_id,
-         CAST(count(*) AS BIGINT) AS n_bigrams,
-         round(avg(ln((bc.cbi + 1.0) / (uc.cw + v.v))), 6) AS avg_logp
-  FROM bi
-  JOIN bc USING (g)
-  JOIN uc ON uc.w = split_part(bi.g, ' ', 1)
-  CROSS JOIN v
-  GROUP BY 1
-)
-SELECT d.doc_id,
-       CAST(coalesce(n_bigrams, 0) AS BIGINT) AS n_bigrams,
-       coalesce(avg_logp, 0.0) AS avg_logp
-FROM documents d LEFT JOIN agg USING (doc_id)
-"""
 
 
 # ---------------------------------------------------------------------------

@@ -1251,11 +1251,10 @@ GROUP BY n_name
 
 def q_doc_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Analysis-surface rollup (SURVEY §2.4 extension): per-language
-    corpus profile with *exact* distinct counts — deterministic, so it
-    carries a full DuckDB hash gate. The registered
+    corpus profile with *exact* distinct counts. The registered
     :func:`q_doc_corpus_profile_hll` emits every column of this profile
-    plus the sketch-tolerance verdicts; ``tools/dump_plans.py`` dumps
-    this plan."""
+    plus the sketch-tolerance verdicts, and its oracle checks them;
+    ``tools/dump_plans.py`` dumps this plan."""
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1263,17 +1262,6 @@ def q_doc_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct(F.md5("text")).alias("n_distinct_texts"),
         F.avg("n_chars").alias("avg_chars"),
     )
-
-
-ORACLE_DOC_CORPUS_PROFILE = """
-SELECT lang,
-       count(*) AS n_docs,
-       count(DISTINCT source) AS n_sources,
-       count(DISTINCT md5(text)) AS n_distinct_texts,
-       avg(n_chars) AS avg_chars
-FROM documents
-GROUP BY lang
-"""
 
 
 #: Relative-error budget for the HLL tier's tolerance gate: the

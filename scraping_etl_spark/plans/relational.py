@@ -712,12 +712,12 @@ WHERE NOT EXISTS (
 # ---------------------------------------------------------------------------
 
 def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed snapshot diff gate (snapshot.snapshot_diff): yesterday =
+    """Keyed snapshot diff (snapshot.snapshot_diff): yesterday =
     customer as-is; today = customers sans every 13th (removed), with
     every 7th rebalanced (changed) and every 11th re-keyed +10M
-    (added). The oracle derives the statuses INDEPENDENTLY from the
-    construction arithmetic — it never computes a fingerprint — so a
-    fingerprint bug (e.g. null-collation collisions) fails the gate."""
+    (added). The registered :func:`q_doc_dq_profile` folds it into its
+    rollup, whose oracle derives the statuses from the construction
+    arithmetic."""
     from scraping_etl_spark.operators.snapshot import snapshot_diff
 
     c = load_table(spark, sf_dir, "customer")
@@ -738,16 +738,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         old, new, key_col="c_custkey",
         compare_cols=["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
     )
-
-
-ORACLE_SNAPSHOT_DIFF = """
-SELECT c_custkey, 'removed' AS status FROM customer WHERE c_custkey % 13 = 0
-UNION ALL
-SELECT c_custkey, 'changed' FROM customer
-WHERE c_custkey % 7 = 0 AND c_custkey % 13 <> 0
-UNION ALL
-SELECT c_custkey + 10000000, 'added' FROM customer WHERE c_custkey % 11 = 0
-"""
 
 
 def q_doc_dq_profile(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -998,26 +998,18 @@ def line_dedup_stream(
     follow the dynamic-overwrite convention and share the
     checkpoint-reset caveat of :func:`heavy_hitters_stream`). Within
     the batch, the batch operator's own first-occurrence window
-    applies. Semantics: first occurrence in ARRIVAL ORDER wins —
-    batches ingested in doc-id order reproduce the batch operator over
-    the union bit-for-bit (the twin test's setting); out-of-order
-    ingest keeps the earlier-ARRIVED copy, the only coherent choice on
-    an unbounded stream."""
-    from pyspark.sql import Window
-
-    from scraping_etl_spark.operators.lines import split_lines
+    (``lines._first_occurrences``) applies, and documents reassemble
+    through its ``lines._reassemble``. Semantics: first occurrence in
+    ARRIVAL ORDER wins — batches ingested in doc-id order reproduce the
+    batch operator over the union bit-for-bit (the twin test's
+    setting); out-of-order ingest keeps the earlier-ARRIVED copy, the
+    only coherent choice on an unbounded stream."""
+    from scraping_etl_spark.operators.lines import _first_occurrences, _reassemble
 
     stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        lines = batch_df.select(
-            F.col(id_col),
-            F.posexplode(split_lines(text_col, sep)).alias("pos", "line"),
-        ).withColumn("_h", F.md5("line"))
-        w = Window.partitionBy("_h").orderBy(id_col, "pos")
-        firsts = lines.withColumn("_rk", F.row_number().over(w)).filter(
-            F.col("_rk") == 1
-        )
+        firsts = _first_occurrences(batch_df, id_col, text_col, sep)
         seen = _earlier_batches(spark, seen_dir, batch_id)
         if seen is not None:
             kept = firsts.join(seen.select("_h"), "_h", "left_anti")
@@ -1025,31 +1017,7 @@ def line_dedup_stream(
             kept = firsts
         kept = kept.localCheckpoint()  # one compute, three consumers
         _write_batch_partition(kept.select("_h").distinct(), batch_id, seen_dir)
-        rebuilt = kept.groupBy(id_col).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("pos"), F.col("line")))
-                    ),
-                    lambda s: s["line"],
-                ),
-                sep,
-            ).alias("_new_text"),
-            F.count(F.lit(1)).cast("long").alias("n_kept"),
-        )
-        out = (
-            batch_df.select(
-                F.col(id_col),
-                F.size(split_lines(text_col, sep)).cast("long").alias("n_lines"),
-            )
-            .join(rebuilt, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce(F.col("_new_text"), F.lit("")).alias(text_col),
-                "n_lines",
-                F.coalesce(F.col("n_kept"), F.lit(0).cast("long")).alias("n_kept"),
-            )
-        )
+        out = _reassemble(batch_df, kept, id_col, text_col, sep)
         _write_batch_partition(out, batch_id, out_dir)
 
     return _start(
@@ -1081,8 +1049,9 @@ def neardup_screen_stream(
     rows) and the shingle sets (``docs_dir``: id, shingle array — what
     the exact-Jaccard verify needs). Like :func:`line_dedup_stream`,
     lake-as-state holds what executor streaming state could not, and
-    holds it EXACTLY — the screen is the same band equi-join + exact
-    verify the batch operator runs, not an approximation of it.
+    holds it EXACTLY — the screen is the batch operator's own kernel
+    (``dedup._neardup_screen``: band equi-join + exact verify) with the
+    lake relations as its ref side, not an approximation of it.
 
     Per micro-batch: the batch bands once (``minhash_banded``, same
     fixed-seed arithmetic as the lake's signatures — band params are
@@ -1100,7 +1069,7 @@ def neardup_screen_stream(
     shard-ordered ingest reproduces the batch screen of each shard
     against the union of its predecessors bit-for-bit — the twin
     test's pinned setting."""
-    from scraping_etl_spark.operators.dedup import minhash_banded
+    from scraping_etl_spark.operators.dedup import _neardup_screen, minhash_banded
 
     stream = _read_files(spark, schema, source_dir, max_files_per_trigger)
 
@@ -1112,41 +1081,9 @@ def neardup_screen_stream(
         new_banded = new_banded.localCheckpoint()  # lake write + screen
         ref_banded = _earlier_batches(spark, bands_dir, batch_id)
         if ref_banded is not None:
-            ref_banded = ref_banded.select("_id", "_band_idx", "_band_hash")
-            ref_docs = (
-                spark.read.parquet(docs_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .select("_id", "_sh")
-            )
-            # the operator's new side re-bands from text; feed it the
-            # already-banded batch relations directly instead.
-            cand = (
-                new_banded.alias("a")
-                .join(
-                    ref_banded.alias("b"),
-                    (F.col("a._band_idx") == F.col("b._band_idx"))
-                    & (F.col("a._band_hash") == F.col("b._band_hash")),
-                )
-                .select(
-                    F.col("a._id").alias("new_id"),
-                    F.col("b._id").alias("ref_id"),
-                )
-                .distinct()
-            )
-            from scraping_etl_spark.operators.dedup import jaccard
-
-            sh_n = new_docs.select(
-                F.col("_id").alias("new_id"), F.col("_sh").alias("_sh_n")
-            )
-            sh_r = ref_docs.select(
-                F.col("_id").alias("ref_id"), F.col("_sh").alias("_sh_r")
-            )
-            pairs = (
-                cand.join(sh_n, "new_id")
-                .join(sh_r, "ref_id")
-                .withColumn("jaccard", jaccard(F.col("_sh_n"), F.col("_sh_r")))
-                .filter(F.col("jaccard") >= threshold)
-                .select("new_id", "ref_id", "jaccard")
+            ref_docs = _earlier_batches(spark, docs_dir, batch_id)
+            pairs = _neardup_screen(
+                new_docs, new_banded, ref_docs, ref_banded, threshold
             )
         else:
             pairs = spark.createDataFrame(
@@ -1334,7 +1271,7 @@ def edit_screen_stream(
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
-    """Streaming twin of ``dedup.edit_distance_pairs`` — "is this
+    """Streaming twin of ``dedup.edit_screen_pairs`` — "is this
     record within ``k`` edits of one we already hold?" AT INGEST (the
     record-linkage screen a catalog/author/title feed needs). Lake
     state is two parquet relations partitioned by ``batch_id``: the
@@ -1351,11 +1288,12 @@ def edit_screen_stream(
     ``dedup.ed_gram_prefix``) and that partner is in the batch's FULL
     gram list by construction — so the lake prefix never needs
     recomputing as the global df order drifts, which is what makes
-    lake-as-state exact here, not approximate. Candidates then verify
-    with the banded-DP ``levenshtein(new, ref, k)``; matches land in
-    ``out_dir`` and the batch's strings + prefix grams append to the
-    lakes under ``batch_id=N`` (dynamic partition overwrite
-    throughout). Strings are truncated to ``string_len`` and rows
+    lake-as-state exact here, not approximate. The join and the
+    banded-DP ``levenshtein(new, ref, k)`` verify are the batch
+    operator's kernel (``dedup._edit_screen``) with the lake relations
+    as its ref side; matches land in ``out_dir`` and the batch's
+    strings + prefix grams append to the lakes under ``batch_id=N``
+    (dynamic partition overwrite throughout). Strings are truncated to ``string_len`` and rows
     shorter than ``q·(k+1)`` (the completeness floor) are dropped on
     BOTH sides — the batch operator's documented precondition, applied
     symmetrically so the stream equals the batch screen of each shard
@@ -1363,6 +1301,7 @@ def edit_screen_stream(
     setting). Within-batch pairs are deliberately NOT emitted (that is
     the batch operator's job at rest)."""
     from scraping_etl_spark.operators.dedup import (
+        _edit_screen,
         ed_gram_occurrences,
         ed_gram_prefix,
     )
@@ -1380,46 +1319,10 @@ def edit_screen_stream(
             .filter(F.col("_len") >= floor)
             .localCheckpoint()
         )
-        occ_all = ed_gram_occurrences(s, q)
         ref_pre = _earlier_batches(spark, grams_dir, batch_id)
         if ref_pre is not None:
-            ref_pre = (
-                ref_pre.select(
-                    F.col("_id").alias("ref_id"),
-                    F.col("_len").alias("_lr"),
-                    "_g",
-                    F.col("_p").alias("_pr"),
-                )
-            )
-            cand = (
-                occ_all.select(
-                    F.col("_id").alias("new_id"),
-                    F.col("_len").alias("_ln"),
-                    "_g",
-                    F.col("_p").alias("_pn"),
-                )
-                .join(ref_pre, "_g")
-                .filter(
-                    (F.abs(F.col("_pn") - F.col("_pr")) <= k)
-                    & (F.abs(F.col("_ln") - F.col("_lr")) <= k)
-                )
-                .select("new_id", "ref_id")
-                .distinct()
-            )
-            sn = s.select(F.col("_id").alias("new_id"), F.col("_s").alias("_sn"))
-            sr = (
-                spark.read.parquet(strings_dir)
-                .filter(F.col("batch_id") < batch_id)
-                .select(F.col("_id").alias("ref_id"), F.col("_s").alias("_sr"))
-            )
-            pairs = (
-                cand.join(sn, "new_id")
-                .join(sr, "ref_id")
-                .select(
-                    "new_id", "ref_id",
-                    F.levenshtein("_sn", "_sr", k).alias("dist"),
-                )
-                .filter(F.col("dist") >= 0)
+            pairs = _edit_screen(
+                s, ref_pre, _earlier_batches(spark, strings_dir, batch_id), k, q
             )
         else:
             # id type derived from the incoming stream (r13 ADVICE):
@@ -1435,7 +1338,9 @@ def edit_screen_stream(
                 ]),
             )
         _write_batch_partition(pairs, batch_id, out_dir)
-        _write_batch_partition(ed_gram_prefix(occ_all, k, q), batch_id, grams_dir)
+        _write_batch_partition(
+            ed_gram_prefix(ed_gram_occurrences(s, q), k, q), batch_id, grams_dir
+        )
         _write_batch_partition(s, batch_id, strings_dir)
 
     return _start(

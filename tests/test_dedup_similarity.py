@@ -275,39 +275,6 @@ def test_type_profile_single_scan(spark, tmp_path):
     assert plan.count("Scan parquet") == 1, plan
 
 
-def _docs(spark):
-    return spark.createDataFrame(
-        [(1, "hello world this is a longer document"), (2, "short"), (3, "x" * 40)],
-        "doc_id long, text string",
-    )
-
-
-def test_resize_media_plumbing(spark):
-    df = MM.attach_payload(_docs(spark))
-    out = {r.doc_id: r for r in MM.resize_media(df, 4, 3).collect()}
-    for r in out.values():
-        assert len(r.payload) == 12 and r.width == 4 and r.height == 3
-    # truncate-or-pad is deterministic on the utf-8 payload
-    src = {r.doc_id: r.text.encode() for r in _docs(spark).collect()}
-    for i, p in src.items():
-        assert out[i].payload == bytes(p[:12]).ljust(12, b"\0")
-
-
-def test_sample_frames_fanout(spark):
-    df = MM.attach_payload(_docs(spark))
-    rows = MM.sample_frames(df, every_n_bytes=8, max_frames=3).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r.doc_id, []).append(r)
-    src = {r.doc_id: r.text.encode() for r in _docs(spark).collect()}
-    for i, frames in by_doc.items():
-        assert [f.frame_idx for f in sorted(frames, key=lambda f: f.frame_idx)] == list(range(len(frames)))
-        assert len(frames) == min(3, (len(src[i]) + 7) // 8)
-        for f in frames:
-            lo = f.frame_idx * 8
-            assert f.frame == src[i][lo:lo + 8]
-
-
 def test_dedup_clusters_rejects_non_numeric_ids(spark):
     """Id contract (ADVICE r3): string keys that cast('long') would
     silently NULL — dropping their nodes from the component computation
@@ -671,56 +638,8 @@ def test_emb_decontaminate_broadcast_guard_falls_back(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# payload coarse signature + byte-level near-dup families (round 9)
+# byte-level payload near-dup tier
 # ---------------------------------------------------------------------------
-
-def _payload_docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, payload binary")
-
-
-def test_payload_signature_ignores_non_sampled_bytes(spark):
-    """Bytes at positions the stride skips don't change the signature —
-    the bucketing property a perceptual tier relies on."""
-    base = bytes(range(64))
-    variant = bytearray(base)
-    for i in range(64):
-        if i % 4 != 0:
-            variant[i] = 0xFF  # perturb only non-sampled positions
-    df = _payload_docs(spark, [(1, base), (2, bytes(variant)), (3, b"other!!")])
-    sigs = {r.doc_id: r.coarse_sig for r in
-            MM.payload_coarse_signature(df, stride=4).collect()}
-    assert sigs[1] == sigs[2]
-    assert sigs[3] != sigs[1]
-
-
-def test_payload_dup_groups_families_and_survivor(spark):
-    a = bytes(range(32))
-    df = _payload_docs(spark, [(5, a), (9, a), (7, b"unique payload")])
-    out = {r.doc_id: r for r in MM.payload_dup_groups(df, stride=2).collect()}
-    assert out[5].n_family == 2 and out[5].is_canonical
-    assert out[9].n_family == 2 and not out[9].is_canonical
-    assert out[7].n_family == 1 and out[7].is_canonical
-    assert out[5].n_bytes == 32
-
-
-def test_payload_dup_groups_composes_with_attach_payload(spark):
-    docs = spark.createDataFrame(
-        [(1, "same text"), (2, "same text"), (3, "different")],
-        "doc_id long, text string",
-    )
-    out = MM.payload_dup_groups(MM.attach_payload(docs), stride=3)
-    fams = {r.doc_id: r.n_family for r in out.collect()}
-    assert fams[1] == 2 and fams[2] == 2 and fams[3] == 1
-
-
-def test_payload_signature_validates_stride(spark):
-    import pytest as _pt
-
-    with _pt.raises(ValueError):
-        MM.payload_coarse_signature(
-            _payload_docs(spark, [(1, b"x")]), stride=0
-        )
-
 
 def test_payload_simhash_exact_copies_at_hamming_zero(spark):
     """Identical payloads sign identically; the banded lookup finds

@@ -102,10 +102,44 @@ def test_every_query_face_is_served():
     assert sorted(faces - named) == sorted(_UNSERVED_FACES)
 
 
+def test_every_oracle_constant_is_read():
+    """Every module-level ``ORACLE_*`` string in ``plans/`` is read (an
+    AST load of its name or attribute) somewhere in the package or
+    ``tools/``: an oracle no spec or test compares against checks
+    nothing and is deleted."""
+    root = Path(scraping_etl_spark.__file__).parent
+    oracles = {
+        target.id
+        for path in sorted((root / "plans").glob("*.py"))
+        for node in ast.parse(path.read_text(encoding="utf-8")).body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for target in (node.targets if isinstance(node, ast.Assign)
+                       else [node.target])
+        if isinstance(target, ast.Name) and target.id.startswith("ORACLE_")
+    }
+    sources = sorted(root.rglob("*.py")) + sorted(
+        (root.parent / "tools").glob("*.py")
+    )
+    read = {
+        node.id if isinstance(node, ast.Name) else node.attr
+        for path in sources
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Attribute)
+        or (isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load))
+    }
+    assert oracles and sorted(oracles - read) == []
+
+
 def test_unselected_tiers_and_staged_operators_are_gone():
-    """The operators only the retired staged gates ran, and the scale
-    tiers no product call selected, stay deleted."""
-    from scraping_etl_spark.operators import corpus_prep, similarity, textstats
+    """The operators only the retired staged gates ran, the scale
+    tiers no product call selected, and the test-only multimodal
+    plumbing and coarse payload tier stay deleted."""
+    from scraping_etl_spark.operators import (
+        corpus_prep,
+        multimodal,
+        similarity,
+        textstats,
+    )
 
     gone = {
         similarity: (
@@ -116,6 +150,11 @@ def test_unselected_tiers_and_staged_operators_are_gone():
         ),
         textstats: ("with_readability", "READABILITY_BANDS", "with_lang_id"),
         corpus_prep: ("fim_transform",),
+        multimodal: (
+            "resize_media", "RESIZED_SCHEMA", "sample_frames",
+            "FRAME_SCHEMA", "payload_coarse_signature",
+            "payload_dup_groups", "SIGNATURE_SCHEMA",
+        ),
     }
     present = [
         f"{mod.__name__}.{name}"

@@ -1569,7 +1569,8 @@ def test_edit_screen_stream_matches_batch_twin_and_replays(spark, tmp_path):
     """Streaming edit-distance screen: with shards arriving in order,
     the union of per-batch outputs equals, per shard, the cross-side
     restriction of the batch edit_distance_pairs over (shard ∪ its
-    predecessors); planted 1-edit mirrors across batches hit; a replay
+    predecessors) and edit_screen_pairs(shard, its predecessors);
+    planted 1-edit mirrors across batches hit; a replay
     (checkpoint wiped, lakes kept) converges because each batch
     screens only STRICTLY earlier lake partitions."""
     import os
@@ -1577,7 +1578,10 @@ def test_edit_screen_stream_matches_batch_twin_and_replays(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from scraping_etl_spark.operators.dedup import edit_distance_pairs
+    from scraping_etl_spark.operators.dedup import (
+        edit_distance_pairs,
+        edit_screen_pairs,
+    )
     from scraping_etl_spark.streaming.pipeline import edit_screen_stream
 
     src, out, strs, grams, ckpt = (
@@ -1633,10 +1637,16 @@ def test_edit_screen_stream_matches_batch_twin_and_replays(spark, tmp_path):
         ).withColumn("_l", F.length("s")).filter("_l >= 9").drop("_l")
 
     want = set()
+    screened = set()
     seen = None
     for sh in (s1, s2, mir3):
         cur = prep(sh).localCheckpoint()
         if seen is not None:
+            screened |= {
+                (r.new_id, r.ref_id, r.dist)
+                for r in edit_screen_pairs(cur, seen, 2, "doc_id", "s", q=3)
+                .collect()
+            }
             both = seen.unionByName(cur)
             pairs = edit_distance_pairs(both, 2, "doc_id", "s", q=3)
             cur_ids = {r.doc_id for r in cur.collect()}
@@ -1651,6 +1661,9 @@ def test_edit_screen_stream_matches_batch_twin_and_replays(spark, tmp_path):
         else:
             seen = cur
     assert got == want
+    # the batch face whose screen kernel the stream calls gives the
+    # same pairs, shard by shard against the union of its predecessors
+    assert got == screened
     # the planted cross-batch mirrors actually hit, including one whose
     # lake side entered at batch 2 (the growing-lake proof)
     assert any(n == r + 1000 for (n, r, _) in got)
@@ -1663,6 +1676,25 @@ def test_edit_screen_stream_matches_batch_twin_and_replays(spark, tmp_path):
         for r in spark.read.parquet(out).collect()
     }
     assert again == want
+
+
+def test_screen_streams_keep_no_copy_of_a_batch_kernel():
+    """The screen streams call their batch operators' kernels: the
+    stream module itself calls no Jaccard or Levenshtein verify and no
+    ``collect_list`` reassembly (Spark-free AST scan)."""
+    import ast
+    import inspect
+
+    from scraping_etl_spark.streaming import pipeline
+
+    tree = ast.parse(inspect.getsource(pipeline))
+    called = {
+        node.func.id if isinstance(node.func, ast.Name) else node.func.attr
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, (ast.Name, ast.Attribute))
+    }
+    assert called & {"jaccard", "levenshtein", "collect_list"} == set()
 
 
 def test_corpus_law_stream_matches_batch_fit_and_replays(spark, tmp_path):
