@@ -37,11 +37,11 @@ from pyspark.sql import functions as F
 MAX_LOOKBACK_YEARS = 9
 
 
-def distinct_journals(df: DataFrame, journal_col: str = "journal_name") -> DataFrame:
+def distinct_journals(df: DataFrame) -> DataFrame:
     """The enrichment worklist: one row per distinct journal (turns the
     reference's per-article SCImago scrape into one scan per journal —
     SURVEY §3.3's N→|distinct| collapse)."""
-    return df.select(F.trim(F.col(journal_col)).alias("journal")).distinct()
+    return df.select(F.trim(F.col("journal_name")).alias("journal")).distinct()
 
 
 def pack_quartiles(quartiles: DataFrame) -> DataFrame:
@@ -61,16 +61,10 @@ def pack_quartiles(quartiles: DataFrame) -> DataFrame:
     )
 
 
-def attach_publisher(
-    articles: DataFrame,
-    packed_quartiles: DataFrame,
-    journal_col: str = "journal_name",
-    year_col: str = "Year",
-    max_lookback: int = MAX_LOOKBACK_YEARS,
-) -> DataFrame:
+def attach_publisher(articles: DataFrame, packed_quartiles: DataFrame) -> DataFrame:
     """Attach the nested ``publisher`` struct (SD_Upd.py:75,87) by
     backward as-of quartile lookup with the Q8 fix: among entries with
-    ``year_col - max_lookback <= year <= year_col``, take max year,
+    ``Year - MAX_LOOKBACK_YEARS <= year <= Year``, take max year,
     tie-broken by min quartile then min issn (deterministic regardless
     of source order).
 
@@ -83,10 +77,10 @@ def attach_publisher(
     a year that is not an integer (the scraper's ``"Year not found"``
     sentinel): ``try_cast`` makes it NULL instead of failing the job
     under ANSI mode, and the row then fails the publisher filter."""
-    y = F.col(year_col).try_cast("int")
+    y = F.col("Year").try_cast("int")
     eligible = F.filter(
         F.col("_q_entries"),
-        lambda e: (e["year"] <= y) & (e["year"] >= y - max_lookback),
+        lambda e: (e["year"] <= y) & (e["year"] >= y - MAX_LOOKBACK_YEARS),
     )
     best = F.array_min(
         F.transform(
@@ -99,7 +93,7 @@ def attach_publisher(
         )
     )
     out = (
-        articles.withColumn("_jn", F.trim(F.col(journal_col)))
+        articles.withColumn("_jn", F.trim(F.col("journal_name")))
         .join(
             F.broadcast(packed_quartiles.withColumnRenamed("journal", "_jn")),
             "_jn",
@@ -109,25 +103,18 @@ def attach_publisher(
         .withColumn(
             "publisher",
             F.struct(
-                F.col(journal_col).alias("name"),
+                F.col("journal_name").alias("name"),
                 F.col("_best.issn").alias("ISSN"),
                 F.col("_best.quartile").alias("Quartile"),
             ),
         )
-        .drop("_jn", "_q_entries", "_best", journal_col)
+        .drop("_jn", "_q_entries", "_best", "journal_name")
     )
     return out
 
 
-def enrich(
-    articles: DataFrame,
-    quartiles: DataFrame,
-    journal_col: str = "journal_name",
-    year_col: str = "Year",
-) -> DataFrame:
+def enrich(articles: DataFrame, quartiles: DataFrame) -> DataFrame:
     """End-to-end enrichment: pack the quartile dim, attach publisher
     structs, drop the journal column (SD_Upd.py:101) — the distributed
     twin of ``append_quartile_to_publisher_incrementally``."""
-    return attach_publisher(
-        articles, pack_quartiles(quartiles), journal_col, year_col
-    )
+    return attach_publisher(articles, pack_quartiles(quartiles))

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 from scraping_etl_spark import materialize as M
 
+#: The version bookkeeping columns every SCD2 dimension carries.
+VERSION_COLS = ("effective_from", "effective_to", "is_current")
+
 
 def scd2_merge(
     dim: DataFrame,
@@ -35,9 +38,6 @@ def scd2_merge(
     key_col: str,
     compare_cols: list[str],
     effective_date,
-    from_col: str = "effective_from",
-    to_col: str = "effective_to",
-    current_col: str = "is_current",
 ) -> DataFrame:
     """Merge an update batch into an SCD2 dimension.
 
@@ -59,7 +59,7 @@ def scd2_merge(
     Output schema = ``dim``'s. Change detection is null-safe
     (``eqNullSafe`` per compare column), so NULL→value and value→NULL
     transitions version correctly."""
-    attr_cols = [c for c in dim.columns if c not in (from_col, to_col, current_col)]
+    attr_cols = [c for c in dim.columns if c not in VERSION_COLS]
     for c in attr_cols:
         if c != key_col and c not in compare_cols and c not in updates.columns:
             raise ValueError(
@@ -75,8 +75,8 @@ def scd2_merge(
     eff = F.lit(effective_date).cast("date")
 
     # closed versions pass through untouched; only OPEN rows join the batch
-    closed = dim.filter(~F.col(current_col))
-    open_rows = dim.filter(F.col(current_col))
+    closed = dim.filter(~F.col("is_current"))
+    open_rows = dim.filter(F.col("is_current"))
     j = open_rows.join(u_side, open_rows[key_col] == F.col("_u_key"), "left")
 
     same = F.lit(True)
@@ -88,18 +88,20 @@ def scd2_merge(
     # branch 1: open rows — kept open (no update / identical) or closed
     kept_or_closed = j.select(
         *[F.col(c) for c in attr_cols],
-        F.col(from_col),
-        F.when(is_change, eff).otherwise(F.col(to_col)).alias(to_col),
-        F.when(is_change, F.lit(False)).otherwise(F.col(current_col)).alias(current_col),
+        F.col("effective_from"),
+        F.when(is_change, eff).otherwise(F.col("effective_to")).alias("effective_to"),
+        F.when(is_change, F.lit(False))
+        .otherwise(F.col("is_current"))
+        .alias("is_current"),
     )
     # branch 2: new versions for changed keys
     new_versions = j.filter(is_change).select(
         F.col(key_col),
         *[F.col(f"_u_{c}").alias(c) for c in attr_cols if c != key_col],
-        eff.alias(from_col),
-        F.lit(None).cast("date").alias(to_col),
-        F.lit(True).alias(current_col),
-    ).select(*attr_cols, from_col, to_col, current_col)
+        eff.alias("effective_from"),
+        F.lit(None).cast("date").alias("effective_to"),
+        F.lit(True).alias("is_current"),
+    ).select(*attr_cols, *VERSION_COLS)
     # branch 3: brand-new keys (in updates, no open version)
     inserts = (
         u.join(
@@ -110,13 +112,13 @@ def scd2_merge(
         .select(
             F.col("_u_key").alias(key_col),
             *[F.col(f"_u_{c}").alias(c) for c in attr_cols if c != key_col],
-            eff.alias(from_col),
-            F.lit(None).cast("date").alias(to_col),
-            F.lit(True).alias(current_col),
+            eff.alias("effective_from"),
+            F.lit(None).cast("date").alias("effective_to"),
+            F.lit(True).alias("is_current"),
         )
-        .select(*attr_cols, from_col, to_col, current_col)
+        .select(*attr_cols, *VERSION_COLS)
     )
-    out_cols = attr_cols + [from_col, to_col, current_col]
+    out_cols = attr_cols + list(VERSION_COLS)
     return (
         closed.select(*out_cols)
         .unionByName(kept_or_closed.select(*out_cols))
@@ -125,12 +127,7 @@ def scd2_merge(
     )
 
 
-def scd2_asof(
-    dim: DataFrame,
-    as_of: str,
-    from_col: str = "effective_from",
-    to_col: str = "effective_to",
-) -> DataFrame:
+def scd2_asof(dim: DataFrame, as_of: str) -> DataFrame:
     """Point-in-time (time-travel) view of an SCD2 dimension: the
     version of each key valid AT ``as_of`` (ISO date string) under the
     half-open convention ``from <= as_of < to`` with an open ``to``
@@ -140,6 +137,6 @@ def scd2_asof(
     born after ``as_of`` simply have no row."""
     d = F.to_date(F.lit(as_of))
     return dim.filter(
-        (F.col(from_col) <= d)
-        & (F.col(to_col).isNull() | (F.col(to_col) > d))
+        (F.col("effective_from") <= d)
+        & (F.col("effective_to").isNull() | (F.col("effective_to") > d))
     )

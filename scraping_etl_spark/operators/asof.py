@@ -48,7 +48,6 @@ def asof_join(
     direction: str = "backward",
     tolerance: float | None = None,
     tie_break: list[str] | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Left as-of join: attach to each probe row the build row with the
     nearest ``on`` value at-or-before it (``backward``) / at-or-after it
@@ -75,7 +74,7 @@ def asof_join(
 
     # Output name for each attached build column (suffix on collision).
     out_names = {
-        c: (c + suffix if c in probe.columns else c) for c in value_cols
+        c: (c + "_asof" if c in probe.columns else c) for c in value_cols
     }
 
     is_ts = isinstance(build.schema[on].dataType, T.TimestampType)
@@ -127,5 +126,5 @@ def asof_join(
     return out.select(
         *[F.col(c) for c in probe.columns],
         *[F.col(_PAY)[out_names[c]].alias(out_names[c]) for c in value_cols],
-        F.col(_PAY)[_ON2].alias(f"{on}{suffix}"),
+        F.col(_PAY)[_ON2].alias(f"{on}_asof"),
     )

@@ -89,9 +89,8 @@ def bloom_screen(
     key_col: str = "key",
     m_bits: int = BLOOM_BITS,
     k_hashes: int = BLOOM_HASHES,
-    out_col: str = "bloom_hit",
 ) -> DataFrame:
-    """Screen every row of ``df``: gains ``out_col`` — true iff all
+    """Screen every row of ``df``: gains ``bloom_hit`` — true iff all
     ``k_hashes`` probe bits are set (maybe-member; false ⇒ definitely
     not a member). Geometry MUST match the build (same ``m_bits``/
     ``k_hashes`` — a mismatch silently voids the no-false-negative
@@ -112,10 +111,10 @@ def bloom_screen(
         probes.join(F.broadcast(bits) if fits else bits, "bit", "left")
         .groupBy("_bk")
         .agg(
-            (F.count(F.when(F.col("_set"), F.lit(1))) == k_hashes).alias(out_col)
+            (F.count(F.when(F.col("_set"), F.lit(1))) == k_hashes).alias("bloom_hit")
         )
     )
     # the flag relation is DISTINCT-KEY-scale (not bit-scale) — no
     # broadcast hint; AQE picks from its measured size
     flagged = df.join(flags, df[key_col] == flags["_bk"], "left").drop("_bk")
-    return flagged.withColumn(out_col, F.coalesce(F.col(out_col), F.lit(False)))
+    return flagged.withColumn("bloom_hit", F.coalesce(F.col("bloom_hit"), F.lit(False)))

@@ -155,7 +155,7 @@ def corpus_words(df: DataFrame, text_col: str) -> DataFrame:
 
 
 def word_table_tier(
-    df: DataFrame, text_col: str, cap: int
+    df: DataFrame, cap: int
 ) -> tuple[DataFrame, "list[tuple[str, int]] | None"]:
     """The ONE corpus-scale pass of every trainer: the distinct-word
     frequency table ``(word, cnt)``, ``localCheckpoint``-ed because the
@@ -165,7 +165,7 @@ def word_table_tier(
     driver tier), else ``None`` (the distributed tier trains over
     ``wc``)."""
     wc = (
-        corpus_words(df, text_col)
+        corpus_words(df, "text")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
@@ -300,7 +300,6 @@ def merge_loop_dist(
 
 def bpe_train(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 16,
     min_pair_count: int = 2,
 ) -> tuple[list[tuple[str, str]], SegTable]:
@@ -330,7 +329,7 @@ def bpe_train(
     ``(count DESC, a, b)`` tie-break, so the merges and the table are
     bit-identical (pinned by tests/test_bpe.py)."""
     check_merge_args(n_merges, min_pair_count)
-    wc, head = word_table_tier(df, text_col, MERGE_DRIVER_WORDS)
+    wc, head = word_table_tier(df, MERGE_DRIVER_WORDS)
     if head is None:
         merges, syms = merge_loop_dist(
             wc.withColumn("sym", char_symbols("word")),
@@ -346,18 +345,14 @@ def bpe_train(
     return merges, sorted(("".join(sym), tuple(sym)) for sym, _ in final)
 
 
-def word_segment_table(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
+def word_segment_table(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Segment every distinct corpus word with a learned merge table —
     the word-level cache a fast BPE encoder keys on. Vocabulary-scale
     throughout (one distinct shuffle, then per-row folds); the plan is
     ``localCheckpoint``-ed every :data:`CHECKPOINT_EVERY` merges so the
     fold chain never nests deep enough to stress codegen. Returns
     ``(word, sym array<string>, n_sub)``."""
-    seg = corpus_words(df, text_col).distinct().withColumn(
+    seg = corpus_words(df, "text").distinct().withColumn(
         "sym", char_symbols("word")
     )
     for i, (a, b) in enumerate(merges):
@@ -367,11 +362,7 @@ def word_segment_table(
     return seg.select("word", "sym", F.size("sym").cast("long").alias("n_sub"))
 
 
-def word_segment_arrow(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
+def word_segment_arrow(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Production-merge-budget twin of :func:`word_segment_table`:
     same ``(word, sym, n_sub)`` output over the corpus's distinct
     words, but the merges are applied by a per-Arrow-batch Python
@@ -439,7 +430,7 @@ def word_segment_arrow(
                 }
             )
 
-    return corpus_words(df, text_col).distinct().mapInPandas(
+    return corpus_words(df, "text").distinct().mapInPandas(
         _segment, "word string, sym array<string>, n_sub long"
     )
 
@@ -450,18 +441,14 @@ def word_segment_arrow(
 ARROW_SEGMENT_THRESHOLD = 64
 
 
-def word_segment(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-) -> DataFrame:
+def word_segment(df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Segment the corpus's distinct words with whichever tier fits
     the merge budget: the oracle-mirrorable fold-expression chain up
     to :data:`ARROW_SEGMENT_THRESHOLD` merges, the Arrow batch encoder
     beyond (identical output, pytest-pinned)."""
     if len(merges) <= ARROW_SEGMENT_THRESHOLD:
-        return word_segment_table(df, merges, text_col=text_col)
-    return word_segment_arrow(df, merges, text_col=text_col)
+        return word_segment_table(df, merges)
+    return word_segment_arrow(df, merges)
 
 
 def _seg_side(s: DataFrame, seg_rows: int | None) -> DataFrame:
@@ -479,8 +466,6 @@ def _seg_side(s: DataFrame, seg_rows: int | None) -> DataFrame:
 def bpe_token_counts(
     df: DataFrame,
     seg: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     seg_rows: int | None = None,
 ) -> DataFrame:
     """Tokenize the corpus against a word-segmentation table: explode
@@ -497,12 +482,12 @@ def bpe_token_counts(
     is a symbol). Returns ``n_tokens`` (whitespace words) and
     ``n_bpe_tokens`` (subword count, 0 for empty docs)."""
     toks = df.select(
-        F.col(id_col), F.explode_outer(tokens(text_col, lowercase=True)).alias("_w")
+        F.col("doc_id"), F.explode_outer(tokens("text", lowercase=True)).alias("_w")
     )
     s = seg.select(F.col("word").alias("_w"), "n_sub")
     return (
         toks.join(_seg_side(s, seg_rows), "_w", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("_w").alias("n_tokens"),
             F.sum(
@@ -551,8 +536,6 @@ def encode_token_ids(
     df: DataFrame,
     seg: DataFrame,
     vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     append_eow: bool = False,
     seg_rows: int | None = None,
 ) -> DataFrame:
@@ -572,8 +555,8 @@ def encode_token_ids(
     map-side. Returns ``(id, token_ids array<int>, n_ids)`` with
     empty docs as empty arrays."""
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col, lowercase=True)).alias("_pos", "_w"),
+        F.col("doc_id"),
+        F.posexplode(tokens("text", lowercase=True)).alias("_pos", "_w"),
     )
     s = seg.select(F.col("word").alias("_w"), F.col("sym").alias("_sym"))
     syms = F.coalesce(F.col("_sym"), char_symbols(F.col("_w")))
@@ -591,9 +574,9 @@ def encode_token_ids(
     # round trip for exactly those documents.
     segmented = (
         toks.join(_seg_side(s, seg_rows), "_w", "left")
-        .select(id_col, "_pos", syms.alias("_syms"))
+        .select("doc_id", "_pos", syms.alias("_syms"))
         .select(
-            id_col,
+            "doc_id",
             "_pos",
             F.size("_syms").alias("_len"),
             F.posexplode("_syms").alias("_spos", "subword"),
@@ -601,7 +584,7 @@ def encode_token_ids(
     )
     v = vocab.select("subword", "token_id")
     ids = segmented.join(F.broadcast(v), "subword", "left").select(
-        id_col,
+        "doc_id",
         "_pos",
         "_spos",
         F.when(
@@ -612,7 +595,7 @@ def encode_token_ids(
         .cast("int")
         .alias("_id"),
     )
-    encoded = ids.groupBy(id_col).agg(
+    encoded = ids.groupBy("doc_id").agg(
         F.transform(
             F.array_sort(
                 F.collect_list(F.struct(F.col("_pos"), F.col("_spos"), F.col("_id")))
@@ -622,10 +605,10 @@ def encode_token_ids(
         F.count(F.lit(1)).cast("long").alias("n_ids"),
     )
     return (
-        df.select(F.col(id_col))
-        .join(encoded, id_col, "left")
+        df.select(F.col("doc_id"))
+        .join(encoded, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("token_ids"), F.array().cast("array<int>")).alias(
                 "token_ids"
             ),
@@ -637,8 +620,6 @@ def encode_token_ids(
 def tokenizer_fertility(
     df: DataFrame,
     seg: DataFrame,
-    text_col: str = "text",
-    strata_col: str = "lang",
     seg_rows: int | None = None,
 ) -> DataFrame:
     """Per-stratum tokenizer fertility and compression — the standard
@@ -662,8 +643,8 @@ def tokenizer_fertility(
     """
     wc = (
         df.select(
-            F.col(strata_col).alias("_g"),
-            F.explode(tokens(text_col, lowercase=True)).alias("_w"),
+            F.col("lang").alias("_g"),
+            F.explode(tokens("text", lowercase=True)).alias("_w"),
         )
         .groupBy("_g", "_w")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -679,7 +660,7 @@ def tokenizer_fertility(
             F.sum(F.col("_c") * F.length("_w")).cast("long").alias("n_chars"),
         )
         .select(
-            F.col("_g").alias(strata_col),
+            F.col("_g").alias("lang"),
             "n_words",
             "n_subwords",
             "n_chars",
@@ -691,13 +672,7 @@ def tokenizer_fertility(
     )
 
 
-def decode_token_ids(
-    enc: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    ids_col: str = "token_ids",
-    out_col: str = "text_rt",
-) -> DataFrame:
+def decode_token_ids(enc: DataFrame, vocab: DataFrame) -> DataFrame:
     """Inverse of :func:`encode_token_ids` with ``append_eow=True``:
     ids → subwords (broadcast vocab join — the vocabulary is
     alphabet+merges rows, always tiny), :data:`EOW_ID` → word break,
@@ -710,7 +685,7 @@ def decode_token_ids(
     with a (pos)-sorted reassembly — the mirror image of the encode
     shuffle, same cost model.
     """
-    ex = enc.select(F.col(id_col), F.posexplode(ids_col).alias("_pos", "_id"))
+    ex = enc.select(F.col("doc_id"), F.posexplode("token_ids").alias("_pos", "_id"))
     v = vocab.select(F.col("token_id").alias("_id"), "subword")
     piece = (
         F.when(F.col("_id") == EOW_ID, F.lit(" "))
@@ -718,9 +693,9 @@ def decode_token_ids(
         .otherwise(F.col("subword"))
     )
     joined = ex.join(F.broadcast(v), "_id", "left").select(
-        F.col(id_col), "_pos", piece.alias("_piece")
+        F.col("doc_id"), "_pos", piece.alias("_piece")
     )
-    dec = joined.groupBy(id_col).agg(
+    dec = joined.groupBy("doc_id").agg(
         F.rtrim(
             F.array_join(
                 F.transform(
@@ -731,10 +706,10 @@ def decode_token_ids(
                 ),
                 "",
             )
-        ).alias(out_col)
+        ).alias("text_rt")
     )
     return (
-        enc.select(F.col(id_col))
-        .join(dec, id_col, "left")
-        .select(id_col, F.coalesce(out_col, F.lit("")).alias(out_col))
+        enc.select(F.col("doc_id"))
+        .join(dec, "doc_id", "left")
+        .select("doc_id", F.coalesce("text_rt", F.lit("")).alias("text_rt"))
     )

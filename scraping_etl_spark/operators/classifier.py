@@ -42,30 +42,28 @@ FEATURE_NAMES = (
 )
 
 
-def quality_features(
-    df: DataFrame, text_col: str = "text", out_col: str = "features"
-) -> DataFrame:
-    """Append ``out_col`` (array<double>, :data:`FEATURE_NAMES` order):
+def quality_features(df: DataFrame) -> DataFrame:
+    """Append ``features`` (array<double>, :data:`FEATURE_NAMES` order):
     bias 1.0, ln(1+tokens), distinct-token ratio, English stopword
     ratio, mean token length, non-[a-z0-9 ] character ratio — each a
     bounded built-in expression (no UDF, no shuffle)."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     n1 = F.greatest(n, F.lit(1))
-    text = F.col(text_col)
+    text = F.col("text")
     nonalpha = F.length(F.regexp_replace(F.lower(text), "[a-z0-9 ]", ""))
     feats = F.array(
         F.lit(1.0),
         F.log(F.lit(1.0) + n),
         (F.size(F.array_distinct(toks)) / n1).cast("double"),
-        stopword_ratio(text_col).cast("double"),
+        stopword_ratio("text").cast("double"),
         (
             F.aggregate(toks, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
             / n1
         ).cast("double"),
         (nonalpha / F.greatest(F.length(text), F.lit(1))).cast("double"),
     )
-    return df.withColumn(out_col, feats)
+    return df.withColumn("features", feats)
 
 
 def _dot_const(weights: list[float], vec: Column) -> Column:
@@ -88,8 +86,6 @@ GRAD_FX_SCALE = 10**9
 def train_logreg(
     labeled: DataFrame,
     dim: int,
-    features_col: str = "features",
-    label_col: str = "label",
     lr: float = 0.5,
     iters: int = 40,
 ) -> list[float]:
@@ -110,8 +106,8 @@ def train_logreg(
     import numpy as np
 
     cols = [
-        F.col(features_col).alias("_x"),
-        F.col(label_col).cast("double").alias("_y"),
+        F.col("features").alias("_x"),
+        F.col("label").cast("double").alias("_y"),
     ]
     fx = float(GRAD_FX_SCALE)
     w = [0.0] * dim
@@ -134,17 +130,12 @@ def train_logreg(
     return w
 
 
-def score_logreg(
-    df: DataFrame,
-    weights: list[float],
-    features_col: str = "features",
-    out_col: str = "quality_prob",
-) -> DataFrame:
+def score_logreg(df: DataFrame, weights: list[float]) -> DataFrame:
     """Append ``sigmoid(w·x)`` (rounded 6) with ``weights`` as plan
     constants — pure map-side scoring, the deployment path."""
-    z = _dot_const(weights, F.col(features_col))
+    z = _dot_const(weights, F.col("features"))
     return df.withColumn(
-        out_col, F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
+        "quality_prob", F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6)
     )
 
 
@@ -157,11 +148,29 @@ def score_logreg(
 HASH_FEATURES = 1024
 
 
+def _hashed_tf(df: DataFrame, n_features: int) -> DataFrame:
+    """The ``(doc_id, slot, tf)`` relation both hashed-feature paths
+    start from: lowercased tokens hash to ``[0, n_features)`` by the
+    md5-prefix convention (portable to the DuckDB oracle bit-for-bit,
+    not xxhash64), then one partial-agg groupBy counts each
+    (doc, slot)."""
+    slot = F.pmod(
+        F.conv(F.substring(F.md5(F.col("_tok")), 1, 15), 16, 10).cast("long"),
+        F.lit(n_features),
+    )
+    return (
+        df.select(
+            F.col("doc_id"), F.explode(tokens("text", lowercase=True)).alias("_tok")
+        )
+        .withColumn("slot", slot)
+        .groupBy("doc_id", "slot")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
+    )
+
+
 def hashing_tfidf(
     df: DataFrame,
     n_features: int = HASH_FEATURES,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     return_idf: bool = False,
     materialize_tf: bool = False,
     n_docs: int | None = None,
@@ -183,10 +192,10 @@ def hashing_tfidf(
     downstream consumer (:func:`train_logreg` on exploded features,
     or cosine similarity over the sparse rows) is collision-agnostic.
 
-    The slot hash is the md5-prefix convention (portable to the
-    DuckDB oracle bit-for-bit), not xxhash64. Output is the SPARSE
-    relation ``(id, slot, tf, tfidf)`` — join-ready and explode-free
-    downstream; assemble a dense array only at the model boundary.
+    The slot hash is :func:`_hashed_tf`'s md5-prefix convention.
+    Output is the SPARSE relation ``(doc_id, slot, tf, tfidf)`` —
+    join-ready and explode-free downstream; assemble a dense array
+    only at the model boundary.
 
     Plan: explode -> partial-agg groupBy (doc, slot) -> slot df agg
     (bounded at n_features rows) broadcast back. Two bounded
@@ -198,33 +207,19 @@ def hashing_tfidf(
     aggregation twice — pass True there, leave False on lazy serve
     paths. ``n_docs`` lets a caller that already knows the distinct
     document count skip the internal count job (must equal
-    ``df.select(id_col).distinct().count()``). Both are pure
+    ``df.select("doc_id").distinct().count()``). Both are pure
     cost knobs: the output relation is unchanged.
     """
     if n_features < 2:
         raise ValueError(f"n_features must be >= 2, got {n_features}")
-    slot = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("_tok")), 1, 15), 16, 10
-        ).cast("long"),
-        F.lit(n_features),
-    )
-    tf = (
-        df.select(
-            F.col(id_col),
-            F.explode(tokens(text_col, lowercase=True)).alias("_tok"),
-        )
-        .withColumn("slot", slot)
-        .groupBy(id_col, "slot")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
+    tf = _hashed_tf(df, n_features)
     if materialize_tf:
         tf = tf.localCheckpoint()
     if n_docs is None:
-        n_docs = df.select(id_col).distinct().count()  # O(1)-row scalar
+        n_docs = df.select("doc_id").distinct().count()  # O(1)-row scalar
     idf = (
         tf.groupBy("slot")
-        .agg(F.count_distinct(id_col).alias("_df"))
+        .agg(F.count_distinct("doc_id").alias("_df"))
         .select(
             "slot",
             (
@@ -237,7 +232,7 @@ def hashing_tfidf(
         )
     )
     out = tf.join(F.broadcast(idf), "slot").select(
-        id_col,
+        "doc_id",
         "slot",
         "tf",
         F.round(F.col("tf") * F.col("_idf"), 6).alias("tfidf"),
@@ -256,27 +251,21 @@ def hashing_tfidf(
 DOT_FX_SCALE = 10**12
 
 
-def dense_from_sparse(
-    sparse: DataFrame,
-    n_features: int,
-    id_col: str = "doc_id",
-    slot_col: str = "slot",
-    value_col: str = "tfidf",
-) -> DataFrame:
+def dense_from_sparse(sparse: DataFrame, n_features: int) -> DataFrame:
     """(id, slot, value) → (id, array<double> dense) via ``n_features``
     conditional partial aggs — no pivot, no collect; one shuffle at id
     cardinality. For the BOUNDED model-boundary assembly (training
     sets), not the lake."""
-    sums = sparse.groupBy(id_col).agg(
+    sums = sparse.groupBy("doc_id").agg(
         *[
             F.sum(
-                F.when(F.col(slot_col) == i, F.col(value_col)).otherwise(0.0)
+                F.when(F.col("slot") == i, F.col("tfidf")).otherwise(0.0)
             ).alias(f"_f{i}")
             for i in range(n_features)
         ]
     )
     return sums.select(
-        id_col,
+        "doc_id",
         F.array(*[F.col(f"_f{i}") for i in range(n_features)]).alias("dense"),
     )
 
@@ -286,9 +275,6 @@ def score_hashed_logreg(
     idf: list[float],
     weights: list[float],
     n_features: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    out_col: str = "quality_prob",
 ) -> DataFrame:
     """Deployment scoring of the bag-of-hashed-words linear classifier
     (the fastText / GPT-3-appendix-A quality-filter shape): the MODEL
@@ -309,18 +295,7 @@ def score_hashed_logreg(
             f"weights must have {n_features + 1} entries (bias first), "
             f"got {len(weights)}"
         )
-    slot = F.pmod(
-        F.conv(F.substring(F.md5(F.col("_tok")), 1, 15), 16, 10).cast("long"),
-        F.lit(n_features),
-    )
-    tf = (
-        df.select(
-            F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("_tok")
-        )
-        .withColumn("slot", slot)
-        .groupBy(id_col, "slot")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
+    tf = _hashed_tf(df, n_features)
     idf_arr = F.array(*[F.lit(float(v)) for v in idf])
     w_arr = F.array(*[F.lit(float(w)) for w in weights[1:]])
     at = (F.col("slot") + 1).cast("int")
@@ -328,17 +303,17 @@ def score_hashed_logreg(
     term = F.round(
         F.element_at(w_arr, at) * tfidf * F.lit(float(DOT_FX_SCALE)), 0
     ).cast("long")
-    zfx = tf.select(F.col(id_col), term.alias("_fx")).groupBy(id_col).agg(
+    zfx = tf.select(F.col("doc_id"), term.alias("_fx")).groupBy("doc_id").agg(
         F.sum("_fx").alias("_zfx")
     )
     z = F.lit(float(weights[0])) + F.coalesce(
         F.col("_zfx"), F.lit(0)
     ) / F.lit(float(DOT_FX_SCALE))
     return (
-        df.select(id_col)
-        .join(zfx, id_col, "left")
+        df.select("doc_id")
+        .join(zfx, "doc_id", "left")
         .select(
-            id_col,
-            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias(out_col),
+            "doc_id",
+            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-z)), 6).alias("quality_prob"),
         )
     )

@@ -27,7 +27,7 @@ list — so it costs zero shuffles at any scale.
 
 from __future__ import annotations
 
-from typing import Iterable, Mapping
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -125,10 +125,10 @@ def filter_date_sentinels(df: DataFrame, parity: bool = False) -> DataFrame:
     return df.filter(~sentinel)
 
 
-def drop_null_citations(df: DataFrame, subset: tuple[str, ...] = ("citations",)) -> DataFrame:
+def drop_null_citations(df: DataFrame) -> DataFrame:
     """NaN/null drop (SURVEY P6). Reference: ETL cell 15 (raw 477)
     ``dropna(subset=['citations'])``."""
-    return df.na.drop(subset=list(subset))
+    return df.na.drop(subset=["citations"])
 
 
 def filter_empty_arrays(df: DataFrame, cols: Iterable[str] = ("authors_with_affiliations", "authors")) -> DataFrame:
@@ -140,7 +140,7 @@ def filter_empty_arrays(df: DataFrame, cols: Iterable[str] = ("authors_with_affi
     return out
 
 
-def filter_email_countries(df: DataFrame, col: str = "countries", parity: bool = False) -> DataFrame:
+def filter_email_countries(df: DataFrame, parity: bool = False) -> DataFrame:
     """Drop rows whose ``countries`` array contains an email (SURVEY P8).
 
     The reference's version (ETL cell 22, raw 779) is dead code — quirk
@@ -150,12 +150,12 @@ def filter_email_countries(df: DataFrame, col: str = "countries", parity: bool =
     higher-order ``exists`` + ``rlike`` form.
     """
     if parity:
-        return df.filter(~F.array_contains(F.col(col), EMAIL_PATTERN))
-    has_email = F.exists(F.col(col), lambda x: x.rlike(EMAIL_PATTERN))
+        return df.filter(~F.array_contains(F.col("countries"), EMAIL_PATTERN))
+    has_email = F.exists(F.col("countries"), lambda x: x.rlike(EMAIL_PATTERN))
     return df.filter(~_false_if_null(has_email))
 
 
-def filter_email_affiliations(df: DataFrame, col: str = "authors_with_affiliations") -> DataFrame:
+def filter_email_affiliations(df: DataFrame) -> DataFrame:
     """Remove affiliation entries whose country is an email (SURVEY P9).
 
     Reference: ETL cell 22 (raw 782-784) — the working higher-order array
@@ -167,22 +167,22 @@ def filter_email_affiliations(df: DataFrame, col: str = "authors_with_affiliatio
     pattern — the lambda form passes the pattern verbatim.
     """
     return df.withColumn(
-        col, F.filter(F.col(col), lambda x: ~x["country"].rlike(EMAIL_PATTERN))
+        "authors_with_affiliations",
+        F.filter(
+            F.col("authors_with_affiliations"),
+            lambda x: ~x["country"].rlike(EMAIL_PATTERN),
+        ),
     )
 
 
-def _alias_map(aliases: Mapping[str, str] | None) -> Column:
+def _alias_map() -> Column:
     pairs: list[Column] = []
-    for k, v in (aliases or COUNTRY_ALIASES).items():
+    for k, v in COUNTRY_ALIASES.items():
         pairs += [F.lit(k), F.lit(v)]
     return F.create_map(*pairs)
 
 
-def canonicalize_countries(
-    df: DataFrame,
-    col: str = "countries",
-    aliases: Mapping[str, str] | None = None,
-) -> DataFrame:
+def canonicalize_countries(df: DataFrame) -> DataFrame:
     """Canonicalize country names in an array column (SURVEY F9).
 
     Reference: ETL cell 20 (raw 659-688) — a row-at-a-time Python UDF
@@ -192,28 +192,24 @@ def canonicalize_countries(
     per-element lookup is a JVM ``transform`` — unknown names pass
     through unchanged, like the reference's ``LookupError`` fallback.
     """
-    amap = _alias_map(aliases)
+    amap = _alias_map()
     return df.withColumn(
-        col,
-        F.transform(F.col(col), lambda x: F.coalesce(amap[x], x)),
+        "countries",
+        F.transform(F.col("countries"), lambda x: F.coalesce(amap[x], x)),
     )
 
 
-def canonicalize_affiliation_countries(
-    df: DataFrame,
-    col: str = "authors_with_affiliations",
-    aliases: Mapping[str, str] | None = None,
-) -> DataFrame:
+def canonicalize_affiliation_countries(df: DataFrame) -> DataFrame:
     """Same canonicalization inside the array-of-struct column (SURVEY
     F10). Reference: ETL cell 21 (raw 720-763) — UDF with an explicit
     return schema; here a ``transform`` rebuilding the struct in place.
     Field order follows the reference's declared schema (raw 752-757).
     """
-    amap = _alias_map(aliases)
+    amap = _alias_map()
     return df.withColumn(
-        col,
+        "authors_with_affiliations",
         F.transform(
-            F.col(col),
+            F.col("authors_with_affiliations"),
             lambda x: F.struct(
                 x["author"].alias("author"),
                 F.coalesce(amap[x["country"]], x["country"]).alias("country"),
@@ -224,7 +220,7 @@ def canonicalize_affiliation_countries(
     )
 
 
-def scrub_string_columns(df: DataFrame, pattern: str = SCRUB_PATTERN) -> DataFrame:
+def scrub_string_columns(df: DataFrame) -> DataFrame:
     """Character-class scrub over every top-level string column (SURVEY
     F8). Reference: ETL cell 25 (raw 846-868) — a Python UDF applied in a
     loop over string dtypes; here the same loop emits ``regexp_replace``
@@ -240,7 +236,7 @@ def scrub_string_columns(df: DataFrame, pattern: str = SCRUB_PATTERN) -> DataFra
             out = out.withColumn(
                 field.name,
                 F.regexp_replace(
-                    F.regexp_replace(F.col(field.name), pattern, ""), r"\n", ""
+                    F.regexp_replace(F.col(field.name), SCRUB_PATTERN, ""), r"\n", ""
                 ),
             )
     return out

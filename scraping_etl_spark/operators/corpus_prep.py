@@ -112,12 +112,7 @@ def word_grams(text_col: Column | str, k: int) -> Column:
     return _bind(tokens(text_col), _grams)
 
 
-def with_repetition_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_grams: int = 20,
-) -> DataFrame:
+def with_repetition_stats(df: DataFrame) -> DataFrame:
     """Per-document repetition signals: ``dup_token_frac`` and
     ``dup_trigram_frac`` (1 − distinct/total, zero when total is 0)
     plus ``top_bigram_frac`` (occurrences of the modal bigram / total
@@ -127,7 +122,7 @@ def with_repetition_stats(
     > 0.30).
 
     The top-bigram clause only applies to docs with at least
-    ``min_grams`` bigrams: with n bigrams the modal fraction is ≥ 1/n,
+    20 bigrams: with n bigrams the modal fraction is ≥ 1/n,
     so without the floor every ≤6-token doc would trip the 0.18
     threshold even with all-unique tokens. Gopher applies these
     fractional thresholds to long documents (Rae et al. 2021 §A1.1);
@@ -177,7 +172,7 @@ def with_repetition_stats(
 
         return _bind(grams, _m)
 
-    bigrams = word_grams(text_col, 2)
+    bigrams = word_grams("text", 2)
     n_bigrams = _bind(bigrams, F.size).cast("long")
     top_frac = _bind(
         bigrams,
@@ -186,14 +181,14 @@ def with_repetition_stats(
         ).otherwise(F.lit(0.0)),
     )
     return df.select(
-        F.col(id_col),
-        dup_frac(tokens(text_col)).alias("dup_token_frac"),
-        dup_frac(word_grams(text_col, 3)).alias("dup_trigram_frac"),
+        F.col("doc_id"),
+        dup_frac(tokens("text")).alias("dup_token_frac"),
+        dup_frac(word_grams("text", 3)).alias("dup_trigram_frac"),
         top_frac.alias("top_bigram_frac"),
         n_bigrams.alias("n_bigrams"),
     ).withColumn(
         "repeated_flag",
-        ((F.col("top_bigram_frac") > 0.18) & (F.col("n_bigrams") >= min_grams))
+        ((F.col("top_bigram_frac") > 0.18) & (F.col("n_bigrams") >= 20))
         | (F.col("dup_trigram_frac") > 0.30),
     )
 
@@ -271,12 +266,7 @@ def cdc_chunks(
     return _bind(tokens(text_col), _cdc)
 
 
-def prepare_cdc_ref(
-    lake: DataFrame,
-    text_col: str = "text",
-    window: int = 4,
-    divisor: int = 8,
-) -> DataFrame:
+def prepare_cdc_ref(lake: DataFrame) -> DataFrame:
     """Materialize the lake's distinct CDC-chunk hash store — the
     prepared side input of :func:`cdc_seen_fraction` (the
     ``prepare_neardup_ref`` convention: a streaming gate screening
@@ -284,7 +274,7 @@ def prepare_cdc_ref(
     trigger). Chunk geometry is baked in at prepare time."""
     return (
         lake.select(
-            F.explode(cdc_chunks(text_col, window, divisor)).alias("_c")
+            F.explode(cdc_chunks("text")).alias("_c")
         )
         .select(F.md5("_c").alias("_h"))
         .distinct()
@@ -295,8 +285,6 @@ def prepare_cdc_ref(
 def cdc_seen_fraction(
     df: DataFrame,
     ref_prepared: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     window: int = 4,
     divisor: int = 8,
     ref_fits_broadcast: bool | None = None,
@@ -325,10 +313,10 @@ def cdc_seen_fraction(
     ``lang_id_ngram(trained_m=...)``."""
     chunks = (
         df.select(
-            F.col(id_col),
-            F.explode_outer(cdc_chunks(text_col, window, divisor)).alias("_c"),
+            F.col("doc_id"),
+            F.explode_outer(cdc_chunks("text", window, divisor)).alias("_c"),
         )
-        .select(id_col, F.md5("_c").alias("_h"))
+        .select("doc_id", F.md5("_c").alias("_h"))
         .distinct()
     )
     ref = ref_prepared.select("_h", F.lit(1).alias("_seen"))
@@ -338,13 +326,13 @@ def cdc_seen_fraction(
         fits = M.fits(ref, M.BROADCAST_ROWS)
     return (
         chunks.join(F.broadcast(ref) if fits else ref, "_h", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("_h").alias("n_chunks"),
             F.sum(F.coalesce("_seen", F.lit(0))).cast("long").alias("n_seen"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_chunks",
             "n_seen",
             F.round(
@@ -363,8 +351,6 @@ HOT_CHUNK_DOCS = 100_000
 
 def chunk_dedup_stats(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_len: int = 10,
     hot_threshold: int = HOT_CHUNK_DOCS,
     chunks: Column | None = None,
@@ -402,11 +388,11 @@ def chunk_dedup_stats(
     if hot_threshold < 1:
         raise ValueError(f"hot_threshold must be >= 1, got {hot_threshold}")
     chunk_expr = (
-        chunks if chunks is not None else token_chunks(text_col, chunk_len)
+        chunks if chunks is not None else token_chunks("text", chunk_len)
     )
     pairs = (
-        df.select(F.col(id_col), F.explode(chunk_expr).alias("_c"))
-        .select(id_col, F.md5("_c").alias("_h"))
+        df.select(F.col("doc_id"), F.explode(chunk_expr).alias("_c"))
+        .select("doc_id", F.md5("_c").alias("_h"))
         .distinct()
         .localCheckpoint()
     )
@@ -414,25 +400,25 @@ def chunk_dedup_stats(
     hot = docs_per_chunk.filter(F.col("_docs") > hot_threshold).select("_h")
     # hot ⇒ _docs > hot_threshold ≥ 1 ⇒ shared, no lookup needed
     hot_flagged = pairs.join(F.broadcast(hot), "_h").select(
-        id_col, F.lit(1).alias("_shared")
+        "doc_id", F.lit(1).alias("_shared")
     )
     cold_flagged = (
         pairs.join(F.broadcast(hot), "_h", "left_anti")
         .join(docs_per_chunk, "_h")
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("_docs") > 1, 1).otherwise(0).alias("_shared"),
         )
     )
     return (
         hot_flagged.unionByName(cold_flagged)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_chunks"),
             F.sum("_shared").alias("n_shared"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_chunks",
             "n_shared",
             F.round(F.col("n_shared") / F.col("n_chunks"), 6).alias("shared_frac"),
@@ -444,11 +430,7 @@ def chunk_dedup_stats(
 # Benchmark decontamination
 # ---------------------------------------------------------------------------
 
-def prepare_bench_grams(
-    bench: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-) -> DataFrame:
+def prepare_bench_grams(bench: DataFrame) -> DataFrame:
     """Precompute the deduped benchmark gram relation for
     :func:`decontaminate` — MATERIALIZED (``localCheckpoint``) with the
     measured broadcast decision already applied, so a caller screening
@@ -456,7 +438,7 @@ def prepare_bench_grams(
     micro-batch) derives the grams and runs the cardinality probe
     ONCE. Pass the result as ``bench_prepared=``."""
     grams = (
-        bench.select(F.explode(word_shingles(F.col(text_col), k)).alias("_g"))
+        bench.select(F.explode(word_shingles(F.col("text"), 5)).alias("_g"))
         .distinct()
         .localCheckpoint()
     )
@@ -466,8 +448,6 @@ def prepare_bench_grams(
 def decontaminate(
     train: DataFrame,
     bench: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     bench_prepared: DataFrame | None = None,
 ) -> DataFrame:
@@ -502,7 +482,7 @@ def decontaminate(
         bench_side = bench_prepared
     else:
         bench_grams = bench.select(
-            F.explode(word_shingles(F.col(text_col), k)).alias("_g")
+            F.explode(word_shingles(F.col("text"), k)).alias("_g")
         ).distinct()
         bench_side = (
             F.broadcast(bench_grams)
@@ -510,18 +490,18 @@ def decontaminate(
             else bench_grams
         )
     train_grams = train.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), k)).alias("_g")
+        F.col("doc_id"), F.explode(word_shingles(F.col("text"), k)).alias("_g")
     )
     hits = (
         train_grams.join(bench_side, "_g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        train.select(id_col)
-        .join(hits, id_col, "left")
+        train.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
             (F.coalesce("n_hits", F.lit(0)) > 0).alias("contaminated"),
         )
@@ -572,11 +552,7 @@ class PreparedLM(NamedTuple):
     hot: DataFrame            #: capped hot grams (_g, _cbi, _cw, _v)
 
 
-def prepare_lm(
-    lm: DataFrame,
-    text_col: str = "text",
-    hot_threshold: int = HOT_GRAM_OCCS,
-) -> PreparedLM:
+def prepare_lm(lm: DataFrame, hot_threshold: int = HOT_GRAM_OCCS) -> PreparedLM:
     """Train the reference bigram LM once: count tables are
     ``localCheckpoint``-ed, the vocabulary-broadcast and hot-set-cap
     probes run here (not per scoring call), and an empty LM fails
@@ -586,7 +562,7 @@ def prepare_lm(
     trigger."""
     if hot_threshold < 1:
         raise ValueError(f"hot_threshold must be >= 1, got {hot_threshold}")
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     bi_counts = (
         lm.select(F.explode(word_grams(lowered, 2)).alias("_g"))
         .groupBy("_g")
@@ -594,7 +570,7 @@ def prepare_lm(
         .localCheckpoint()
     )
     uni_counts = (
-        lm.select(F.explode(tokens(text_col, lowercase=True)).alias("_w"))
+        lm.select(F.explode(tokens("text", lowercase=True)).alias("_w"))
         .groupBy("_w")
         .agg(F.count(F.lit(1)).alias("_cw"))
         .localCheckpoint()
@@ -624,27 +600,23 @@ def prepare_lm(
     )
 
 
-def lm_gram_pairs(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def lm_gram_pairs(df: DataFrame) -> DataFrame:
     """The per-(doc, bigram) occurrence relation :func:`with_lm_score`
     scores over — exposed so a caller scoring the SAME corpus under
     several models (the DSIR gate: target LM + raw LM) derives it
     once, ``localCheckpoint``s it, and passes it to every scoring call
     via ``pairs=`` instead of re-exploding the corpus per model
     (r16)."""
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     return (
-        df.select(F.col(id_col), F.explode(word_grams(lowered, 2)).alias("_g"))
-        .groupBy(id_col, "_g")
+        df.select(F.col("doc_id"), F.explode(word_grams(lowered, 2)).alias("_g"))
+        .groupBy("doc_id", "_g")
         .agg(F.count(F.lit(1)).alias("_n"))
     )
 
 
 def with_lm_score(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     hot_threshold: int = HOT_GRAM_OCCS,
     lm: DataFrame | None = None,
     lm_prepared: PreparedLM | None = None,
@@ -697,7 +669,7 @@ def with_lm_score(
     if hot_threshold < 1:
         raise ValueError(f"hot_threshold must be >= 1, got {hot_threshold}")
     if lm is not None:
-        lm_prepared = prepare_lm(lm, text_col, hot_threshold)
+        lm_prepared = prepare_lm(lm, hot_threshold)
     # per-(doc, gram) occurrence counts FIRST: every downstream branch
     # (bigram totals, hot probe, cold probe) hangs off this one
     # exchange, so ReuseExchange runs the explode exactly once — the
@@ -706,7 +678,7 @@ def with_lm_score(
     # scoring one corpus under several models passes the shared
     # relation via ``pairs=`` (:func:`lm_gram_pairs`).
     if pairs is None:
-        pairs = lm_gram_pairs(df, id_col, text_col)
+        pairs = lm_gram_pairs(df)
         if lm_prepared is None:
             # self-mode only: pairs feeds the EAGER stats checkpoint
             # below AND the final scoring plan — two separate jobs, so
@@ -717,7 +689,7 @@ def with_lm_score(
             pairs = pairs.localCheckpoint()
     logp = F.log((F.col("_cbi") + 1.0) / (F.col("_cw") + F.col("_v")))
     scored_cols = [
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_n"),
         (F.col("_n") * logp).alias("_nlp"),
     ]
@@ -725,7 +697,7 @@ def with_lm_score(
         # self-scoring: the model is the scored corpus's own counts.
         bi_counts = pairs.groupBy("_g").agg(F.sum("_n").alias("_cbi"))
         uni_counts = (
-            df.select(F.explode(tokens(text_col, lowercase=True)).alias("_w"))
+            df.select(F.explode(tokens("text", lowercase=True)).alias("_w"))
             .groupBy("_w")
             .agg(F.count(F.lit(1)).alias("_cw"))
         )
@@ -778,24 +750,24 @@ def with_lm_score(
             .withColumn("_k", F.pmod(F.xxhash64("_g"), F.lit(1)))
             .join(F.broadcast(vsize), "_k")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.col("_n"),
                 (F.col("_n") * smoothed).alias("_nlp"),
             )
         )
     agg = (
         hot_scored.unionByName(cold_scored)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_n").alias("n_bigrams"),
             F.round(F.sum("_nlp") / F.sum("_n"), 6).alias("avg_logp"),
         )
     )
     return (
-        df.select(id_col)
-        .join(agg, id_col, "left")
+        df.select("doc_id")
+        .join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
             F.coalesce("avg_logp", F.lit(0.0)).alias("avg_logp"),
         )
@@ -826,8 +798,6 @@ def mix_bucket(key: Column) -> Column:
 def domain_mix_sample(
     df: DataFrame,
     rates: Mapping[str, float],
-    key_col: str = "doc_id",
-    strata_col: str = "lang",
     default_rate: float = 0.0,
 ) -> DataFrame:
     """Deterministic stratified downsampling to a target mix: a row
@@ -837,16 +807,11 @@ def domain_mix_sample(
     reproducible and its correctness oracle exact."""
     rate = F.lit(default_rate)
     for stratum, r in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == stratum, F.lit(float(r))).otherwise(rate)
-    return df.filter(mix_bucket(F.col(key_col)) < rate * MIX_BUCKETS)
+        rate = F.when(F.col("lang") == stratum, F.lit(float(r))).otherwise(rate)
+    return df.filter(mix_bucket(F.col("doc_id")) < rate * MIX_BUCKETS)
 
 
-def split_corpus(
-    df: DataFrame,
-    weights: Mapping[str, float],
-    key_col: str = "doc_id",
-    out_col: str = "split",
-) -> DataFrame:
+def split_corpus(df: DataFrame, weights: Mapping[str, float]) -> DataFrame:
     """Deterministic train/val/test assignment: the md5 bucket of the
     key is mapped onto cumulative weight thresholds (insertion order of
     ``weights``), so every rerun — and every engine — assigns each row
@@ -860,7 +825,7 @@ def split_corpus(
     total = sum(weights.values())
     if not 0 < total <= 1.0 + 1e-9:
         raise ValueError(f"split weights must sum to (0, 1], got {total}")
-    bucket = mix_bucket(F.col(key_col))
+    bucket = mix_bucket(F.col("doc_id"))
     expr: Column | None = None
     cum = 0.0
     names = list(weights)
@@ -874,16 +839,10 @@ def split_corpus(
         hi = F.lit(int(round(cum * MIX_BUCKETS)))
         cond = bucket < hi
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(cond, F.lit(name))
-    return df.withColumn(out_col, expr.otherwise(F.lit(names[-1])))
+    return df.withColumn("split", expr.otherwise(F.lit(names[-1])))
 
 
-def with_oov_ratio(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vocab_col: str = "token",
-) -> DataFrame:
+def with_oov_ratio(df: DataFrame, vocab: DataFrame) -> DataFrame:
     """Out-of-vocabulary ratio per document against a reference vocab
     (e.g. the :func:`~scraping_etl_spark.operators.textstats.vocab_topk`
     output) — the cheap proxy for CCNet's LM-perplexity quality filter:
@@ -895,14 +854,14 @@ def with_oov_ratio(
     groupBy back to the doc. Returns ``n_tokens``, ``n_oov``,
     ``oov_ratio`` (0.0 for empty docs)."""
     toks = df.select(
-        F.col(id_col), F.explode_outer(tokens(text_col, lowercase=True)).alias("_t")
+        F.col("doc_id"), F.explode_outer(tokens("text", lowercase=True)).alias("_t")
     )
-    v = vocab.select(F.col(vocab_col).alias("_t")).distinct().withColumn(
+    v = vocab.select(F.col("token").alias("_t")).distinct().withColumn(
         "_known", F.lit(1)
     )
     return (
         toks.join(F.broadcast(v), "_t", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("_t").alias("n_tokens"),
             F.sum(
@@ -910,7 +869,7 @@ def with_oov_ratio(
             ).cast("long").alias("n_oov"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "n_oov",
             F.round(
@@ -924,13 +883,7 @@ def with_oov_ratio(
 # Deterministic stratified bottom-N sampling (eval-set construction)
 # ---------------------------------------------------------------------------
 
-def stratified_sample_n(
-    df: DataFrame,
-    n: int,
-    key_col: str = "doc_id",
-    strata_col: str = "lang",
-    n_salts: int = 64,
-) -> DataFrame:
+def stratified_sample_n(df: DataFrame, n: int, n_salts: int = 64) -> DataFrame:
     """Exactly ``min(n, |stratum|)`` rows per stratum, chosen as the N
     smallest ``(md5(key), key)`` — the deterministic analogue of a
     uniform without-replacement sample (bottom-N by hash), so reruns,
@@ -952,7 +905,7 @@ def stratified_sample_n(
         raise ValueError(f"n must be >= 1, got {n}")
     if n_salts < 1:
         raise ValueError(f"n_salts must be >= 1, got {n_salts}")
-    h = F.md5(F.col(key_col).cast("string"))
+    h = F.md5(F.col("doc_id").cast("string"))
     # salt from the TRAILING 15 md5 hex chars — disjoint from the
     # leading 15 that dominate the ``_h`` sort order, so bucket
     # assignment and ranking order come from independent bits.
@@ -962,8 +915,8 @@ def stratified_sample_n(
         F.conv(F.substring(F.col("_h"), 18, 15), 16, 10).cast("long"),
         F.lit(n_salts),
     )
-    w1 = Window.partitionBy(strata_col, "_salt").orderBy("_h", key_col)
-    w2 = Window.partitionBy(strata_col).orderBy("_h", key_col)
+    w1 = Window.partitionBy("lang", "_salt").orderBy("_h", "doc_id")
+    w2 = Window.partitionBy("lang").orderBy("_h", "doc_id")
     return (
         df.withColumn("_h", h)
         .withColumn("_salt", salt)
@@ -983,7 +936,6 @@ def stratified_cutoffs(
     df: DataFrame,
     value_col: str,
     quantiles: tuple[float, ...],
-    strata_col: str = "lang",
 ) -> DataFrame:
     """Wide form of :func:`stratified_quantiles`: one row per stratum
     with columns ``_q0.._qk`` (the ``percentile_disc`` value per
@@ -996,16 +948,16 @@ def stratified_cutoffs(
     for q in quantiles:
         if not 0 < q <= 1:
             raise ValueError(f"quantiles must be in (0, 1], got {q}")
-    hist = df.groupBy(strata_col, value_col).agg(
+    hist = df.groupBy("lang", value_col).agg(
         F.count(F.lit(1)).alias("_f")
     )
     w = (
-        Window.partitionBy(strata_col)
+        Window.partitionBy("lang")
         .orderBy(value_col)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cdf = hist.withColumn("_cum", F.sum("_f").over(w)).withColumn(
-        "_n", F.sum("_f").over(Window.partitionBy(strata_col))
+        "_n", F.sum("_f").over(Window.partitionBy("lang"))
     )
     picks = [
         F.min(
@@ -1015,14 +967,13 @@ def stratified_cutoffs(
         ).alias(f"_q{i}")
         for i, q in enumerate(quantiles)
     ]
-    return cdf.groupBy(strata_col).agg(F.min("_n").alias("_n"), *picks)
+    return cdf.groupBy("lang").agg(F.min("_n").alias("_n"), *picks)
 
 
 def stratified_quantiles(
     df: DataFrame,
     value_col: str,
     quantiles: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
-    strata_col: str = "lang",
 ) -> DataFrame:
     """EXACT per-stratum discrete quantiles (SQL-standard
     ``percentile_disc``: the smallest value whose cumulative row count
@@ -1042,13 +993,13 @@ def stratified_quantiles(
     rows). One quantile row per (stratum, q). Exact, no interpolation
     (values keep their column type), deterministic, and the oracle
     reproduces the same histogram-CDF construction."""
-    wide = stratified_cutoffs(df, value_col, quantiles, strata_col)
+    wide = stratified_cutoffs(df, value_col, quantiles)
     # unpivot (stratum, _q0.._qk, _n) → one row per (stratum, quantile)
     stack = ", ".join(
         f"CAST({q!r} AS DOUBLE), _q{i}" for i, q in enumerate(quantiles)
     )
     return wide.select(
-        strata_col,
+        "lang",
         F.expr(
             f"stack({len(quantiles)}, {stack}) AS (quantile, value)"
         ),
@@ -1065,15 +1016,7 @@ def stratified_quantiles(
 LM_SCORE_FX_SCALE = 1_000_000
 
 
-def ccnet_buckets(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    strata_col: str = "lang",
-    lm: DataFrame | None = None,
-    lm_prepared: PreparedLM | None = None,
-    cuts: tuple[float, float] = (1.0 / 3.0, 2.0 / 3.0),
-) -> DataFrame:
+def ccnet_buckets(df: DataFrame, lm: DataFrame | None = None) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2019,
     arXiv:1911.00359 §4.3): per language, split the corpus into
     ``head`` / ``middle`` / ``tail`` thirds by language-model score —
@@ -1083,7 +1026,7 @@ def ccnet_buckets(
     caller picks the policy.
 
     The LM is :func:`with_lm_score`'s add-one bigram model (self-score
-    by default; pass ``lm=``/``lm_prepared=`` for the real CCNet
+    by default; pass ``lm=`` for the real CCNet
     deployment — a curated reference LM). Bucket boundaries are EXACT
     per-stratum ``percentile_disc`` cutoffs over the fixed-point score
     (:data:`LM_SCORE_FX_SCALE`), ties resolved downward (a doc ON the
@@ -1103,10 +1046,8 @@ def ccnet_buckets(
     Returns one row per doc: ``(id, stratum, n_bigrams, avg_logp,
     bucket)``.
     """
-    scored = with_lm_score(
-        df, id_col=id_col, text_col=text_col, lm=lm, lm_prepared=lm_prepared
-    )
-    base = df.select(id_col, strata_col).join(scored, id_col)
+    scored = with_lm_score(df, lm=lm)
+    base = df.select("doc_id", "lang").join(scored, "doc_id")
     # two consumers (cutoff histogram, bucket assignment) hang off the
     # scored relation — checkpoint ONCE at doc cardinality (id,
     # stratum, two numbers) so the LM scoring plan runs once, not per
@@ -1115,14 +1056,14 @@ def ccnet_buckets(
         "_fx",
         F.round(F.col("avg_logp") * LM_SCORE_FX_SCALE).cast("long"),
     ).localCheckpoint()
-    wide = stratified_cutoffs(sdf, "_fx", cuts, strata_col)
+    wide = stratified_cutoffs(sdf, "_fx", (1.0 / 3.0, 2.0 / 3.0))
     return (
         sdf.join(
-            F.broadcast(wide.select(strata_col, "_q0", "_q1")), strata_col
+            F.broadcast(wide.select("lang", "_q0", "_q1")), "lang"
         )
         .select(
-            id_col,
-            strata_col,
+            "doc_id",
+            "lang",
             "n_bigrams",
             "avg_logp",
             F.when(F.col("_fx") <= F.col("_q0"), F.lit("tail"))
@@ -1165,7 +1106,6 @@ def place_sequences(
     df: DataFrame,
     budget: int,
     id_col: str = "doc_id",
-    text_col: str = "text",
     by: str = "lang",
     n_shards: int = 64,
     len_col: str | None = None,
@@ -1181,7 +1121,7 @@ def place_sequences(
     ``len_col`` selects a precomputed length column (e.g. ``n_ids``
     from :func:`bpe.encode_token_ids` — packing on REAL tokenizer ids,
     not whitespace words, is what a train-ready export wants); when
-    None the length is the whitespace token count of ``text_col``.
+    None the length is the whitespace token count of ``text``.
 
     The window is partitioned by (stratum, shard) where ``shard`` is a
     deterministic md5 bucket of the id — NOT by the stratum alone: a
@@ -1209,7 +1149,7 @@ def place_sequences(
     )
     n = (
         F.col(len_col).cast("long") if len_col is not None
-        else F.size(tokens(text_col)).cast("long")
+        else F.size(tokens("text")).cast("long")
     )
     w = (
         Window.partitionBy(by, "_shard")
@@ -1231,7 +1171,6 @@ def pack_sequences(
     df: DataFrame,
     budget: int,
     id_col: str = "doc_id",
-    text_col: str = "text",
     by: str = "lang",
     n_shards: int = 64,
 ) -> DataFrame:
@@ -1245,7 +1184,7 @@ def pack_sequences(
     slim = df.select(
         F.col(by),
         F.col(id_col),
-        F.size(tokens(text_col)).cast("long").alias("_plen"),
+        F.size(tokens("text")).cast("long").alias("_plen"),
     )
     placed = place_sequences(
         slim, budget, id_col=id_col, by=by, n_shards=n_shards,
@@ -1263,7 +1202,6 @@ def temperature_mix_rates(
     df: DataFrame,
     alpha: float = 0.5,
     budget: float = 0.5,
-    strata_col: str = "source",
 ) -> DataFrame:
     """Per-stratum sampling rates for a TEMPERATURE-scaled corpus mix
     (the mT5/PaLM alpha-smoothing knob): the target share of stratum
@@ -1288,11 +1226,11 @@ def temperature_mix_rates(
     map-side filter."""
     cnt = F.col("n_docs").cast("double")
     w = F.sqrt(cnt) if alpha == 0.5 else F.pow(cnt, F.lit(float(alpha)))
-    counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n_docs"))
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     stats = counts.agg(
         F.aggregate(
             F.sort_array(
-                F.collect_list(F.struct(F.col(strata_col).alias("s"), w.alias("w")))
+                F.collect_list(F.struct(F.col("source").alias("s"), w.alias("w")))
             ),
             F.lit(0.0),
             lambda acc, x: acc + x["w"],
@@ -1300,7 +1238,7 @@ def temperature_mix_rates(
         F.sum("n_docs").alias("_n_total"),
     )
     return counts.join(F.broadcast(stats)).select(
-        strata_col,
+        "source",
         "n_docs",
         F.least(
             F.lit(1.0),
@@ -1309,14 +1247,7 @@ def temperature_mix_rates(
     )
 
 
-def temperature_mix_sample(
-    df: DataFrame,
-    alpha: float = 0.5,
-    budget: float = 0.5,
-    key_col: str = "doc_id",
-    strata_col: str = "source",
-    rates: DataFrame | None = None,
-) -> DataFrame:
+def temperature_mix_sample(df: DataFrame, rates: DataFrame | None = None) -> DataFrame:
     """Temperature-scaled deterministic downsampling: compute (or take
     precomputed) :func:`temperature_mix_rates`, broadcast-join them on
     the stratum and keep a row iff ``mix_bucket(key) < rate ·
@@ -1325,10 +1256,10 @@ def temperature_mix_sample(
     corpus itself instead of hand-specified. One tiny agg + one
     map-side filtered scan; nothing shuffles at corpus cardinality."""
     if rates is None:
-        rates = temperature_mix_rates(df, alpha, budget, strata_col)
-    r = rates.select(strata_col, "rate")
-    return df.join(F.broadcast(r), strata_col).filter(
-        mix_bucket(F.col(key_col)) < F.col("rate") * MIX_BUCKETS
+        rates = temperature_mix_rates(df)
+    r = rates.select("source", "rate")
+    return df.join(F.broadcast(r), "source").filter(
+        mix_bucket(F.col("doc_id")) < F.col("rate") * MIX_BUCKETS
     )
 
 
@@ -1336,8 +1267,6 @@ def unimax_quotas(
     df: DataFrame,
     budget_tokens: float,
     epoch_cap: float = 4.0,
-    strata_col: str = "lang",
-    text_col: str = "text",
 ) -> DataFrame:
     """UniMax language-budget allocation (Chung et al., ICLR 2023
     "UniMax: Fairer and more effective language sampling for
@@ -1376,7 +1305,7 @@ def unimax_quotas(
     from scraping_etl_spark.operators.textstats import tokens
 
     counts = (
-        df.select(F.col(strata_col).alias("_g"), tokens(text_col).alias("_t"))
+        df.select(F.col("lang").alias("_g"), tokens("text").alias("_t"))
         .groupBy("_g")
         .agg(F.sum(F.size("_t")).cast("long").alias("n_tokens"))
         .withColumn(
@@ -1419,7 +1348,7 @@ def unimax_quotas(
     return (
         flagged.crossJoin(F.broadcast(krow))
         .select(
-            F.col("_g").alias(strata_col),
+            F.col("_g").alias("lang"),
             "n_tokens",
             "cap_tokens",
             F.round(quota, 6).alias("quota_tokens"),
@@ -1430,13 +1359,7 @@ def unimax_quotas(
     )
 
 
-def token_divergence(
-    a: DataFrame,
-    b: DataFrame,
-    text_col: str = "text",
-    strata_col: str = "lang",
-    scale: float = 1e9,
-) -> DataFrame:
+def token_divergence(a: DataFrame, b: DataFrame) -> DataFrame:
     """Jensen-Shannon divergence between the unigram distributions of
     two corpora, per stratum — the drift/mixture monitor a training
     pipeline runs between snapshots (did this month's crawl shift the
@@ -1452,12 +1375,12 @@ def token_divergence(
     Determinism at scale — the FIXED-POINT trick: a float sum over an
     unbounded vocab cannot be folded in a guaranteed order without
     serializing each stratum through one task, so each token's term is
-    rounded to an integer grid (``round(term · scale)`` → BIGINT) and
+    rounded to an integer grid (``round(term · 1e9)`` → BIGINT) and
     the integers are summed — integer addition is associative, so any
     partial-aggregation order gives the bit-same total on every engine.
-    Resolution is 1/scale per token (1e-9 nats at the default), far
-    below anything a drift monitor acts on; bigint overflow needs
-    |term|·scale·vocab > 2^63 ≈ vocab beyond 10^9 — not a unigram vocab.
+    Resolution is 1e-9 nats per token, far below anything a drift
+    monitor acts on; bigint overflow needs |term|·1e9·vocab > 2^63 ≈
+    vocab beyond 10^9 — not a unigram vocab.
 
     Plan shape: one explode+agg per side at (stratum, token) grain, a
     full-outer equi-join of the two count relations, a tiny per-stratum
@@ -1465,40 +1388,40 @@ def token_divergence(
     collects, nothing single-task."""
     def _counts(df: DataFrame, out: str) -> DataFrame:
         return (
-            df.select(F.col(strata_col), F.explode(tokens(text_col)).alias("token"))
-            .groupBy(strata_col, "token")
+            df.select(F.col("lang"), F.explode(tokens("text")).alias("token"))
+            .groupBy("lang", "token")
             .agg(F.count(F.lit(1)).alias(out))
         )
 
     j = (
         _counts(a, "ca")
-        .join(_counts(b, "cb"), [strata_col, "token"], "full_outer")
+        .join(_counts(b, "cb"), ["lang", "token"], "full_outer")
         .select(
-            strata_col,
+            "lang",
             "token",
             F.coalesce("ca", F.lit(0)).alias("ca"),
             F.coalesce("cb", F.lit(0)).alias("cb"),
         )
     )
-    totals = j.groupBy(strata_col).agg(
+    totals = j.groupBy("lang").agg(
         F.sum("ca").alias("n_a"),
         F.sum("cb").alias("n_b"),
         F.count(F.lit(1)).alias("v"),
     )
-    t = j.join(F.broadcast(totals), strata_col)
+    t = j.join(F.broadcast(totals), "lang")
     p = (F.col("ca") + F.lit(1.0)) / (F.col("n_a") + F.col("v"))
     q = (F.col("cb") + F.lit(1.0)) / (F.col("n_b") + F.col("v"))
     m = (p + q) / F.lit(2.0)
     term = F.lit(0.5) * (p * F.log(p / m) + q * F.log(q / m))
-    fx = F.round(term * F.lit(scale), 0).cast("long")
+    fx = F.round(term * F.lit(1e9), 0).cast("long")
     return (
         t.withColumn("_fx", fx)
-        .groupBy(strata_col)
+        .groupBy("lang")
         .agg(
             F.max("v").cast("long").alias("v"),
             F.max("n_a").cast("long").alias("n_a"),
             F.max("n_b").cast("long").alias("n_b"),
-            F.round(F.sum("_fx") / F.lit(scale), 6).alias("js_div"),
+            F.round(F.sum("_fx") / F.lit(1e9), 6).alias("js_div"),
         )
     )
 
@@ -1507,14 +1430,12 @@ def stratified_quantiles_sketch(
     df: DataFrame,
     value_col: str,
     quantiles: tuple[float, ...] = (0.25, 0.5, 0.75, 0.95),
-    strata_col: str = "lang",
-    k: int = 200,
 ) -> DataFrame:
     """The SKETCH tier of :func:`stratified_quantiles`: per-stratum
     quantiles from a Datasketches KLL sketch (``kll_sketch_agg_bigint``)
     — single-pass, MERGEABLE (partial sketches combine associatively
     across partitions/days/corpora), with a proven normalized-rank
-    error bound (~1.65% at the default k = 200). At 100 TB this is the
+    error bound (~1.65% at its k = 200). At 100 TB this is the
     profiling path: the exact tier's histogram shuffle moves every
     distinct value; the sketch moves ~k doubles per partition and can
     be rolled up incrementally — the same exact/sketch split as
@@ -1528,20 +1449,20 @@ def stratified_quantiles_sketch(
     for q in quantiles:
         if not 0 < q <= 1:
             raise ValueError(f"quantiles must be in (0, 1], got {q}")
-    sk = df.groupBy(strata_col).agg(
-        F.kll_sketch_agg_bigint(F.col(value_col).cast("bigint"), k).alias("_sk"),
+    sk = df.groupBy("lang").agg(
+        F.kll_sketch_agg_bigint(F.col(value_col).cast("bigint"), 200).alias("_sk"),
         F.count(F.lit(1)).alias("_n"),
     )
     picks = [
         F.kll_sketch_get_quantile_bigint("_sk", F.lit(float(q))).alias(f"_q{i}")
         for i, q in enumerate(quantiles)
     ]
-    wide = sk.select(strata_col, F.col("_n"), *picks)
+    wide = sk.select("lang", F.col("_n"), *picks)
     stack = ", ".join(
         f"CAST({q!r} AS DOUBLE), _q{i}" for i, q in enumerate(quantiles)
     )
     return wide.select(
-        strata_col,
+        "lang",
         F.expr(f"stack({len(quantiles)}, {stack}) AS (quantile, value)"),
         F.col("_n").alias("n_rows"),
     )
@@ -1553,11 +1474,7 @@ def stratified_quantiles_sketch(
 # ---------------------------------------------------------------------------
 
 
-def collapse_repeat_tokens(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "text_collapsed",
-) -> DataFrame:
+def collapse_repeat_tokens(df: DataFrame) -> DataFrame:
     """Collapse runs of consecutively repeated tokens to a single
     occurrence ("the the the cat" -> "the cat") and report how many
     tokens the collapse removed.
@@ -1588,8 +1505,8 @@ def collapse_repeat_tokens(
         lambda x, i: ~x.eqNullSafe(F.get(toks, i - F.lit(1))),
     )
     return (
-        df.withColumn("_cr_toks", tokens(text_col))
-        .withColumn(out_col, F.array_join(kept, " "))
+        df.withColumn("_cr_toks", tokens("text"))
+        .withColumn("text_collapsed", F.array_join(kept, " "))
         .withColumn(
             "n_collapsed", (F.size(toks) - F.size(kept)).cast("long")
         )
@@ -1603,13 +1520,8 @@ def collapse_repeat_tokens(
 # ---------------------------------------------------------------------------
 
 
-def adaptive_quality_gate(
-    df: DataFrame,
-    keep_frac: float = 0.5,
-    strata_col: str = "lang",
-    score_col: str = "quality_score",
-) -> DataFrame:
-    """Keep the top ``keep_frac`` of each stratum by ``score_col``,
+def adaptive_quality_gate(df: DataFrame, keep_frac: float = 0.5) -> DataFrame:
+    """Keep the top ``keep_frac`` of each stratum by ``quality_score``,
     with the cutoff LEARNED from the data instead of hand-tuned: the
     threshold is the exact per-stratum ``percentile_disc(1 -
     keep_frac)`` of the score (via :func:`stratified_quantiles`), and
@@ -1636,11 +1548,11 @@ def adaptive_quality_gate(
         # keep everything: threshold below any score
         return df.withColumn("threshold", F.lit(0.0))
     thr = (
-        stratified_quantiles(df, score_col, (q,), strata_col)
-        .select(strata_col, F.col("value").alias("threshold"))
+        stratified_quantiles(df, "quality_score", (q,))
+        .select("lang", F.col("value").alias("threshold"))
     )
-    return df.join(F.broadcast(thr), strata_col).filter(
-        F.col(score_col) >= F.col("threshold")
+    return df.join(F.broadcast(thr), "lang").filter(
+        F.col("quality_score") >= F.col("threshold")
     )
 
 
@@ -1649,13 +1561,7 @@ def adaptive_quality_gate(
 # ---------------------------------------------------------------------------
 
 
-def sliding_chunks(
-    df: DataFrame,
-    size: int = 64,
-    stride: int = 48,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def sliding_chunks(df: DataFrame, size: int = 64, stride: int = 48) -> DataFrame:
     """Overlapping token-window chunks — the retrieval-pipeline
     counterpart of :func:`token_chunks` (which cuts NON-overlapping
     windows for dedup): each chunk starts ``stride`` tokens after the
@@ -1701,11 +1607,11 @@ def sliding_chunks(
             ),
         )
 
-    bound = _bind(tokens(text_col), _chunks)
+    bound = _bind(tokens("text"), _chunks)
     return df.select(
-        F.col(id_col), F.explode(bound).alias("_c")
+        F.col("doc_id"), F.explode(bound).alias("_c")
     ).select(
-        id_col,
+        "doc_id",
         F.col("_c.chunk_idx").alias("chunk_idx"),
         F.col("_c.chunk_text").alias("chunk_text"),
         F.col("_c.n_tokens").alias("n_tokens"),
@@ -1722,13 +1628,7 @@ def sliding_chunks(
 KN_DISCOUNT = 0.75
 
 
-def with_kn_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hot_threshold: int = HOT_GRAM_OCCS,
-    discount: float = KN_DISCOUNT,
-) -> DataFrame:
+def with_kn_score(df: DataFrame, hot_threshold: int = HOT_GRAM_OCCS) -> DataFrame:
     """Interpolated Kneser-Ney bigram score per document — the smoothing
     family KenLM ships and the CCNet perplexity filter actually runs
     (Kneser & Ney 1995; Chen & Goodman 1999; Wenzek et al. 2019 score
@@ -1763,10 +1663,10 @@ def with_kn_score(
     """
     if hot_threshold < 1:
         raise ValueError(f"hot_threshold must be >= 1, got {hot_threshold}")
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     pairs = (
-        df.select(F.col(id_col), F.explode(word_grams(lowered, 2)).alias("_g"))
-        .groupBy(id_col, "_g")
+        df.select(F.col("doc_id"), F.explode(word_grams(lowered, 2)).alias("_g"))
+        .groupBy("doc_id", "_g")
         .agg(F.count(F.lit(1)).alias("_n"))
         # pairs feeds the EAGER bc checkpoint below AND the final
         # hot/cold scoring plan — two separate jobs, so ReuseExchange
@@ -1790,8 +1690,8 @@ def with_kn_score(
     )
     logp = F.log(
         (
-            F.greatest(F.col("_cbi") - F.lit(discount), F.lit(0.0))
-            + F.lit(discount) * F.col("_nf") * F.col("_np") / F.col("_t")
+            F.greatest(F.col("_cbi") - F.lit(KN_DISCOUNT), F.lit(0.0))
+            + F.lit(KN_DISCOUNT) * F.col("_nf") * F.col("_np") / F.col("_t")
         )
         / F.col("_cw1")
     )
@@ -1805,7 +1705,7 @@ def with_kn_score(
         .localCheckpoint()
     )
     scored_cols = [
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("_n"),
         (F.col("_n") * F.col("_logp")).alias("_nlp"),
     ]
@@ -1815,17 +1715,17 @@ def with_kn_score(
     cold_scored = cold_base.join(stats, "_g").select(scored_cols)
     agg = (
         hot_scored.unionByName(cold_scored)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_n").alias("n_bigrams"),
             F.round(F.sum("_nlp") / F.sum("_n"), 6).alias("avg_logp_kn"),
         )
     )
     return (
-        df.select(id_col)
-        .join(agg, id_col, "left")
+        df.select("doc_id")
+        .join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).cast("long").alias("n_bigrams"),
             F.coalesce("avg_logp_kn", F.lit(0.0)).alias("avg_logp_kn"),
         )

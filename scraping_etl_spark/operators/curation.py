@@ -93,13 +93,7 @@ def per_key_cap(
     )
 
 
-def duplicate_passage_stats(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    min_docs: int = 2,
-) -> DataFrame:
+def duplicate_passage_stats(df: DataFrame, k: int = 5, min_docs: int = 2) -> DataFrame:
     """Per-document duplicated-passage profile over token ``k``-grams.
 
     A gram occurring in ≥ ``min_docs`` distinct documents marks a
@@ -130,8 +124,8 @@ def duplicate_passage_stats(
     # k-times-larger intermediate than the text itself — re-scanning
     # the pruned columns is the cheaper side of that trade at scale.
     occ = df.select(
-        F.col(id_col).alias("_doc"),
-        F.posexplode(word_grams(F.lower(F.col(text_col)), k)).alias("_pos", "_g"),
+        F.col("doc_id").alias("_doc"),
+        F.posexplode(word_grams(F.lower(F.col("text")), k)).alias("_pos", "_g"),
     )
     # distinct (gram, doc) first — partial agg — then doc counts per gram
     gram_docs = (
@@ -160,11 +154,11 @@ def duplicate_passage_stats(
     )
     totals = occ.groupBy("_doc").agg(F.count(F.lit(1)).alias("_n_grams"))
     return (
-        df.select(F.col(id_col))
-        .join(totals.withColumnRenamed("_doc", id_col), id_col, "left")
-        .join(runs.withColumnRenamed("_doc", id_col), id_col, "left")
+        df.select(F.col("doc_id"))
+        .join(totals.withColumnRenamed("_doc", "doc_id"), "doc_id", "left")
+        .join(runs.withColumnRenamed("_doc", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("_n_grams", F.lit(0)).cast("long").alias("n_grams"),
             F.coalesce("_n_dup", F.lit(0)).cast("long").alias("n_dup_grams"),
             F.round(
@@ -181,7 +175,6 @@ def dsir_weights(
     df: DataFrame,
     target_scored: DataFrame,
     raw_scored: DataFrame,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Importance-resampling weights from two per-document LM scores
     (DSIR, Xie et al. 2023: sample raw data with probability ∝
@@ -202,21 +195,21 @@ def dsir_weights(
     already collapsed to one row per doc, so the join shuffles at
     document cardinality, not token cardinality."""
     t = target_scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_bigrams").alias("_nb_t"),
         F.col("avg_logp").alias("logp_target"),
     )
     r = raw_scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_bigrams").alias("_nb_r"),
         F.col("avg_logp").alias("logp_raw"),
     )
     return (
-        df.select(id_col)
-        .join(t, id_col)
-        .join(r, id_col)
+        df.select("doc_id")
+        .join(t, "doc_id")
+        .join(r, "doc_id")
         .select(
-            id_col,
+            "doc_id",
             F.col("_nb_t").alias("n_bigrams"),
             "logp_target",
             "logp_raw",
@@ -231,7 +224,6 @@ def weighted_sample_gumbel(
     df: DataFrame,
     n: int,
     weight_col: str = "log_weight",
-    id_col: str = "doc_id",
     seed: str = "gumbel",
 ) -> DataFrame:
     """Deterministic weighted sampling without replacement via the
@@ -259,7 +251,7 @@ def weighted_sample_gumbel(
         raise ValueError(f"n must be >= 1, got {n}")
     h = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(seed), F.lit(":"), F.col(id_col).cast("string"))),
+            F.md5(F.concat(F.lit(seed), F.lit(":"), F.col("doc_id").cast("string"))),
             1, 15,
         ),
         16, 10,
@@ -268,7 +260,7 @@ def weighted_sample_gumbel(
     g = -F.log(-F.log(u))
     return (
         df.withColumn("gumbel_key", F.round(F.col(weight_col) + g, 6))
-        .orderBy(F.desc("gumbel_key"), F.asc(id_col))
+        .orderBy(F.desc("gumbel_key"), F.asc("doc_id"))
         .limit(n)
     )
 
@@ -318,9 +310,6 @@ def shuffle_to_shards(
 def token_budget_mix(
     df: DataFrame,
     budgets: dict[str, int],
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     seed: str = "0",
     prune_cap: int | None = None,
 ) -> DataFrame:
@@ -358,41 +347,32 @@ def token_budget_mix(
     # the md5(seed|id) order key must drive BOTH stages identically;
     # per_key_cap ranks ascending on a plain column when descending=False
     keyed = (
-        df.filter(bmap[F.col(source_col)].isNotNull())
+        df.filter(bmap[F.col("source")].isNotNull())
         .withColumn(
             "_ord",
-            F.md5(F.concat(F.lit(seed), F.lit("|"), F.col(id_col).cast("string"))),
+            F.md5(F.concat(F.lit(seed), F.lit("|"), F.col("doc_id").cast("string"))),
         )
         .withColumn(
-            "n_doc_tokens", F.size(tokens(text_col, lowercase=True)).cast("long")
+            "n_doc_tokens", F.size(tokens("text", lowercase=True)).cast("long")
         )
         .filter(F.col("n_doc_tokens") > 0)
     )
-    pruned = per_key_cap(
-        keyed, cap, key_col=source_col, order_col="_ord",
-        descending=False, id_col=id_col,
-    )
+    pruned = per_key_cap(keyed, cap, order_col="_ord", descending=False)
     w = (
-        Window.partitionBy(source_col)
-        .orderBy("_ord", id_col)
+        Window.partitionBy("source")
+        .orderBy("_ord", "doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     out = pruned.withColumn(
         "cum_before", F.coalesce(F.sum("n_doc_tokens").over(w), F.lit(0))
     )
     return (
-        out.filter(F.col("cum_before") < bmap[F.col(source_col)])
+        out.filter(F.col("cum_before") < bmap[F.col("source")])
         .drop("_ord", "cap_rank")
     )
 
 
-def remove_duplicate_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    min_docs: int = 2,
-) -> DataFrame:
+def remove_duplicate_spans(df: DataFrame, k: int = 5, min_docs: int = 2) -> DataFrame:
     """Exact duplicated-SPAN removal — the actionable form of
     :func:`duplicate_passage_stats` (Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better", cut
@@ -417,12 +397,12 @@ def remove_duplicate_spans(
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
     toks = df.select(
-        F.col(id_col).alias("_doc"),
-        F.posexplode(tokens(F.col(text_col), lowercase=True)).alias("_pos", "_tok"),
+        F.col("doc_id").alias("_doc"),
+        F.posexplode(tokens(F.col("text"), lowercase=True)).alias("_pos", "_tok"),
     )
     occ = df.select(
-        F.col(id_col).alias("_doc"),
-        F.posexplode(word_grams(F.lower(F.col(text_col)), k)).alias("_gpos", "_g"),
+        F.col("doc_id").alias("_doc"),
+        F.posexplode(word_grams(F.lower(F.col("text")), k)).alias("_gpos", "_g"),
     )
     dup_grams = (
         occ.groupBy("_g", "_doc")
@@ -456,11 +436,11 @@ def remove_duplicate_spans(
     )
     totals = toks.groupBy("_doc").agg(F.count(F.lit(1)).alias("n_tokens"))
     return (
-        df.select(F.col(id_col))
-        .join(totals.withColumnRenamed("_doc", id_col), id_col, "left")
-        .join(re.withColumnRenamed("_doc", id_col), id_col, "left")
+        df.select(F.col("doc_id"))
+        .join(totals.withColumnRenamed("_doc", "doc_id"), "doc_id", "left")
+        .join(re.withColumnRenamed("_doc", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
             (
                 F.coalesce("n_tokens", F.lit(0)) - F.coalesce("_n_kept", F.lit(0))
@@ -470,13 +450,7 @@ def remove_duplicate_spans(
     )
 
 
-def term_screen(
-    df: DataFrame,
-    terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hits: int = 0,
-) -> DataFrame:
+def term_screen(df: DataFrame, terms: list[str], max_hits: int = 0) -> DataFrame:
     """Banned-term content screen — the lexical layer of the C4 /
     RefinedWeb filter stack (next to the domain blocklist in
     ``urls.blocklist_matches`` and the exact-content Bloom screen):
@@ -501,21 +475,21 @@ def term_screen(
     )
     hits = (
         df.select(
-            F.col(id_col),
-            F.explode(tokens(F.col(text_col), lowercase=True)).alias("_tok"),
+            F.col("doc_id"),
+            F.explode(tokens(F.col("text"), lowercase=True)).alias("_tok"),
         )
         .join(F.broadcast(banned), "_tok")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_hits"),
             F.count_distinct("_tok").alias("n_terms"),
         )
     )
     return (
-        df.select(F.col(id_col))
-        .join(hits, id_col, "left")
+        df.select(F.col("doc_id"))
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
             F.coalesce("n_terms", F.lit(0)).cast("long").alias("n_terms"),
             (F.coalesce("n_hits", F.lit(0)) <= max_hits).alias("keep"),

@@ -96,58 +96,21 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.round(inter / F.greatest(union, F.lit(1)), 6)
 
 
-def exact_dup_groups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    normalize: bool = False,
-) -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact-duplicate groups via content hash (SURVEY A2 at corpus
     scale): one partial-agg shuffle on md5(text); only groups with ≥2
-    members survive. ``normalize`` lowercases and collapses whitespace
-    first (catches trivially-reformatted copies)."""
-    text = F.col(text_col)
-    if normalize:
-        text = F.regexp_replace(F.trim(F.lower(text)), r"\s+", " ")
+    members survive (``normalize.normalized_dup_families`` is the
+    canonical-form variant that catches trivially-reformatted copies)."""
     return (
-        df.select(F.md5(text).alias("dup_key"), F.col(id_col))
+        df.select(F.md5("text").alias("dup_key"), F.col("doc_id"))
         .groupBy("dup_key")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.min(id_col).alias("min_doc_id"),
-            F.max(id_col).alias("max_doc_id"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
         )
         .filter(F.col("n_docs") > 1)
     )
-
-
-#: LSH sizing presets. The query-registry defaults (16 hashes × 4
-#: bands) are DEMO-scale — cheap signatures sized for sf0.1 tests, with
-#: the same ≈0.71 s-curve midpoint as production but a shallow curve
-#: (loose pairs still collide occasionally and must be killed by the
-#: exact-Jaccard verify). The production preset is the standard
-#: 128-hash signature in 16 bands of 8 rows: same ≈0.71 midpoint,
-#: but the collision s-curve is far sharper — P(collide) ≈ 0.001 at
-#: J=0.3 vs ≈ 0.97 at J=0.85 — so the verify join sees orders of
-#: magnitude fewer false candidates per true pair, which is what
-#: matters at 100 TB (candidate volume, not signature cost, dominates).
-MINHASH_PRESET_DEMO = {"num_hashes": 16, "bands": 4}
-MINHASH_PRESET_PRODUCTION = {"num_hashes": 128, "bands": 16}
-
-
-def lsh_threshold(num_hashes: int, bands: int) -> float:
-    """The banded-LSH s-curve midpoint ``(1/b)^(1/r)``: the Jaccard
-    similarity at which a pair's collision probability crosses ~50%."""
-    rows = num_hashes // bands
-    return (1.0 / bands) ** (1.0 / rows)
-
-
-def lsh_collision_probability(s: float, num_hashes: int, bands: int) -> float:
-    """P(candidate) for a pair with true Jaccard ``s`` under b bands of
-    r rows: ``1 - (1 - s^r)^b`` — each band collides iff all r minhashes
-    agree (prob s^r), and any colliding band makes the pair a candidate."""
-    rows = num_hashes // bands
-    return 1.0 - (1.0 - s**rows) ** bands
 
 
 def minhash_banded(
@@ -219,8 +182,6 @@ def minhash_banded(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
@@ -248,14 +209,16 @@ def minhash_lsh_pairs(
        Jaccard filters at ``threshold``.
 
     Banding with b bands of r rows targets the usual s-curve threshold
-    ``(1/b)^(1/r)`` (:func:`lsh_threshold`); the demo defaults (16
-    hashes, 4 bands of 4) sit at ≈0.71, so pairs above ~0.8 are caught
-    with probability >0.99 while unrelated pairs almost never collide.
-    At scale pass ``**MINHASH_PRESET_PRODUCTION`` (128 hashes, 16 bands
-    of 8 — same midpoint, far sharper curve, so the verify join sees
-    orders of magnitude fewer false candidates).
+    ``(1/b)^(1/r)``; the defaults (16 hashes, 4 bands of 4) sit at
+    ≈0.71, so pairs above ~0.8 are caught with probability >0.99 while
+    unrelated pairs almost never collide. At scale pass
+    ``num_hashes=128, bands=16`` (16 bands of 8 — same midpoint, far
+    sharper curve: P(collide) ≈ 0.001 at J=0.3 vs ≈ 0.97 at J=0.85, so
+    the verify join sees orders of magnitude fewer false candidates).
     """
-    docs, banded = minhash_banded(df, id_col, text_col, k, num_hashes, bands)
+    docs, banded = minhash_banded(
+        df, k=k, num_hashes=num_hashes, bands=bands
+    )
     left = banded.alias("a")
     right = banded.alias("b")
     cand = (
@@ -279,14 +242,7 @@ def minhash_lsh_pairs(
     )
 
 
-def prepare_neardup_ref(
-    ref: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> tuple[DataFrame, DataFrame]:
+def prepare_neardup_ref(ref: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Precompute and MATERIALIZE the reference side of
     :func:`cross_corpus_neardup_pairs` — ``(ref_docs, ref_banded)``
     shingle sets and banded signatures, ``localCheckpoint``-ed. This is
@@ -296,17 +252,13 @@ def prepare_neardup_ref(
     the screen join, would dominate). Pass the result as
     ``ref_prepared=``; the banding params at prepare time are the ones
     that apply (they are baked into the signatures)."""
-    ref_docs, ref_banded = minhash_banded(
-        ref, id_col, text_col, k, num_hashes, bands
-    )
+    ref_docs, ref_banded = minhash_banded(ref)
     return ref_docs.localCheckpoint(), ref_banded.localCheckpoint()
 
 
 def cross_corpus_neardup_pairs(
     new: DataFrame,
     ref: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     num_hashes: int = 16,
     bands: int = 4,
@@ -324,7 +276,7 @@ def cross_corpus_neardup_pairs(
 
     Scale: the banded relations are |corpus|·bands rows keyed by band
     hash (high-cardinality); the join shuffles only band rows, and at
-    production presets (:data:`MINHASH_PRESET_PRODUCTION`) the sharper
+    the production geometry (128 hashes in 16 bands) the sharper
     s-curve keeps false candidates rare. In continuous ingest pass
     ``ref_prepared=`` (:func:`prepare_neardup_ref`) so the lake's
     signatures are computed ONCE and every batch's screen reuses the
@@ -340,13 +292,13 @@ def cross_corpus_neardup_pairs(
             "ref / ref_prepared"
         )
     new_docs, new_banded = minhash_banded(
-        new, id_col, text_col, k, num_hashes, bands
+        new, k=k, num_hashes=num_hashes, bands=bands
     )
     if ref_prepared is not None:
         ref_docs, ref_banded = ref_prepared
     else:
         ref_docs, ref_banded = minhash_banded(
-            ref, id_col, text_col, k, num_hashes, bands
+            ref, k=k, num_hashes=num_hashes, bands=bands
         )
     return _neardup_screen(new_docs, new_banded, ref_docs, ref_banded, threshold)
 
@@ -425,12 +377,7 @@ def _long_id(c: Column, name: str) -> Column:
     ))
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 50,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Collapse a near-duplicate *pair* graph into clusters: distributed
     connected components via iterated hash-min label propagation.
 
@@ -451,7 +398,7 @@ def dedup_clusters(
     partial-agg groupBy — O(|E|) work, converging in O(graph diameter)
     rounds. Near-dup graphs are unions of small dense clusters
     (boilerplate families), so diameter is tiny in practice; a chain
-    worst case is covered by ``max_iters``. Each round's labels are
+    worst case is covered by the 50-round cap. Each round's labels are
     ``localCheckpoint``-ed: iterative self-referential plans otherwise
     nest exponentially (persist caches *data* but Catalyst still
     analyzes the full logical tree — a 12-round chain OOMs the driver
@@ -467,8 +414,8 @@ def dedup_clusters(
     through a 64-bit hash (``F.xxhash64``) before calling if needed.
     """
     edges = pairs.select(
-        _long_id(F.col(id_a), id_a).alias("src"),
-        _long_id(F.col(id_b), id_b).alias("dst"),
+        _long_id(F.col("id_a"), "id_a").alias("src"),
+        _long_id(F.col("id_b"), "id_b").alias("dst"),
     )
     # localCheckpoint: materialize the (possibly expensive, e.g. LSH)
     # upstream once AND cut its lineage out of every round's plan
@@ -487,7 +434,7 @@ def dedup_clusters(
     )
     cur_sum = labels.agg(F.sum("label")).first()[0]
 
-    for _ in range(max_iters):
+    for _ in range(50):
         prop = sym.join(labels, sym["src"] == labels["node"]).select(
             F.col("dst").alias("node"), "label"
         )
@@ -503,8 +450,8 @@ def dedup_clusters(
         labels, cur_sum = new_labels, new_sum
     else:
         raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds "
-            "(pathological graph diameter — raise max_iters)"
+            "dedup_clusters did not converge in 50 rounds "
+            "(pathological graph diameter)"
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
@@ -584,13 +531,7 @@ def simhash_column(text_col: Column | str, bits: int = 16) -> Column:
 # Winnowing fingerprints (MOSS)
 # ---------------------------------------------------------------------------
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 4,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = 4, w: int = 4) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
     2003 — the MOSS local document-fingerprinting algorithm): hash
     every token ``k``-gram, slide a window of ``w`` consecutive hashes,
@@ -613,7 +554,7 @@ def winnow_fingerprints(
         raise ValueError(f"k and w must be >= 1, got k={k} w={w}")
     from scraping_etl_spark.operators.corpus_prep import word_grams
 
-    grams = word_grams(F.lower(F.col(text_col)), k)
+    grams = word_grams(F.lower(F.col("text")), k)
 
     def _fps(hs: Column) -> Column:
         n = F.size(hs)
@@ -631,14 +572,12 @@ def winnow_fingerprints(
         grams, lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
     )
     return df.select(
-        F.col(id_col), F.explode(_bind(hashes, _fps)).alias("fingerprint")
+        F.col("doc_id"), F.explode(_bind(hashes, _fps)).alias("fingerprint")
     )
 
 
 def winnow_candidate_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 4,
     w: int = 4,
     min_shared: int = 2,
@@ -655,8 +594,8 @@ def winnow_candidate_pairs(
     skew guard of the pair join (:func:`_shared_key_pairs`)."""
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    fps = winnow_fingerprints(df, id_col, text_col, k, w)
-    return _shared_key_pairs(fps, id_col, "fingerprint", max_docs_per_fp).filter(
+    fps = winnow_fingerprints(df, k, w)
+    return _shared_key_pairs(fps, "doc_id", "fingerprint", max_docs_per_fp).filter(
         F.col("n_shared") >= min_shared
     )
 
@@ -696,8 +635,6 @@ def _shared_key_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     tau: float = 0.5,
     max_docs_per_gram: int = 64,
@@ -731,8 +668,8 @@ def containment_pairs(
 
     grams = (
         df.select(
-            F.col(id_col).alias("_id"),
-            F.explode(word_grams(F.lower(F.col(text_col)), k)).alias("gram"),
+            F.col("doc_id").alias("_id"),
+            F.explode(word_grams(F.lower(F.col("text")), k)).alias("gram"),
         )
         .distinct()
         # materialize the ONE corpus-scale explode+distinct: it feeds
@@ -774,13 +711,7 @@ def _containment(rel: DataFrame, key: str, max_docs: int, tau: float) -> DataFra
 # Exact all-pairs similarity join with prefix filtering (AllPairs/PPJoin)
 # ---------------------------------------------------------------------------
 
-def allpairs_jaccard(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-) -> DataFrame:
+def allpairs_jaccard(df: DataFrame, threshold: float, k: int = 3) -> DataFrame:
     """EXACT token-set Jaccard pairs at or above ``threshold`` via
     prefix filtering (AllPairs, Bayardo et al., WWW 2007; the probing
     prefix of PPJoin, Xiao et al., WWW 2008) — the exact complement to
@@ -818,9 +749,9 @@ def allpairs_jaccard(
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sets = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         F.array_sort(
-            F.array_distinct(word_shingles(F.col(text_col), k))
+            F.array_distinct(word_shingles(F.col("text"), k))
         ).alias("_set"),
     )
     return allpairs_jaccard_sets(sets, threshold)
@@ -1006,12 +937,7 @@ def allpairs_jaccard_sets(sets: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def ngram_novelty(
-    df: DataFrame,
-    k: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_novelty(df: DataFrame, k: int = 5) -> DataFrame:
     """Per-document k-gram NOVELTY in document-id order: the fraction
     of a document's distinct k-shingles it is the FIRST document (by
     id) to contain. The dataset-redundancy growth curve — duplicated
@@ -1033,22 +959,22 @@ def ngram_novelty(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     pairs = df.select(
-        F.col(id_col), F.explode(word_shingles(F.lower(F.col(text_col)), k)).alias("_g")
+        F.col("doc_id"), F.explode(word_shingles(F.lower(F.col("text")), k)).alias("_g")
     )
-    first = pairs.groupBy("_g").agg(F.min(id_col).alias("_first"))
+    first = pairs.groupBy("_g").agg(F.min("doc_id").alias("_first"))
     flagged = pairs.join(first, "_g").select(
-        F.col(id_col),
-        (F.col(id_col) == F.col("_first")).cast("long").alias("_novel"),
+        F.col("doc_id"),
+        (F.col("doc_id") == F.col("_first")).cast("long").alias("_novel"),
     )
-    agg = flagged.groupBy(id_col).agg(
+    agg = flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.round(F.sum("_novel") / F.count(F.lit(1)), 6).alias("novelty_frac"),
     )
     return (
-        df.select(id_col)
-        .join(agg, id_col, "left")
+        df.select("doc_id")
+        .join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_grams", F.lit(0)).cast("long").alias("n_grams"),
             F.coalesce("novelty_frac", F.lit(0.0)).alias("novelty_frac"),
         )
@@ -1147,7 +1073,6 @@ def edit_distance_pairs(
     id_col: str,
     string_col: str,
     q: int = 3,
-    check_min_len: bool = True,
 ) -> DataFrame:
     """EXACT bounded edit-distance self-join: all id pairs whose
     Levenshtein distance is at most ``k`` — the approximate-string-join
@@ -1180,9 +1105,9 @@ def edit_distance_pairs(
 
     The prefix theorem needs t >= 1, i.e. every string at least
     ``q*(k+1)`` chars; shorter strings can sit within ``k`` edits while
-    sharing ZERO q-grams. ``check_min_len`` probes that precondition
-    with one cheap action and raises (pick a smaller ``q`` — at q=1
-    the floor is k+1 chars) instead of silently dropping pairs.
+    sharing ZERO q-grams. One cheap action probes that precondition
+    and raises (pick a smaller ``q`` — at q=1 the floor is k+1 chars)
+    instead of silently dropping pairs.
 
     Returns ``(id_a, id_b, dist)`` with ``id_a < id_b``. 100 TB: the
     shuffles are the gram-df agg, the per-string prefix rebuild, and
@@ -1199,16 +1124,15 @@ def edit_distance_pairs(
         F.col(string_col).alias("_s"),
         F.length(string_col).cast("int").alias("_len"),
     )
-    if check_min_len:
-        floor = q * (k + 1)
-        short = s.filter(F.col("_len") < floor).limit(1).count()
-        if short:
-            raise ValueError(
-                f"edit_distance_pairs: strings shorter than q*(k+1)="
-                f"{floor} chars break the q-gram prefix bound (a pair "
-                "can be within k edits sharing no q-gram) — filter "
-                "them or lower q."
-            )
+    floor = q * (k + 1)
+    short = s.filter(F.col("_len") < floor).limit(1).count()
+    if short:
+        raise ValueError(
+            f"edit_distance_pairs: strings shorter than q*(k+1)="
+            f"{floor} chars break the q-gram prefix bound (a pair "
+            "can be within k edits sharing no q-gram) — filter "
+            "them or lower q."
+        )
 
     occ = ed_gram_occurrences(s, q)
     prefix = ed_gram_prefix(occ, k, q)
@@ -1246,7 +1170,6 @@ def edit_screen_pairs(
     id_col: str,
     string_col: str,
     q: int = 3,
-    check_min_len: bool = True,
 ) -> DataFrame:
     """CROSS-side bounded edit-distance screen — "which incoming
     records sit within ``k`` edits of one the corpus already holds?"
@@ -1284,19 +1207,18 @@ def edit_screen_pairs(
         )
 
     new_s, lake_s = _strings(new_df), _strings(lake_df)
-    if check_min_len:
-        floor = q * (k + 1)
-        short = (
-            new_s.select("_len").unionByName(lake_s.select("_len"))
-            .filter(F.col("_len") < floor).limit(1).count()
+    floor = q * (k + 1)
+    short = (
+        new_s.select("_len").unionByName(lake_s.select("_len"))
+        .filter(F.col("_len") < floor).limit(1).count()
+    )
+    if short:
+        raise ValueError(
+            f"edit_screen_pairs: strings shorter than q*(k+1)="
+            f"{floor} chars break the q-gram prefix bound — filter "
+            "them or lower q (the streaming twin drops them on "
+            "both sides for the same reason)."
         )
-        if short:
-            raise ValueError(
-                f"edit_screen_pairs: strings shorter than q*(k+1)="
-                f"{floor} chars break the q-gram prefix bound — filter "
-                "them or lower q (the streaming twin drops them on "
-                "both sides for the same reason)."
-            )
     return _edit_screen(
         new_s, ed_gram_prefix(ed_gram_occurrences(lake_s, q), k, q), lake_s, k, q
     )

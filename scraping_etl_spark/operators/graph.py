@@ -47,12 +47,7 @@ PR_DAMP_NUM = 17
 PR_DAMP_DEN = 20
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iter: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, n_iter: int = 5) -> DataFrame:
     """``n_iter`` rounds of damped power iteration over ``edges``
     (duplicate edges count as parallel links — a host linking twice
     sends twice the mass; pre-``distinct`` the input for simple-graph
@@ -72,7 +67,7 @@ def pagerank(
     # n_iter times (r16 optimization round; value-identical — the same
     # relations, computed once).
     e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
+        F.col("src").alias("_src"), F.col("dst").alias("_dst")
     ).localCheckpoint()
     nodes = (
         e.select(F.col("_src").alias("node"))
@@ -146,12 +141,7 @@ def pagerank(
 HITS_SCALE = 1_000_000_000
 
 
-def hits(
-    edges: DataFrame,
-    n_iter: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits(edges: DataFrame, n_iter: int = 4) -> DataFrame:
     """Hubs-and-authorities (Kleinberg 1999, HITS) over ``edges`` —
     the crawl-frontier complement of :func:`pagerank`: PageRank finds
     globally endorsed hosts, HITS separates DIRECTORY hosts (hubs:
@@ -181,7 +171,7 @@ def hits(
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     e = edges.select(
-        F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
+        F.col("src").alias("_src"), F.col("dst").alias("_dst")
     ).localCheckpoint()
     nodes = (
         e.select(F.col("_src").alias("node"))

@@ -94,25 +94,21 @@ def html_to_text_sql(expr: str) -> str:
     return f"trim({c})"
 
 
-def with_extracted_text(
-    df: DataFrame,
-    html_col: str = "html",
-    out_col: str = "text",
-) -> DataFrame:
+def with_extracted_text(df: DataFrame) -> DataFrame:
     """``df`` with the extracted text appended — plus ``n_text_chars``
     and the extraction RATIO (text chars / html chars, the standard
     quick signal for link-farm / boilerplate-only pages: real articles
     extract a sizable fraction, navigation shells extract almost
     nothing). Map-side at any scale."""
-    txt = html_to_text(html_col)
+    txt = html_to_text("html")
     return (
-        df.withColumn(out_col, txt)
-        .withColumn("n_text_chars", F.length(out_col).cast("long"))
+        df.withColumn("text", txt)
+        .withColumn("n_text_chars", F.length("text").cast("long"))
         .withColumn(
             "extract_ratio",
             F.round(
-                F.length(out_col)
-                / F.greatest(F.length(html_col), F.lit(1)),
+                F.length("text")
+                / F.greatest(F.length("html"), F.lit(1)),
                 6,
             ),
         )

@@ -55,13 +55,7 @@ def zvalue(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return z
 
 
-def z_order_layout(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    n_files: int,
-    bits: int = Z_BITS,
-) -> DataFrame:
+def z_order_layout(df: DataFrame, x_col: str, y_col: str, n_files: int) -> DataFrame:
     """Re-layout ``df`` for two-column min/max pruning: compute the
     Z-value of ``(x, y)``, range-repartition on it into ``n_files``
     output partitions and sort within each — every written file then
@@ -76,7 +70,7 @@ def z_order_layout(
     ``tests/test_layout.py::test_zorder_tightens_partition_bounding_boxes``:
     on a uniform grid, mean per-partition bounding-box area under
     Z-layout is a small fraction of single-column-order layout's."""
-    zc = zvalue(F.col(x_col), F.col(y_col), bits)
+    zc = zvalue(F.col(x_col), F.col(y_col))
     return (
         df.withColumn("_z", zc)
         .repartitionByRange(n_files, "_z")

@@ -47,23 +47,18 @@ def split_lines(text: Column | str, sep: str = "\n") -> Column:
     return F.filter(trimmed, lambda x: x != "")
 
 
-def dedup_lines(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-) -> DataFrame:
+def dedup_lines(df: DataFrame) -> DataFrame:
     """Cross-document exact line dedup, first-occurrence-wins.
 
     Every occurrence of a line other than the one with the minimum
     ``(doc_id, position)`` is removed — including repeats INSIDE one
     document. Documents reassemble from their surviving lines in
     original order (a doc whose every line is boilerplate comes back
-    with empty text, the honest outcome). Returns ``id_col``,
-    rewritten ``text_col``, ``n_lines`` (pre-dedup), ``n_kept``.
+    with empty text, the honest outcome). Returns ``doc_id``,
+    rewritten ``text``, ``n_lines`` (pre-dedup), ``n_kept``.
     """
     return _reassemble(
-        df, _first_occurrences(df, id_col, text_col, sep), id_col, text_col, sep
+        df, _first_occurrences(df, "doc_id", "text", "\n"), "doc_id", "text", "\n"
     )
 
 
@@ -129,9 +124,6 @@ TERMINAL_PUNCT = (".", "!", "?", '"', "'")
 
 def filter_quality_lines(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
     min_words: int = 3,
     require_terminal_punct: bool = True,
 ) -> DataFrame:
@@ -139,7 +131,7 @@ def filter_quality_lines(
     least ``min_words`` whitespace words, does not contain a curly
     brace (C4's code filter) and — when ``require_terminal_punct`` —
     ends in one of :data:`TERMINAL_PUNCT`. Returns the frame with
-    ``text_col`` rewritten plus ``n_lines``/``n_kept`` counters; the
+    ``text`` rewritten plus ``n_lines``/``n_kept`` counters; the
     whole operator is one projection (per-row array expressions)."""
     if min_words < 1:
         raise ValueError(f"min_words must be >= 1, got {min_words}")
@@ -158,16 +150,16 @@ def filter_quality_lines(
     def _apply(ls: Column) -> Column:
         kept = F.filter(ls, _keep)
         return F.struct(
-            F.array_join(kept, sep).alias("text"),
+            F.array_join(kept, "\n").alias("text"),
             F.size(ls).cast("long").alias("n_lines"),
             F.size(kept).cast("long").alias("n_kept"),
         )
 
-    out = _bind(split_lines(text_col, sep), _apply)
-    other = [c for c in df.columns if c != text_col]
+    out = _bind(split_lines("text"), _apply)
+    other = [c for c in df.columns if c != "text"]
     return df.select(*other, out.alias("_q")).select(
         *other,
-        F.col("_q.text").alias(text_col),
+        F.col("_q.text").alias("text"),
         F.col("_q.n_lines").alias("n_lines"),
         F.col("_q.n_kept").alias("n_kept"),
     )
@@ -175,12 +167,8 @@ def filter_quality_lines(
 
 def remove_common_lines(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
     min_df_frac: float = 0.5,
     min_group_docs: int = 3,
-    sep: str = "\n",
 ) -> DataFrame:
     """Host-level boilerplate removal (the RefinedWeb/jusText signal):
     a line appearing in at least ``min_df_frac`` of a group's documents
@@ -202,15 +190,15 @@ def remove_common_lines(
     if min_group_docs < 1:
         raise ValueError(f"min_group_docs must be >= 1, got {min_group_docs}")
     lines = df.select(
-        F.col(id_col),
-        F.col(group_col).alias("_g"),
-        F.posexplode(split_lines(text_col, sep)).alias("pos", "line"),
+        F.col("doc_id"),
+        F.col("source").alias("_g"),
+        F.posexplode(split_lines("text")).alias("pos", "line"),
     ).withColumn("_h", F.md5("line"))
-    group_sizes = df.groupBy(F.col(group_col).alias("_g")).agg(
+    group_sizes = df.groupBy(F.col("source").alias("_g")).agg(
         F.count(F.lit(1)).alias("_gn")
     )
     line_df = (
-        lines.select("_g", "_h", id_col)
+        lines.select("_g", "_h", "doc_id")
         .distinct()
         .groupBy("_g", "_h")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -224,4 +212,4 @@ def remove_common_lines(
         .select("_g", "_h")
     )
     kept = lines.join(boiler, ["_g", "_h"], "left_anti")
-    return _reassemble(df, kept, id_col, text_col, sep)
+    return _reassemble(df, kept, "doc_id", "text", "\n")

@@ -43,11 +43,7 @@ from pyspark.sql import functions as F
 from scraping_etl_spark.operators.fixpoint import exact_sums
 
 
-def fs_weights(
-    labeled: DataFrame,
-    agree_cols: list[str],
-    label_col: str = "is_match",
-) -> DataFrame:
+def fs_weights(labeled: DataFrame, agree_cols: list[str]) -> DataFrame:
     """Per-field m/u probabilities from a labeled pair sample, as ONE
     row with columns ``m_<field>`` / ``u_<field>`` (+ ``n_match`` /
     ``n_nonmatch`` audit counts). Add-half smoothing keeps every
@@ -55,7 +51,7 @@ def fs_weights(
     field that always (dis)agrees in the sample."""
     if not agree_cols:
         raise ValueError("agree_cols must name at least one field")
-    is_m = F.col(label_col).cast("boolean")
+    is_m = F.col("is_match").cast("boolean")
     aggs = [
         F.sum(F.when(is_m, 1).otherwise(0)).cast("double").alias("_nm"),
         F.sum(F.when(~is_m, 1).otherwise(0)).cast("double").alias("_nu"),
@@ -209,18 +205,13 @@ def fs_score_expr(agree_cols: list[str]) -> Column:
     return score
 
 
-def fs_score(
-    pairs: DataFrame,
-    weights: DataFrame,
-    agree_cols: list[str],
-    score_col: str = "fs_score",
-) -> DataFrame:
+def fs_score(pairs: DataFrame, weights: DataFrame, agree_cols: list[str]) -> DataFrame:
     """Score candidate pairs against trained :func:`fs_weights`: the
     one-row weights relation broadcasts onto the pair relation and the
-    log-likelihood-ratio sum lands as ``score_col`` (rounded to 6, the
+    log-likelihood-ratio sum lands as ``fs_score`` (rounded to 6, the
     oracle-hash convention). All input columns pass through."""
     joined = pairs.crossJoin(F.broadcast(weights))
     return joined.select(
         *pairs.columns,
-        F.round(fs_score_expr(agree_cols), 6).alias(score_col),
+        F.round(fs_score_expr(agree_cols), 6).alias("fs_score"),
     )

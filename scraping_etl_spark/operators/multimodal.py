@@ -60,9 +60,7 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-def attach_payload(
-    df: DataFrame, text_col: str = "text", media_type: str = "raw"
-) -> DataFrame:
+def attach_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic binary payload + metadata from a text column —
     the test stand-in for reading real media bytes (JVM-side encode,
     no UDF)."""
@@ -70,7 +68,7 @@ def attach_payload(
     return df.withColumn("payload", payload).withColumn(
         "media_meta",
         F.struct(
-            F.lit(media_type).alias("media_type"),
+            F.lit("raw").alias("media_type"),
             F.octet_length(payload).cast("long").alias("n_bytes"),
             F.lit("utf-8").alias("encoding"),
         ),
@@ -89,7 +87,7 @@ def decode_media(payload: bytes, media_type: str) -> bytes:
     )
 
 
-def media_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def media_features(df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the binary payload column.
 
     Deterministic features (byte length, md5 hex) stand in for real
@@ -104,23 +102,19 @@ def media_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
             ]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "n_bytes": [len(p) for p in decoded],
                     "payload_md5": [hashlib.md5(p).hexdigest() for p in decoded],
                 }
             )
 
     cols = df.select(
-        F.col(id_col), F.col("payload"), F.col("media_meta.media_type").alias("media_type")
+        F.col("doc_id"), F.col("payload"), F.col("media_meta.media_type").alias("media_type")
     )
     return cols.mapInPandas(extract, schema=FEATURE_SCHEMA)
 
 
-def payload_simhash(
-    payload_col: Column | str = "payload",
-    chunk_bytes: int = 32,
-    bits: int = 16,
-) -> Column:
+def payload_simhash(chunk_bytes: int = 32, bits: int = 16) -> Column:
     """Byte-level SimHash over the binary payload — near-dup signature
     for media assets WITHOUT decoding (the asset tier of the text
     SimHash: an image served with touched-up EXIF bytes or a re-muxed
@@ -138,12 +132,12 @@ def payload_simhash(
     from scraping_etl_spark.operators.dedup import _bind, simhash_of_hashes
 
     return _bind(
-        _chunk_hashes(payload_col, chunk_bytes),
+        _chunk_hashes(chunk_bytes),
         lambda hashed: simhash_of_hashes(hashed, bits),
     )
 
 
-def _chunk_hashes(payload_col: Column | str, chunk_bytes: int) -> Column:
+def _chunk_hashes(chunk_bytes: int) -> Column:
     """60-bit md5-prefix hashes of the payload's fixed-stride
     ``chunk_bytes``-byte chunks (``2·chunk_bytes`` chars of its hex
     encoding, tail kept), in payload order; empty for an empty
@@ -151,7 +145,7 @@ def _chunk_hashes(payload_col: Column | str, chunk_bytes: int) -> Column:
     :func:`payload_chunk_hashes`."""
     from scraping_etl_spark.operators.dedup import _bind
 
-    col = F.col(payload_col) if isinstance(payload_col, str) else payload_col
+    col = F.col("payload")
     step = 2 * chunk_bytes
 
     def _chunks(hx: Column) -> Column:
@@ -171,8 +165,6 @@ def _chunk_hashes(payload_col: Column | str, chunk_bytes: int) -> Column:
 
 def payload_neardup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
     chunk_bytes: int = 8,
     bits: int = 60,
     bands: int = 4,
@@ -212,8 +204,8 @@ def payload_neardup_pairs(
     width = bits // bands
     mask = (1 << width) - 1
     sigs = df.select(
-        F.col(id_col).alias("_id"),
-        payload_simhash(payload_col, chunk_bytes, bits).alias("_sig"),
+        F.col("doc_id").alias("_id"),
+        payload_simhash(chunk_bytes, bits).alias("_sig"),
     ).localCheckpoint()  # consumed by the band explode AND verify ×2
     banded = sigs.select(
         "_id",
@@ -257,10 +249,7 @@ def payload_neardup_pairs(
     )
 
 
-def payload_chunk_hashes(
-    payload_col: Column | str = "payload",
-    chunk_bytes: int = 8,
-) -> Column:
+def payload_chunk_hashes(chunk_bytes: int = 8) -> Column:
     """DISTINCT 60-bit md5 hashes of the payload's fixed-stride byte
     chunks — the set representation :func:`payload_containment_pairs`
     compares (the hex-encoding trick of :func:`payload_simhash`, but
@@ -268,13 +257,11 @@ def payload_chunk_hashes(
     LONGs, not strings, so every downstream exchange is ~2.5x smaller
     (the ``doc_allpairs`` lesson); collisions (~n²/2^61) would show as
     an oracle hash mismatch, detected not silent."""
-    return F.array_distinct(_chunk_hashes(payload_col, chunk_bytes))
+    return F.array_distinct(_chunk_hashes(chunk_bytes))
 
 
 def payload_containment_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
     chunk_bytes: int = 8,
     tau: float = 0.6,
     max_docs_per_chunk: int = 64,
@@ -311,7 +298,7 @@ def payload_containment_pairs(
     from scraping_etl_spark.operators.dedup import _containment
 
     chunks = df.select(
-        F.col(id_col).alias("_id"),
-        F.explode(payload_chunk_hashes(payload_col, chunk_bytes)).alias("_c"),
+        F.col("doc_id").alias("_id"),
+        F.explode(payload_chunk_hashes(chunk_bytes)).alias("_c"),
     )
     return _containment(chunks, "_c", max_docs_per_chunk, tau)

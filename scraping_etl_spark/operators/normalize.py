@@ -40,19 +40,7 @@ def normalize_text(text: Column | str) -> Column:
     return F.trim(spaced)
 
 
-def with_normalized(
-    df: DataFrame, text_col: str = "text", out_col: str = "norm_text"
-) -> DataFrame:
-    """Attach the canonical form and its md5 (``<out_col>_md5``) —
-    the dedup key. Map-side only."""
-    return df.withColumn(out_col, normalize_text(text_col)).withColumn(
-        f"{out_col}_md5", F.md5(F.col(out_col))
-    )
-
-
-def normalized_dup_families(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def normalized_dup_families(df: DataFrame) -> DataFrame:
     """Per-document family view under the canonical form: each row
     gains ``norm_md5``, the family size ``n_family`` and
     ``is_canonical`` (the min-id survivor — the deterministic keeper
@@ -61,18 +49,18 @@ def normalized_dup_families(
     distinct-hash-scale — corpus-sized in the worst case, never
     forced broadcast)."""
     keyed = df.select(
-        F.col(id_col), F.md5(normalize_text(text_col)).alias("norm_md5")
+        F.col("doc_id"), F.md5(normalize_text("text")).alias("norm_md5")
     )
     fams = keyed.groupBy("norm_md5").agg(
         F.count(F.lit(1)).cast("long").alias("n_family"),
-        F.min(id_col).alias("_min_id"),
+        F.min("doc_id").alias("_min_id"),
     )
     return (
         keyed.join(fams, "norm_md5")
         .select(
-            id_col,
+            "doc_id",
             "norm_md5",
             "n_family",
-            (F.col(id_col) == F.col("_min_id")).alias("is_canonical"),
+            (F.col("doc_id") == F.col("_min_id")).alias("is_canonical"),
         )
     )

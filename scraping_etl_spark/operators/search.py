@@ -48,8 +48,6 @@ def bm25_topk(
     b: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
 ) -> DataFrame:
     """Top-``k`` documents per query by BM25.
 
@@ -95,7 +93,7 @@ def bm25_topk(
     )
 
     qterm_set = queries.select(
-        F.explode(F.transform(F.col(terms_col), F.lower)).alias("_t")
+        F.explode(F.transform(F.col("terms"), F.lower)).alias("_t")
     ).distinct()
     # the inverted-index lookup: reduce the posting table to the query
     # terms' posting lists FIRST (broadcast semi-filter — at lake scale
@@ -110,8 +108,8 @@ def bm25_topk(
     dfreq = matched.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
 
     qterms = queries.select(
-        F.col(query_id_col).alias("_qid"),
-        F.explode(F.transform(F.col(terms_col), F.lower)).alias("_t"),
+        F.col("query_id").alias("_qid"),
+        F.explode(F.transform(F.col("terms"), F.lower)).alias("_t"),
     ).distinct()
     q_idf = (
         dfreq.join(F.broadcast(qterms), "_t")
@@ -165,7 +163,7 @@ def bm25_topk(
         scores.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_qid").alias(query_id_col),
+            F.col("_qid").alias("query_id"),
             F.col("rank").cast("int").alias("rank"),
             F.col("_doc").alias(id_col),
             "score",
@@ -173,14 +171,7 @@ def bm25_topk(
     )
 
 
-def phrase_match(
-    docs: DataFrame,
-    phrases: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    phrase_id_col: str = "phrase_id",
-    terms_col: str = "terms",
-) -> DataFrame:
+def phrase_match(docs: DataFrame, phrases: DataFrame) -> DataFrame:
     """Exact phrase occurrence search — the positional-index operator
     every full-text engine pairs with BM25 (Lucene/Elasticsearch
     ``match_phrase``; the textbook positional-postings algorithm,
@@ -206,15 +197,15 @@ def phrase_match(
     matched-posting cardinality — postings that match no phrase term
     never leave the map side.
     """
-    toks = tokens(text_col, lowercase=True)
+    toks = tokens("text", lowercase=True)
     postings = docs.select(
-        F.col(id_col).alias("_doc"),
+        F.col("doc_id").alias("_doc"),
         F.posexplode(toks).alias("_pos", "_t"),
     )
     pterms = phrases.select(
-        F.col(phrase_id_col).alias("_pid"),
-        F.size(F.col(terms_col)).alias("_m"),
-        F.posexplode(F.transform(F.col(terms_col), F.lower)).alias("_i", "_pt"),
+        F.col("phrase_id").alias("_pid"),
+        F.size(F.col("terms")).alias("_m"),
+        F.posexplode(F.transform(F.col("terms"), F.lower)).alias("_i", "_pt"),
     )
     anchors = (
         postings.join(F.broadcast(pterms), postings["_t"] == pterms["_pt"])
@@ -232,8 +223,8 @@ def phrase_match(
             F.min("_a").alias("first_pos"),
         )
         .select(
-            F.col("_pid").alias(phrase_id_col),
-            F.col("_doc").alias(id_col),
+            F.col("_pid").alias("phrase_id"),
+            F.col("_doc").alias("doc_id"),
             F.col("n_matches").cast("long").alias("n_matches"),
             F.col("first_pos").cast("long").alias("first_pos"),
         )
@@ -248,12 +239,6 @@ def hybrid_prf_topk(
     k: int = 5,
     k1: float = 1.2,
     b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    terms_col: str = "terms",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Hybrid retrieval: BM25 candidates re-ranked by embedding cosine
     to a PSEUDO-RELEVANCE-FEEDBACK vector — the keyword query has no
@@ -277,16 +262,14 @@ def hybrid_prf_topk(
     from scraping_etl_spark.operators.similarity import cosine
 
     lex = bm25_topk(
-        docs, queries, k=k_lex, k1=k1, b=b,
-        id_col=id_col, text_col=text_col,
-        query_id_col=query_id_col, terms_col=terms_col,
+        docs, queries, k=k_lex, k1=k1, b=b
     ).localCheckpoint()
     e = embeddings.select(
-        F.col(vec_id_col).alias("_vid"), F.col(vec_col).alias("_v")
+        F.col("vec_id").alias("_vid"), F.col("embedding").alias("_v")
     )
     prf = (
         lex.filter(F.col("rank") == 1)
-        .select(F.col(query_id_col).alias("_pq"), F.col(id_col).alias("_pdoc"))
+        .select(F.col("query_id").alias("_pq"), F.col("doc_id").alias("_pdoc"))
         .join(e, F.col("_pdoc") == F.col("_vid"))
         .select("_pq", F.col("_v").alias("_pv"))
     )
@@ -294,7 +277,7 @@ def hybrid_prf_topk(
         e.join(
             F.broadcast(
                 lex.select(
-                    F.col(query_id_col).alias("_qid"), F.col(id_col).alias("_doc")
+                    F.col("query_id").alias("_qid"), F.col("doc_id").alias("_doc")
                 )
             ),
             F.col("_doc") == F.col("_vid"),
@@ -311,9 +294,9 @@ def hybrid_prf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_qid").alias(query_id_col),
+            F.col("_qid").alias("query_id"),
             F.col("rank").cast("int").alias("rank"),
-            F.col("_doc").alias(id_col),
+            F.col("_doc").alias("doc_id"),
             "cos_sim",
         )
     )

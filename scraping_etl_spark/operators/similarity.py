@@ -51,15 +51,7 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "query_id",
-    probe_vec_col: str = "query_vec",
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, probes: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k neighbors of each probe vector by cosine similarity.
 
     Output: (probe_id, rank, neighbor id, cosine). Ties broken by
@@ -71,14 +63,14 @@ def cosine_topk(
     # every corpus row, so the per-pair work must be the dot fold alone
     # (identical sqrt(dot) arithmetic — oracle-exact; see _sem_side)
     p = probes.select(
-        F.col(probe_id_col).alias("_pid"),
-        F.col(probe_vec_col).alias("_pvec"),
-        l2_norm(F.col(probe_vec_col)).alias("_pnrm"),
+        F.col("query_id").alias("_pid"),
+        F.col("query_vec").alias("_pvec"),
+        l2_norm(F.col("query_vec")).alias("_pnrm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("_cid"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cnrm"),
+        F.col("vec_id").alias("_cid"),
+        F.col("embedding").alias("_cvec"),
+        l2_norm(F.col("embedding")).alias("_cnrm"),
     )
     den = F.col("_pnrm") * F.col("_cnrm")
     cos = F.when(den > 0, dot(F.col("_pvec"), F.col("_cvec")) / den).otherwise(
@@ -93,7 +85,7 @@ def cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_pid").alias(probe_id_col),
+            F.col("_pid").alias("query_id"),
             F.col("rank").cast("int").alias("rank"),
             F.col("_cid").alias("neighbor_id"),
             F.round("_cos", 6).alias("cos_sim"),
@@ -107,10 +99,6 @@ def hard_negatives(
     k: int = 5,
     lo: float = 0.3,
     hi: float = 0.8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    anchor_id_col: str = "anchor_id",
-    anchor_vec_col: str = "anchor_vec",
 ) -> DataFrame:
     """Hard-negative mining for contrastive/embedding training data:
     for each anchor, the ``k`` MOST similar corpus vectors whose
@@ -141,14 +129,14 @@ def hard_negatives(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     a = anchors.select(
-        F.col(anchor_id_col).alias("_pid"),
-        F.col(anchor_vec_col).alias("_pvec"),
-        l2_norm(F.col(anchor_vec_col)).alias("_pnrm"),
+        F.col("anchor_id").alias("_pid"),
+        F.col("anchor_vec").alias("_pvec"),
+        l2_norm(F.col("anchor_vec")).alias("_pnrm"),
     )
     c = corpus.select(
-        F.col(id_col).alias("_cid"),
-        F.col(vec_col).alias("_cvec"),
-        l2_norm(F.col(vec_col)).alias("_cnrm"),
+        F.col("vec_id").alias("_cid"),
+        F.col("embedding").alias("_cvec"),
+        l2_norm(F.col("embedding")).alias("_cnrm"),
     )
     den = F.col("_pnrm") * F.col("_cnrm")
     cos = F.when(den > 0, dot(F.col("_pvec"), F.col("_cvec")) / den).otherwise(
@@ -164,7 +152,7 @@ def hard_negatives(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_pid").alias(anchor_id_col),
+            F.col("_pid").alias("anchor_id"),
             F.col("rank").cast("int").alias("rank"),
             F.col("_cid").alias("neighbor_id"),
             F.round("_cos", 6).alias("cos_sim"),
@@ -172,7 +160,7 @@ def hard_negatives(
     )
 
 
-def quantize_embedding(vec: Column, bits: int = 8) -> Column:
+def quantize_embedding(vec: Column) -> Column:
     """Per-vector symmetric integer quantization — the memory-bandwidth
     tier of the similarity stack: at 100 TB an ``array<float>`` corpus
     streamed for brute-force or in-bucket scoring is bandwidth-bound,
@@ -180,8 +168,8 @@ def quantize_embedding(vec: Column, bits: int = 8) -> Column:
     the per-vector scale (scale cancels in the normalization; only the
     rounding error remains, ~1/254 per element).
 
-    ``q_i = round(x_i · (qmax / max|x|))`` with ``qmax = 2^(bits-1)-1``
-    (127 for int8); the all-zero vector quantizes to all zeros. Pure
+    ``q_i = round(x_i · (qmax / max|x|))`` with ``qmax = 2^7-1 = 127``
+    (int8); the all-zero vector quantizes to all zeros. Pure
     deterministic arithmetic (half-away-from-zero rounding in both
     Spark and DuckDB), so the quantized search path is fully
     hash-gateable — no float-fuzz exemptions. The input array is bound
@@ -191,7 +179,7 @@ def quantize_embedding(vec: Column, bits: int = 8) -> Column:
     scan per element — O(dim²) per row)."""
     from scraping_etl_spark.operators.dedup import _bind
 
-    qmax = float(2 ** (bits - 1) - 1)
+    qmax = 127.0
 
     def _with_scale(v: Column) -> Column:
         mx = F.array_max(F.transform(v, lambda x: F.abs(x.cast("double"))))
@@ -237,10 +225,6 @@ def ann_hyperplane_topk(
     dim: int,
     k: int = 5,
     planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "query_id",
-    probe_vec_col: str = "query_vec",
     multiprobe: int = 1,
 ) -> DataFrame:
     """Approximate top-k: bucket both sides by :func:`hyperplane_bucket`,
@@ -259,16 +243,16 @@ def ann_hyperplane_topk(
     ``multiprobe=0`` is single-bucket. Recall < 1 remains by design;
     the exact path is :func:`cosine_topk`."""
     c = corpus.select(
-        F.col(id_col).alias("_cid"),
-        F.col(vec_col).alias("_cvec"),
-        hyperplane_bucket(F.col(vec_col), dim, planes).alias("_bucket"),
-        l2_norm(F.col(vec_col)).alias("_cnrm"),
+        F.col("vec_id").alias("_cid"),
+        F.col("embedding").alias("_cvec"),
+        hyperplane_bucket(F.col("embedding"), dim, planes).alias("_bucket"),
+        l2_norm(F.col("embedding")).alias("_cnrm"),
     )
     p = probes.select(
-        F.col(probe_id_col).alias("_pid"),
-        F.col(probe_vec_col).alias("_pvec"),
-        hyperplane_bucket(F.col(probe_vec_col), dim, planes).alias("_home"),
-        l2_norm(F.col(probe_vec_col)).alias("_pnrm"),
+        F.col("query_id").alias("_pid"),
+        F.col("query_vec").alias("_pvec"),
+        hyperplane_bucket(F.col("query_vec"), dim, planes).alias("_home"),
+        l2_norm(F.col("query_vec")).alias("_pnrm"),
     )
     if multiprobe >= 1:
         # home bucket + each single-bit flip (Hamming radius 1)
@@ -300,7 +284,7 @@ def ann_hyperplane_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_pid").alias(probe_id_col),
+            F.col("_pid").alias("query_id"),
             F.col("rank").cast("int").alias("rank"),
             F.col("_cid").alias("neighbor_id"),
             F.round("_cos", 6).alias("cos_sim"),
@@ -314,8 +298,6 @@ def embedding_dup_pairs(
     dim: int,
     threshold: float = 0.999,
     planes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space face of
     near-dedup (dedup.py holds the text faces): candidates are pairs
@@ -330,14 +312,14 @@ def embedding_dup_pairs(
     Recall caveat: a near-dup pair split by one hyperplane is missed;
     raise recall by lowering ``planes`` or unioning rotated signature
     sets (the text-side analogue is MinHash banding)."""
-    sig = hyperplane_bucket(F.col(vec_col), dim, planes)
+    sig = hyperplane_bucket(F.col("embedding"), dim, planes)
     a = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
-        sig.alias("_sig"), l2_norm(F.col(vec_col)).alias("_na"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"),
+        sig.alias("_sig"), l2_norm(F.col("embedding")).alias("_na"),
     )
     b = emb.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
-        sig.alias("_sig"), l2_norm(F.col(vec_col)).alias("_nb"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"),
+        sig.alias("_sig"), l2_norm(F.col("embedding")).alias("_nb"),
     )
     # norm folds hoisted out of the block pair loop (same arithmetic,
     # oracle-exact — see _sem_side)
@@ -399,12 +381,7 @@ def nearest_centroids(vec: Column, centroids: list[list[float]], n: int) -> Colu
     return F.slice(F.transform(F.array_sort(scored), lambda s: s["cid"]), 1, n)
 
 
-def cluster_assign(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cluster_assign(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Semantic clustering of a corpus: assign every vector to its
     nearest trained centroid (the IVF index's assignment stage as a
     first-class output — domain discovery, mixture balancing, and
@@ -413,11 +390,11 @@ def cluster_assign(
     shuffle at any scale. Returns ``(id, cluster, sq_dist)`` with the
     squared distance to the winning centroid (rounded 6 for the exact
     oracle compare)."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     scored = scored_centroids(v, centroids)
     best = F.element_at(F.array_sort(scored), 1)
     return corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         best["cid"].cast("int").alias("cluster"),
         F.round(best["d"], 6).alias("sq_dist"),
     )
@@ -454,8 +431,6 @@ def semantic_dedup_pairs(
     corpus: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -481,16 +456,11 @@ def semantic_dedup_pairs(
     Returns ``(id_a, id_b, cluster, cos_sim)`` with ``id_a < id_b``;
     cosine rounded to 6 before the threshold compare so engines agree
     at the boundary."""
-    side = _sem_side(corpus, centroids, id_col, vec_col)
-    return _sem_pairs_from_side(side, threshold, id_col)
+    side = _sem_side(corpus, centroids)
+    return _sem_pairs_from_side(side, threshold)
 
 
-def _sem_side(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _sem_side(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Materialized SemDeDup working set ``(id, vec, cluster, ‖v‖)``.
 
     Two deliberate eager choices: the per-vector norm is hoisted
@@ -503,26 +473,23 @@ def _sem_side(
     counts — is evaluated ONCE per vector instead of once per join
     side per consumer. The hoisted norm is the identical sqrt(dot)
     fold, so pair cosines stay bit-identical to the oracle."""
-    unit = normalize_embedding(F.col(vec_col))
+    unit = normalize_embedding(F.col("embedding"))
     cl = F.element_at(nearest_centroids(unit, centroids, 1), 1)
     return corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         cl.alias("cluster"),
-        l2_norm(F.col(vec_col)).alias("_nrm"),
+        l2_norm(F.col("embedding")).alias("_nrm"),
     ).localCheckpoint()
 
 
-def _sem_pairs_from_side(
-    side: DataFrame, threshold: float, id_col: str
-) -> DataFrame:
-    vec_col = side.columns[1]
+def _sem_pairs_from_side(side: DataFrame, threshold: float) -> DataFrame:
     a = side.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"),
         "cluster", F.col("_nrm").alias("_na"),
     )
     b = side.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"),
         "cluster", F.col("_nrm").alias("_nb"),
     )
     den = F.col("_na") * F.col("_nb")
@@ -542,8 +509,6 @@ def semantic_dedup_survivors(
     corpus: DataFrame,
     centroids: list[list[float]],
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy SemDeDup keep-set: within each cluster, drop any vector
     that has a near-duplicate (cosine ≥ ``threshold``) with a SMALLER
@@ -552,12 +517,12 @@ def semantic_dedup_survivors(
     exactly like the published method). One left-anti join of the
     corpus against the pair list's ``id_b`` side. Returns the
     surviving ``(id, cluster)`` rows."""
-    side = _sem_side(corpus, centroids, id_col, vec_col)
-    pairs = _sem_pairs_from_side(side, threshold, id_col)
-    dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    assigned = side.select(F.col(id_col), F.col("cluster").cast("int").alias("cluster"))
-    return assigned.join(dropped, id_col, "left_anti").select(
-        F.col(id_col), "cluster"
+    side = _sem_side(corpus, centroids)
+    pairs = _sem_pairs_from_side(side, threshold)
+    dropped = pairs.select(F.col("id_b").alias("vec_id")).distinct()
+    assigned = side.select(F.col("vec_id"), F.col("cluster").cast("int").alias("cluster"))
+    return assigned.join(dropped, "vec_id", "left_anti").select(
+        F.col("vec_id"), "cluster"
     )
 
 
@@ -567,10 +532,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 5,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_id_col: str = "query_id",
-    probe_vec_col: str = "query_vec",
 ) -> DataFrame:
     """IVF-style approximate top-k — the cluster-pruned alternative to
     the hyperplane LSH path: trained centroids partition the corpus
@@ -590,16 +551,16 @@ def ivf_topk(
         return nearest_centroids(vec, centroids, n)
 
     c = corpus.select(
-        F.col(id_col).alias("_cid"),
-        F.col(vec_col).alias("_cvec"),
-        F.element_at(_nearest(F.col(vec_col), 1), 1).alias("_cluster"),
-        l2_norm(F.col(vec_col)).alias("_cnrm"),
+        F.col("vec_id").alias("_cid"),
+        F.col("embedding").alias("_cvec"),
+        F.element_at(_nearest(F.col("embedding"), 1), 1).alias("_cluster"),
+        l2_norm(F.col("embedding")).alias("_cnrm"),
     )
     p = probes.select(
-        F.col(probe_id_col).alias("_pid"),
-        F.col(probe_vec_col).alias("_pvec"),
-        F.explode(_nearest(F.col(probe_vec_col), n_probe)).alias("_cluster"),
-        l2_norm(F.col(probe_vec_col)).alias("_pnrm"),
+        F.col("query_id").alias("_pid"),
+        F.col("query_vec").alias("_pvec"),
+        F.explode(_nearest(F.col("query_vec"), n_probe)).alias("_cluster"),
+        l2_norm(F.col("query_vec")).alias("_pnrm"),
     )
     # norm folds hoisted out of the candidate loop (same arithmetic,
     # oracle-exact — see _sem_side)
@@ -617,7 +578,7 @@ def ivf_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("_pid").alias(probe_id_col),
+            F.col("_pid").alias("query_id"),
             F.col("rank").cast("int").alias("rank"),
             F.col("_cid").alias("neighbor_id"),
             F.round("_cos", 6).alias("cos_sim"),
@@ -851,7 +812,7 @@ def pq_train(
     """
     if m < 1 or k < 2:
         raise ValueError(f"need m >= 1 and k >= 2, got m={m} k={k}")
-    return _lloyd_fx(corpus, k, m, vec_col, "vec_id", INDEX_ITERS)
+    return _lloyd_fx(corpus, k, m, vec_col, INDEX_ITERS)
 
 
 def _codebook_shape(
@@ -891,12 +852,7 @@ def _probe_shape(
     return m, dim
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Encode every vector to its ``m`` nearest-subcentroid codes —
     pure map-side expressions over codebook plan constants (the
     ``cluster_assign`` argmin per subspace; ties (d, cid)-lexicographic
@@ -929,14 +885,14 @@ def pq_encode(
         # bind the sliced subvector once (single-evaluation hazard)
         return F.element_at(
             F.transform(
-                F.array(F.slice(F.col(vec_col), j * sub + 1, sub)), _nearest
+                F.array(F.slice(F.col("embedding"), j * sub + 1, sub)), _nearest
             ),
             1,
         )
 
     codes = F.transform(F.sequence(F.lit(0), F.lit(m - 1)), _code)
     return corpus.select(
-        F.col(id_col), codes.cast("array<int>").alias("pq_code")
+        F.col("vec_id"), codes.cast("array<int>").alias("pq_code")
     )
 
 
@@ -968,7 +924,6 @@ def pq_topk(
     codebooks: list[list[list[float]]],
     probes: list[tuple[int, list[float]]],
     k: int = 3,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """ADC top-``k`` per probe over the ENCODED corpus: approximate
     distance = sum of ``m`` table lookups
@@ -994,7 +949,7 @@ def pq_topk(
     # probe (the emb_ivfpq_topk audit's finding — m x k x dim work
     # times n_probes). Materialize the m-int codes once; the branches
     # then read code bandwidth, which is PQ's whole point.
-    encoded = encoded.select(F.col(id_col), "pq_code").localCheckpoint()
+    encoded = encoded.select(F.col("vec_id"), "pq_code").localCheckpoint()
     parts = []
     for qid, qvec in probes:
         tables = pq_adc_tables(codebooks, list(qvec))
@@ -1007,7 +962,7 @@ def pq_topk(
             dist = term if dist is None else (dist + term)
         scored = encoded.select(
             F.lit(qid).cast("long").alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.round(dist, 6).alias("adc_dist"),
         )
         parts.append(scored.orderBy("adc_dist", "neighbor_id").limit(k))
@@ -1031,12 +986,7 @@ def centroid_matrix(centroids: list[list[float]]) -> Column:
     )
 
 
-def with_residual(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def with_residual(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Coarse-assign every vector and attach its residual
     ``v - centroid[cluster]`` — the quantity IVFADC product-quantizes
     (Jégou et al. 2011 §IV: residuals are far more compressible than
@@ -1046,16 +996,16 @@ def with_residual(
     argmin lands as a REAL column first, then the residual reads it.
     Pure map-side — centroids are plan constants. Returns
     ``(id, cluster, residual array<double>)``."""
-    v = F.col(vec_col)
+    v = F.col("embedding")
     scored = scored_centroids(v, centroids)
     assigned = corpus.select(
-        F.col(id_col),
+        F.col("vec_id"),
         v.alias("_v"),
         F.element_at(F.array_sort(scored), 1)["cid"].cast("int").alias("cluster"),
     )
     cent = F.element_at(centroid_matrix(centroids), F.col("cluster") + 1)
     return assigned.select(
-        id_col,
+        "vec_id",
         "cluster",
         F.zip_with(
             F.col("_v"), cent, lambda a, b: a.cast("double") - b
@@ -1068,15 +1018,14 @@ def ivfpq_train(
     n_clusters: int = 8,
     m: int = 8,
     k: int = 16,
-    vec_col: str = "embedding",
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Train the IVFADC index: coarse k-means centroids, then PQ
     codebooks over the RESIDUALS (train-once eager step — both
     artifacts are plan constants). Returns ``(centroids, codebooks)``."""
     centroids = kmeans_train_fx(
-        corpus, n_clusters=n_clusters, vec_col=vec_col, iters=INDEX_ITERS
+        corpus, n_clusters=n_clusters, iters=INDEX_ITERS
     )
-    res = with_residual(corpus, centroids, vec_col=vec_col)
+    res = with_residual(corpus, centroids)
     books = pq_train(res, m=m, k=k, vec_col="residual")
     return centroids, books
 
@@ -1085,8 +1034,6 @@ def ivfpq_encode(
     corpus: DataFrame,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode the corpus for IVFADC: coarse cluster + ``m`` residual
     subspace codes per vector — all map-side expression work over plan
@@ -1100,7 +1047,7 @@ def ivfpq_encode(
     Raises ``ValueError`` on the same ``codebooks`` shapes as
     :func:`pq_encode`: empty, unequal ``k``, or ragged centroids."""
     m, k, sub = _codebook_shape(codebooks, "ivfpq_encode")
-    res = with_residual(corpus, centroids, id_col, vec_col)
+    res = with_residual(corpus, centroids)
     # same m-subspace fusion as pq_encode (one rank-3 literal, O(1)
     # plan in m); the per-subspace argmin mirrors nearest_centroids'
     # (distance, cid)-lexicographic pick exactly
@@ -1123,7 +1070,7 @@ def ivfpq_encode(
 
     codes = F.transform(F.sequence(F.lit(0), F.lit(m - 1)), _code)
     return res.select(
-        F.col(id_col), "cluster",
+        F.col("vec_id"), "cluster",
         codes.cast("array<int>").alias("pq_code"),
     )
 
@@ -1135,7 +1082,6 @@ def ivfpq_topk(
     probes: list[tuple[int, list[float]]],
     k: int = 3,
     n_probe: int = 2,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVFADC top-``k``: per probe, rank the coarse centroids
     DRIVER-SIDE (centroids are plan constants — the ranking is
@@ -1203,7 +1149,7 @@ def ivfpq_topk(
         encoded.join(F.broadcast(probe_rel), "cluster")
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             "cluster",
             F.round(dist, 6).alias("adc_dist"),
         )
@@ -1227,8 +1173,6 @@ INDEX_ITERS = 5
 def kmeans_train_fx(
     corpus: DataFrame,
     n_clusters: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     iters: int = 4,
 ) -> list[list[float]]:
     """Lloyd's k-means with exactly-reproducible arithmetic — the one
@@ -1258,11 +1202,11 @@ def kmeans_train_fx(
     before overflow; raise the grid coarser or split the sum
     hierarchically beyond that.
     """
-    return _lloyd_fx(corpus, n_clusters, 1, vec_col, id_col, iters)[0]
+    return _lloyd_fx(corpus, n_clusters, 1, "embedding", iters)[0]
 
 
 def _lloyd_fx(
-    corpus: DataFrame, k: int, m: int, vec_col: str, id_col: str, iters: int
+    corpus: DataFrame, k: int, m: int, vec_col: str, iters: int
 ) -> list[list[list[float]]]:
     """The Lloyd's loop of :func:`kmeans_train_fx`, run independently
     over the ``m`` contiguous subspaces of ``vec_col`` in the same
@@ -1275,8 +1219,8 @@ def _lloyd_fx(
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
     seeds = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
+        corpus.select(F.col("vec_id"), F.col(vec_col))
+        .orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
         .limit(k)
         .collect()
     )
@@ -1352,13 +1296,7 @@ def jl_matrix(k: int, dim: int) -> list[list[float]]:
     return out
 
 
-def jl_project(
-    corpus: DataFrame,
-    out_dim: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def jl_project(corpus: DataFrame, out_dim: int = 16, dim: int = 64) -> DataFrame:
     """JL random projection ``R^dim -> R^out_dim``: ``y = R v /
     sqrt(out_dim)`` with the deterministic ±1 matrix of
     :func:`jl_matrix` — the cheap-ANN / sketching primitive (pairwise
@@ -1389,5 +1327,5 @@ def jl_project(
     from scraping_etl_spark.operators.dedup import _bind
 
     return corpus.select(
-        F.col(id_col), _bind(F.col(vec_col), _proj).alias("proj")
+        F.col("vec_id"), _bind(F.col("embedding"), _proj).alias("proj")
     )

@@ -72,7 +72,6 @@ def cms_build(
     text_col: str = "text",
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
-    lowercase: bool = True,
 ) -> DataFrame:
     """Build a count-min sketch over the token stream of ``text_col``.
 
@@ -86,7 +85,7 @@ def cms_build(
     if depth < 1:
         raise ValueError(f"depth must be >= 1, got {depth}")
     tok = df.select(
-        F.explode(tokens(text_col, lowercase=lowercase)).alias("token")
+        F.explode(tokens(text_col, lowercase=True)).alias("token")
     )
     cells = ", ".join(
         f"{seed}, pmod(xxhash64(token, {seed}), {width})"
@@ -103,10 +102,8 @@ def cms_build(
 def cms_estimate(
     candidates: DataFrame,
     sketch: DataFrame,
-    token_col: str = "token",
     width: int = CMS_WIDTH,
     depth: int = CMS_DEPTH,
-    verify_geometry: bool = True,
 ) -> DataFrame:
     """Point-estimate each candidate token's occurrence count.
 
@@ -115,12 +112,11 @@ def cms_estimate(
     (probes hash into cells the build never filled). Because every
     token contributes one row per seed, a non-empty sketch always
     contains seeds ``0..depth-1`` and only buckets ``< width``, so by
-    default the call runs a bounded probe (one tiny agg over the
+    every call runs a bounded probe (one tiny agg over the
     <= depth x width-row sketch) and raises ``ValueError`` on
     ``max(seed)+1 != depth`` or ``max(bucket) >= width``. An EMPTY
     sketch is unverifiable (and harmless — every estimate coalesces
-    to 0); pass ``verify_geometry=False`` to skip the probe when the
-    caller owns both sides of the geometry.
+    to 0).
 
     ``candidates`` keeps all its columns and gains ``cms_est``. The
     sketch is broadcast (bounded at depth x width rows by
@@ -136,26 +132,25 @@ def cms_estimate(
     candidates are by construction present (they come from the same
     corpus the sketch summarizes).
     """
-    if verify_geometry:
-        geo = sketch.agg(
-            F.max("seed").alias("_ms"), F.max("bucket").alias("_mb")
-        ).collect()[0]
-        if geo["_ms"] is not None and (
-            geo["_ms"] + 1 != depth or geo["_mb"] >= width
-        ):
-            raise ValueError(
-                "cms_estimate: sketch geometry mismatch — sketch has "
-                f"max seed {geo['_ms']} / max bucket {geo['_mb']} but the "
-                f"caller passed depth={depth}, width={width}; the "
-                "never-undercount guarantee would silently break"
-            )
+    geo = sketch.agg(
+        F.max("seed").alias("_ms"), F.max("bucket").alias("_mb")
+    ).collect()[0]
+    if geo["_ms"] is not None and (
+        geo["_ms"] + 1 != depth or geo["_mb"] >= width
+    ):
+        raise ValueError(
+            "cms_estimate: sketch geometry mismatch — sketch has "
+            f"max seed {geo['_ms']} / max bucket {geo['_mb']} but the "
+            f"caller passed depth={depth}, width={width}; the "
+            "never-undercount guarantee would silently break"
+        )
     probes = candidates.select(
-        F.col(token_col),
+        F.col("token"),
         F.expr(
             "stack({d}, {cells}) AS (seed, bucket)".format(
                 d=depth,
                 cells=", ".join(
-                    f"{s}, pmod(xxhash64({token_col}, {s}), {width})"
+                    f"{s}, pmod(xxhash64(token, {s}), {width})"
                     for s in range(depth)
                 ),
             )
@@ -163,21 +158,15 @@ def cms_estimate(
     )
     est = (
         probes.join(F.broadcast(sketch), ["seed", "bucket"])
-        .groupBy(token_col)
+        .groupBy("token")
         .agg(F.min("cnt").alias("cms_est"))
     )
-    return candidates.join(F.broadcast(est), token_col, "left").withColumn(
+    return candidates.join(F.broadcast(est), "token", "left").withColumn(
         "cms_est", F.coalesce(F.col("cms_est"), F.lit(0))
     )
 
 
-def heavy_hitter_candidates(
-    df: DataFrame,
-    m: int,
-    n_buckets: int = 64,
-    text_col: str = "text",
-    lowercase: bool = True,
-) -> DataFrame:
+def heavy_hitter_candidates(df: DataFrame, m: int, n_buckets: int = 64) -> DataFrame:
     """Candidate generation for the CMS point queries — per-BUCKET
     top-``m`` tokens by count, where the bucket is derived from the
     token itself (``pmod(xxhash64(token), n_buckets)``).
@@ -204,7 +193,7 @@ def heavy_hitter_candidates(
     from pyspark.sql.window import Window
 
     counts = (
-        df.select(F.explode(tokens(text_col, lowercase=lowercase)).alias("token"))
+        df.select(F.explode(tokens("text", lowercase=True)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occ"))
         .withColumn(

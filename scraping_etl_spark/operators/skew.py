@@ -32,7 +32,6 @@ def salted_join(
     on: str,
     salt: int = 8,
     how: str = "inner",
-    seed: int = 42,
 ) -> DataFrame:
     """Equi-join ``probe ⋈ build on (on)`` with the probe side salted
     over ``salt`` buckets and the build side replicated to match.
@@ -40,7 +39,7 @@ def salted_join(
     ``df.join(other, on)``."""
     if salt < 1:
         raise ValueError("salt must be >= 1")
-    p = probe.withColumn("_salt", (F.rand(seed) * salt).cast("int"))
+    p = probe.withColumn("_salt", (F.rand(42) * salt).cast("int"))
     replicas = F.explode(F.sequence(F.lit(0), F.lit(salt - 1))).alias("_salt")
     b = build.select("*", replicas)
     out = p.join(b, [on, "_salt"], how)

@@ -53,13 +53,13 @@ def tokens(text: Column | str, lowercase: bool = False) -> Column:
     return F.filter(F.split(c, r"\s+"), lambda x: x != "")
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_stats(df: DataFrame) -> DataFrame:
     """Token count, char count, distinct-token ratio, mean token length."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     n_tokens = F.size(toks)
     return (
         df.withColumn("n_tokens", n_tokens.cast("long"))
-        .withColumn("n_chars_actual", F.length(F.col(text_col)).cast("long"))
+        .withColumn("n_chars_actual", F.length(F.col("text")).cast("long"))
         .withColumn(
             "distinct_ratio",
             F.round(F.size(F.array_distinct(toks)) / F.greatest(n_tokens, F.lit(1)), 6),
@@ -86,10 +86,10 @@ def _stopword_member(stopwords: tuple[str, ...]):
     return lambda x: x.isin(*stopwords)
 
 
-def stopword_ratio(text_col: str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang`` (lowercased)."""
+def stopword_ratio(text_col: str) -> Column:
+    """Fraction of tokens that are English stopwords (lowercased)."""
     toks = tokens(text_col, lowercase=True)
-    hits = F.size(F.filter(toks, _stopword_member(STOPWORDS[lang])))
+    hits = F.size(F.filter(toks, _stopword_member(STOPWORDS["en"])))
     return F.round(hits / F.greatest(F.size(toks), F.lit(1)), 6)
 
 
@@ -196,13 +196,7 @@ def _gram_top(grams: Column, doc_m: int) -> Column:
     return F.slice(_gram_runs_sorted(grams), 1, doc_m)
 
 
-def char_ngram_profiles(
-    df: DataFrame,
-    n: int = 3,
-    top_m: int = 80,
-    lang_col: str = "lang",
-    text_col: str = "text",
-) -> DataFrame:
+def char_ngram_profiles(df: DataFrame, n: int = 3, top_m: int = 80) -> DataFrame:
     """Per-language character-n-gram RANK profiles (Cavnar & Trenkle
     1994, "N-gram-based text categorization"): the ``top_m`` most
     frequent char ``n``-grams of each language's text, ranked 1-based
@@ -221,7 +215,7 @@ def char_ngram_profiles(
     bounded by the char-n-gram space (≲ a few 100k types for n=3),
     model-scale, never corpus-scale."""
     normed = df.select(
-        F.col(lang_col).alias("lang"), _ct_norm(text_col).alias("_txt")
+        F.col("lang"), _ct_norm("text").alias("_txt")
     )
     counts = (
         normed.select(
@@ -248,9 +242,6 @@ def lang_id_ngram(
     n: int = 3,
     top_m: int = 80,
     doc_m: int = 40,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
     profiles: DataFrame | None = None,
     trained_m: int | None = None,
     carry_cols: "tuple[str, ...]" = (),
@@ -269,7 +260,7 @@ def lang_id_ngram(
     alphabetically first). All-integer arithmetic, so the gate hash is
     exact. Pass ``profiles`` to score against a separately trained
     model (the deployment shape); default trains on ``df`` itself via
-    its ``lang_col`` labels. Returns ``(id, pred_lang, dist long)``.
+    its ``lang`` labels. Returns ``(doc_id, pred_lang, dist long)``.
 
     ``carry_cols`` threads doc-grained columns (e.g. the TRUE label)
     through the checkpointed doc-profile side and out beside the
@@ -298,15 +289,14 @@ def lang_id_ngram(
     wide key is doc- or (doc, lang)-grained; the training rollup is
     char-n-gram-vocabulary-bounded)."""
     dist = _ct_dist_relation(
-        df, n, top_m, doc_m, id_col, lang_col, text_col, profiles,
-        trained_m, carry_cols,
+        df, n, top_m, doc_m, profiles, trained_m, carry_cols
     )
     cc = [f"_cc{i}" for i in range(len(carry_cols))]
     best = dist.groupBy("_id", *cc).agg(
         F.min(F.struct("dist", "lang")).alias("_b")
     )
     return best.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         *[F.col(c).alias(orig) for c, orig in zip(cc, carry_cols)],
         F.col("_b.lang").alias("pred_lang"),
         F.col("_b.dist").alias("dist"),
@@ -318,9 +308,6 @@ def _ct_dist_relation(
     n: int,
     top_m: int,
     doc_m: int,
-    id_col: str,
-    lang_col: str,
-    text_col: str,
     profiles: DataFrame | None,
     trained_m: int | None,
     carry_cols: "tuple[str, ...]" = (),
@@ -352,9 +339,9 @@ def _ct_dist_relation(
         # must still emit one prediction per doc, not zero rows).
         dp_rle = (
             df.select(
-                F.col(id_col).alias("_id"), *carries,
-                F.col(lang_col).alias("_lang"),
-                _ct_norm(text_col).alias("_txt"),
+                F.col("doc_id").alias("_id"), *carries,
+                F.col("lang").alias("_lang"),
+                _ct_norm("text").alias("_txt"),
             )
             .select(
                 "_id", *cc, "_lang",
@@ -409,8 +396,8 @@ def _ct_dist_relation(
         top_m = int(trained_m) if trained_m is not None else top_m
         dp_arr = (
             df.select(
-                F.col(id_col).alias("_id"), *carries,
-                _ct_norm(text_col).alias("_txt"),
+                F.col("doc_id").alias("_id"), *carries,
+                _ct_norm("text").alias("_txt"),
             )
             .select(
                 "_id", *cc,
@@ -468,11 +455,6 @@ def lang_id_ngram_margin(
     top_m: int = 80,
     doc_m: int = 40,
     min_margin: int = 1,
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
-    text_col: str = "text",
-    profiles: DataFrame | None = None,
-    trained_m: int | None = None,
     carry_cols: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """:func:`lang_id_ngram` with a CONFIDENCE MARGIN and abstention —
@@ -494,10 +476,7 @@ def lang_id_ngram_margin(
     ``slice(sort_array(collect_list(struct(dist, lang))), 1, 2)`` —
     the collected list is L rows (the language axis, model-scale), so
     the agg state is bounded by the label space, never the corpus."""
-    dist = _ct_dist_relation(
-        df, n, top_m, doc_m, id_col, lang_col, text_col, profiles,
-        trained_m, carry_cols,
-    )
+    dist = _ct_dist_relation(df, n, top_m, doc_m, None, None, carry_cols)
     cc = [f"_cc{i}" for i in range(len(carry_cols))]
     top2 = dist.groupBy("_id", *cc).agg(
         F.slice(
@@ -508,7 +487,7 @@ def lang_id_ngram_margin(
     second = F.element_at("_t", 2)  # NULL when only one language
     margin = (second["dist"] - first["dist"]).cast("long")
     return top2.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         *[F.col(c).alias(orig) for c, orig in zip(cc, carry_cols)],
         F.when(margin < min_margin, F.lit("und"))
         .otherwise(first["lang"])
@@ -518,16 +497,16 @@ def lang_id_ngram_margin(
     )
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
+def with_fingerprint(df: DataFrame) -> DataFrame:
     """Order-insensitive bag-of-words fingerprint: md5 over the sorted
     distinct token set. Identical-vocabulary documents collide by design
     (useful as a cheap near-dup blocking key); md5 keeps it mirrorable in
     any SQL engine."""
-    toks = F.array_sort(F.array_distinct(tokens(text_col)))
-    return df.withColumn(out_col, F.md5(F.concat_ws(" ", toks)))
+    toks = F.array_sort(F.array_distinct(tokens("text")))
+    return df.withColumn("fingerprint", F.md5(F.concat_ws(" ", toks)))
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_quality_score(df: DataFrame) -> DataFrame:
     """Composite quality heuristic in [0,1]:
 
     - length component: saturating token count (cap 200);
@@ -537,11 +516,11 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Weights fixed (0.4/0.4/0.2) and mirrored in the SQL oracle.
     """
-    toks = tokens(text_col)
+    toks = tokens("text")
     n = F.size(toks)
     len_c = F.least(n / F.lit(200.0), F.lit(1.0))
     div_c = F.size(F.array_distinct(toks)) / F.greatest(n, F.lit(1))
-    sw = F.size(F.filter(tokens(text_col, lowercase=True), _stopword_member(STOPWORDS["en"])))
+    sw = F.size(F.filter(tokens("text", lowercase=True), _stopword_member(STOPWORDS["en"])))
     sw_c = F.least((sw / F.greatest(n, F.lit(1))) / F.lit(0.08), F.lit(1.0))
     return df.withColumn(
         "quality_score", F.round(0.4 * len_c + 0.4 * div_c + 0.2 * sw_c, 6)
@@ -595,12 +574,7 @@ def rolling_fingerprint(text_col: Column | str) -> Column:
     )
 
 
-def vocab_topk(
-    df: DataFrame,
-    k: int = 1000,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def vocab_topk(df: DataFrame, k: int = 1000) -> DataFrame:
     """Tokenizer-style vocabulary build: the top-``k`` lowercased
     whitespace tokens by corpus frequency, with document frequency and
     a deterministic rank (ties broken by token text — the same total
@@ -612,12 +586,12 @@ def vocab_topk(
     SURVIVORS pass through the single-partition rank window — k is a
     vocab size (10^3..10^5), driver-safe by construction."""
     counts = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("token"),
-                  F.col(id_col))
+        df.select(F.explode(tokens("text", lowercase=True)).alias("token"),
+                  F.col("doc_id"))
         .groupBy("token")
         .agg(
             F.count(F.lit(1)).alias("n_occ"),
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct("doc_id").alias("n_docs"),
         )
     )
     top = counts.orderBy(F.desc("n_occ"), F.asc("token")).limit(k)
@@ -625,12 +599,7 @@ def vocab_topk(
     return top.withColumn("rank", F.row_number().over(w))
 
 
-def pmi_collocations(
-    df: DataFrame,
-    k: int = 50,
-    min_count: int = 5,
-    text_col: str = "text",
-) -> DataFrame:
+def pmi_collocations(df: DataFrame, k: int = 50, min_count: int = 5) -> DataFrame:
     """Top-``k`` bigram collocations by pointwise mutual information
     (Church & Hanks 1990, "Word association norms, mutual information,
     and lexicography") — the classic corpus-analysis signal for
@@ -659,7 +628,7 @@ def pmi_collocations(
         raise ValueError(f"k must be >= 1, got {k}")
     if min_count < 1:
         raise ValueError(f"min_count must be >= 1, got {min_count}")
-    toks = df.select(tokens(text_col, lowercase=True).alias("_t"))
+    toks = df.select(tokens("text", lowercase=True).alias("_t"))
     n = F.size("_t")
     pairs = toks.select(
         F.explode(
@@ -675,7 +644,7 @@ def pmi_collocations(
     ).select("p.w1", "p.w2")
     big = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab"))
     uni = (
-        df.select(F.explode(tokens(text_col, lowercase=True)).alias("w"))
+        df.select(F.explode(tokens("text", lowercase=True)).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c_w"))
     )
@@ -715,7 +684,7 @@ def pmi_collocations(
 ENTROPY_ALPHABET: tuple[str, ...] = tuple("abcdefghijklmnopqrstuvwxyz")
 
 
-def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_char_entropy(df: DataFrame) -> DataFrame:
     """Character-class Shannon entropy + letter fraction — the gibberish
     / repeated-character / encoding-junk signal quality pipelines pair
     with token-level stats (RedPajama-v2 ships similar entropy-family
@@ -734,7 +703,7 @@ def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     libm op is ``ln``, rounded to 6 — the :func:`~scraping_etl_spark.
     operators.corpus_prep.with_lm_score` convention.
     """
-    s = F.lower(F.col(text_col))
+    s = F.lower(F.col("text"))
     out = df.withColumn("_s", s).withColumn(
         "_L", F.length(F.col("_s")).cast("double")
     )
@@ -772,13 +741,7 @@ def with_char_entropy(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def keyword_extract(
-    df: DataFrame,
-    top_k: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_docs: int | None = None,
-) -> DataFrame:
+def keyword_extract(df: DataFrame, top_k: int = 3) -> DataFrame:
     """Per-document top-k TF-IDF keywords over the EXACT vocabulary —
     the classic keyword-extraction / document-tagging primitive (the
     hashed sibling is :func:`~scraping_etl_spark.operators.classifier.
@@ -797,53 +760,45 @@ def keyword_extract(
     applies, and the hot/cold capped-broadcast decomposition
     (``corpus_prep.with_lm_score``) is the documented escalation if a
     deployment needs it. The top-k window partitions by document —
-    per-partition work is doc vocabulary, never corpus-wide.
-
-    ``n_docs``: corpus size for idf; pass it when known to keep the
-    plan fully lazy (defaults to one count job, the
-    ``hashing_tfidf`` convention).
+    per-partition work is doc vocabulary, never corpus-wide. The
+    corpus size for idf costs one count job (the ``hashing_tfidf``
+    convention).
     """
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1, got {top_k}")
     tf = (
         df.select(
-            F.col(id_col), F.explode(tokens(text_col, lowercase=True)).alias("token")
+            F.col("doc_id"), F.explode(tokens("text", lowercase=True)).alias("token")
         )
-        .groupBy(id_col, "token")
+        .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    if n_docs is None:
-        n_docs = df.select(id_col).distinct().count()
+    n_docs = df.select("doc_id").distinct().count()
     idf = tf.groupBy("token").agg(
         (
             F.log(
                 F.lit(float(n_docs + 1))
-                / (F.count_distinct(F.col(id_col)).cast("double") + F.lit(1.0))
+                / (F.count_distinct(F.col("doc_id")).cast("double") + F.lit(1.0))
             )
             + F.lit(1.0)
         ).alias("_idf")
     )
     scored = tf.join(idf, "token").select(
-        F.col(id_col),
+        F.col("doc_id"),
         "token",
         F.round(F.col("tf") * F.col("_idf"), 6).alias("tfidf"),
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("token")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
-        .select(id_col, F.col("rank").cast("long").alias("rank"), "token", "tfidf")
+        .select("doc_id", F.col("rank").cast("long").alias("rank"), "token", "tfidf")
     )
 
 
-def zipf_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    strata_col: str = "lang",
-    top_r: int = 200,
-) -> DataFrame:
+def zipf_fit(df: DataFrame, top_r: int = 200) -> DataFrame:
     """Per-stratum Zipf's-law fit — the corpus-health law a datasheet
     reports (Zipf 1949; natural-language corpora fit ln(freq) ≈ a +
     b·ln(rank) with b ≈ −1 over the head of the vocabulary; spam,
@@ -870,13 +825,13 @@ def zipf_fit(
         raise ValueError(f"top_r must be >= 2, got {top_r}")
     wc = (
         df.select(
-            F.col(strata_col).alias("_g"),
-            F.explode(tokens(text_col, lowercase=True)).alias("_w"),
+            F.col("lang").alias("_g"),
+            F.explode(tokens("text", lowercase=True)).alias("_w"),
         )
         .groupBy("_g", "_w")
         .agg(F.count(F.lit(1)).cast("long").alias("_c"))
     )
-    return zipf_fit_from_counts(wc, strata_col=strata_col, top_r=top_r)
+    return zipf_fit_from_counts(wc, top_r=top_r)
 
 
 def zipf_fit_from_counts(
@@ -944,13 +899,7 @@ def _ls_fit(n: Column, sx: Column, sy: Column, sxx: Column, syy: Column,
     return slope, intercept, r2
 
 
-def heaps_fit(
-    df: DataFrame,
-    text_col: str = "text",
-    strata_col: str = "lang",
-    key_col: str = "doc_id",
-    n_buckets: int = 10,
-) -> DataFrame:
+def heaps_fit(df: DataFrame, n_buckets: int = 10) -> DataFrame:
     """Per-stratum Heaps'-law fit — the other corpus growth law a
     datasheet carries (Heaps 1978: vocabulary grows as V ≈ K·N^β with
     β ≈ 0.4-0.6 for natural text; template floods and boilerplate
@@ -983,9 +932,9 @@ def heaps_fit(
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
     toks = df.select(
-        F.col(strata_col).alias("_g"),
-        md5_bucket(F.col(key_col), n_buckets).alias("_b"),
-        F.explode(tokens(text_col, lowercase=True)).alias("_w"),
+        F.col("lang").alias("_g"),
+        md5_bucket(F.col("doc_id"), n_buckets).alias("_b"),
+        F.explode(tokens("text", lowercase=True)).alias("_w"),
     )
     first_seen = (
         toks.groupBy("_g", "_w")
@@ -997,7 +946,7 @@ def heaps_fit(
         F.count(F.lit(1)).alias("_n_tokens")
     )
     grid = (
-        df.select(F.col(strata_col).alias("_g"))
+        df.select(F.col("lang").alias("_g"))
         .distinct()
         .select("_g", F.explode(F.sequence(F.lit(0), F.lit(n_buckets - 1))).alias("_b"))
     )
@@ -1035,7 +984,7 @@ def heaps_fit(
         F.col("_sxx"), F.col("_syy"), F.col("_sxy"),
     )
     return pts.join(fit, "_g").select(
-        F.col("_g").alias(strata_col),
+        F.col("_g").alias("lang"),
         F.col("_b").alias("bucket"),
         "n_tokens_cum",
         "n_types_cum",
@@ -1047,8 +996,6 @@ def heaps_fit(
 
 def lang_segments(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     langs: tuple[str, ...] = ("en", "de", "es", "fr"),
     chunk_tokens: int = 16,
 ) -> DataFrame:
@@ -1076,14 +1023,14 @@ def lang_segments(
     if chunk_tokens < 1:
         raise ValueError(f"chunk_tokens must be >= 1, got {chunk_tokens}")
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col, lowercase=True)).alias("_pos", "_tok"),
+        F.col("doc_id"),
+        F.posexplode(tokens("text", lowercase=True)).alias("_pos", "_tok"),
     ).select(
-        id_col,
+        "doc_id",
         F.floor(F.col("_pos") / chunk_tokens).cast("long").alias("_chunk"),
         "_tok",
     )
-    hits = toks.groupBy(id_col, "_chunk").agg(
+    hits = toks.groupBy("doc_id", "_chunk").agg(
         F.count(F.lit(1)).cast("long").alias("_n_tokens"),
         *[
             F.sum(
@@ -1100,9 +1047,9 @@ def lang_segments(
         best = F.when(take, F.lit(lang)).otherwise(best)
         best_score = F.when(take, s).otherwise(best_score)
     labeled = hits.select(
-        id_col, "_chunk", "_n_tokens", best.alias("_lang")
+        "doc_id", "_chunk", "_n_tokens", best.alias("_lang")
     )
-    w = Window.partitionBy(id_col).orderBy("_chunk")
+    w = Window.partitionBy("doc_id").orderBy("_chunk")
     segs = (
         labeled.withColumn(
             "_new",
@@ -1120,7 +1067,7 @@ def lang_segments(
             - 1,
         )
     )
-    return segs.groupBy(id_col, "_seg").agg(
+    return segs.groupBy("doc_id", "_seg").agg(
         # _lang is constant within a segment by construction; min() is
         # the determinism-safe way to say "the" value
         F.min("_lang").alias("lang"),
@@ -1128,7 +1075,7 @@ def lang_segments(
         F.max("_chunk").alias("end_chunk"),
         F.sum("_n_tokens").cast("long").alias("n_tokens"),
     ).select(
-        id_col,
+        "doc_id",
         F.col("_seg").cast("long").alias("seg_idx"),
         "lang",
         "start_chunk",

@@ -310,7 +310,6 @@ def _validate_train_args(
 
 def train_unigram(
     df: DataFrame,
-    text_col: str = "text",
     vocab_size: int = 400,
     seed_size: int = 1200,
     n_iters: int = 2,
@@ -346,7 +345,7 @@ def train_unigram(
     :func:`_viterbi` and :func:`_prune_counts`, so the model and the
     table are bit-identical (pinned by tests/test_unigram.py)."""
     _validate_train_args(vocab_size, seed_size, max_piece_len)
-    wc, head = word_table_tier(df, text_col, MAX_DRIVER_WORDS)
+    wc, head = word_table_tier(df, MAX_DRIVER_WORDS)
     if head is None:
         model = _train_unigram_dist(
             wc, vocab_size, seed_size, n_iters, max_piece_len, min_seed_count
@@ -367,7 +366,6 @@ def train_unigram(
 def word_segment_unigram(
     df: DataFrame,
     model: dict[str, int],
-    text_col: str = "text",
     max_piece_len: int = 6,
 ) -> DataFrame:
     """Segment every distinct corpus word under a trained unigram
@@ -377,6 +375,6 @@ def word_segment_unigram(
     consume it unchanged. Vocabulary-scale: one distinct shuffle +
     the Arrow Viterbi map."""
     logp, unk = _model_logp(model)
-    words = corpus_words(df, text_col).distinct()
+    words = corpus_words(df, "text").distinct()
     seg = _segment_words_arrow(words, logp, max_piece_len, unk)
     return seg.select("word", "sym", F.size("sym").cast("long").alias("n_sub"))

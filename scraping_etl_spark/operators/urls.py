@@ -131,38 +131,31 @@ def host_suffixes(host: Column, max_labels: int = MAX_SUFFIX_LABELS) -> Column:
     )
 
 
-def blocklist_matches(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    domain_col: str = "domain",
-    max_labels: int = MAX_SUFFIX_LABELS,
-) -> DataFrame:
+def blocklist_matches(df: DataFrame, blocklist: DataFrame) -> DataFrame:
     """Match every row's URL host against a domain blocklist (exact
     host OR subdomain of a listed domain — the UT1/RefinedWeb
     adult-and-malware screen, Penedo et al. 2023 §3.1). Returns the
     MATCH relation ``(id, host, blocked_by)`` — one row per blocked
     input row, ``blocked_by`` = the shallowest (shortest) listed
     suffix for a deterministic attribution — at blocked-row
-    cardinality, not corpus cardinality (callers anti-join it, see
-    :func:`blocklist_filter`).
+    cardinality, not corpus cardinality (callers anti-join it on the
+    id).
 
-    Plan: explode the bounded suffix chain (≤ ``max_labels`` rows per
-    input), equi-join the blocklist on the suffix — broadcast under
+    Plan: explode the bounded suffix chain (≤ :data:`MAX_SUFFIX_LABELS`
+    rows per input), equi-join the blocklist on the suffix — broadcast under
     :data:`materialize.BROADCAST_ROWS` domains (:func:`materialize.fits`),
     un-hinted shuffle join past the cap — then one partial-agg
     ``groupBy(id)`` picks the attribution. Lowercase-trim normalization
     is applied to the blocklist side; no UDFs anywhere."""
     bl = blocklist.select(
-        F.lower(F.trim(F.col(domain_col))).alias("_bldom")
+        F.lower(F.trim(F.col("domain"))).alias("_bldom")
     ).distinct()
     bl_side = F.broadcast(bl) if M.fits(bl, M.BROADCAST_ROWS) else bl
-    host = host_of(url_col)
+    host = host_of("url")
     exploded = df.select(
-        F.col(id_col).alias("_id"),
+        F.col("doc_id").alias("_id"),
         host.alias("_host"),
-        F.explode(host_suffixes(host, max_labels)).alias("_sfx"),
+        F.explode(host_suffixes(host)).alias("_sfx"),
     )
     return (
         exploded.join(bl_side, exploded["_sfx"] == bl_side["_bldom"])
@@ -171,23 +164,5 @@ def blocklist_matches(
             F.min("_host").alias("host"),  # functionally dependent on _id
             F.min_by("_sfx", F.length("_sfx")).alias("blocked_by"),
         )
-        .select(F.col("_id").alias(id_col), "host", "blocked_by")
+        .select(F.col("_id").alias("doc_id"), "host", "blocked_by")
     )
-
-
-def blocklist_filter(
-    df: DataFrame,
-    blocklist: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    domain_col: str = "domain",
-) -> DataFrame:
-    """Rows of ``df`` whose URL host survives the blocklist — the
-    filtering form of :func:`blocklist_matches`: one anti equi-join on
-    the id against the match relation (blocked-cardinality, usually a
-    small fraction of the corpus; Spark's planner broadcasts it when
-    its measured size allows, and AQE converts the shuffle plan at
-    runtime otherwise — no unguarded hint needed here because the
-    build side is an aggregate output, never raw input)."""
-    matches = blocklist_matches(df, blocklist, url_col, id_col, domain_col)
-    return df.join(matches.select(id_col), id_col, "left_anti")

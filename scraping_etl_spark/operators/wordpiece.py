@@ -65,6 +65,10 @@ UNK_PIECE = "[UNK]"
 #: Continuation-piece marker (BERT convention).
 CONT = "##"
 
+#: Longest piece (in characters) :func:`greedy_segment` tries at each
+#: position of a word.
+MAX_PIECE_LEN = 32
+
 
 def wp_char_symbols(word: Column | str) -> Column:
     """Initial WordPiece symbol sequence of a word: first character
@@ -117,10 +121,8 @@ def _vocab(chars: Iterable[str], merges: Iterable[tuple[str, str]]) -> list[str]
 
 def wordpiece_train(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 16,
     min_pair_count: int = 2,
-    max_piece_len: int = 32,
 ) -> tuple[list[tuple[str, str]], list[str], SegTable]:
     """Learn an ordered WordPiece merge list from the corpus. Returns
     ``(merges, vocab, table)``: the encoder vocabulary (what
@@ -144,14 +146,14 @@ def wordpiece_train(
     division per score, so all three artifacts are bit-identical
     (pinned by tests/test_wordpiece.py)."""
     check_merge_args(n_merges, min_pair_count)
-    wc, head = word_table_tier(df, text_col, bpe.MERGE_DRIVER_WORDS)
+    wc, head = word_table_tier(df, bpe.MERGE_DRIVER_WORDS)
     if head is None:
         merges, _ = merge_loop_dist(
             wc.withColumn("sym", wp_char_symbols(F.col("word"))),
             n_merges, min_pair_count, wp_merge_name, likelihood=True,
         )
         vocab = _vocab(_alphabet(wc), merges)
-        seg = _segment_greedy(wc.select("word"), vocab, max_piece_len)
+        seg = _segment_greedy(wc.select("word"), vocab, MAX_PIECE_LEN)
         return merges, vocab, segmentation_rows(seg)
     merges, _ = merge_loop_driver(
         [([w[0]] + [CONT + c for c in w[1:]], cnt) for w, cnt in head],
@@ -160,22 +162,18 @@ def wordpiece_train(
     vocab = _vocab({c for w, _ in head for c in w}, merges)
     vset = set(vocab)
     table = sorted(
-        (w, tuple(greedy_segment(w, vset, max_piece_len))) for w, _ in head
+        (w, tuple(greedy_segment(w, vset, MAX_PIECE_LEN))) for w, _ in head
     )
     return merges, vocab, table
 
 
-def wordpiece_vocab(
-    df: DataFrame,
-    merges: Iterable[tuple[str, str]],
-    text_col: str = "text",
-) -> list[str]:
+def wordpiece_vocab(df: DataFrame, merges: Iterable[tuple[str, str]]) -> list[str]:
     """The encoder's vocabulary: the corpus alphabet in BOTH position
     forms (initial + ``##``) plus every merge product — exactly a BERT
     vocab's structure (alphabet rows keep greedy encoding total on any
     word over known characters; merge products are the learned
     pieces). Model-scale: one distinct-char aggregation collect."""
-    return _vocab(_alphabet(corpus_words(df, text_col)), merges)
+    return _vocab(_alphabet(corpus_words(df, "text")), merges)
 
 
 def greedy_segment(word: str, vocab: set[str], max_piece_len: int) -> list[str]:
@@ -229,12 +227,7 @@ def _segment_greedy(
     )
 
 
-def word_segment_wordpiece(
-    df: DataFrame,
-    vocab: Iterable[str],
-    text_col: str = "text",
-    max_piece_len: int = 32,
-) -> DataFrame:
+def word_segment_wordpiece(df: DataFrame, vocab: Iterable[str]) -> DataFrame:
     """Greedy-encode every distinct corpus word against ``vocab`` —
     the ``(word, sym, n_sub)`` segmentation-cache contract shared by
     all three tokenizers (so :func:`bpe.bpe_token_counts` and
@@ -242,5 +235,5 @@ def word_segment_wordpiece(
     scale; per-ARROW-BATCH Python (the ``unigram._segment_words_arrow``
     convention), never a per-row UDF."""
     return _segment_greedy(
-        corpus_words(df, text_col).distinct(), vocab, max_piece_len
+        corpus_words(df, "text").distinct(), vocab, MAX_PIECE_LEN
     )

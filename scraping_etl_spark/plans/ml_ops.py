@@ -2394,7 +2394,7 @@ def q_er_fs_em_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", "is_match", "fs_score")
 
 
-def _fs_em_oracle(n_iters: int = _FS_EM_ITERS) -> str:
+def _fs_em_oracle() -> str:
     """Unrolled-CTE DuckDB twin of :func:`q_er_fs_em_scores`:
     iteration ``i``'s responsibility CTE cross-joins iteration
     ``i-1``'s one-row constants, the M-step sums integer-grid
@@ -2411,7 +2411,7 @@ def _fs_em_oracle(n_iters: int = _FS_EM_ITERS) -> str:
     parts = [f"""
 WITH {_fs_pair_ctes()},
 em0 AS MATERIALIZED (SELECT {', '.join(em0_cols)})"""]
-    for i in range(1, n_iters + 1):
+    for i in range(1, _FS_EM_ITERS + 1):
         prev = i - 1
         num = " * ".join(
             [f"e.p"] + [
@@ -2470,7 +2470,7 @@ em{i} AS MATERIALIZED (
     parts.append(f"""
 SELECT f.id_a, f.id_b, f.is_match,
        round({score}, 6) AS fs_score
-FROM flagged f CROSS JOIN em{n_iters} e
+FROM flagged f CROSS JOIN em{_FS_EM_ITERS} e
 """)
     return "".join(parts)
 

@@ -294,44 +294,10 @@ def test_dedup_clusters_numeric_string_ids_ok(spark):
     assert got == {(1, 1), (2, 1), (3, 1)}
 
 
-def test_lsh_scurve_math():
-    """Pin the (1/b)^(1/r) threshold and 1-(1-s^r)^b collision curve
-    for both presets: same ~0.71 midpoint, production curve far sharper
-    at both tails (the property that bounds verify-join volume at
-    scale)."""
-    from scraping_etl_spark.operators.dedup import (
-        MINHASH_PRESET_DEMO,
-        MINHASH_PRESET_PRODUCTION,
-        lsh_collision_probability,
-        lsh_threshold,
-    )
-
-    demo_t = lsh_threshold(**MINHASH_PRESET_DEMO)
-    prod_t = lsh_threshold(**MINHASH_PRESET_PRODUCTION)
-    assert demo_t == pytest.approx((1 / 4) ** (1 / 4)) == pytest.approx(0.7071, abs=1e-4)
-    assert prod_t == pytest.approx((1 / 16) ** (1 / 8)) == pytest.approx(0.7071, abs=1e-4)
-
-    # sharper curve: production admits far fewer loose pairs and
-    # catches near-dups with higher probability than demo
-    p = lambda s, preset: lsh_collision_probability(s, **preset)
-    assert p(0.3, MINHASH_PRESET_PRODUCTION) < 0.002 < p(0.3, MINHASH_PRESET_DEMO)
-    assert p(0.85, MINHASH_PRESET_PRODUCTION) > 0.95 > p(0.85, MINHASH_PRESET_DEMO)
-    # at the midpoint t, t^r = 1/b exactly, so P = 1 - (1 - 1/b)^b
-    for preset, t in ((MINHASH_PRESET_DEMO, demo_t), (MINHASH_PRESET_PRODUCTION, prod_t)):
-        b = preset["bands"]
-        assert p(t, preset) == pytest.approx(1 - (1 - 1 / b) ** b)
-    # monotone in s
-    probs = [p(s / 20, MINHASH_PRESET_PRODUCTION) for s in range(21)]
-    assert probs == sorted(probs) and probs[0] == 0.0 and probs[-1] == 1.0
-
-
 def test_minhash_production_preset_runs(spark):
-    """The 128x16 production preset is mechanically valid end-to-end:
+    """The 128x16 production geometry is mechanically valid end-to-end:
     near-identical docs pair up, unrelated docs don't."""
-    from scraping_etl_spark.operators.dedup import (
-        MINHASH_PRESET_PRODUCTION,
-        minhash_lsh_pairs,
-    )
+    from scraping_etl_spark.operators.dedup import minhash_lsh_pairs
 
     base = "the quick brown fox jumps over the lazy dog again and again in the yard"
     rows = [
@@ -343,7 +309,7 @@ def test_minhash_production_preset_runs(spark):
     got = {
         (r.id_a, r.id_b)
         for r in minhash_lsh_pairs(
-            df, threshold=0.5, **MINHASH_PRESET_PRODUCTION
+            df, threshold=0.5, num_hashes=128, bands=16
         ).collect()
     }
     assert got == {(1, 2)}

@@ -119,7 +119,8 @@ def test_normalized_dup_families_and_canonical(spark):
 def test_normalize_is_zero_shuffle(spark):
     df = _docs(spark, [(1, "A b")])
     plan = (
-        NORM.with_normalized(df)._jdf.queryExecution().executedPlan().toString()
+        df.select(NORM.normalize_text("text"))
+        ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
 

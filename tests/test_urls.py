@@ -78,7 +78,7 @@ def test_canonicalizer_is_map_side_only(spark):
 
 
 # ---------------------------------------------------------------------------
-# domain blocklist (urls.blocklist_matches / blocklist_filter)
+# domain blocklist (urls.blocklist_matches)
 # ---------------------------------------------------------------------------
 
 def _bl(spark, domains):
@@ -118,7 +118,7 @@ def test_suffix_chain_deepest_first_and_capped(spark):
 
 
 def test_blocklist_blocks_exact_and_subdomain_only(spark):
-    from scraping_etl_spark.operators.urls import blocklist_filter, blocklist_matches
+    from scraping_etl_spark.operators.urls import blocklist_matches
 
     df = _urls(spark, [
         (1, "http://bad.com/x"),            # exact
@@ -128,9 +128,11 @@ def test_blocklist_blocks_exact_and_subdomain_only(spark):
         (5, "http://good.org/q"),
     ])
     bl = _bl(spark, ["bad.com", "ALSO.Bad.Net "])  # normalization on the list side
-    m = {r.doc_id: r.blocked_by for r in blocklist_matches(df, bl).collect()}
+    matches = blocklist_matches(df, bl)
+    m = {r.doc_id: r.blocked_by for r in matches.collect()}
     assert m == {1: "bad.com", 2: "bad.com"}
-    kept = sorted(r.doc_id for r in blocklist_filter(df, bl).collect())
+    survivors = df.join(matches.select("doc_id"), "doc_id", "left_anti")
+    kept = sorted(r.doc_id for r in survivors.collect())
     assert kept == [3, 4, 5]
 
 
